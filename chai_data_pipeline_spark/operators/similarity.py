@@ -423,17 +423,17 @@ def ann_topk_ivf(
     data (proven row-identical at sf0.001/0.01/0.1 and the 10x sf1
     point in plans/r14/ab_ivf_arrow.json); the hash-checked twin keeps
     ``arrow=False`` because SIMD summation order cannot be reproduced
-    in the DuckDB oracle."""
+    in the DuckDB oracle. An empty ``query`` takes the fold form, which
+    returns an empty result."""
     from ..functions import dround
 
-    if arrow:
+    qrow = query.first() if arrow else None
+    if qrow is not None:
         import numpy as np
         import pandas as pd
 
         assigned = ivf_assign_arrow(df, n_centroids, vec_col, id_col)
-        qvec = np.array(
-            [float(x) for x in query.first()[0]], dtype=np.float64
-        )
+        qvec = np.array([float(x) for x in qrow[0]], dtype=np.float64)
         qnorm = float(np.sqrt((qvec * qvec).sum()))
 
         def _cos_impl(vecs):

@@ -155,9 +155,7 @@ def apply_object_store_conf(spark: SparkSession, **kwargs) -> dict[str, str]:
 # bottleneck, so ``load_tables(..., split=("lineitem",))`` names the
 # tables to split; the default is untouched plans.
 #
-# Env knobs (local defaults keep the driver's bench comparable):
-#   SPARK_GRAFT_SPLIT=0            kill switch (A/B instrument)
-#   SPARK_GRAFT_SPLIT_MIN_ROWS     row floor override
+# SPARK_GRAFT_SPLIT_MIN_ROWS overrides the row floor below.
 # Heavy-per-row tables (documents/embeddings: each row is a document or a
 # 64-dim vector, orders of magnitude more work per row than a TPC-H tuple)
 # use a lower floor so text/similarity operators parallelize too.
@@ -182,8 +180,8 @@ _SPLIT_META: dict[str, tuple[int, int]] = {}  # path -> (rows, row_groups)
 # pattern (a warehouse resolves a table reference once per session, not
 # per query) — the same class as the medallion fixture memo (r12): no
 # RESULT is cached, every action still computes from the parquet files.
-# Keyed by applicationId + sf_dir + table + effective-split so warm-up
-# (sf0.001) and timed (sf0.1) builds, and split A/B probes, never mix.
+# Keyed by applicationId + sf_dir + table + split variant so warm-up
+# (sf0.001) and timed (sf0.1) builds, and split variants, never mix.
 # Temp views re-register only when the name last pointed elsewhere.
 _TABLE_MEMO: dict[tuple, object] = {}
 _VIEW_STATE: dict[tuple, tuple] = {}
@@ -192,8 +190,6 @@ _VIEW_STATE: dict[tuple, tuple] = {}
 def _split_if_unsplittable(
     spark: SparkSession, name: str, path: str, df, key_override=None
 ):
-    if os.environ.get("SPARK_GRAFT_SPLIT", "1") == "0":
-        return df
     spec = _SPLIT_KEYS.get(name)
     if spec is None:
         return df
@@ -252,7 +248,6 @@ def load_tables(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     out = {}
     app_id = spark.sparkContext.applicationId
-    memo_on = os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0"
     # split entries are "table" or "table:key" (per-query key override)
     split_spec = {
         s.split(":", 1)[0]: (s.split(":", 1)[1] if ":" in s else None)
@@ -261,21 +256,17 @@ def load_tables(
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         key_override = split_spec.get(name)
-        split_eff = (
-            name in split_spec
-            or os.environ.get("SPARK_GRAFT_SPLIT_FORCE") == "1"
-        )
-        # The split env knobs (kill switch, row floor) change what
-        # _split_if_unsplittable builds — key them so A/B probes that
-        # flip them mid-session never read a stale plan.
+        split_eff = name in split_spec
+        # The row-floor override changes what _split_if_unsplittable
+        # builds — key it so a mid-session change never reads a stale
+        # plan.
         split_env = (
-            os.environ.get("SPARK_GRAFT_SPLIT", "1"),
-            os.environ.get("SPARK_GRAFT_SPLIT_MIN_ROWS"),
-        ) if split_eff else None
+            os.environ.get("SPARK_GRAFT_SPLIT_MIN_ROWS") if split_eff else None
+        )
         memo_key = (
             app_id, sf_dir, name, split_eff, key_override, split_env
         )
-        cached = _TABLE_MEMO.get(memo_key) if memo_on else None
+        cached = _TABLE_MEMO.get(memo_key)
         if cached is not None:
             view_key = (app_id, name)
             if _VIEW_STATE.get(view_key) != memo_key:
@@ -310,14 +301,11 @@ def load_tables(
         else:
             df = spark.read.parquet(path)
         if split_eff:
-            # FORCE is the A/B measurement instrument (perf probes flip
-            # it per build to isolate the split's effect per query)
             df = _split_if_unsplittable(
                 spark, name, path, df, key_override=key_override
             )
         df.createOrReplaceTempView(name)
-        if memo_on:
-            _TABLE_MEMO[memo_key] = df
-            _VIEW_STATE[(app_id, name)] = memo_key
+        _TABLE_MEMO[memo_key] = df
+        _VIEW_STATE[(app_id, name)] = memo_key
         out[name] = df
     return out

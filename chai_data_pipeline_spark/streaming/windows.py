@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 # files. Building the stream costs a batch read (footer schema fetch)
 # plus a readStream plan construct of ~0.1-0.2 s of driver/Py4J time
 # per streaming query build — pure catalog-resolution overhead at any
-# scale. Kill switch SPARK_GRAFT_STREAM_MEMO=0 for A/B probes.
+# scale.
 _STREAM_MEMO: dict[tuple, DataFrame] = {}
 
 # events.parquet row counts per (path, mtime_ns, size) (footer
@@ -178,11 +178,9 @@ def _events_stream(
         duplicate_delivery,
         max_files_per_trigger,
     )
-    memo_on = os.environ.get("SPARK_GRAFT_STREAM_MEMO", "1") != "0"
-    if memo_on:
-        cached = _STREAM_MEMO.get(memo_key)
-        if cached is not None:
-            return cached
+    cached = _STREAM_MEMO.get(memo_key)
+    if cached is not None:
+        return cached
 
     batch = spark.read.parquet(src)
     reader = spark.readStream.schema(batch.schema).format("parquet")
@@ -222,8 +220,7 @@ def _events_stream(
         F.col("ts").isNotNull()
         & (F.col("ts") >= F.lit("1970-01-01 00:00:00").cast("timestamp"))
     )
-    if memo_on:
-        _STREAM_MEMO[memo_key] = stream
+    _STREAM_MEMO[memo_key] = stream
     return stream
 
 
@@ -469,6 +466,8 @@ def run_streaming_query(
                 "finalize_windows=True to re-enable no-data "
                 "micro-batches for this query."
             )
+    # first: a bad retain setting raises before any conf is touched
+    restore_retain = _set_ephemeral_retain(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nd = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -478,7 +477,6 @@ def run_streaming_query(
         "spark.sql.streaming.noDataMicroBatches.enabled",
         "true" if finalize_windows else "false",
     )
-    restore_retain = _set_ephemeral_retain(spark)
     try:
         return _run_stream_inner(
             spark, df, name, output_mode,
@@ -510,15 +508,23 @@ def _set_ephemeral_retain(spark) -> "callable":
     ``SPARK_GRAFT_STREAM_RETAIN`` overrides the bound (a long-lived
     production job that restarts from these checkpoints should carry
     its own recovery-window sizing; empty string = leave the session
-    default untouched). Returns a restore thunk for the caller's
-    ``finally``.
+    default untouched). Any other value that is not a positive integer
+    raises ``ValueError`` before any conf is touched: Spark accepts 0 or
+    a negative count at ``conf.set`` and only fails at stream start.
+    Returns a restore thunk for the caller's ``finally``.
     """
     val = os.environ.get("SPARK_GRAFT_STREAM_RETAIN", "2")
     if not val:
         return lambda: None
+    retain = int(val) if val.isdecimal() else 0
+    if retain < 1:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_RETAIN must be a positive integer or "
+            f"empty, got {val!r}"
+        )
     key = "spark.sql.streaming.minBatchesToRetain"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, val)
+    spark.conf.set(key, str(retain))
     if prev is None:
         return lambda: spark.conf.unset(key)
     return lambda: spark.conf.set(key, prev)
@@ -725,6 +731,8 @@ def window_topk_run(
             .parquet(out)
         )
 
+    # first, as in run_streaming_query
+    restore_retain = _set_ephemeral_retain(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nd = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -736,7 +744,6 @@ def window_topk_run(
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled", "false"
     )
-    restore_retain = _set_ephemeral_retain(spark)
     try:
         q = (
             agg.writeStream.outputMode("complete")

@@ -55,29 +55,6 @@ def test_headline_names_resolve_in_registry():
     assert unknown == []
 
 
-def test_driver_window_names_resolve():
-    """Every name in the driver-ordering lists (_FRONT, _DRIVER_GREEN,
-    _NO_ORACLE_LAST) must exist in the registry — a typo'd name
-    silently drops a query out of its intended gate position."""
-    import sys
-
-    sys.path.insert(0, REPO)
-    import chai_data_pipeline_spark.plans as plans
-
-    for lst in (
-        plans._FRONT,
-        plans._FORCE_FRONT,
-        plans._DRIVER_GREEN,
-        plans._NO_ORACLE_LAST,
-    ):
-        unknown = [n for n in lst if n not in plans.QUERIES]
-        assert unknown == [], unknown
-    # and the front blocks must be entirely oracle-bearing: the cap is
-    # spent on hash-checkable evidence
-    assert [n for n in plans._FRONT if n not in plans.ORACLES] == []
-    assert [n for n in plans._FORCE_FRONT if n not in plans.ORACLES] == []
-
-
 def test_load_driver_rows_parses_and_skips_corrupt(tmp_path):
     """The self-refolding front derives greens/checked from the
     driver's CORRECTNESS_r*.json artifacts; a corrupt or non-dict file
@@ -107,123 +84,104 @@ def test_load_driver_rows_parses_and_skips_corrupt(tmp_path):
     assert checked == {"green_q", "red_q", "rowsonly_q"}
     # the latest green round wins (drives _FORCE_FRONT self-expiry)
     assert green_round == {"green_q": 9}
-    # empty dir degrades to empty sets (static fallback covers it)
+    # empty dir degrades to empty sets
     empty = tmp_path / "sub"
     empty.mkdir()
     assert plans._load_driver_rows(str(empty)) == (set(), set(), {})
 
 
-def test_driver_rank_invariants():
-    """Pins the self-refolding order: never-checked oracle-bearing
-    queries outrank every green; a _FRONT pin self-expires once green;
-    oracle-less rows-only entries rank dead last."""
+def _plans():
     import sys
 
     sys.path.insert(0, REPO)
     from chai_data_pipeline_spark import plans
 
-    order = list(plans.QUERIES)
-    pos = {n: i for i, n in enumerate(order)}
-    unchecked = [
-        n
-        for n in order
-        if n in plans.ORACLES and n not in plans._CHECKED
+    return plans
+
+
+def test_driver_rank_invariants():
+    """The one ordering rule over synthetic driver rows: quota picks,
+    then never-checked, then red, then the remaining greens by latest
+    green round, oracle-less rows-only entries last; ties keep the
+    input (registration) order."""
+    plans = _plans()
+    oracle = [n for n in plans.QUERIES if n in plans.ORACLES][:12]
+    rows_only = [n for n in plans.QUERIES if n not in plans.ORACLES][:2]
+    new, red, greens = oracle[:2], oracle[2:4], oracle[4:]
+    green_round = dict(zip(greens, [1, 2, 3, 4, 5, 9, 7, 8]))
+    green_round[red[0]] = 3  # green once, red in its latest round
+    checked = set(red) | set(greens)
+    names = rows_only[:1] + greens + red + new + rows_only[1:]
+
+    order = plans._driver_order(names, set(greens), checked, green_round, {})
+    tail = [greens[6], greens[7], greens[5]]  # rounds 7, 8, 9
+    assert order == greens[:5] + new + red + tail + rows_only
+
+    # no CORRECTNESS rows at all: registration order, rows-only last
+    bare = plans._driver_order(names, set(), set(), {}, {})
+    assert bare == greens + red + new + rows_only
+
+    # the live registry: ORACLES follows the QUERIES order
+    assert list(plans.ORACLES) == [
+        n for n in plans.QUERIES if n in plans.ORACLES
     ]
-    greens = [
-        n
-        for n in order
-        if n in plans._GREENS
-        and n not in plans._FRONT
-        and n not in plans._FORCE_FRONT  # changed-semantics re-checks
-        and n not in plans._RECONFIRM  # standing re-confirm quota
-    ]
-    no_oracle = [n for n in order if n not in plans.ORACLES]
-    if unchecked and greens:
-        assert max(pos[n] for n in unchecked) < min(pos[n] for n in greens)
-    if no_oracle:
-        # every oracle-less query sits behind every oracle-bearing one
-        assert min(pos[n] for n in no_oracle) > max(
-            pos[n] for n in order if n in plans.ORACLES
-        )
-    # a green pin must not hold rank 0 (self-expiry) — unless it is a
-    # _FORCE_FRONT re-check, which deliberately overrides expiry
-    for n in plans._FRONT:
-        if n in plans._GREENS and n not in plans._FORCE_FRONT:
-            assert plans._rank(n)[0] != 0
 
 
 def test_reconfirm_quota_invariants():
-    """The standing re-confirm quota (judge advice r9 item 7): exactly
-    QUOTA oracle-bearing greens with the OLDEST green evidence rank
-    ahead of never-checked work each round, so a vacuous-parity kill
-    cannot hide for a full ~7-round green cycle."""
-    import sys
+    """The standing re-confirm quota: the QUOTA oracle-bearing greens
+    with the OLDEST green evidence rank right behind the active pins,
+    ahead of never-checked work; an actively pinned green does not
+    spend a quota slot, and rows-only greens never qualify."""
+    plans = _plans()
+    names = [n for n in plans.QUERIES if n in plans.ORACLES][:9]
+    rows_only = next(n for n in plans.QUERIES if n not in plans.ORACLES)
+    green_round = {n: 20 - i for i, n in enumerate(names)}  # last stalest
+    green_round[rows_only] = 0
+    greens = set(names) | {rows_only}
+    pins = {names[-1]: 25}  # the stalest green, actively pinned
 
-    sys.path.insert(0, REPO)
-    from chai_data_pipeline_spark import plans
-
-    q = plans._RECONFIRM
-    assert len(q) <= plans._RECONFIRM_QUOTA
-    # all picks are oracle-bearing greens
-    assert all(n in plans.ORACLES and n in plans._GREENS for n in q)
-    # picks are the stalest: no non-pick green has an older green
-    # round — except greens holding an ACTIVE _FORCE_FRONT pin, which
-    # already reach the window at rank 0 and are skipped by the quota
-    # (round 14: spending a refresh slot on a pinned name is waste)
-    if len(q) == plans._RECONFIRM_QUOTA:
-        newest_pick = max(plans._GREEN_ROUND.get(n, 0) for n in q)
-        others = [
-            plans._GREEN_ROUND.get(n, 0)
-            for n in plans._GREENS
-            if n in plans.ORACLES
-            and n not in q
-            and not (
-                n in plans._FORCE_FRONT
-                and plans._GREEN_ROUND.get(n, 0) < plans._FORCE_FRONT[n]
-            )
-        ]
-        if others:
-            assert min(others) >= newest_pick
-    # quota ranks after every active pin but before rank-1 unchecked
-    pos = {n: i for i, n in enumerate(plans.QUERIES)}
-    unchecked = [
-        n
-        for n in plans.QUERIES
-        if n in plans.ORACLES and n not in plans._CHECKED
+    picks = plans._reconfirm(greens, green_round, pins)
+    assert len(picks) == plans._RECONFIRM_QUOTA
+    assert picks == names[-2:-7:-1]  # stalest first
+    ranks = [
+        plans._rank(n, greens, greens, green_round, pins, picks)
+        for n in [names[-1], *picks, names[0]]
     ]
-    if q and unchecked:
-        assert max(pos[n] for n in q) < min(pos[n] for n in unchecked)
-    for n in q:
-        rank = plans._rank(n)
-        assert rank[0] == 0 and rank[1] >= 10**6, (n, rank)
+    assert ranks[:-1] == [(0, i) for i in range(1 + len(picks))]
+    assert ranks[-1] == (3, 20)  # a non-pick green stays at rank 3
+    # fewer greens than the quota: every one is picked
+    assert plans._reconfirm(set(names[:2]), green_round, {}) == [
+        names[1], names[0]
+    ]
 
 
 def test_force_front_self_expiry():
-    """A _FORCE_FRONT pin holds rank 0 only until the query earns a
-    green row in a round >= its since-round; a later green retires it
-    automatically (no manual cleanup next round). Both directions are
-    simulated via the _GREEN_ROUND override so the test never depends
-    on which CORRECTNESS_r*.json artifacts exist on disk (the r8
-    failure mode: asserting live pin state went stale the moment the
-    driver landed the artifact that expired the pins)."""
-    import sys
+    """A _FORCE_FRONT pin holds rank 0, in pin order, until the query
+    earns a green row in a round >= its since-round; a later green
+    retires it automatically (no manual cleanup). Pins name
+    oracle-bearing queries only — a typo would silently do nothing."""
+    plans = _plans()
+    assert set(plans._FORCE_FRONT) <= set(plans.ORACLES)
 
-    sys.path.insert(0, REPO)
-    from chai_data_pipeline_spark import plans
-
-    old = dict(plans._GREEN_ROUND)
-    try:
-        for name, since in plans._FORCE_FRONT.items():
-            # green only in a round BEFORE the re-pin shipped → the
-            # old evidence is stale, pin active: rank 0
-            plans._GREEN_ROUND[name] = since - 1
-            assert plans._rank(name)[0] == 0, name
-            # green in the re-pin round (or later) → pin expires
-            plans._GREEN_ROUND[name] = since
-            assert plans._rank(name)[0] != 0, name
-    finally:
-        plans._GREEN_ROUND.clear()
-        plans._GREEN_ROUND.update(old)
+    names = [n for n in plans.QUERIES if n in plans.ORACLES][:8]
+    a, b = names[:2]
+    pins = {b: 9, a: 9}
+    greens = set(names)
+    for rnd, active in ((8, True), (9, False), (10, False)):
+        # six older greens fill the quota, so an expired pin falls
+        # through to plain rank 3
+        green_round = {n: 1 for n in names[2:]} | {a: rnd, b: rnd}
+        picks = plans._reconfirm(greens, green_round, pins)
+        ranks = [
+            plans._rank(n, greens, greens, green_round, pins, picks)
+            for n in (b, a)
+        ]
+        if active:
+            assert ranks == [(0, 0), (0, 1)], rnd
+        else:
+            assert ranks == [(3, rnd), (3, rnd)], rnd
+    # a pinned query with no green row at all stays pinned
+    assert plans._rank(a, set(), {a}, {}, pins, []) == (0, 1)
 
 
 def test_regression_reexposes_at_rank_2(tmp_path):

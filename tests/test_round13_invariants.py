@@ -231,8 +231,8 @@ def test_finalize_rejects_trailing_truncation(spark, sf_dir):
 def test_load_tables_memo_reuses_plan_objects(spark, sf_dir):
     """The per-session table memo returns the SAME DataFrame (a plan
     object, never a result) for repeat loads, keeps sf_dirs and split
-    variants distinct, repoints the temp view when the key changes,
-    and honors the SPARK_GRAFT_TABLE_MEMO=0 kill switch."""
+    variants distinct, and repoints the temp view when the key
+    changes."""
     import chai_data_pipeline_spark.session as S
 
     a = S.load_tables(spark, sf_dir, "events")["events"]
@@ -249,14 +249,6 @@ def test_load_tables_memo_reuses_plan_objects(spark, sf_dir):
     # ...and the view now points at the split variant, then back
     S.load_tables(spark, sf_dir, "events")
     assert spark.table("events").count() == a.count()
-
-    # kill switch bypasses the memo entirely
-    os.environ["SPARK_GRAFT_TABLE_MEMO"] = "0"
-    try:
-        d = S.load_tables(spark, sf_dir, "events")["events"]
-        assert d is not a
-    finally:
-        os.environ.pop("SPARK_GRAFT_TABLE_MEMO", None)
 
 
 def test_split_key_override(spark, sf_dir):
@@ -291,8 +283,7 @@ def test_split_key_override(spark, sf_dir):
 def test_events_stream_memo_reuses_plan_objects(spark, sf_dir):
     """The per-session source-stream memo returns the SAME streaming
     DataFrame (a plan object, never a result) for repeat builds, keeps
-    delivery/trigger variants distinct, and honors the
-    SPARK_GRAFT_STREAM_MEMO=0 kill switch. Every started query still
+    delivery/trigger variants distinct. Every started query still
     reads the staged files — nothing here caches data."""
     from chai_data_pipeline_spark.streaming.windows import _events_stream
 
@@ -308,13 +299,6 @@ def test_events_stream_memo_reuses_plan_objects(spark, sf_dir):
     d = _events_stream(spark, sf_dir, max_files_per_trigger=1)
     assert d is not a and d is not c
     assert _events_stream(spark, sf_dir, duplicate_delivery=True) is c
-
-    os.environ["SPARK_GRAFT_STREAM_MEMO"] = "0"
-    try:
-        e = _events_stream(spark, sf_dir)
-        assert e is not a  # kill switch bypasses the memo entirely
-    finally:
-        os.environ.pop("SPARK_GRAFT_STREAM_MEMO", None)
 
 
 def test_adaptive_state_partitions_scales_with_volume(

@@ -26,6 +26,8 @@ from __future__ import annotations
 import ast
 import os
 
+import pytest
+
 import chai_data_pipeline_spark.plans.streaming as plans_streaming
 
 # topology class -> query function names in plans/streaming.py
@@ -144,6 +146,14 @@ def test_ephemeral_retain_applied_and_restored(spark, monkeypatch):
     restore()
     assert spark.conf.get(key, None) == before
 
+    # a value Spark would only reject at stream start (or with an error
+    # that does not name the setting) fails here, conf untouched
+    for bad in ("abc", "0", "-3"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_RETAIN", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_RETAIN"):
+            _set_ephemeral_retain(spark)
+        assert spark.conf.get(key, None) == before
+
 
 def test_ivf_arrow_auto_switch_and_identity(spark, monkeypatch):
     """The rows-only IVF path switches to Arrow/numpy assignment only
@@ -180,3 +190,10 @@ def test_ivf_arrow_auto_switch_and_identity(spark, monkeypatch):
         map(tuple, ann_topk_ivf(emb, qdf, k=10, arrow=True).collect())
     )
     assert fold == arrow and len(fold) == 10
+
+    # an empty query returns an empty top-k on both paths, same schema
+    none = qdf.limit(0)
+    fold_empty = ann_topk_ivf(emb, none, k=10, arrow=False)
+    arrow_empty = ann_topk_ivf(emb, none, k=10, arrow=True)
+    assert arrow_empty.schema == fold_empty.schema
+    assert arrow_empty.collect() == [] == fold_empty.collect()
