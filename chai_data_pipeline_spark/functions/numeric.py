@@ -45,6 +45,17 @@ to 2^63 — wrong by ORDERS OF MAGNITUDE, not ulps) is never accepted:
 every rounding grid must ride dround/sql_dround or clamp before the
 cast (r12 fixed six queries caught by the 2e17 probe).
 
+Clamp rule: bound a value with :func:`clamp` / :func:`sql_clamp`, never
+a hand-written ``LEAST(GREATEST(x, lo), hi)``. ``LEAST``/``GREATEST``
+skip NULL arguments on both engines, so a NULL input silently becomes
+``lo`` (a NULL per-user sum turned into a -1e11 outlier in
+cuped_ab_analysis); the CASE form keeps NULL as NULL. Clamp BEFORE any
+integer cast: DuckDB's cast raises Out of Range and Spark's saturates,
+so only an in-range double reaches the cast identically. Per-event
+money rides :func:`cents` / :func:`sql_cents` — cents winsorized at
+±:data:`CENTS_CAP`, the shared cap that keeps integer power sums and
+×1e3..1e6 quantization grids in exact range under adversarial values.
+
 Known residual risk class (accepted, low probability): a few queries
 (bayes_beta_binomial_ab, kn_bigram_perplexity, naive_bayes_langid_eval)
 quantize ENGINE-computed transcendentals — ``ln()``/``exp()`` evaluated
@@ -122,6 +133,57 @@ def sql_dround(expr: str, k: int = 4) -> str:
         f" THEN ({expr}) * {m}"
         f" ELSE FLOOR(({expr}) * {m} + 0.5) END / {float(m)})"
     )
+
+
+def clamp(col: Column | str, lo, hi) -> Column:
+    """NULL-safe clamp of ``col`` to ``[lo, hi]`` (numbers or Columns).
+
+    CASE shape, not ``least(greatest(..))``: a NULL input stays NULL, a
+    NULL bound leaves that side unclamped, and NaN (greater than every
+    value on both engines) lands on ``hi`` — the same answer on Spark
+    and DuckDB for every input (module docstring, clamp rule)."""
+    c = F.col(col) if isinstance(col, str) else col
+    lo, hi = (b if isinstance(b, Column) else F.lit(b) for b in (lo, hi))
+    return F.when(c < lo, lo).when(c > hi, hi).otherwise(c)
+
+
+def sql_clamp(expr: str, lo, hi) -> str:
+    """SQL twin of :func:`clamp`; ``lo``/``hi`` are numbers or SQL.
+
+    CALLER CONSTRAINT (as :func:`sql_dround`): ``expr`` is inlined
+    three times — bind an expensive expression (an aggregate, a wide
+    generated term) to a named column first and pass the name.
+    """
+    lo, hi = (
+        f"CAST({b!r} AS DOUBLE)" if isinstance(b, float) else f"({b})"
+        for b in (lo, hi)
+    )
+    return (
+        f"(CASE WHEN ({expr}) < {lo} THEN {lo}"
+        f" WHEN ({expr}) > {hi} THEN {hi} ELSE ({expr}) END)"
+    )
+
+
+# Winsor cap for per-event cents: above the corpus max (|cents| ~56k,
+# pinned by tests/test_moments_headroom.py) so real rows are never
+# clamped, low enough that 4th-power sums stay inside DECIMAL(38,0).
+CENTS_CAP = 60_000
+
+
+def cents(col: Column | str) -> Column:
+    """Per-event cents ``floor(x*100 + 0.5)`` winsorized at ±CENTS_CAP,
+    as BIGINT. The scaled double is clamped BEFORE the floor, so the
+    floor never saturates and NaN/±inf land on the cap like any other
+    out-of-range value."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.floor(clamp(c * 100 + 0.5, -CENTS_CAP, CENTS_CAP))
+
+
+def sql_cents(expr: str) -> str:
+    """SQL twin of :func:`cents` (same caller constraint as
+    :func:`sql_clamp`)."""
+    scaled = sql_clamp(f"({expr}) * 100 + 0.5", -CENTS_CAP, CENTS_CAP)
+    return f"CAST(FLOOR({scaled}) AS BIGINT)"
 
 
 def dsum(col: Column | str, scale: int = 4) -> Column:

@@ -13,10 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import (
+    cents,
+    clamp,
     davg,
     dround,
     dsum,
     epoch_seconds,
+    sql_cents,
+    sql_clamp,
     sql_davg,
     sql_dround,
     sql_dsum,
@@ -1548,26 +1552,33 @@ from .training import sql_hash_bucket as _sql_hb  # noqa: E402
 # the original Feb 1 cutoff left the post period EMPTY (CUPED means and
 # DiD mean_post all zero; round-8 degenerate-column audit)
 _CUPED_CUTOFF = "2024-01-16 00:00:00"
+# per-user cents winsorized at +-1e11 ($1e9/user, ~10^6x the corpus
+# per-user ceiling): a planted 4e15 value made the x1000 adjustment
+# grid saturate Spark's FLOOR(double)->LONG and overflow the per-arm
+# SUM, while DuckDB's BIGINT cast errored
+_CUPED_CAP = 100_000_000_000
 
 
 @query(
     "cuped_ab_analysis",
     oracle=f"""
-WITH per_user AS (
-    -- per-user cents winsorized at +-1e11 ($1e9/user, ~10^6x the
-    -- corpus per-user ceiling; r11 moments precedent): the planted
-    -- 4e15 value made the x1000 adjustment grid saturate Spark's
-    -- FLOOR(double)->LONG at 2^63 and overflow the per-arm SUM, while
-    -- DuckDB's BIGINT cast errored — both engines now clamp
-    -- identically BEFORE the moments, so theta/yq stay in exact range.
+WITH sums AS (
+    -- a period with no valued rows counts 0 cents (forecast_metrics
+    -- precedent), never NULL
     SELECT user_id,
-           LEAST(GREATEST(CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUTOFF}'
+           COALESCE(CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUTOFF}'
                 THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                ELSE 0 END) AS BIGINT), -100000000000), 100000000000) AS x,
-           LEAST(GREATEST(CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUTOFF}'
+                ELSE 0 END) AS BIGINT), 0) AS x0,
+           COALESCE(CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUTOFF}'
                 THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                ELSE 0 END) AS BIGINT), -100000000000), 100000000000) AS y
+                ELSE 0 END) AS BIGINT), 0) AS y0
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
+),
+per_user AS (
+    SELECT user_id,
+           {sql_clamp('x0', -_CUPED_CAP, _CUPED_CAP)} AS x,
+           {sql_clamp('y0', -_CUPED_CAP, _CUPED_CAP)} AS y
+    FROM sums
 ),
 m AS (
     SELECT COUNT(*) AS n,
@@ -1618,22 +1629,17 @@ def cuped_ab_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # misroutes to the ELSE arm) — filter both sides.
     events = events.filter(F.col("user_id").isNotNull())
     cutoff = F.lit(_CUPED_CUTOFF).cast("timestamp_ntz")
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-    # winsorize per-user cents at +-1e11 — see the oracle comment
-    clamp = lambda c: F.least(  # noqa: E731
-        F.greatest(c, F.lit(-100000000000)), F.lit(100000000000)
-    )
+    event_cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+
+    def period(in_period):
+        total = F.sum(F.when(in_period, event_cents).otherwise(0)).cast(
+            "bigint"
+        )
+        return clamp(F.coalesce(total, F.lit(0)), -_CUPED_CAP, _CUPED_CAP)
+
     per_user = events.groupBy("user_id").agg(
-        clamp(
-            F.sum(F.when(F.col("ts") < cutoff, cents).otherwise(0)).cast(
-                "bigint"
-            )
-        ).alias("x"),
-        clamp(
-            F.sum(F.when(F.col("ts") >= cutoff, cents).otherwise(0)).cast(
-                "bigint"
-            )
-        ).alias("y"),
+        period(F.col("ts") < cutoff).alias("x"),
+        period(F.col("ts") >= cutoff).alias("y"),
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = per_user.agg(
@@ -2454,7 +2460,7 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winsorized_stats_by_type",
-    oracle="""
+    oracle=f"""
 WITH v AS (
     SELECT event_type, event_id,
            CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c
@@ -2479,7 +2485,7 @@ cuts AS (
 ),
 w AS (
     SELECT v.event_type, v.c,
-           LEAST(GREATEST(v.c, cuts.lo), cuts.hi) AS wc
+           {sql_clamp('v.c', 'cuts.lo', 'cuts.hi')} AS wc
     FROM v JOIN cuts USING (event_type)
 )
 SELECT event_type,
@@ -2528,9 +2534,7 @@ def winsorized_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = v.join(F.broadcast(cuts), "event_type").select(
         "event_type",
         "c",
-        F.least(F.greatest(F.col("c"), F.col("lo")), F.col("hi")).alias(
-            "wc"
-        ),
+        clamp("c", F.col("lo"), F.col("hi")).alias("wc"),
     )
     return w.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -4443,20 +4447,16 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "moments_skew_kurtosis",
     oracle=f"""
 WITH x AS (
-    -- winsorize at +-60000 cents: 3rd/4th-power sums of unbounded
-    -- magnitudes overflow ANY integer width ((1e14 cents)^4 = 1e56),
-    -- and shape statistics are outlier-dominated anyway; the cap sits
-    -- above the corpus max (~56021 cents) so real data is never
-    -- clamped. Headroom rule (pinned by
-    -- tests/test_moments_headroom.py): every DECIMAL(38,0)/HUGEINT
+    -- winsorized cents: 3rd/4th-power sums of unbounded magnitudes
+    -- overflow ANY integer width ((1e14 cents)^4 = 1e56), and shape
+    -- statistics are outlier-dominated anyway. Headroom rule (pinned
+    -- by tests/test_moments_headroom.py): every DECIMAL(38,0)/HUGEINT
     -- term is bounded by ~6*(n*cap)^4, so per-type n must stay under
     -- (1e38/6)^(1/4)/cap ~= 33k at cap=6e4 (sf0.1 max n ~= 20.3k,
     -- ~1.6x worst-case headroom; realistic headroom is >>10x since
     -- the mean is ~5000 cents, not cap). Beyond that n, switch to
     -- the per-partition-centering Welford rewrite noted below.
-    SELECT event_type,
-           LEAST(GREATEST(CAST(FLOOR(value * 100 + 0.5) AS BIGINT),
-                 -60000), 60000) AS c
+    SELECT event_type, {sql_cents('value')} AS c
     FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
 ),
 m AS (
@@ -4497,13 +4497,7 @@ def moments_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
     ).select(
         "event_type",
-        F.least(
-            F.greatest(
-                F.floor(F.col("value") * 100 + 0.5).cast("bigint"),
-                F.lit(-60000).cast("bigint"),
-            ),
-            F.lit(60000).cast("bigint"),
-        ).alias("c"),
+        cents("value").alias("c"),
     )
     dec = lambda col: F.col(col).cast("decimal(38,0)")  # noqa: E731
     m = x.groupBy("event_type").agg(

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, sql_dround
+from ..functions import clamp, dround, sql_clamp, sql_dround
 from ..session import load_tables
 from .registry import query
 from .training import hash_bucket, sql_hash_bucket
@@ -900,10 +900,9 @@ hl{i + 1} AS MATERIALIZED (
     "hilbert_layout_audit",
     oracle=f"""
 WITH hraw AS (
-    -- clamp BEFORE the INT cast (an adversarial 1e12 value overflows
-    -- CAST in both engines), and pin negatives to cell 0 — the curve
-    -- domain is [0,255]²; real data (0..561) is never clamped
-    SELECT CAST(LEAST(GREATEST(FLOOR(value / 2), 0), 255) AS INT) AS x,
+    -- the curve domain is [0,255]²: values past 511 share the edge
+    -- cell (2 sf0.1 rows) and negatives pin to cell 0
+    SELECT CAST({sql_clamp('FLOOR(value / 2)', 0, 255)} AS INT) AS x,
            CAST(FLOOR(((EXTRACT(hour FROM ts) * 60
                         + EXTRACT(minute FROM ts)) * 256) / 1440.0)
                 AS INT) AS y
@@ -966,11 +965,7 @@ def hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    # clamp before the int cast; pin negatives to cell 0 (see oracle)
-    x = F.least(
-        F.greatest(F.floor(F.col("value") / 2), F.lit(0).cast("bigint")),
-        F.lit(255).cast("bigint"),
-    ).cast("int")
+    x = clamp(F.floor(F.col("value") / 2), 0, 255).cast("int")
     y = F.floor(
         (F.hour("ts") * 60 + F.minute("ts")) * 256 / 1440.0
     ).cast("int")

@@ -156,11 +156,7 @@ def _ivf_arrow_auto(sf_dir: str, threshold: int = 10_000) -> bool:
     ≈7k. Below the threshold the fold form wins and the local bench is
     unchanged by construction; above it the matmul form wins and keeps
     widening (the adaptive_state_partitions posture: derive from data
-    volume, never from the local harness). SPARK_GRAFT_IVF_ARROW=0/1
-    forces either side (kill switch / A-B instrument)."""
-    forced = os.environ.get("SPARK_GRAFT_IVF_ARROW", "")
-    if forced in ("0", "1"):
-        return forced == "1"
+    volume, never from the local harness)."""
     try:
         import pyarrow.parquet as pq
 

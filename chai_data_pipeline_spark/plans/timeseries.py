@@ -8,7 +8,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dround, dsum, sql_dround, sql_dsum
+from ..functions import (
+    cents,
+    clamp,
+    dround,
+    dsum,
+    sql_cents,
+    sql_clamp,
+    sql_dround,
+    sql_dsum,
+)
+from ..functions.numeric import _DR_MAX
 from ..session import load_tables
 from .registry import query
 
@@ -1699,14 +1709,11 @@ WITH seq AS (
 ),
 weighted AS (
     -- HUGEINT product (≡ Spark DECIMAL(38,0)): cents × µs overflows
-    -- int64 for large values over long gaps. Cents clamped at ±2^53
-    -- BEFORE the floor (r12 2e17 probe): past that the double has no
-    -- fractional resolution anyway and Spark's floor→LONG would
-    -- silently saturate at 2^63 while DuckDB's stays exact — the
-    -- clamp keeps both engines on the identical value.
+    -- int64 for large values over long gaps. Cents clamped at ±2^53:
+    -- past that the double has no fractional resolution anyway.
     SELECT user_id,
-           CAST(FLOOR(LEAST(GREATEST(value * 100 + 0.5,
-                    -9007199254740992.0), 9007199254740992.0)) AS HUGEINT)
+           CAST(FLOOR({sql_clamp('value * 100 + 0.5', -_DR_MAX, _DR_MAX)})
+                AS HUGEINT)
                * date_diff('microsecond', ts, next_ts) AS num,
            date_diff('microsecond', ts, next_ts) AS dt_us
     FROM seq WHERE next_ts IS NOT NULL
@@ -1740,19 +1747,12 @@ def time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     dt_us = F.expr("timestampdiff(MICROSECOND, ts, next_ts)")
     # DECIMAL(38,0) product (≡ DuckDB HUGEINT): cents × microseconds
     # overflows int64 for large values over long gaps (~1e6 value over
-    # a month already exceeds 2^63). Cents clamped at ±2^53 before the
-    # floor — mirrors the oracle CTE (see its comment).
+    # a month already exceeds 2^63); cents clamped at ±2^53 (see oracle)
     weighted = seq.select(
         "user_id",
         (
             F.floor(
-                F.least(
-                    F.greatest(
-                        F.col("value") * 100 + 0.5,
-                        F.lit(-9007199254740992.0),
-                    ),
-                    F.lit(9007199254740992.0),
-                )
+                clamp(F.col("value") * 100 + 0.5, -_DR_MAX, _DR_MAX)
             ).cast("decimal(38,0)")
             * dt_us
         ).alias("num"),
@@ -5772,19 +5772,10 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "forecast_metrics_comparison",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    -- per-event cents winsorized at ±60000 (r14; periodogram/moments
-    -- precedent, above the corpus max so real data is never clamped):
-    -- a planted 4e15 value pushed the daily totals to ~4e17 and the
-    -- rmse grid (sqrt(sse/n)*100) past int64 — DuckDB's BIGINT cast
-    -- raises Out of Range while Spark's floor saturates. Clamp the
-    -- floored double BEFORE the BIGINT cast (hilbert precedent).
     SELECT CAST(ts AS DATE) AS d,
-           CAST(SUM(CAST(LEAST(GREATEST(
-                    FLOOR(COALESCE(value, 0) * 100 + 0.5),
-                    -60000), 60000) AS BIGINT))
-                AS BIGINT) AS y
+           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS BIGINT) AS y
     FROM events WHERE ts IS NOT NULL GROUP BY 1
 ),
 lagged AS (
@@ -5868,16 +5859,7 @@ def forecast_metrics_comparison(
     from pyspark.sql.window import Window
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    # winsorized cents (±60000, periodogram/moments precedent — see
-    # the oracle CTE comment)
-    cents_w = F.least(
-        F.greatest(
-            F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-            .cast("bigint"),
-            F.lit(-60000).cast("bigint"),
-        ),
-        F.lit(60000).cast("bigint"),
-    )
+    cents_w = cents(F.coalesce(F.col("value"), F.lit(0.0)))
     daily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.to_date("ts").alias("d"))
@@ -6864,17 +6846,8 @@ _PGRAM_TRIG_SQL = ", ".join(
     "periodogram_daily_power",
     oracle=f"""
 WITH pdaily AS (
-    -- per-event cents winsorized at ±60000 (moments_skew_kurtosis
-    -- precedent, above the corpus max so real data is never clamped):
-    -- an adversarial 1e12 value would push (x-mu)² past the int64
-    -- quantization grid below. Clamp BEFORE the BIGINT cast (hilbert
-    -- precedent): DuckDB CAST raises Out of Range past ~9.2e18 while
-    -- Spark's floor saturates — clamping the DOUBLE keeps both total.
     SELECT CAST(ts AS DATE) AS d,
-           CAST(SUM(CAST(LEAST(GREATEST(
-                    FLOOR(COALESCE(value, 0) * 100 + 0.5),
-                    -60000), 60000) AS BIGINT))
-                AS BIGINT) AS x
+           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS BIGINT) AS x
     FROM events WHERE ts IS NOT NULL GROUP BY 1
 ),
 pidx AS (
@@ -6922,15 +6895,7 @@ def periodogram_daily_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    # winsorized cents (±60000, moments precedent — see the oracle CTE)
-    v_fp = F.least(
-        F.greatest(
-            F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-            .cast("bigint"),
-            F.lit(-60000).cast("bigint"),
-        ),
-        F.lit(60000).cast("bigint"),
-    )
+    v_fp = cents(F.coalesce(F.col("value"), F.lit(0.0)))
     pdaily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.col("ts").cast("date").alias("d"))
@@ -7039,15 +7004,9 @@ v{i} AS MATERIALIZED (
     "als_rank1_factorization",
     oracle=f"""
 WITH als_r AS MATERIALIZED (
-    -- per-event cents winsorized at ±60000 (moments precedent, above
-    -- the corpus max): unbounded ratings blow the ×1e6 quantization
-    -- grids of the alternating updates under adversarial values.
-    -- Clamp BEFORE the BIGINT cast (hilbert precedent) — totality.
     SELECT user_id, event_type,
-           CAST(SUM(CAST(LEAST(GREATEST(
-                    FLOOR(COALESCE(value, 0) * 100 + 0.5),
-                    -60000), 60000) AS BIGINT))
-                AS DOUBLE) / 100.0 AS r
+           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS DOUBLE) / 100.0
+               AS r
     FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2
 ),
 v0 AS (SELECT DISTINCT event_type, CAST(1.0 AS DOUBLE) AS v FROM als_r),
@@ -7090,15 +7049,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor vectors. Reference analog: none (ML-primitive extension).
     """
     events = load_tables(spark, sf_dir, "events")["events"]
-    # winsorized cents (±60000, moments precedent — see the oracle CTE)
-    v_fp = F.least(
-        F.greatest(
-            F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-            .cast("bigint"),
-            F.lit(-60000).cast("bigint"),
-        ),
-        F.lit(60000).cast("bigint"),
-    )
+    v_fp = cents(F.coalesce(F.col("value"), F.lit(0.0)))
     r = (
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id", "event_type")
@@ -7291,13 +7242,8 @@ WITH gbm_cands AS (
     SELECT * FROM (VALUES {_GBM_CANDS_SQL}) t(cid, kind, param_s, param_h)
 ),
 base AS MATERIALIZED (
-    -- cents winsorized at ±60000 (moments precedent, above the corpus
-    -- max): unbounded targets blow the ×1000 residual-square grid.
-    -- Clamp BEFORE the BIGINT cast (hilbert precedent) — totality.
     SELECT event_type, EXTRACT(hour FROM ts) AS hr,
-           CAST(LEAST(GREATEST(
-               FLOOR(COALESCE(value, 0) * 100 + 0.5),
-               -60000), 60000) AS BIGINT) AS y
+           {sql_cents('COALESCE(value, 0)')} AS y
     FROM events
 ),
 f0 AS (SELECT CAST(SUM(y) AS DOUBLE) / COUNT(*) AS mu FROM base),
@@ -7341,18 +7287,10 @@ def gradient_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     never more than the 1-row winner.
     """
     events = load_tables(spark, sf_dir, "events")["events"]
-    # winsorized cents (±60000, moments precedent — see the oracle CTE)
     base = events.select(
         "event_type",
         F.hour("ts").alias("hr"),
-        F.least(
-            F.greatest(
-                F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-                .cast("bigint"),
-                F.lit(-60000).cast("bigint"),
-            ),
-            F.lit(60000).cast("bigint"),
-        ).alias("y"),
+        cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("y"),
     )
     f0 = base.agg((F.sum("y").cast("double") / F.count("*")).alias("mu"))
     rs = (

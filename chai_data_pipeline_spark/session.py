@@ -155,7 +155,6 @@ def apply_object_store_conf(spark: SparkSession, **kwargs) -> dict[str, str]:
 # bottleneck, so ``load_tables(..., split=("lineitem",))`` names the
 # tables to split; the default is untouched plans.
 #
-# SPARK_GRAFT_SPLIT_MIN_ROWS overrides the row floor below.
 # Heavy-per-row tables (documents/embeddings: each row is a document or a
 # 64-dim vector, orders of magnitude more work per row than a TPC-H tuple)
 # use a lower floor so text/similarity operators parallelize too.
@@ -201,7 +200,6 @@ def _split_if_unsplittable(
         key = key_override
     if key not in df.columns:
         return df
-    min_rows = int(os.environ.get("SPARK_GRAFT_SPLIT_MIN_ROWS", min_rows))
     meta = _SPLIT_META.get(path)
     if meta is None:
         try:
@@ -257,15 +255,7 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         key_override = split_spec.get(name)
         split_eff = name in split_spec
-        # The row-floor override changes what _split_if_unsplittable
-        # builds — key it so a mid-session change never reads a stale
-        # plan.
-        split_env = (
-            os.environ.get("SPARK_GRAFT_SPLIT_MIN_ROWS") if split_eff else None
-        )
-        memo_key = (
-            app_id, sf_dir, name, split_eff, key_override, split_env
-        )
+        memo_key = (app_id, sf_dir, name, split_eff, key_override)
         cached = _TABLE_MEMO.get(memo_key)
         if cached is not None:
             view_key = (app_id, name)

@@ -6,7 +6,7 @@ raises while non-ANSI Spark silently yields NULL — so the safe-n
 bound must be asserted against the actual bench-SF data, not assumed.
 
 Safe bound: 6*(n*cap)^4 <= 10^38  =>  n <= (10^38/6)^(1/4) / cap.
-At cap = 60000 cents that is n <= ~33.9k per event_type. If a
+At cap = CENTS_CAP (6e4 cents) that is n <= ~33.9k per event_type. If a
 testdata regeneration or SF bump breaches HALF that bound, this test
 fails with a pointer to the per-partition-centering (Welford-style)
 rewrite documented at the query site.
@@ -16,7 +16,8 @@ import os
 
 import duckdb
 
-CAP = 60_000  # must match plans/aggregates.py moments_skew_kurtosis
+from chai_data_pipeline_spark.functions import CENTS_CAP as CAP, sql_cents
+
 SAFE_N = int((10**38 / 6) ** 0.25 / CAP)  # ~33.9k at cap=6e4
 
 
@@ -69,10 +70,7 @@ def test_cap_above_corpus_max_and_n_within_safe_bound():
     max_term, = con.execute(
         f"""
         WITH x AS (
-            SELECT event_type,
-                   CAST(LEAST(GREATEST(
-                       CAST(FLOOR(value * 100 + 0.5) AS BIGINT),
-                       -{CAP}), {CAP}) AS DOUBLE) AS c
+            SELECT event_type, CAST({sql_cents('value')} AS DOUBLE) AS c
             FROM '{path}'
             WHERE event_type IS NOT NULL AND value IS NOT NULL
         ), m AS (

@@ -590,6 +590,61 @@ def test_doc_ranking_correct_under_hot_source_skew(
         con.close()
 
 
+def test_cuped_null_period_sum_counts_zero(spark, sf_dir, tmp_path_factory):
+    """A user whose only rows in a period carry NULL value contributes
+    0 cents to that period, on both engines — not the -1e11 lower clamp
+    that LEAST/GREATEST turn a NULL sum into. Planted: one user with
+    only NULL-valued pre-cutoff rows, one with only NULL-valued
+    post-cutoff rows; the answer must equal the same corpus with those
+    values planted as 0.0."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chai_data_pipeline_spark import plans
+    from chai_data_pipeline_spark.testing import compare_query, duckdb_connect
+
+    name = "cuped_ab_analysis"
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    base = tbl.to_pydict()
+    uid = max(u for u in base["user_id"] if u is not None) + 1
+    eid = max(base["event_id"]) + 1
+    planted = [
+        (uid, datetime.datetime(2024, 1, d, 12)) for d in (3, 7, 11)
+    ] + [(uid + 1, datetime.datetime(2024, 1, d, 12)) for d in (18, 25)]
+
+    def variant(value):
+        d = {k: list(v) for k, v in base.items()}
+        for i, (u, ts) in enumerate(planted):
+            d["event_id"].append(eid + i)
+            d["ts"].append(ts)
+            d["user_id"].append(u)
+            d["event_type"].append("view")
+            d["value"].append(value)
+            d["props"].append(None)
+        out = str(tmp_path_factory.mktemp("cuped_null"))
+        pq.write_table(
+            pa.table(d, schema=tbl.schema),
+            os.path.join(out, "events.parquet"),
+        )
+        con = duckdb_connect(out)
+        try:
+            res = compare_query(
+                spark, con, name, plans.QUERIES[name],
+                plans.ORACLES[name], out,
+            )
+            assert res.ok, (value, res.detail)
+            return sorted(
+                map(tuple, plans.QUERIES[name](spark, out).collect())
+            )
+        finally:
+            con.close()
+
+    assert variant(None) == variant(0.0)
+
+
 EXTREME = st.lists(
     st.one_of(
         st.floats(
@@ -640,3 +695,86 @@ def test_dround_total_over_double_range_cross_engine(spark, vals):
     assert got == want, (vals, got, want)
     # saturation smoke: no result equals the long-max artifact
     assert all(abs(g) != 922337203685477.5807 for g in got)
+
+
+_EDGE = st.sampled_from(
+    [
+        None, float("inf"), float("-inf"), float("nan"), 2e17, -2e17,
+        0.0, -0.0, 10.0, -10.0, 600.0, -600.0, 600.005, -600.005,
+        599.995, -599.995,
+    ]
+)
+CLAMP_ROWS = st.lists(
+    st.tuples(
+        st.one_of(_EDGE, st.floats(min_value=-1e20, max_value=1e20)),
+        st.one_of(st.none(), st.sampled_from([-10.0, 0.0])),  # lo
+        st.one_of(st.none(), st.sampled_from([10.0, 0.0])),  # hi
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@given(rows=CLAMP_ROWS)
+@_SETTINGS
+def test_clamp_and_cents_bit_identical_cross_engine(spark, rows):
+    """clamp/sql_clamp and cents/sql_cents give the same bits on both
+    engines for any double — NULL, NaN, ±inf, the bounds themselves,
+    2e17 (past the FLOOR->LONG saturation point) — and for NULL
+    bounds. NULL in is NULL out; a NULL bound leaves that side open;
+    NaN (greatest on both engines) lands on the upper bound."""
+    import math
+
+    import duckdb
+
+    from chai_data_pipeline_spark.functions import (
+        CENTS_CAP,
+        cents,
+        clamp,
+        sql_cents,
+        sql_clamp,
+    )
+
+    data = [(i, v, lo, hi) for i, (v, lo, hi) in enumerate(rows)]
+    df = spark.createDataFrame(data, "i int, v double, lo double, hi double")
+    got = [
+        tuple(r)
+        for r in df.select(
+            "i",
+            clamp("v", F.col("lo"), F.col("hi")),
+            clamp("v", -10.0, 10.0),
+            cents("v"),
+        )
+        .orderBy("i")
+        .collect()
+    ]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(i INT, v DOUBLE, lo DOUBLE, hi DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", data)
+    want = con.execute(
+        f"SELECT i, {sql_clamp('v', 'lo', 'hi')},"
+        f" {sql_clamp('v', -10.0, 10.0)}, {sql_cents('v')}"
+        " FROM t ORDER BY i"
+    ).fetchall()
+    assert [tuple(map(repr, r)) for r in got] == [
+        tuple(map(repr, r)) for r in want
+    ], (rows, got, want)
+
+    def model(v, lo, hi):
+        if v is None:
+            return None
+        if lo is not None and not math.isnan(v) and v < lo:
+            return lo
+        if hi is not None and (math.isnan(v) or v > hi):
+            return hi
+        return v
+
+    for (i, v, lo, hi), (_, c_col, c_lit, c_cents) in zip(data, got):
+        assert repr(c_col) == repr(model(v, lo, hi)), (v, lo, hi, c_col)
+        assert repr(c_lit) == repr(model(v, -10.0, 10.0)), (v, c_lit)
+        if v is None:
+            assert c_cents is None
+        else:
+            assert isinstance(c_cents, int)
+            assert -CENTS_CAP <= c_cents <= CENTS_CAP, (v, c_cents)

@@ -251,33 +251,38 @@ def test_load_tables_memo_reuses_plan_objects(spark, sf_dir):
     assert spark.table("events").count() == a.count()
 
 
-def test_split_key_override(spark, sf_dir):
+def test_split_key_override(spark, sf_dir, monkeypatch):
     """A "table:key" split entry hash-partitions on the override key,
     gets its own memo entry, and an unknown override column is a
     no-op (the guard that keeps the mechanism schema-safe)."""
     import chai_data_pipeline_spark.session as S
 
-    os.environ["SPARK_GRAFT_SPLIT_MIN_ROWS"] = "1"  # fire at sf0.001
-    try:
-        over = S.load_tables(
-            spark, sf_dir, "lineitem", split=("lineitem:l_suppkey",)
-        )["lineitem"]
-        plan = over._jdf.queryExecution().analyzed().toString()
-        assert "l_suppkey" in plan and "RepartitionByExpression" in plan
-        default = S.load_tables(
-            spark, sf_dir, "lineitem", split=("lineitem",)
-        )["lineitem"]
-        assert default is not over  # distinct memo entries per key
-        dplan = default._jdf.queryExecution().analyzed().toString()
-        assert "l_orderkey" in dplan.split("RepartitionByExpression")[1]
-        # unknown column -> untouched plan, not an error
-        noop = S.load_tables(
-            spark, sf_dir, "lineitem", split=("lineitem:no_such_col",)
-        )["lineitem"]
-        nplan = noop._jdf.queryExecution().analyzed().toString()
-        assert "RepartitionByExpression" not in nplan
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPLIT_MIN_ROWS", None)
+    # floor of 1 row so the split fires at sf0.001; fresh memos so no
+    # plan built under the real floors is served (and none built here
+    # outlives the test: the session's lineitem view re-registers)
+    monkeypatch.setattr(
+        S, "_SPLIT_KEYS", {t: (k, 1) for t, (k, _) in S._SPLIT_KEYS.items()}
+    )
+    monkeypatch.setattr(S, "_TABLE_MEMO", {})
+    S._VIEW_STATE.pop((spark.sparkContext.applicationId, "lineitem"), None)
+    monkeypatch.setattr(S, "_VIEW_STATE", {})
+    over = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem:l_suppkey",)
+    )["lineitem"]
+    plan = over._jdf.queryExecution().analyzed().toString()
+    assert "l_suppkey" in plan and "RepartitionByExpression" in plan
+    default = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem",)
+    )["lineitem"]
+    assert default is not over  # distinct memo entries per key
+    dplan = default._jdf.queryExecution().analyzed().toString()
+    assert "l_orderkey" in dplan.split("RepartitionByExpression")[1]
+    # unknown column -> untouched plan, not an error
+    noop = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem:no_such_col",)
+    )["lineitem"]
+    nplan = noop._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression" not in nplan
 
 
 def test_events_stream_memo_reuses_plan_objects(spark, sf_dir):

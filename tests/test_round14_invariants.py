@@ -155,7 +155,7 @@ def test_ephemeral_retain_applied_and_restored(spark, monkeypatch):
         assert spark.conf.get(key, None) == before
 
 
-def test_ivf_arrow_auto_switch_and_identity(spark, monkeypatch):
+def test_ivf_arrow_auto_switch_and_identity(spark):
     """The rows-only IVF path switches to Arrow/numpy assignment only
     above the measured volume crossover (fold wins at 2k vectors,
     matmul at 20k — plans/r14/ab_ivf_arrow.json), and both forms are
@@ -170,14 +170,9 @@ def test_ivf_arrow_auto_switch_and_identity(spark, monkeypatch):
     from chai_data_pipeline_spark.session import load_tables
 
     sf = "/root/testdata/sf0.001"  # 500 vectors
-    monkeypatch.delenv("SPARK_GRAFT_IVF_ARROW", raising=False)
     assert _ivf_arrow_auto(sf) is False  # below the crossover
     assert _ivf_arrow_auto(sf, threshold=100) is True  # volume rule
     assert _ivf_arrow_auto("/nonexistent") is False  # fail-safe: fold
-    monkeypatch.setenv("SPARK_GRAFT_IVF_ARROW", "1")
-    assert _ivf_arrow_auto(sf) is True  # forced on
-    monkeypatch.setenv("SPARK_GRAFT_IVF_ARROW", "0")
-    assert _ivf_arrow_auto(sf, threshold=100) is False  # kill switch
 
     emb = load_tables(spark, sf, "embeddings")["embeddings"]
     qdf = emb.filter(F.col("vec_id") == 0).select(
