@@ -8,40 +8,24 @@ the read-back, so the driver's DuckDB oracle (which never sees the
 temp files) pins the round-trip: if the write dropped, duplicated, or
 mistyped rows, the counts/sums diverge.
 
-Temp-dir hygiene mirrors streaming/windows.run_streaming_query: one
-live dir per query name, previous runs' dirs removed up front, names
-anchored so a prefix name can never delete another query's dirs.
+Temp-dir hygiene is streaming/windows.fresh_scratch's: one live dir
+per query name under the system temp dir, previous runs' dirs removed
+up front, names anchored so a prefix name can never delete another
+query's dirs.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import re
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_tables
 from ..sources.writers import write_table
+from ..streaming.windows import fresh_scratch
 from .registry import query
-
-
-def _fresh_dir(name: str) -> str:
-    stale_re = re.compile(
-        rf"chai_sink_{re.escape(name)}_[0-9a-f]{{8}}$"
-    )
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"chai_sink_{name}_*")
-    ):
-        if stale_re.search(os.path.basename(stale)):
-            shutil.rmtree(stale, ignore_errors=True)
-    return os.path.join(
-        tempfile.gettempdir(), f"chai_sink_{name}_{uuid.uuid4().hex[:8]}"
-    )
 
 
 @query(
@@ -69,7 +53,9 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trip.
     """
     orders = load_tables(spark, sf_dir, "orders")["orders"]
-    path = _fresh_dir("part")
+    path = fresh_scratch(
+        os.path.join(tempfile.gettempdir(), "chai_sink_part")
+    )
     write_table(
         orders.select("o_orderkey", "o_orderstatus", "o_totalprice"),
         path,
@@ -108,7 +94,9 @@ def sink_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     chunk = orders.select("o_orderkey", "o_orderstatus")
-    path = _fresh_dir("append")
+    path = fresh_scratch(
+        os.path.join(tempfile.gettempdir(), "chai_sink_append")
+    )
     write_table(chunk, path, mode="overwrite")
     write_table(chunk, path, mode="append")
     back = spark.read.parquet(path)

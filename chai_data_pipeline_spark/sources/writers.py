@@ -257,10 +257,10 @@ def atomic_replace(
     tmp = f"{target_dir}__merge_{uuid.uuid4().hex[:8]}"
     # No localCheckpoint needed (r11): the write goes to a SEPARATE tmp
     # dir and fully executes — reading the live target — before any
-    # rename touches the target, so the read-overwrite hazard a direct
-    # `mode("overwrite")` has (see stateful.run_foreach_batch_upsert,
-    # which does need the checkpoint) cannot occur here; the eager
-    # checkpoint was one full extra materialization per merge.
+    # rename touches the target, so the read-overwrite hazard of a
+    # direct `mode("overwrite")` onto the dir just read cannot occur
+    # here; an eager checkpoint would be one full extra
+    # materialization per commit.
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -386,25 +386,17 @@ def compact(
     compaction keeps scan task counts sane (a 100 TB table of 1 MB
     files is 10^8 scheduler tasks — compaction is operationally
     mandatory at scale)."""
-    import shutil
-    import uuid
-
-    # write-then-swap: never delete the source before the replacement
-    # is fully durable (localCheckpoint blocks live on executor-local
-    # storage and are NOT fault-tolerant — an in-place overwrite that
-    # fails mid-write would lose the table). Local-fs swap here; on an
-    # object store the same pattern is write-to-prefix + manifest/
-    # pointer flip (or a table format's atomic commit).
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    df = spark.read.parquet(path)
-    w = df.repartition(target_files).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    # write-then-swap through atomic_replace: never deletes the source
+    # before the replacement is fully durable, and its marker lock makes
+    # a compaction racing a merge raise ConcurrentWriteError instead of
+    # interleaving renames. On an object store the same pattern is
+    # write-to-prefix + manifest/pointer flip (or a table format's
+    # atomic commit).
+    atomic_replace(
+        path,
+        spark.read.parquet(path).repartition(target_files),
+        partition_by=partition_by,
+    )
 
 
 def write_zordered(

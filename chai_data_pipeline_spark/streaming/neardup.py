@@ -37,9 +37,7 @@ from __future__ import annotations
 
 import glob
 import os
-import re
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,32 +51,13 @@ def streaming_neardup_guard(
     """Drive the documents stream through the SimHash guard; return the
     admitted (doc_id, simhash) set as a batch DataFrame."""
     from ..session import load_tables
-    from ..sources.writers import atomic_replace, recover_merge, remove_path
-    from .windows import stream_scratch_dir
+    from ..sources.writers import atomic_replace
+    from .windows import drive_stream, fresh_scratch
 
     # expression machinery shared with the batch checked twin
     from ..plans.dedup import _SIMHASH_CHK_CHUNKS, _SIMHASH_SPARK
 
-    base = "chai_stream_neardup"
-    stale_re = re.compile(
-        rf"{base}_[0-9a-f]{{8}}"
-        rf"(_chk|_stage|_src|_out|_state"
-        rf"|_state__old_[0-9a-f]+|_state__merge_[0-9a-f]+"
-        rf"|_state__merge_marker)?$"
-    )
-    for stale in glob.glob(os.path.join(stream_scratch_dir(), f"{base}_*")):
-        name = os.path.basename(stale)
-        if stale_re.search(name):
-            if re.fullmatch(rf"{base}_[0-9a-f]{{8}}_state", name):
-                try:
-                    recover_merge(stale)
-                except Exception:
-                    pass
-            # remove_path, not rmtree: the __merge_marker match is a
-            # FILE and rmtree silently no-ops on files
-            remove_path(stale)
-    run_id = uuid.uuid4().hex[:8]
-    root = os.path.join(stream_scratch_dir(), f"{base}_{run_id}")
+    root = fresh_scratch("chai_stream_neardup")
     src = root + "_src"
     out = root + "_out"
     state = root + "_state"
@@ -174,19 +153,12 @@ def streaming_neardup_guard(
         # swap, not an upsert (same rationale as the HLL sink)
         atomic_replace(state, seen)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(guard_batch)
-            .option("checkpointLocation", root + "_chk")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drive_stream(
+        stream.writeStream.foreachBatch(guard_batch).option(
+            "checkpointLocation", root + "_chk"
+        ),
+        spark,
+        8,
+    )
     # select() drops the batch=N partition-discovery column
     return spark.read.parquet(out).select("doc_id", "simhash")

@@ -18,12 +18,7 @@ sets for serving distinct-count dashboards without re-scans.
 
 from __future__ import annotations
 
-import glob
 import os
-import re
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,28 +29,10 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch HLL-register merge; return the final one-row estimate
     plus a register digest as a batch DataFrame."""
     from ..operators.sketch import hll_estimate, hll_registers
-    from ..sources.writers import atomic_replace, recover_merge, remove_path
-    from .windows import _events_stream, stream_scratch_dir
+    from ..sources.writers import atomic_replace
+    from .windows import _events_stream, drive_stream, fresh_scratch
 
-    base = "chai_stream_hll"
-    stale_re = re.compile(
-        rf"{base}_[0-9a-f]{{8}}"
-        rf"(_chk|__old_[0-9a-f]+|__merge_[0-9a-f]+|__merge_marker)?$"
-    )
-    for stale in glob.glob(os.path.join(stream_scratch_dir(), f"{base}_*")):
-        name = os.path.basename(stale)
-        if stale_re.search(name):
-            if re.fullmatch(rf"{base}_[0-9a-f]{{8}}", name):
-                try:
-                    recover_merge(stale)
-                except Exception:
-                    pass
-            # remove_path, not rmtree: the __merge_marker match is a
-            # FILE and rmtree silently no-ops on files
-            remove_path(stale)
-    target = os.path.join(
-        stream_scratch_dir(), f"{base}_{uuid.uuid4().hex[:8]}"
-    )
+    target = fresh_scratch("chai_stream_hll")
 
     ev = _events_stream(
         spark, sf_dir, duplicate_delivery=True, max_files_per_trigger=1
@@ -77,21 +54,14 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         atomic_replace(target, regs)
 
     # 256-row register state: a vanilla session's 200 shuffle
-    # partitions are pure task-launch overhead — pin small for the
-    # stream's lifetime (same discipline as run_streaming_query).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            ev.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", target + "_chk")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # partitions are pure task-launch overhead — pin 4 for the stream's
+    # lifetime
+    drive_stream(
+        ev.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", target + "_chk"
+        ),
+        spark,
+        4,
+    )
 
     return hll_estimate(spark.read.parquet(target))

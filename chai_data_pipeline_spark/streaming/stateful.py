@@ -7,10 +7,11 @@
   that windowed aggregation can't express.
 - :func:`run_foreach_batch_upsert` — exactly-once-style incremental
   sink: each micro-batch's aggregates merge into a parquet target via
-  delete-then-append keyed upsert. This is the modern replacement for
-  the reference's ``validation_status='pending'`` flag-update pattern
-  (reference: scripts/silver/transform_silver.py:251-257) — state lives
-  in the checkpoint + target table, not in a mutable flag column.
+  delete-then-append keyed upsert, committed by writers.atomic_replace.
+  This is the modern replacement for the reference's
+  ``validation_status='pending'`` flag-update pattern (reference:
+  scripts/silver/transform_silver.py:251-257) — state lives in the
+  checkpoint + target table, not in a mutable flag column.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import _events_stream
+from .windows import _events_stream, drive_stream
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, seq long"
 STATE_SCHEMA = "n long, total double, nvals long, seq long"
@@ -91,6 +92,7 @@ def run_foreach_batch_upsert(
     from pyspark.sql import functions as F
 
     from ..operators.merge import delete_then_append
+    from ..sources.writers import atomic_replace
 
     ev = _events_stream(spark, sf_dir)
 
@@ -103,14 +105,13 @@ def run_foreach_batch_upsert(
             merged = delete_then_append(target, agg, ["d", "event_type"])
         else:
             merged = agg
-        # localCheckpoint: materialize before overwriting the files we
-        # just read (classic read-overwrite hazard on a parquet target)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            target_dir
-        )
+        # atomic_replace writes to a tmp dir before any rename, so the
+        # files just read are never overwritten in place
+        atomic_replace(target_dir, merged)
 
-    q = ev.writeStream.outputMode("append").foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    # no pin of its own: runs at the session's shuffle width
+    drive_stream(
+        ev.writeStream.outputMode("append").foreachBatch(sink),
+        spark,
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )

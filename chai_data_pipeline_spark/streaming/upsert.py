@@ -23,12 +23,7 @@ streaming sink.
 
 from __future__ import annotations
 
-import glob
 import os
-import re
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,37 +38,12 @@ def streaming_upsert_latest(
 ) -> DataFrame:
     """Run an events stream through a foreachBatch idempotent upsert;
     return the final target state (latest event per key) as a batch
-    DataFrame. Same bounded-temp-dir discipline as run_streaming_query:
-    one live result per process, anchored cleanup glob."""
+    DataFrame. Scratch dirs come from fresh_scratch (one live result per
+    process, earlier runs' dirs and swap debris reaped)."""
     from ..sources.writers import atomic_replace
-    from .windows import _events_stream, stream_scratch_dir
+    from .windows import _events_stream, drive_stream, fresh_scratch
 
-    base = "chai_stream_upsert"
-    # Sweep covers the live dirs AND a crashed merge_into's debris
-    # (target__old_<hex>, target__merge_<hex>, target__merge_marker) —
-    # without the extra alternatives those leaked in /tmp forever. Any
-    # matched target is first run through recover_merge so a marker-file
-    # crash state resolves to a consistent dir before removal.
-    from ..sources.writers import recover_merge, remove_path
-
-    stale_re = re.compile(
-        rf"{base}_[0-9a-f]{{8}}"
-        rf"(_chk|__old_[0-9a-f]+|__merge_[0-9a-f]+|__merge_marker)?$"
-    )
-    for stale in glob.glob(os.path.join(stream_scratch_dir(), f"{base}_*")):
-        name = os.path.basename(stale)
-        if stale_re.search(name):
-            if re.fullmatch(rf"{base}_[0-9a-f]{{8}}", name):
-                try:
-                    recover_merge(stale)
-                except Exception:
-                    pass
-            # remove_path, not rmtree: the __merge_marker match is a
-            # FILE and rmtree silently no-ops on files
-            remove_path(stale)
-    target = os.path.join(
-        stream_scratch_dir(), f"{base}_{uuid.uuid4().hex[:8]}"
-    )
+    target = fresh_scratch("chai_stream_upsert")
 
     ev = _events_stream(
         spark, sf_dir, duplicate_delivery=True, max_files_per_trigger=1
@@ -107,25 +77,18 @@ def streaming_upsert_latest(
         # second, redundant key-upsert shuffle before the same swap.
         atomic_replace(target, latest)
 
-    # Pin the per-batch shuffle width for the stream's lifetime (same
-    # rationale as run_streaming_query's state_partitions): the window
-    # and checkpoint shuffles are keyed on user_id at table grain, and a
-    # vanilla session's 200 partitions are pure task-launch overhead at
-    # this state volume. Production sizes this to target-table volume.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            ev.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", target + "_chk")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # Per-batch shuffle width 8 (same rationale as run_streaming_query's
+    # state_partitions): the window and checkpoint shuffles are keyed on
+    # user_id at table grain, and a vanilla session's 200 partitions are
+    # pure task-launch overhead at this state volume. Production sizes
+    # this to target-table volume.
+    drive_stream(
+        ev.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", target + "_chk"
+        ),
+        spark,
+        8,
+    )
 
     from ..functions import dround
 

@@ -114,16 +114,50 @@ def stream_scratch_dir() -> str:
     operator plus offset/commit WAL entries, each fsync'd — on a
     disk-backed /tmp those small synchronous writes are the dominant
     FIXED cost of a local streaming run. Falls back to the system temp
-    dir. These dirs are per-run scratch by design (fresh uuid each run,
-    stale dirs of the same name reaped) — durability is a non-goal in
-    the local harness; production checkpoints go to durable object
-    storage via session.object_store_conf instead."""
+    dir. These dirs are per-run scratch by design (fresh_scratch: new
+    run id each run, earlier runs' entries reaped) — durability is a
+    non-goal in the local harness; production checkpoints go to durable
+    object storage via session.object_store_conf instead."""
     import tempfile
 
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         return shm
     return tempfile.gettempdir()
+
+
+def fresh_scratch(prefix: str) -> str:
+    """Reap every scratch entry an earlier run of ``prefix`` left, then
+    return a new ``<prefix>_<8hex>`` run path under stream_scratch_dir()
+    (an absolute ``prefix`` keeps its own root).
+
+    A run's entries are the run dir, the run dir plus a role suffix
+    (``_chk``, ``_src``, ``_out``, ``_state``, ``_stage``), and
+    atomic_replace's debris on either (``__old_<hex>``,
+    ``__merge_<hex>``, ``__merge_marker``, ``__generation``,
+    ``__generation.<hex>``). The run id is anchored on exactly 8 hex
+    chars, so a name that is a prefix of another ("join" vs "join_x")
+    never deletes the other's entries. Contract: ONE live result per
+    prefix — a lazy DataFrame returned by an earlier run of the same
+    prefix becomes unreadable once this reaps its backing dir."""
+    import glob
+    import re
+    import uuid
+
+    from ..sources.writers import remove_path
+
+    base = os.path.join(stream_scratch_dir(), prefix)
+    stale_re = re.compile(
+        re.escape(os.path.basename(base))
+        + r"_[0-9a-f]{8}(_chk|_src|_out|_state|_stage)?"
+        r"(__old_[0-9a-f]+|__merge_[0-9a-f]+|__merge_marker"
+        r"|__generation(\.[0-9a-f]+)?)?"
+    )
+    for stale in glob.glob(glob.escape(base) + "_*"):
+        if stale_re.fullmatch(os.path.basename(stale)):
+            # remove_path, not rmtree: markers and generations are files
+            remove_path(stale)
+    return f"{base}_{uuid.uuid4().hex[:8]}"
 
 
 def _events_stream(
@@ -412,13 +446,7 @@ def run_streaming_query(
     back lazily; complete/update aggregates are small and keep the
     memory sink.
 
-    No-data micro-batches are disabled for the run (r11): they exist to
-    FINALIZE append-mode windowed aggregates after the watermark passes
-    — most of this engine's streaming topologies don't need that
-    (complete/update modes emit on every data batch; the append-mode
-    join and dedup emit at processing time), so the extra batch was a
-    pure state-commit round (~0.25 s each locally, one more full commit
-    cycle per query at any scale).
+    No-data micro-batches are disabled for the run (see drive_stream).
 
     ``finalize_windows=True`` is the sanctioned path for an append-mode
     WINDOWED aggregate (the canonical production pattern: event-time
@@ -466,27 +494,76 @@ def run_streaming_query(
                 "finalize_windows=True to re-enable no-data "
                 "micro-batches for this query."
             )
-    # first: a bad retain setting raises before any conf is touched
+    if output_mode == "append":
+        out = fresh_scratch(f"chai_stream_out_{name}")
+        writer = (
+            df.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", out + "_chk")
+        )
+    else:
+        # without an explicit checkpointLocation Spark places the (still
+        # fsync'd) offset/state checkpoint under java.io.tmpdir
+        writer = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option(
+                "checkpointLocation",
+                fresh_scratch(f"chai_stream_chk_{name}"),
+            )
+        )
+    drive_stream(writer, spark, state_partitions, finalize_windows)
+    if output_mode == "append":
+        return spark.read.parquet(out)
+    return spark.table(name)
+
+
+def drive_stream(
+    writer,
+    spark: SparkSession,
+    shuffle_partitions: int | str,
+    finalize_windows: bool = False,
+) -> None:
+    """Start ``writer`` (a configured DataStreamWriter), process every
+    available input, stop — with the session confs pinned for the run
+    and restored afterwards. Every ephemeral streaming runner goes
+    through here.
+
+    Pinned: ``minBatchesToRetain`` (see _set_ephemeral_retain; set
+    first, so a bad setting raises before any conf is touched),
+    ``spark.sql.shuffle.partitions`` (the state-store partition count
+    is fixed from it at first start — see run_streaming_query) and
+    ``noDataMicroBatches.enabled``.
+
+    No-data micro-batches are disabled unless ``finalize_windows`` (r11):
+    they exist to FINALIZE append-mode windowed aggregates after the
+    watermark passes — most of this engine's streaming topologies don't
+    need that (complete/update modes emit on every data batch; the
+    append-mode join and dedup and the foreachBatch sinks emit at
+    processing time), so the extra batch was a pure state-commit round
+    (~0.25 s each locally, one more full commit cycle per query at any
+    scale). With ``finalize_windows`` the run also waits for the
+    zero-input finalization batch to commit (_await_finalization_batch).
+    """
     restore_retain = _set_ephemeral_retain(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if finalize_windows else "false",
-    )
+    parts = "spark.sql.shuffle.partitions"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = {k: spark.conf.get(k) for k in (parts, no_data)}
     try:
-        return _run_stream_inner(
-            spark, df, name, output_mode,
-            wait_finalize=finalize_windows,
-        )
+        spark.conf.set(parts, str(shuffle_partitions))
+        spark.conf.set(no_data, "true" if finalize_windows else "false")
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+            if finalize_windows:
+                _await_finalization_batch(q)
+        finally:
+            q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
+        for k, v in prev.items():
+            spark.conf.set(k, v)
         restore_retain()
 
 
@@ -555,85 +632,6 @@ def _await_finalization_batch(q, timeout_s: float = 60.0) -> None:
     )
 
 
-def _run_stream_inner(
-    spark, df: DataFrame, name: str, output_mode: str,
-    wait_finalize: bool = False,
-) -> DataFrame:
-    if output_mode == "append":
-        import glob
-        import re
-        import shutil
-        import tempfile
-        import uuid
-
-        # Bounded temp usage: drop PREVIOUS runs' output/checkpoint dirs
-        # for THIS query name only — the trailing pattern is anchored to
-        # exactly one 8-hex-char run id (+ optional _chk) so a name that
-        # is a prefix of another ("join" vs "join_x") never deletes the
-        # other's dirs. Contract: ONE live result per name — the lazy
-        # DataFrame returned by a previous run of the SAME name becomes
-        # unreadable once this run deletes its backing dir.
-        stale_re = re.compile(
-            rf"chai_stream_out_{re.escape(name)}_[0-9a-f]{{8}}(_chk)?$"
-        )
-        for stale in glob.glob(
-            os.path.join(stream_scratch_dir(), f"chai_stream_out_{name}_*")
-        ):
-            if stale_re.search(os.path.basename(stale)):
-                shutil.rmtree(stale, ignore_errors=True)
-        out = os.path.join(
-            stream_scratch_dir(),
-            f"chai_stream_out_{name}_{uuid.uuid4().hex[:8]}",
-        )
-        q = (
-            df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", out + "_chk")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            if wait_finalize:
-                _await_finalization_batch(q)
-        finally:
-            q.stop()
-        return spark.read.parquet(out)
-    # memory-sink branch: without an explicit checkpointLocation Spark
-    # places the (still fsync'd) offset/state checkpoint under
-    # java.io.tmpdir — route it through the scratch root too, with the
-    # same name-scoped stale reap as the file-sink branch
-    import glob
-    import re
-    import shutil
-    import uuid
-
-    stale_re = re.compile(
-        rf"chai_stream_chk_{re.escape(name)}_[0-9a-f]{{8}}$"
-    )
-    for stale in glob.glob(
-        os.path.join(stream_scratch_dir(), f"chai_stream_chk_{name}_*")
-    ):
-        if stale_re.search(os.path.basename(stale)):
-            shutil.rmtree(stale, ignore_errors=True)
-    chk = os.path.join(
-        stream_scratch_dir(),
-        f"chai_stream_chk_{name}_{uuid.uuid4().hex[:8]}",
-    )
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def static_enrich_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -698,22 +696,8 @@ def window_topk_run(
     foreachBatch — partitioned by window, bounded by the aggregate
     cardinality, never by the stream volume.
     """
-    import glob
-    import re
-    import shutil
-    import tempfile
-    import uuid
-
     agg = tumbling_counts_stream(spark, sf_dir)
-    stale_re = re.compile(r"chai_stream_topk_[0-9a-f]{8}(_chk)?$")
-    for stale in glob.glob(
-        os.path.join(stream_scratch_dir(), "chai_stream_topk_*")
-    ):
-        if stale_re.search(os.path.basename(stale)):
-            shutil.rmtree(stale, ignore_errors=True)
-    out = os.path.join(
-        stream_scratch_dir(), f"chai_stream_topk_{uuid.uuid4().hex[:8]}"
-    )
+    out = fresh_scratch("chai_stream_topk")
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window as _W
@@ -731,34 +715,13 @@ def window_topk_run(
             .parquet(out)
         )
 
-    # first, as in run_streaming_query
-    restore_retain = _set_ephemeral_retain(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    # complete-mode state re-emits on every data batch, so no
+    # finalization batch is needed (see drive_stream)
+    drive_stream(
+        agg.writeStream.outputMode("complete")
+        .foreachBatch(emit)
+        .option("checkpointLocation", out + "_chk"),
+        spark,
+        state_partitions,
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # complete-mode state re-emits on every data batch; the no-data
-    # finalization batch would just overwrite the sink with the same
-    # leaderboard (see run_streaming_query)
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-    )
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(emit)
-            .option("checkpointLocation", out + "_chk")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
-        restore_retain()
     return spark.read.parquet(out)

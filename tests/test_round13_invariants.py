@@ -1,136 +1,10 @@
-"""Round-13 invariants: the append-mode watermark-finalized windowed
-aggregate (the canonical production streaming pattern, previously
-fenced) and the fail-closed fence probe.
-
-Semantics pinned here, verified empirically against Spark 4.1:
-- a window ending EXACTLY at the watermark (max event time - delay) IS
-  finalized and emitted (boundary is <=, not <);
-- windows ending after the watermark are never emitted (the oracle must
-  carry the matching ``window_end <= max(ts) - delay`` cutoff);
-- the finalization happens in a zero-input no-data micro-batch that the
-  runner re-enables for finalize_windows=True runs — without it the
-  append sink would be EMPTY (watermark updates at end-of-batch, and
-  eviction only runs in a subsequent batch), which is what makes the
-  fence/finalize split loud rather than silently truncating.
-"""
+"""Round-13 invariants: the merge commit's concurrent-writer guard and
+the per-session table memo (the streaming tests of this round live in
+test_streaming.py)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 import pytest
-from pyspark.sql import functions as F
-
-
-def _windowed_count(stream):
-    return (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").cast("timestamp_ntz").alias("ws"), "n")
-    )
-
-
-def test_append_finalize_boundary(spark, tmp_path):
-    """Window end == watermark emits; window end > watermark doesn't.
-
-    Data: events at 00:30, 01:30, 02:30 and max ts exactly 03:00:00 →
-    watermark = 01:00:00. Window [00,01) (end == watermark) must be
-    the ONLY emitted window."""
-    from chai_data_pipeline_spark.streaming.windows import (
-        run_streaming_query,
-    )
-
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        rows = [
-            ("2024-01-01 00:30:00",),
-            ("2024-01-01 01:30:00",),
-            ("2024-01-01 02:30:00",),
-            ("2024-01-01 03:00:00",),
-        ]
-        df = spark.createDataFrame(rows, "ts string").select(
-            F.col("ts").cast("timestamp").alias("ts")
-        )
-        src = str(tmp_path / "src")
-        df.coalesce(1).write.parquet(src)
-        stream = (
-            spark.readStream.schema(df.schema).format("parquet").load(src)
-        )
-        out = run_streaming_query(
-            _windowed_count(stream),
-            f"r13_boundary_{uuid.uuid4().hex[:6]}",
-            output_mode="append",
-            finalize_windows=True,
-        )
-        got = [(str(r.ws), r.n) for r in out.collect()]
-        assert got == [("2024-01-01 00:00:00", 1)]
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def test_append_finalize_matches_batch_cutoff(spark, sf_dir):
-    """The registered topology over real testdata equals the batch
-    aggregate restricted to watermark-closed windows."""
-    from chai_data_pipeline_spark.session import load_tables
-    from chai_data_pipeline_spark.streaming.windows import (
-        append_window_counts_stream,
-        run_streaming_query,
-    )
-
-    out = run_streaming_query(
-        append_window_counts_stream(spark, sf_dir),
-        f"r13_cutoff_{uuid.uuid4().hex[:6]}",
-        output_mode="append",
-        finalize_windows=True,
-    )
-    ev = load_tables(spark, sf_dir, "events")["events"].filter(
-        F.col("ts").isNotNull()
-        & (F.col("ts") >= F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"))
-    )
-    cutoff = ev.agg(
-        (F.max("ts") - F.expr("INTERVAL 2 HOURS")).alias("c")
-    ).collect()[0].c
-    batch = (
-        ev.filter(
-            F.date_trunc("hour", F.col("ts")) + F.expr("INTERVAL 1 HOUR")
-            <= F.lit(cutoff)
-        )
-        .groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("window_start"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n_events"))
-    )
-    got = {
-        (str(r.window_start), r.event_type): r.n_events
-        for r in out.collect()
-    }
-    want = {
-        (str(r.window_start), r.event_type): r.n_events
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_fence_fails_closed_on_uninspectable_plan(spark, sf_dir):
-    """If the private-API plan probe breaks (Spark Connect, a _jdf
-    rename), the fence must raise, not silently admit the truncation
-    trap (r12 advice)."""
-    from chai_data_pipeline_spark.streaming.windows import (
-        _events_stream,
-        run_streaming_query,
-    )
-
-    stream = _events_stream(spark, sf_dir).select("event_id", "user_id")
-    stream._jdf = None  # simulate an uninspectable plan
-    with pytest.raises(ValueError, match="cannot inspect"):
-        run_streaming_query(
-            stream, "r13_failclosed_probe", output_mode="append"
-        )
 
 
 def test_interleaved_merges_fail_loudly(spark, tmp_path):
@@ -215,19 +89,6 @@ def test_inflight_marker_blocks_second_writer(spark, tmp_path):
     assert {r.id for r in spark.read.parquet(tgt).collect()} == {1, 2}
 
 
-def test_finalize_rejects_trailing_truncation(spark, sf_dir):
-    """finalize_windows=False + append aggregate still trips the fence
-    (the r12 guarantee is unchanged by the new opt-in path)."""
-    from chai_data_pipeline_spark.streaming.windows import (
-        append_window_counts_stream,
-        run_streaming_query,
-    )
-
-    agg = append_window_counts_stream(spark, sf_dir)
-    with pytest.raises(ValueError, match="noDataMicroBatches"):
-        run_streaming_query(agg, "r13_fence_probe", output_mode="append")
-
-
 def test_load_tables_memo_reuses_plan_objects(spark, sf_dir):
     """The per-session table memo returns the SAME DataFrame (a plan
     object, never a result) for repeat loads, keeps sf_dirs and split
@@ -285,70 +146,3 @@ def test_split_key_override(spark, sf_dir, monkeypatch):
     assert "RepartitionByExpression" not in nplan
 
 
-def test_events_stream_memo_reuses_plan_objects(spark, sf_dir):
-    """The per-session source-stream memo returns the SAME streaming
-    DataFrame (a plan object, never a result) for repeat builds, keeps
-    delivery/trigger variants distinct. Every started query still
-    reads the staged files — nothing here caches data."""
-    from chai_data_pipeline_spark.streaming.windows import _events_stream
-
-    a = _events_stream(spark, sf_dir)
-    b = _events_stream(spark, sf_dir)
-    assert a is b  # memo hit: no second batch-schema read / plan build
-    assert a.isStreaming
-
-    # the duplicate-delivery staging is a different source dir → its
-    # own memo entry, as is a bounded-trigger variant
-    c = _events_stream(spark, sf_dir, duplicate_delivery=True)
-    assert c is not a
-    d = _events_stream(spark, sf_dir, max_files_per_trigger=1)
-    assert d is not a and d is not c
-    assert _events_stream(spark, sf_dir, duplicate_delivery=True) is c
-
-
-def test_adaptive_state_partitions_scales_with_volume(
-    spark, sf_dir, tmp_path
-):
-    """The streaming state-partition count follows SOURCE VOLUME: at
-    the local test scales it lands exactly on the r12-measured optima
-    (2; floor 8 for the Arrow-stateful topology), and at 10x/100x
-    volumes it grows one partition per ~125k rows, capped at the
-    session's core count (floor wins over the cap on tiny hosts) —
-    the sf1 measurement showed 2 partitions is 2.4x slower than 8 at
-    1M events (plans/r13/ab_stream_parts_sf1). Assertions compare
-    against the derivation formula, not host-dependent constants
-    (ADVICE r13)."""
-    from chai_data_pipeline_spark.streaming import windows as W
-
-    # real testdata dirs: small scales keep the local floor
-    assert W.adaptive_state_partitions(spark, sf_dir) == 2
-    assert W.adaptive_state_partitions(spark, sf_dir, floor=8) == 8
-    assert W.adaptive_state_partitions(spark, sf_dir, replicas=2) == 2
-
-    # larger volumes via the row-count cache (no giant file needed);
-    # the cache is keyed on (path, mtime_ns, size) so a regenerated
-    # file invalidates naturally — use a real (empty) file for a
-    # statable key
-    cores = spark.sparkContext.defaultParallelism
-    src = str(tmp_path / "events.parquet")
-    with open(src, "w"):
-        pass
-    st = os.stat(src)
-    key = (src, st.st_mtime_ns, st.st_size)
-    try:
-        W._EVENTS_ROWS[key] = 1_000_000
-        assert W.adaptive_state_partitions(spark, str(tmp_path)) == max(
-            2, min(cores, 1_000_000 // 125_000)
-        )
-        W._EVENTS_ROWS[key] = 1_000_000_000
-        assert W.adaptive_state_partitions(spark, str(tmp_path)) == max(
-            2, cores
-        )
-    finally:
-        W._EVENTS_ROWS.pop(key, None)
-
-    # unreadable metadata fails safe to the floor for THIS call and is
-    # NOT cached (a transient failure must not pin the count)
-    n0 = len(W._EVENTS_ROWS)
-    assert W.adaptive_state_partitions(spark, "/nonexistent/sfX") == 2
-    assert len(W._EVENTS_ROWS) == n0

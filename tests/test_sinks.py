@@ -144,6 +144,39 @@ def test_recover_merge_restores_crashed_swap(spark, tmp_path):
     assert spark.read.parquet(tgt).count() == 1
 
 
+def test_compact_commits_through_the_merge_lock(spark, tmp_path):
+    """compact rewrites a 3-file dir into 1 file with the same rows, and
+    a compaction started while a merge marker is present raises instead
+    of swapping dirs under the other writer."""
+    import glob
+
+    import pytest
+
+    from chai_data_pipeline_spark.sources.writers import (
+        ConcurrentWriteError,
+        compact,
+    )
+
+    tgt = str(tmp_path / "t")
+    df = spark.range(30).selectExpr("id", "CAST(id % 3 AS STRING) AS v")
+    df.repartition(3).write.parquet(tgt)
+    assert len(glob.glob(tgt + "/*.parquet")) == 3
+    want = sorted(map(tuple, df.collect()))
+
+    compact(spark, tgt)
+    assert len(glob.glob(tgt + "/*.parquet")) == 1
+    assert sorted(map(tuple, spark.read.parquet(tgt).collect())) == want
+
+    with open(tgt + "__merge_marker", "w") as fh:
+        fh.write(f"in-flight merge_into swap\ntarget={tgt}\n")
+    df.repartition(3).write.mode("append").parquet(tgt)
+    with pytest.raises(ConcurrentWriteError, match="in-flight or crashed"):
+        compact(spark, tgt)
+    assert len(glob.glob(tgt + "/*.parquet")) == 4
+    # the refused compaction removed its own tmp dir
+    assert glob.glob(tgt + "__merge_*") == [tgt + "__merge_marker"]
+
+
 def test_write_zordered_narrows_rowgroup_spans(spark, sf_dir, tmp_path):
     """Z-order layout must shrink per-file (x,y) bounding boxes vs an
     unclustered write — the parquet-footer statistic a scan planner
