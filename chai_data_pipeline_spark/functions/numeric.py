@@ -41,9 +41,16 @@ range; values whose unscaled decimals fit 2^53 are bit-unchanged by
 the reroute (both paths exact there), which keeps every existing
 oracle hash on real data identical.
 Saturation-class divergence (Spark FLOOR(double)→LONG silently pinning
-to 2^63 — wrong by ORDERS OF MAGNITUDE, not ulps) is never accepted:
-every rounding grid must ride dround/sql_dround or clamp before the
-cast (r12 fixed six queries caught by the 2e17 probe).
+to 2^63 — wrong by ORDERS OF MAGNITUDE, not ulps) is never accepted.
+
+Grid rule: every half-up grid ``floor(x*10^k + 0.5)`` rides this module,
+never a hand-written FLOOR (tests/test_oracle_types.py lints the idiom
+out of the package). A grid that divides back to a double uses
+:func:`dround` / :func:`sql_dround`, whose 2^53 guard keeps it total
+(r12 fixed six queries caught by the 2e17 probe). An integer grid
+uses :func:`qround` / :func:`sql_qround`, which emit the bare
+``CAST(FLOOR(x*10^k + 0.5) AS BIGINT)``; pass ``cap`` when the data
+can leave the BIGINT range (clamp rule below).
 
 Clamp rule: bound a value with :func:`clamp` / :func:`sql_clamp`, never
 a hand-written ``LEAST(GREATEST(x, lo), hi)``. ``LEAST``/``GREATEST``
@@ -51,10 +58,12 @@ skip NULL arguments on both engines, so a NULL input silently becomes
 ``lo`` (a NULL per-user sum turned into a -1e11 outlier in
 cuped_ab_analysis); the CASE form keeps NULL as NULL. Clamp BEFORE any
 integer cast: DuckDB's cast raises Out of Range and Spark's saturates,
-so only an in-range double reaches the cast identically. Per-event
-money rides :func:`cents` / :func:`sql_cents` — cents winsorized at
-±:data:`CENTS_CAP`, the shared cap that keeps integer power sums and
-×1e3..1e6 quantization grids in exact range under adversarial values.
+so only an in-range double reaches the cast identically; qround's
+``cap`` does exactly that, clamping the scaled value (in grid units)
+before the floor. Per-event money rides ``qround(x, 2, CENTS_CAP)`` —
+cents winsorized at ±:data:`CENTS_CAP`, the shared cap that keeps
+integer power sums and ×1e3..1e6 quantization grids in exact range
+under adversarial values.
 
 Known residual risk class (accepted, low probability): a few queries
 (bayes_beta_binomial_ab, kn_bigram_perplexity, naive_bayes_langid_eval)
@@ -170,19 +179,27 @@ def sql_clamp(expr: str, lo, hi) -> str:
 CENTS_CAP = 60_000
 
 
-def cents(col: Column | str) -> Column:
-    """Per-event cents ``floor(x*100 + 0.5)`` winsorized at ±CENTS_CAP,
-    as BIGINT. The scaled double is clamped BEFORE the floor, so the
-    floor never saturates and NaN/±inf land on the cap like any other
-    out-of-range value."""
+def qround(col: Column | str, k: int = 0, cap=None) -> Column:
+    """Integer half-up grid ``floor(x*10^k + 0.5)`` as BIGINT.
+
+    With ``cap`` the scaled value is clamped to ``[-cap, cap]`` (in
+    grid units) BEFORE the floor, so the floor never saturates and
+    NaN/±inf land on the cap like any other out-of-range value (module
+    docstring, clamp rule). Without it, the caller's data must keep
+    ``|x*10^k|`` below 2^63."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.floor(clamp(c * 100 + 0.5, -CENTS_CAP, CENTS_CAP))
+    scaled = (c * 10**k if k else c) + 0.5
+    if cap is not None:
+        scaled = clamp(scaled, -cap, cap)
+    return F.floor(scaled).cast("bigint")
 
 
-def sql_cents(expr: str) -> str:
-    """SQL twin of :func:`cents` (same caller constraint as
-    :func:`sql_clamp`)."""
-    scaled = sql_clamp(f"({expr}) * 100 + 0.5", -CENTS_CAP, CENTS_CAP)
+def sql_qround(expr: str, k: int = 0, cap=None) -> str:
+    """SQL twin of :func:`qround` (with ``cap``, the same caller
+    constraint as :func:`sql_clamp`)."""
+    scaled = f"({expr}) * {10**k} + 0.5" if k else f"({expr}) + 0.5"
+    if cap is not None:
+        scaled = sql_clamp(scaled, -cap, cap)
     return f"CAST(FLOOR({scaled}) AS BIGINT)"
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import dround
+from ..functions.numeric import dround, qround
 from ..operators.windows import top_k_per_group
 
 
@@ -156,7 +156,7 @@ def covid_global_summary(
     """
     # The latest-day global rates ride the SAME per-date aggregate as
     # the totals (no second scan/join of clean_covid): per-series
-    # 2-decimal rates become exact integer cents — floor(rate*100+0.5)
+    # 2-decimal rates become exact integer cents — qround(rate, 2)
     # recovers them losslessly — whose bigint sum is order-independent;
     # the final select does one division + dround-6 on the latest row.
     daily = clean_covid.groupBy("record_date").agg(
@@ -164,16 +164,8 @@ def covid_global_summary(
         F.sum("recovered").alias("recovered"),
         F.sum("deaths").alias("deaths"),
         F.countDistinct("country").alias("countries"),
-        F.sum(
-            F.floor(F.col("mortality_rate") * 100 + F.lit(0.5)).cast(
-                "bigint"
-            )
-        ).alias("mr_cents"),
-        F.sum(
-            F.floor(F.col("recovery_rate") * 100 + F.lit(0.5)).cast(
-                "bigint"
-            )
-        ).alias("rr_cents"),
+        F.sum(qround("mortality_rate", 2)).alias("mr_cents"),
+        F.sum(qround("recovery_rate", 2)).alias("rr_cents"),
         F.count("*").alias("n_series_rows"),
     )
     w = Window.orderBy("record_date")

@@ -119,10 +119,16 @@ def run_pipeline(
         rules = quality_mod.rules_from_config(quality_mod.REFERENCE_RULES)
         rules = [r for r in rules if r.table in silver_tables]
         results = quality_mod.run_checks(spark, silver_tables, rules, asof)
-        score = quality_mod.quality_score(results)
-        checks = [row.asDict() for row in results.collect()]
+        # one execution of the DQ plan: score, journal and _dq_logs all
+        # come from the collected rows
+        rows = results.collect()
+        checks = [row.asDict() for row in rows]
+        score = quality_mod.quality_score(checks)
         if write:
-            overwrite_table(results, os.path.join(lake_dir, "silver", "_dq_logs"))
+            overwrite_table(
+                spark.createDataFrame(rows, results.schema),
+                os.path.join(lake_dir, "silver", "_dq_logs"),
+            )
         journal["layers"]["quality"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),

@@ -192,12 +192,11 @@ def run_checks(
     return out
 
 
-def quality_score(results: DataFrame) -> float:
-    """passed/total percentage (reference: validate_silver.py:48-53)."""
-    row = results.agg(
-        F.count_if(F.col("passed")).alias("p"), F.count("*").alias("t")
-    ).first()
-    return round(100.0 * row.p / row.t, 2) if row.t else 100.0
+def quality_score(checks: list) -> float:
+    """passed/total percentage over collected check rows (reference:
+    validate_silver.py:48-53); a NULL ``passed`` counts as failed."""
+    passed = sum(1 for c in checks if c["passed"])
+    return round(100.0 * passed / len(checks), 2) if checks else 100.0
 
 
 # The reference's 12 hard-coded checks, as config

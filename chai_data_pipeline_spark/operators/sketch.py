@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dround
+
 HLL_M = 256
 HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)
 
@@ -77,7 +79,7 @@ def hll_estimate(regs: DataFrame) -> DataFrame:
         HLL_M * F.log(HLL_M * 1.0 / F.col("v")),
     ).otherwise(e_raw)
     return s.select(
-        (F.floor(e * 10000 + 0.5) / F.lit(10000.0)).alias("hll_estimate"),
+        dround(e, 4).alias("hll_estimate"),
         F.col("reg_sum").cast("bigint").alias("reg_sum"),
         F.col("nonzero_regs").cast("bigint").alias("nonzero_regs"),
     )

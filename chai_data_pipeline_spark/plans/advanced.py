@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, dsum, sql_dround, sql_dsum
+from ..functions import dround, dsum, qround, sql_dround, sql_dsum, sql_qround
 from ..operators.asof import asof_join
 from ..session import load_tables
 from . import windows as _windows  # noqa: F401  (registers the shared
@@ -674,12 +674,12 @@ def deterministic_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "inventory_running_balance",
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE deltas AS (
     SELECT user_id, ts, event_id,
            CASE WHEN event_type = 'purchase'
-                THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                ELSE -CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END
+                THEN {sql_qround('value', 2)}
+                ELSE -{sql_qround('value', 2)} END
                AS delta_cents,
            row_number() OVER (
                PARTITION BY user_id ORDER BY ts, event_id
@@ -734,9 +734,9 @@ def inventory_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.when(
             F.col("event_type") == "purchase",
-            F.floor(F.col("value") * 100 + 0.5).cast("bigint"),
+            qround(F.col("value"), 2),
         )
-        .otherwise(-F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+        .otherwise(-qround(F.col("value"), 2))
         .alias("delta_cents"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -830,9 +830,9 @@ est AS (
     SELECT CAST({_HLL_ALPHA} AS DOUBLE) * {_HLL_M} * {_HLL_M} / harm AS e_raw, v FROM s
 )
 SELECT (SELECT COUNT(DISTINCT user_id) FROM events) AS n_exact,
-       (FLOOR((CASE WHEN e_raw <= 2.5 * {_HLL_M} AND v > 0
-               THEN {_HLL_M} * ln({_HLL_M} * 1.0 / v)
-               ELSE e_raw END) * 10000 + 0.5) / 10000.0) AS hll_estimate
+       {sql_dround(f'(CASE WHEN e_raw <= 2.5 * {_HLL_M} AND v > 0'
+                   f' THEN {_HLL_M} * ln({_HLL_M} * 1.0 / v)'
+                   ' ELSE e_raw END)', 4)} AS hll_estimate
 FROM est
 """,
 )
@@ -895,9 +895,7 @@ def approx_distinct_hll_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.crossJoin(
         F.broadcast(
             s.select(
-                (F.floor(corrected * 10000 + 0.5) / 10000.0).alias(
-                    "hll_estimate"
-                )
+                dround(corrected, 4).alias("hll_estimate")
             )
         )
     )

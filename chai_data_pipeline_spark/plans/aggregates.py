@@ -13,17 +13,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import (
-    cents,
+    CENTS_CAP,
     clamp,
     davg,
     dround,
     dsum,
     epoch_seconds,
-    sql_cents,
+    qround,
     sql_clamp,
     sql_davg,
     sql_dround,
     sql_dsum,
+    sql_qround,
 )
 from ..session import load_tables
 from .registry import AS_OF, query
@@ -1121,7 +1122,7 @@ def rollup_cascade_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH rev AS (
     SELECT r.r_name AS region, n.n_name AS nation,
-           CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('o.o_totalprice', 2)})
                 AS BIGINT) AS cents
     FROM orders o
     JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1155,7 +1156,7 @@ def hierarchical_revenue_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, "orders", "customer", "nation", "region")
     from pyspark.sql.window import Window
 
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("o_totalprice"), 2)
     rev = (
         t["orders"]
         .join(
@@ -1333,7 +1334,7 @@ def null_semantics_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "approx_quantile_error_bounded",
-    oracle="""
+    oracle=f"""
 WITH v AS (
     SELECT event_type, value FROM events WHERE value IS NOT NULL
 ),
@@ -1356,8 +1357,8 @@ ex AS (
     GROUP BY 1
 )
 SELECT e.event_type,
-       (FLOOR(e.exact_p50 * 10000 + 0.5) / 10000.0) AS exact_p50,
-       (FLOOR(e.exact_p90 * 10000 + 0.5) / 10000.0) AS exact_p90,
+       {sql_dround('e.exact_p50', 4)} AS exact_p50,
+       {sql_dround('e.exact_p90', 4)} AS exact_p90,
        TRUE AS p50_within_tol,
        TRUE AS p90_within_tol
 FROM ex e
@@ -1415,12 +1416,8 @@ def approx_quantile_error_bounded(spark: SparkSession, sf_dir: str) -> DataFrame
     tol = (F.col("mx") - F.col("mn")) * 0.02
     return joined.select(
         "event_type",
-        (F.floor(F.col("exact_p50") * 10000 + 0.5) / F.lit(10000.0)).alias(
-            "exact_p50"
-        ),
-        (F.floor(F.col("exact_p90") * 10000 + 0.5) / F.lit(10000.0)).alias(
-            "exact_p90"
-        ),
+        dround(F.col("exact_p50"), 4).alias("exact_p50"),
+        dround(F.col("exact_p90"), 4).alias("exact_p90"),
         (F.abs(F.col("ap")[0] - F.col("exact_p50")) <= tol).alias(
             "p50_within_tol"
         ),
@@ -1479,7 +1476,7 @@ def approx_distinct_error_bounded(spark: SparkSession, sf_dir: str) -> DataFrame
 WITH q AS (
     SELECT event_type,
            value,
-           CAST(FLOOR(ln(value) * 1000000000 + 0.5) AS BIGINT) AS lq,
+           {sql_qround('ln(value)', 9)} AS lq,
            CAST(FLOOR(1000000000000.0 / value + 0.5) AS BIGINT) AS rq
     FROM events WHERE value > 0
 )
@@ -1512,26 +1509,28 @@ def pythagorean_means_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = events.filter(F.col("value") > 0).select(
         "event_type",
         "value",
-        F.floor(F.log("value") * 1000000000 + 0.5).cast("bigint").alias("lq"),
+        qround(F.log("value"), 9).alias("lq"),
         F.floor(1000000000000.0 / F.col("value") + 0.5)
         .cast("bigint")
         .alias("rq"),
     )
     # dround, not a bare floor: 2^63 saturation guard (r12 2e17 probe)
-    fp = lambda c: dround(c, 4)  # noqa: E731
     return q.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        fp(
+        dround(
             F.sum(F.col("value").cast("decimal(27,4)")).cast("double")
-            / F.count("*")
+            / F.count("*"),
+            4,
         ).alias("arithmetic_mean"),
-        fp(
+        dround(
             F.exp(
                 F.sum("lq").cast("bigint") * 1.0 / F.count("*") / 1000000000.0
-            )
+            ),
+            4,
         ).alias("geometric_mean"),
-        fp(
-            F.count("*") * 1000000000000.0 / F.sum("rq").cast("bigint")
+        dround(
+            F.count("*") * 1000000000000.0 / F.sum("rq").cast("bigint"),
+            4,
         ).alias("harmonic_mean"),
     )
 
@@ -1567,10 +1566,10 @@ WITH sums AS (
     -- precedent), never NULL
     SELECT user_id,
            COALESCE(CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUTOFF}'
-                THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                THEN {sql_qround('value', 2)}
                 ELSE 0 END) AS BIGINT), 0) AS x0,
            COALESCE(CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUTOFF}'
-                THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                THEN {sql_qround('value', 2)}
                 ELSE 0 END) AS BIGINT), 0) AS y0
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -1598,8 +1597,7 @@ adj AS (
            CASE WHEN {_sql_hb('user_id')} < 50
                 THEN 'A' ELSE 'B' END AS arm,
            u.y,
-           CAST(FLOOR((u.y - t.th * (u.x - t.xbar)) * 1000 + 0.5)
-               AS BIGINT) AS yq
+           {sql_qround('(u.y - t.th * (u.x - t.xbar))', 3)} AS yq
     FROM per_user u CROSS JOIN theta t
 )
 SELECT arm,
@@ -1629,7 +1627,7 @@ def cuped_ab_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # misroutes to the ELSE arm) — filter both sides.
     events = events.filter(F.col("user_id").isNotNull())
     cutoff = F.lit(_CUPED_CUTOFF).cast("timestamp_ntz")
-    event_cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    event_cents = qround(F.col("value"), 2)
 
     def period(in_period):
         total = F.sum(F.when(in_period, event_cents).otherwise(0)).cast(
@@ -1663,11 +1661,9 @@ def cuped_ab_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = per_user.crossJoin(F.broadcast(theta)).select(
         F.when(hash_bucket("user_id") < 50, "A").otherwise("B").alias("arm"),
         "y",
-        F.floor(
-            (F.col("y") - F.col("th") * (F.col("x") - F.col("xbar"))) * 1000
-            + 0.5
+        qround(
+            (F.col("y") - F.col("th") * (F.col("x") - F.col("xbar"))), 3
         )
-        .cast("bigint")
         .alias("yq"),
     )
     return adj.groupBy("arm").agg(
@@ -1696,10 +1692,10 @@ WITH per_user AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 'A' ELSE 'B' END AS arm,
            CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUPED_CUTOFF}'
-                THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                THEN {sql_qround('value', 2)}
                 ELSE 0 END) AS BIGINT) AS pre_c,
            CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUTOFF}'
-                THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                THEN {sql_qround('value', 2)}
                 ELSE 0 END) AS BIGINT) AS post_c
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -1716,14 +1712,12 @@ SELECT a.arm, a.n_users,
        -- planted-4e15 point; a double head makes both IEEE-identical.
        CAST(a.spre AS DOUBLE) / a.n_users / 100.0 AS mean_pre,
        CAST(a.spost AS DOUBLE) / a.n_users / 100.0 AS mean_post,
-       (FLOOR((CAST(a.spost AS DOUBLE) / a.n_users / 100.0
-               - CAST(a.spre AS DOUBLE) / a.n_users / 100.0) * 10000 + 0.5)
-        / 10000.0) AS delta,
-       (FLOOR(((CAST(b.spost AS DOUBLE) / b.n_users / 100.0
-                - CAST(b.spre AS DOUBLE) / b.n_users / 100.0)
-              - (CAST(ca.spost AS DOUBLE) / ca.n_users / 100.0
-                 - CAST(ca.spre AS DOUBLE) / ca.n_users / 100.0)) * 10000 + 0.5)
-        / 10000.0) AS did_estimate
+       {sql_dround('(CAST(a.spost AS DOUBLE) / a.n_users / 100.0'
+                   ' - CAST(a.spre AS DOUBLE) / a.n_users / 100.0)', 4)} AS delta,
+       {sql_dround('((CAST(b.spost AS DOUBLE) / b.n_users / 100.0'
+                   ' - CAST(b.spre AS DOUBLE) / b.n_users / 100.0)'
+                   ' - (CAST(ca.spost AS DOUBLE) / ca.n_users / 100.0'
+                   ' - CAST(ca.spre AS DOUBLE) / ca.n_users / 100.0))', 4)} AS did_estimate
 FROM arms a
 CROSS JOIN (SELECT * FROM arms WHERE arm = 'A') ca
 CROSS JOIN (SELECT * FROM arms WHERE arm = 'B') b
@@ -1744,7 +1738,7 @@ def difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # misroutes to the ELSE arm) — filter both sides.
     events = events.filter(F.col("user_id").isNotNull())
     cutoff = F.lit(_CUPED_CUTOFF).cast("timestamp_ntz")
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("value"), 2)
     per_user = events.groupBy("user_id").agg(
         F.sum(F.when(F.col("ts") < cutoff, cents).otherwise(0))
         .cast("bigint")
@@ -1774,7 +1768,6 @@ def difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("spre").alias("spreb"),
         F.col("spost").alias("spostb"),
     )
-    fp = lambda c: F.floor(c * 10000 + 0.5) / F.lit(10000.0)  # noqa: E731
     delta_b = (
         F.col("spostb") * 1.0 / F.col("nb") / 100.0
         - F.col("spreb") * 1.0 / F.col("nb") / 100.0
@@ -1791,10 +1784,11 @@ def difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             mean("spre", "n_users").alias("mean_pre"),
             mean("spost", "n_users").alias("mean_post"),
-            fp(
-                mean("spost", "n_users") - mean("spre", "n_users")
+            dround(
+                mean("spost", "n_users") - mean("spre", "n_users"),
+                4,
             ).alias("delta"),
-            fp(delta_b - delta_a).alias("did_estimate"),
+            dround(delta_b - delta_a, 4).alias("did_estimate"),
         )
     )
 
@@ -1831,7 +1825,7 @@ def _boot_w_sql(u: str) -> str:
     oracle=f"""
 WITH per_user AS (
     SELECT user_id,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y_cents
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -1853,9 +1847,9 @@ SELECT b AS replica,
        -- double resolution — 3 ulps off Spark's double chain at the
        -- planted-4e15 point. With a DOUBLE head the remaining ops
        -- promote to double and the IEEE sequence matches Spark's.
-       (FLOOR(CAST(CAST(SUM(CAST(wt AS BIGINT) * y_cents) AS BIGINT)
-                   AS DOUBLE)
-              / CAST(SUM(wt) AS BIGINT) / 100.0 * 10000 + 0.5) / 10000.0)
+       {sql_dround('CAST(CAST(SUM(CAST(wt AS BIGINT) * y_cents) AS BIGINT)'
+                   ' AS DOUBLE)'
+                   ' / CAST(SUM(wt) AS BIGINT) / 100.0', 4)}
            AS resampled_mean
 FROM w
 GROUP BY 1
@@ -1877,7 +1871,7 @@ def poisson_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently assign weight 5) — filter both sides.
     events = events.filter(F.col("user_id").isNotNull())
     per_user = events.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+        F.sum(qround(F.col("value"), 2))
         .cast("bigint")
         .alias("y_cents")
     )
@@ -1911,17 +1905,13 @@ def poisson_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = rep.select("b", "y_cents", wt.alias("wt"))
     return w.groupBy(F.col("b").alias("replica")).agg(
         F.sum("wt").cast("bigint").alias("n_eff"),
-        (
-            F.floor(
-                F.sum(F.col("wt").cast("bigint") * F.col("y_cents"))
-                .cast("bigint")
-                * 1.0
-                / F.sum("wt").cast("bigint")
-                / 100.0
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
+        dround(
+            F.sum(F.col("wt").cast("bigint") * F.col("y_cents"))
+            .cast("bigint")
+            * 1.0
+            / F.sum("wt").cast("bigint")
+            / 100.0,
+            4,
         ).alias("resampled_mean"),
     )
 
@@ -1941,7 +1931,7 @@ _MDE_Z = 2.801585  # z_{0.025} + z_{0.20}
     oracle=f"""
 WITH per_user AS (
     SELECT user_id,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events GROUP BY 1
 ),
@@ -1950,45 +1940,29 @@ m AS (
            CAST(SUM(y) AS HUGEINT) AS sy,
            CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
     FROM per_user
+),
+v AS (
+    -- degeneracy guards: n = 1 makes the variance 0/0 -> NaN in Spark
+    -- but NULL in DuckDB, and a zero mean makes mde_rel x/0 -> Inf vs
+    -- NULL; both engines emit NULL for those rows, identically
+    SELECT n, sy,
+           CAST(n * syy - sy * sy AS DOUBLE) / n
+               / (CASE WHEN n > 1 THEN n - 1.0 END) / 10000.0 AS var,
+           CASE WHEN sy <> 0 THEN CAST(sy AS DOUBLE) / n / 100.0 END
+               AS safe_mean
+    FROM m
+),
+e AS (
+    SELECT n, sy, var, safe_mean,
+           {_MDE_Z} * sqrt(2.0 * var / (n / 2.0)) AS mde
+    FROM v
 )
 SELECT n AS n_users,
        CAST(sy AS DOUBLE) / n / 100.0 AS mean_value,
-       -- guards: magnitude (Spark floor() SATURATES at 2^63 where
-       -- DuckDB's stays DOUBLE, and past 2^53 a double has no
-       -- fractional precision to round) AND degeneracy (n = 1 makes
-       -- the variance 0/0 -> NaN in Spark but NULL in DuckDB; a zero
-       -- mean makes mde_rel x/0 -> Inf vs NULL) — both engines emit
-       -- NULL for the degenerate rows, identically
-       (CASE WHEN n > 1 AND ABS(CAST(n * syy - sy * sy AS DOUBLE)
-                  / n / (n - 1.0) / 10000.0) < 8e14
-        THEN FLOOR(CAST(n * syy - sy * sy AS DOUBLE) / n / (n - 1.0)
-             / 10000.0 * 10000 + 0.5) / 10000.0
-        WHEN n > 1
-        THEN CAST(n * syy - sy * sy AS DOUBLE) / n / (n - 1.0) / 10000.0
-        END) AS variance,
-       (CASE WHEN n > 1 AND {_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-                  / n / (n - 1.0) / 10000.0) / (n / 2.0)) < 8e14
-        THEN FLOOR({_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-             / n / (n - 1.0) / 10000.0) / (n / 2.0)) * 10000 + 0.5)
-             / 10000.0
-        WHEN n > 1
-        THEN {_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-             / n / (n - 1.0) / 10000.0) / (n / 2.0))
-        END) AS mde_abs,
-       (CASE WHEN n > 1 AND sy <> 0
-                  AND ABS({_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-                  / n / (n - 1.0) / 10000.0) / (n / 2.0))
-                  / (CAST(sy AS DOUBLE) / n / 100.0)) < 8e12
-        THEN FLOOR({_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-             / n / (n - 1.0) / 10000.0) / (n / 2.0))
-             / (CAST(sy AS DOUBLE) / n / 100.0) * 1000000 + 0.5)
-             / 1000000.0
-        WHEN n > 1 AND sy <> 0
-        THEN {_MDE_Z} * sqrt(2.0 * (CAST(n * syy - sy * sy AS DOUBLE)
-             / n / (n - 1.0) / 10000.0) / (n / 2.0))
-             / (CAST(sy AS DOUBLE) / n / 100.0)
-        END) AS mde_rel
-FROM m
+       {sql_dround('var', 4)} AS variance,
+       {sql_dround('mde', 4)} AS mde_abs,
+       {sql_dround('mde / safe_mean', 6)} AS mde_rel
+FROM e
 """,
 )
 def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2001,7 +1975,7 @@ def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents²).
     """
     events = load_tables(spark, sf_dir, "events")["events"]
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("value"), 2)
     per_user = events.groupBy("user_id").agg(
         F.sum(cents).cast("bigint").alias("y")
     )
@@ -2025,20 +1999,12 @@ def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean = F.col("sy").cast("double") / F.col("n") / 100.0
     safe_mean = F.when(F.col("sy") != 0, mean)
 
-    # magnitude guard (Spark floor() SATURATES at long max where
-    # DuckDB's stays double; past 2^53 nothing to round); NULL inputs
-    # stay NULL through both branches
-    def fp(c, k):
-        return F.when(
-            F.abs(c) < 8e18 / k, F.floor(c * k + 0.5) / F.lit(float(k))
-        ).otherwise(c)
-
     return m.select(
         F.col("n").alias("n_users"),
         mean.alias("mean_value"),
-        fp(var, 10000).alias("variance"),
-        fp(mde, 10000).alias("mde_abs"),
-        fp(mde / safe_mean, 1000000).alias("mde_rel"),
+        dround(var, 4).alias("variance"),
+        dround(mde, 4).alias("mde_abs"),
+        dround(mde / safe_mean, 6).alias("mde_rel"),
     )
 
 
@@ -2051,38 +2017,30 @@ def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+# +-1e6 column units on the cents grid (see _corr_sql)
+_CORR_CAP = 100_000_000
 
 
 def _corr_sql() -> str:
-    # winsorize at +-1e6 before the cents grid (r14, r11 fix-kit
+    # cents winsorized at +-1e6 column units (r14, r11 fix-kit
     # pattern 1): the planted 4e15 l_extendedprice made the moment
     # combinations (s_a*s_b, n*ss) overflow DECIMAL(38)/HUGEINT on
     # both engines; every real column ceiling (quantity<=50,
     # price<~1e5, discount/tax<=1) sits >=10x below the cap, so
-    # corpus data is untouched. CASE, not LEAST/GREATEST: both
-    # engines' LEAST/GREATEST IGNORE NULL arguments (a planted NULL
-    # column value would clamp to the cap instead of staying NULL and
-    # being skipped by SUM); the CASE falls through to ELSE NULL on
-    # NULL input in both engines. Applied to EVERY moment — s/ss AND
-    # the sp cross-products (a half-clamped matrix diverges silently).
-    def _q(c: str) -> str:
-        return (
-            f"CAST(FLOOR((CASE WHEN {c} > 1000000.0 THEN 1000000.0"
-            f" WHEN {c} < -1000000.0 THEN -1000000.0 ELSE {c} END)"
-            f" * 100 + 0.5) AS BIGINT)"
-        )
-
+    # corpus data is untouched; a NULL column value stays NULL and is
+    # skipped by SUM. Applied to EVERY moment — s/ss AND the sp
+    # cross-products (a half-clamped matrix diverges silently).
     aggs = ["COUNT(*) AS n"]
     for c in _CORR_COLS:
-        q = _q(c)
+        q = sql_qround(c, 2, _CORR_CAP)
         aggs.append(f"CAST(SUM({q}) AS HUGEINT) AS s_{c}")
         aggs.append(
             f"CAST(SUM(CAST({q} AS HUGEINT) * {q}) AS HUGEINT) AS ss_{c}"
         )
     for i, a in enumerate(_CORR_COLS):
         for b in _CORR_COLS[i + 1:]:
-            qa = _q(a)
-            qb = _q(b)
+            qa = sql_qround(a, 2, _CORR_CAP)
+            qb = sql_qround(b, 2, _CORR_CAP)
             aggs.append(
                 f"CAST(SUM(CAST({qa} AS HUGEINT) * {qb}) AS HUGEINT)"
                 f" AS sp_{a}_{b}"
@@ -2097,7 +2055,7 @@ def _corr_sql() -> str:
             )
             legs.append(
                 f"SELECT '{a}' AS col_a, '{b}' AS col_b,"
-                f" (FLOOR(({r}) * 1000000 + 0.5) / 1000000.0) AS pearson_r"
+                f" {sql_dround(r, 6)} AS pearson_r"
                 f" FROM m"
             )
     return (
@@ -2117,26 +2075,19 @@ def lineitem_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"]
 
-    def q(c):
-        # winsorize at +-1e6 before the cents grid; CASE-shaped so a
-        # NULL input stays NULL on both engines — see _corr_sql
-        clamped = (
-            F.when(F.col(c) > 1000000.0, 1000000.0)
-            .when(F.col(c) < -1000000.0, -1000000.0)
-            .otherwise(F.col(c))
-        )
-        return F.floor(clamped * 100 + 0.5).cast("bigint")
-
+    cents = {c: qround(c, 2, _CORR_CAP) for c in _CORR_COLS}
     aggs = [F.count("*").alias("n")]
     for c in _CORR_COLS:
-        aggs.append(F.sum(q(c).cast("decimal(38,0)")).alias(f"s_{c}"))
+        aggs.append(F.sum(cents[c].cast("decimal(38,0)")).alias(f"s_{c}"))
         aggs.append(
-            F.sum(q(c).cast("decimal(38,0)") * q(c)).alias(f"ss_{c}")
+            F.sum(cents[c].cast("decimal(38,0)") * cents[c]).alias(f"ss_{c}")
         )
     for i, a in enumerate(_CORR_COLS):
         for b in _CORR_COLS[i + 1:]:
             aggs.append(
-                F.sum(q(a).cast("decimal(38,0)") * q(b)).alias(f"sp_{a}_{b}")
+                F.sum(cents[a].cast("decimal(38,0)") * cents[b]).alias(
+                    f"sp_{a}_{b}"
+                )
             )
     m = li.agg(*aggs)
     legs = []
@@ -2162,9 +2113,7 @@ def lineitem_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m.select(
                     F.lit(a).alias("col_a"),
                     F.lit(b).alias("col_b"),
-                    (F.floor(r * 1000000 + 0.5) / F.lit(1000000.0)).alias(
-                        "pearson_r"
-                    ),
+                    dround(r, 6).alias("pearson_r"),
                 )
             )
     out = legs[0]
@@ -2200,16 +2149,16 @@ m AS (
     FROM per_user
 )
 SELECT n AS n_exposed, k AS n_converted,
-       (FLOOR(k * 1.0 / n * 1000000 + 0.5) / 1000000.0) AS rate,
-       (FLOOR(((k * 1.0 / n + {_WILSON_Z2} / (2.0 * n)
-            - {_WILSON_Z} * sqrt((k * 1.0 / n) * (1.0 - k * 1.0 / n) / n
-                + {_WILSON_Z2} / (4.0 * n * n)))
-           / (1.0 + {_WILSON_Z2} / n)) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('k * 1.0 / n', 6)} AS rate,
+       {sql_dround(f'((k * 1.0 / n + {_WILSON_Z2} / (2.0 * n)'
+                   f' - {_WILSON_Z} * sqrt((k * 1.0 / n) * (1.0 - k * 1.0 / n) / n'
+                   f' + {_WILSON_Z2} / (4.0 * n * n)))'
+                   f' / (1.0 + {_WILSON_Z2} / n))', 6)}
            AS wilson_low,
-       (FLOOR(((k * 1.0 / n + {_WILSON_Z2} / (2.0 * n)
-            + {_WILSON_Z} * sqrt((k * 1.0 / n) * (1.0 - k * 1.0 / n) / n
-                + {_WILSON_Z2} / (4.0 * n * n)))
-           / (1.0 + {_WILSON_Z2} / n)) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround(f'((k * 1.0 / n + {_WILSON_Z2} / (2.0 * n)'
+                   f' + {_WILSON_Z} * sqrt((k * 1.0 / n) * (1.0 - k * 1.0 / n) / n'
+                   f' + {_WILSON_Z2} / (4.0 * n * n)))'
+                   f' / (1.0 + {_WILSON_Z2} / n))', 6)}
            AS wilson_high
 FROM m WHERE n > 0
 """,
@@ -2243,13 +2192,12 @@ def conversion_rate_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     center = p + F.lit(_WILSON_Z2) / (2.0 * F.col("n"))
     denom = 1.0 + F.lit(_WILSON_Z2) / F.col("n")
-    fp = lambda c: F.floor(c * 1000000 + 0.5) / F.lit(1000000.0)  # noqa: E731
     return m.filter(F.col("n") > 0).select(
         F.col("n").alias("n_exposed"),
         F.col("k").alias("n_converted"),
-        fp(p).alias("rate"),
-        fp((center - halfw) / denom).alias("wilson_low"),
-        fp((center + halfw) / denom).alias("wilson_high"),
+        dround(p, 6).alias("rate"),
+        dround((center - halfw) / denom, 6).alias("wilson_low"),
+        dround((center + halfw) / denom, 6).alias("wilson_high"),
     )
 
 
@@ -2287,8 +2235,7 @@ m AS (
            (SELECT COUNT(DISTINCT user_id) FROM events) AS truth
 )
 SELECT n1 AS day1_users, n2 AS day2_users, k AS recaptured,
-       (FLOOR(((n1 + 1.0) * (n2 + 1.0) / (k + 1.0) - 1.0) * 100 + 0.5)
-        / 100.0) AS chapman_estimate,
+       {sql_dround('((n1 + 1.0) * (n2 + 1.0) / (k + 1.0) - 1.0)', 2)} AS chapman_estimate,
        truth AS true_distinct_users
 FROM m
 """,
@@ -2365,12 +2312,11 @@ def capture_recapture_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "price_quantity_elasticity",
-    oracle="""
+    oracle=f"""
 WITH q AS (
     SELECT p.p_brand,
-           CAST(FLOOR(ln(l.l_extendedprice / l.l_quantity) * 1000000 + 0.5)
-               AS BIGINT) AS xi,
-           CAST(FLOOR(ln(l.l_quantity) * 1000000 + 0.5) AS BIGINT) AS yi
+           {sql_qround('ln(l.l_extendedprice / l.l_quantity)', 6)} AS xi,
+           {sql_qround('ln(l.l_quantity)', 6)} AS yi
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     WHERE l.l_quantity > 0 AND l.l_extendedprice > 0
@@ -2383,9 +2329,8 @@ m AS (
     FROM q GROUP BY 1
 )
 SELECT p_brand, n AS n_lines,
-       (FLOOR(CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-        / CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-        * 1000000 + 0.5) / 1000000.0) AS elasticity
+       {sql_dround('CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)'
+                   ' / CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)', 6)} AS elasticity
 FROM m
 WHERE n >= 10 AND CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) > 0
 """,
@@ -2408,15 +2353,11 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("l_quantity") > 0) & (F.col("l_extendedprice") > 0))
         .select(
             "p_brand",
-            F.floor(
-                F.log(F.col("l_extendedprice") / F.col("l_quantity"))
-                * 1000000
-                + 0.5
+            qround(
+                F.log(F.col("l_extendedprice") / F.col("l_quantity")), 6
             )
-            .cast("bigint")
             .alias("xi"),
-            F.floor(F.log("l_quantity") * 1000000 + 0.5)
-            .cast("bigint")
+            qround(F.log("l_quantity"), 6)
             .alias("yi"),
         )
     )
@@ -2438,9 +2379,7 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.filter((F.col("n") >= 10) & (denom > 0)).select(
         "p_brand",
         F.col("n").alias("n_lines"),
-        (F.floor(slope * 1000000 + 0.5) / F.lit(1000000.0)).alias(
-            "elasticity"
-        ),
+        dround(slope, 6).alias("elasticity"),
     )
 
 
@@ -2463,7 +2402,7 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH v AS (
     SELECT event_type, event_id,
-           CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c
+           {sql_qround('value', 2)} AS c
     FROM events WHERE value IS NOT NULL
 ),
 st AS (SELECT event_type, COUNT(*) AS n FROM v GROUP BY 1),
@@ -2506,7 +2445,7 @@ def winsorized_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = events.filter(F.col("value").isNotNull()).select(
         "event_type",
         "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("c"),
+        qround(F.col("value"), 2).alias("c"),
     )
     st = v.groupBy("event_type").agg(F.count("*").alias("n"))
     wr = Window.partitionBy("event_type").orderBy("c", "event_id")
@@ -2641,7 +2580,7 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH per_user0 AS (
     SELECT user_id,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -2703,7 +2642,7 @@ def bootstrap_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("y")
         )
@@ -2826,7 +2765,7 @@ _CONF_ALPHA_PCT = 90
     oracle=f"""
 WITH v AS (
     SELECT event_type, event_id,
-           CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c,
+           {sql_qround('value', 2)} AS c,
            ({_sql_hb('event_id')} < 50) AS is_cal
     FROM events
     WHERE value IS NOT NULL AND event_type IS NOT NULL
@@ -2868,12 +2807,11 @@ q AS (
 SELECT r.event_type,
        CAST(MAX(r.n_cal) AS BIGINT) AS n_cal,
        CAST(MAX(r.n_test) AS BIGINT) AS n_test,
-       (FLOOR(CAST(MAX(q.q_scaled) AS DOUBLE) / MAX(r.n_cal) / 100.0
-        * 10000 + 0.5) / 10000.0) AS interval_halfwidth,
+       {sql_dround('CAST(MAX(q.q_scaled) AS DOUBLE) / MAX(r.n_cal) / 100.0', 4)} AS interval_halfwidth,
        CASE WHEN MAX(r.n_test) > 0 THEN
-           (FLOOR(COUNT(*) FILTER (WHERE NOT r.is_cal
-                       AND r.r_scaled <= q.q_scaled) * 1.0
-            / MAX(r.n_test) * 10000 + 0.5) / 10000.0)
+           {sql_dround('COUNT(*) FILTER (WHERE NOT r.is_cal'
+                       ' AND r.r_scaled <= q.q_scaled) * 1.0'
+                       ' / MAX(r.n_test)', 4)}
        END AS test_coverage
 FROM resid r JOIN q USING (event_type)
 GROUP BY 1
@@ -2892,7 +2830,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "event_type",
         "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("c"),
+        qround(F.col("value"), 2).alias("c"),
         (hash_bucket("event_id") < 50).alias("is_cal"),
     )
     pred = v.groupBy("event_type").agg(
@@ -2940,29 +2878,23 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("event_type").agg(
         F.max("n_cal").cast("bigint").alias("n_cal"),
         F.max("n_test").cast("bigint").alias("n_test"),
-        (
-            F.floor(
-                F.max("q_scaled").cast("double")
-                / F.max("n_cal")
-                / 100.0
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
+        dround(
+            F.max("q_scaled").cast("double")
+            / F.max("n_cal")
+            / 100.0,
+            4,
         ).alias("interval_halfwidth"),
         F.when(
             F.max("n_test") > 0,
-            F.floor(
+            dround(
                 F.count_if(
                     ~F.col("is_cal")
                     & (F.col("r_scaled") <= F.col("q_scaled"))
                 )
                 * 1.0
-                / F.max("n_test")
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0),
+                / F.max("n_test"),
+                4,
+            ),
         ).alias("test_coverage"),
     )
 
@@ -2984,7 +2916,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH per_user AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 'A' ELSE 'B' END AS arm,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -3041,7 +2973,7 @@ def welch_ttest_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("y")
         )
@@ -3135,7 +3067,7 @@ def welch_ttest_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH per_user AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 'A' ELSE 'B' END AS arm,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -3193,7 +3125,7 @@ def mann_whitney_u_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("y")
         )
@@ -3313,7 +3245,7 @@ _RPL_CUTOFF = "2024-01-16 00:00:00"
 WITH train AS (
     SELECT dayofweek(CAST(ts AS DATE)) AS dow, event_type,
            COUNT(value) AS n_r,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS s
     FROM events
     WHERE ts IS NOT NULL AND ts < TIMESTAMP '{_RPL_CUTOFF}'
@@ -3337,7 +3269,7 @@ policy AS (
 ),
 ev AS (
     SELECT dayofweek(CAST(ts AS DATE)) AS dow, event_type,
-           CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
+           {sql_qround('value', 2)} AS cents,
            value
     FROM events
     WHERE ts IS NOT NULL AND ts >= TIMESTAMP '{_RPL_CUTOFF}'
@@ -3355,13 +3287,11 @@ scored AS (
     GROUP BY 1, 2, 3
 )
 SELECT dow, policy_action,
-       (FLOOR(mean_r * 10000 + 0.5) / 10000.0) AS train_mean,
+       {sql_dround('mean_r', 4)} AS train_mean,
        n_eval, n_matched,
-       (FLOOR(CAST(n_matched AS DOUBLE) / n_eval * 1000000 + 0.5)
-        / 1000000.0) AS match_rate,
-       (FLOOR(CAST(s_m AS DOUBLE) / 100.0
-              / (CASE WHEN n_matched_r > 0 THEN n_matched_r END)
-              * 10000 + 0.5) / 10000.0) AS est_policy_value
+       {sql_dround('CAST(n_matched AS DOUBLE) / n_eval', 6)} AS match_rate,
+       {sql_dround('CAST(s_m AS DOUBLE) / 100.0'
+                   ' / (CASE WHEN n_matched_r > 0 THEN n_matched_r END)', 4)} AS est_policy_value
 FROM scored
 """,
 )
@@ -3371,7 +3301,7 @@ def replay_policy_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_tables(spark, sf_dir, "events")["events"]
     cutoff = F.lit(_RPL_CUTOFF).cast("timestamp_ntz")
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("value"), 2)
     # Spark dayofweek is 1=Sunday; DuckDB is 0=Sunday — normalize to
     # DuckDB's numbering since dow is an output key here.
     dow = (F.expr("dayofweek(CAST(ts AS DATE))") - 1).alias("dow")
@@ -3424,27 +3354,17 @@ def replay_policy_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select(
         "dow",
         "policy_action",
-        (F.floor(F.col("mean_r") * 10000 + 0.5) / F.lit(10000.0)).alias(
-            "train_mean"
-        ),
+        dround(F.col("mean_r"), 4).alias("train_mean"),
         "n_eval",
         "n_matched",
-        (
-            F.floor(
-                F.col("n_matched").cast("double") / F.col("n_eval") * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
-        ).alias("match_rate"),
-        (
-            F.floor(
-                F.col("s_m").cast("double")
-                / 100.0
-                / F.when(F.col("n_matched_r") > 0, F.col("n_matched_r"))
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
+        dround(
+                F.col("n_matched").cast("double") / F.col("n_eval"), 6
+            ).alias("match_rate"),
+        dround(
+            F.col("s_m").cast("double")
+            / 100.0
+            / F.when(F.col("n_matched_r") > 0, F.col("n_matched_r")),
+            4,
         ).alias("est_policy_value"),
     )
 
@@ -3466,10 +3386,10 @@ def replay_policy_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "theil_index_decomposition",
-    oracle="""
+    oracle=f"""
 WITH spend AS (
     SELECT o_custkey AS ck,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('o_totalprice', 2)})
                 AS BIGINT) AS x
     FROM orders WHERE o_custkey IS NOT NULL
     GROUP BY 1
@@ -3491,24 +3411,20 @@ tot AS (
 ),
 terms AS (
     SELECT c.nation,
-           (FLOOR((CAST(c.x AS DOUBLE) / (CAST(g.s_g AS DOUBLE) / g.n_g))
-                  * ln(CAST(c.x AS DOUBLE)
-                       / (CAST(g.s_g AS DOUBLE) / g.n_g))
-                  * 1000000000 + 0.5) / 1000000000.0) AS t_i
+           {sql_dround('(CAST(c.x AS DOUBLE) / (CAST(g.s_g AS DOUBLE) / g.n_g))'
+                       ' * ln(CAST(c.x AS DOUBLE)'
+                       ' / (CAST(g.s_g AS DOUBLE) / g.n_g))', 9)} AS t_i
     FROM cust c JOIN g ON c.nation = g.nation
 )
 SELECT g.nation,
        CAST(g.n_g AS BIGINT) AS n_customers,
-       (FLOOR(CAST(g.s_g AS DOUBLE) / g.n_g / 100.0 * 10000 + 0.5)
-        / 10000.0) AS mean_spend,
-       (FLOOR(CAST(w.sum_t AS DOUBLE) / g.n_g * 1000000000 + 0.5)
-        / 1000000000.0) AS theil_within,
-       (FLOOR((CAST(g.n_g AS DOUBLE) / tot.n)
-              * ((CAST(g.s_g AS DOUBLE) / g.n_g)
-                 / (CAST(tot.s AS DOUBLE) / tot.n))
-              * ln((CAST(g.s_g AS DOUBLE) / g.n_g)
-                   / (CAST(tot.s AS DOUBLE) / tot.n))
-              * 1000000000 + 0.5) / 1000000000.0) AS between_term
+       {sql_dround('CAST(g.s_g AS DOUBLE) / g.n_g / 100.0', 4)} AS mean_spend,
+       {sql_dround('CAST(w.sum_t AS DOUBLE) / g.n_g', 9)} AS theil_within,
+       {sql_dround('(CAST(g.n_g AS DOUBLE) / tot.n)'
+                   ' * ((CAST(g.s_g AS DOUBLE) / g.n_g)'
+                   ' / (CAST(tot.s AS DOUBLE) / tot.n))'
+                   ' * ln((CAST(g.s_g AS DOUBLE) / g.n_g)'
+                   ' / (CAST(tot.s AS DOUBLE) / tot.n))', 9)} AS between_term
 FROM g
 JOIN (SELECT nation, SUM(CAST(t_i AS DECIMAL(27,9))) AS sum_t
       FROM terms GROUP BY 1) w ON g.nation = w.nation
@@ -3524,7 +3440,7 @@ def theil_index_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("ck"))
         .agg(
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+                qround(F.col("o_totalprice"), 2)
             )
             .cast("bigint")
             .alias("x")
@@ -3553,10 +3469,7 @@ def theil_index_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = F.col("x").cast("double") / mu_g
     terms = cust.join(F.broadcast(g), "nation").select(
         "nation",
-        (
-            F.floor(ratio * F.log(ratio) * 1000000000 + 0.5)
-            / F.lit(1000000000.0)
-        ).alias("t_i"),
+        dround(ratio * F.log(ratio), 9).alias("t_i"),
     )
     w = terms.groupBy("nation").agg(
         F.sum(F.col("t_i").cast("decimal(27,9)")).alias("sum_t")
@@ -3568,25 +3481,15 @@ def theil_index_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "nation",
             F.col("n_g").cast("bigint").alias("n_customers"),
-            (
-                F.floor(mu_g / 100.0 * 10000 + 0.5) / F.lit(10000.0)
-            ).alias("mean_spend"),
-            (
-                F.floor(
-                    F.col("sum_t").cast("double") / F.col("n_g") * 1000000000
-                    + 0.5
-                )
-                / F.lit(1000000000.0)
-            ).alias("theil_within"),
-            (
-                F.floor(
-                    (F.col("n_g").cast("double") / F.col("n"))
-                    * (mu_g / mu)
-                    * F.log(mu_g / mu)
-                    * 1000000000
-                    + 0.5
-                )
-                / F.lit(1000000000.0)
+            dround(mu_g / 100.0, 4).alias("mean_spend"),
+            dround(
+                    F.col("sum_t").cast("double") / F.col("n_g"), 9
+                ).alias("theil_within"),
+            dround(
+                (F.col("n_g").cast("double") / F.col("n"))
+                * (mu_g / mu)
+                * F.log(mu_g / mu),
+                9,
             ).alias("between_term"),
         )
     )
@@ -3632,11 +3535,11 @@ WITH m AS (
     SELECT event_type,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 'A' ELSE 'B' END AS arm,
            COUNT(*) AS n,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS HUGEINT)
+           CAST(SUM({sql_qround('value', 2)}) AS HUGEINT)
                AS sy,
-           CAST(SUM(CAST(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+           CAST(SUM(CAST({sql_qround('value', 2)}
                          AS HUGEINT)
-                    * CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS HUGEINT)
+                    * {sql_qround('value', 2)}) AS HUGEINT)
                AS syy
     FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
     GROUP BY 1, 2
@@ -3666,8 +3569,7 @@ z AS (
 ),
 p AS (
     SELECT event_type, na, nb, zs,
-           CAST(FLOOR({_tail2('ABS(zs)')} * 1000000000 + 0.5) AS BIGINT)
-               AS p_q
+           {sql_qround(_tail2('ABS(zs)'), 9)} AS p_q
     FROM z
 ),
 ranked AS (
@@ -3697,7 +3599,7 @@ def fdr_bh_ttests(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .training import hash_bucket
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("value"), 2)
     m = (
         events.filter(
             F.col("user_id").isNotNull() & F.col("value").isNotNull()
@@ -3748,8 +3650,7 @@ def fdr_bh_ttests(spark: SparkSession, sf_dir: str) -> DataFrame:
         "na",
         "nb",
         "zs",
-        F.floor(F.expr(_tail2("ABS(zs)")) * 1000000000 + 0.5)
-        .cast("bigint")
+        qround(F.expr(_tail2("ABS(zs)")), 9)
         .alias("p_q"),
     )
     # rank window runs over the aggregated type-cardinality frame
@@ -3974,7 +3875,7 @@ WITH per_user AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 0 ELSE 1 END AS treat,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS cents
     FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
     GROUP BY 1, 2
@@ -4032,7 +3933,7 @@ def uplift_qini_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("cents"),
         )
@@ -4121,7 +4022,7 @@ WITH base AS (
     SELECT event_type,
            CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 2 END
                AS period,
-           CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+           {sql_qround('value', 2)} AS cents
     FROM events
     WHERE ts IS NOT NULL AND event_type IS NOT NULL AND value IS NOT NULL
 ),
@@ -4173,7 +4074,7 @@ def mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(2)
         .alias("period"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        qround(F.col("value"), 2).alias("cents"),
     )
     per = base.groupBy("period", "event_type").agg(
         F.count("*").alias("n"),
@@ -4241,7 +4142,7 @@ WITH per AS (
     SELECT l_partkey,
            CASE WHEN l_shipdate < TIMESTAMP '{_PI_Y2[0]} 00:00:00'
                 THEN 1 ELSE 2 END AS period,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('l_extendedprice', 2)})
                AS BIGINT) AS e,
            CAST(SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
                AS q
@@ -4289,9 +4190,7 @@ def price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + 0.5).cast(
-                    "bigint"
-                )
+                qround(F.col("l_extendedprice"), 2)
             )
             .cast("bigint")
             .alias("e"),
@@ -4357,8 +4256,7 @@ def price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH part_rev AS (
     SELECT l_partkey,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100
-                + 0.5) AS BIGINT)) AS BIGINT) AS cents
+           CAST(SUM({sql_qround('l_extendedprice * (1 - l_discount)', 2)}) AS BIGINT) AS cents
     FROM lineitem GROUP BY 1
 ),
 ranked AS (
@@ -4389,10 +4287,9 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"]
     part_rev = li.groupBy("l_partkey").agg(
         F.sum(
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + 0.5
-            ).cast("bigint")
+            qround(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
+            )
         )
         .cast("bigint")
         .alias("cents")
@@ -4456,7 +4353,7 @@ WITH x AS (
     -- ~1.6x worst-case headroom; realistic headroom is >>10x since
     -- the mean is ~5000 cents, not cap). Beyond that n, switch to
     -- the per-partition-centering Welford rewrite noted below.
-    SELECT event_type, {sql_cents('value')} AS c
+    SELECT event_type, {sql_qround('value', 2, CENTS_CAP)} AS c
     FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
 ),
 m AS (
@@ -4497,7 +4394,7 @@ def moments_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
     ).select(
         "event_type",
-        cents("value").alias("c"),
+        qround("value", 2, CENTS_CAP).alias("c"),
     )
     dec = lambda col: F.col(col).cast("decimal(38,0)")  # noqa: E731
     m = x.groupBy("event_type").agg(
@@ -4560,7 +4457,7 @@ WITH open_orders AS (
     SELECT o_orderstatus AS status,
            CAST(DATE '{_AGING_AS_OF}' - CAST(o_orderdate AS DATE)
                AS BIGINT) AS age_days,
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+           {sql_qround('o_totalprice', 2)} AS cents
     FROM orders
     WHERE o_orderstatus IN ('O', 'P')
       AND o_orderdate < TIMESTAMP '{_AGING_AS_OF} 00:00:00'
@@ -4577,7 +4474,7 @@ bucketed AS (
 SELECT status, age_bucket,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(SUM(cents) AS BIGINT) AS balance_cents,
-       (FLOOR(CAST(SUM(cents) AS BIGINT) / 100.0 * 100 + 0.5) / 100.0)
+       {sql_dround('CAST(SUM(cents) AS BIGINT) / 100.0', 2)}
            AS balance
 FROM bucketed
 GROUP BY 1, 2
@@ -4599,8 +4496,7 @@ def receivables_aging_buckets(
         F.datediff(asof, F.to_date("o_orderdate"))
         .cast("bigint")
         .alias("age_days"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5)
-        .cast("bigint")
+        qround(F.col("o_totalprice"), 2)
         .alias("cents"),
     )
     bucket = (
@@ -4612,10 +4508,7 @@ def receivables_aging_buckets(
     return base.groupBy("status", bucket.alias("age_bucket")).agg(
         F.count("*").alias("n_orders"),
         F.sum("cents").cast("bigint").alias("balance_cents"),
-        (
-            F.floor(F.sum("cents").cast("bigint") / 100.0 * 100 + 0.5)
-            / 100.0
-        ).alias("balance"),
+        dround(F.sum("cents").cast("bigint") / 100.0, 2).alias("balance"),
     )
 
 
@@ -4646,7 +4539,7 @@ WITH per_user AS (
                 WHEN {_sql_hb('user_id')} < 50 THEN 'B'
                 WHEN {_sql_hb('user_id')} < 75 THEN 'C'
                 ELSE 'D' END AS arm,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -4709,7 +4602,7 @@ def anova_oneway_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("y")
         )
@@ -4823,7 +4716,7 @@ WITH per_user AS (
                 WHEN {_sql_hb('user_id')} < 50 THEN 'B'
                 WHEN {_sql_hb('user_id')} < 75 THEN 'C'
                 ELSE 'D' END AS arm,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({sql_qround('value', 2)}) AS BIGINT)
                AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -4895,7 +4788,7 @@ def kruskal_wallis_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("value"), 2))
             .cast("bigint")
             .alias("y")
         )
@@ -5054,8 +4947,7 @@ lnf0 AS (
     SELECT unnest(range(1, (SELECT n_a + n_b + 4 FROM pr))) AS j
 ),
 lnf1 AS (
-    SELECT j, CAST(FLOOR(ln(CAST(j AS DOUBLE)) * 1000000000000 + 0.5)
-                   AS BIGINT) AS lq
+    SELECT j, {sql_qround('ln(CAST(j AS DOUBLE))', 12)} AS lq
     FROM lnf0
 ),
 lnf AS (
@@ -5073,8 +4965,7 @@ terms AS (
 tq AS (
     SELECT t.i,
            (l1.f + l2.f - l3.f)
-           - CAST(FLOOR(ln(CAST(t.bb + t.i AS DOUBLE)) * 1000000000000
-                        + 0.5) AS BIGINT)
+           - {sql_qround('ln(CAST(t.bb + t.i AS DOUBLE))', 12)}
            - (l4.f + l5.f - l6.f)
            - (l7.f + l8.f - l9.f) AS ltq
     FROM terms t
@@ -5089,8 +4980,7 @@ tq AS (
     JOIN lnf l9 ON l9.n = t.aa + t.ba - 1
 ),
 p AS (
-    SELECT CAST(SUM(CAST(FLOOR(exp(ltq / 1000000000000.0) * 1000000000000
-                               + 0.5) AS BIGINT)) AS BIGINT) AS pq
+    SELECT CAST(SUM({sql_qround('exp(ltq / 1000000000000.0)', 12)}) AS BIGINT) AS pq
     FROM tq
 )
 SELECT CAST(pr.n_a AS BIGINT) AS n_a,
@@ -5152,16 +5042,13 @@ def bayes_beta_binomial_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s_b") + 1).alias("ab"),
         (F.col("n_b") - F.col("s_b") + 1).alias("bb"),
     ).localCheckpoint(eager=True)
-    q12 = F.lit(1000000000000)
     lnf1 = pr.select(
         F.explode(
             F.sequence(F.lit(1), F.col("n_a") + F.col("n_b") + 3)
         ).alias("j")
     ).select(
         "j",
-        F.floor(F.log(F.col("j").cast("double")) * q12 + 0.5)
-        .cast("bigint")
-        .alias("lq"),
+        qround(F.log(F.col("j").cast("double")), 12).alias("lq"),
     )
     from pyspark.sql.window import Window as _W
 
@@ -5199,17 +5086,13 @@ def bayes_beta_binomial_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         j = j.join(tbl, k == F.col(f"n_{tag}"))
     ltq = (
         (F.col("f_1") + F.col("f_2") - F.col("f_3"))
-        - F.floor(
-            F.log((F.col("bb") + F.col("i")).cast("double")) * q12 + 0.5
-        ).cast("bigint")
+        - qround(F.log((F.col("bb") + F.col("i")).cast("double")), 12)
         - (F.col("f_4") + F.col("f_5") - F.col("f_6"))
         - (F.col("f_7") + F.col("f_8") - F.col("f_9"))
     )
     p = j.select(ltq.alias("ltq")).agg(
         F.sum(
-            F.floor(F.exp(F.col("ltq") / 1000000000000.0) * q12 + 0.5).cast(
-                "bigint"
-            )
+            qround(F.exp(F.col("ltq") / 1000000000000.0), 12)
         )
         .cast("bigint")
         .alias("pq")
@@ -5255,7 +5138,7 @@ _PERM_B = 200
 WITH per_user AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 0 ELSE 1 END AS arm,
-           CAST(SUM(CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2)})
                 AS BIGINT) AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ),
@@ -5322,8 +5205,7 @@ def rerandomization_test_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-                .cast("bigint")
+                qround(F.coalesce(F.col("value"), F.lit(0.0)), 2)
             )
             .cast("bigint")
             .alias("y")
@@ -5459,9 +5341,8 @@ SELECT CAST(k AS BIGINT) AS look,
        cutoff AS look_date,
        CAST(na + nb AS BIGINT) AS n_users,
        CAST(sa + sb AS BIGINT) AS n_conversions,
-       (FLOOR(zval * 1000000 + 0.5) / 1000000.0) AS z,
-       (FLOOR({_GSEQ_C} * sqrt({_GSEQ_LOOKS}.0 / k) * 1000000 + 0.5)
-        / 1000000.0) AS obf_boundary,
+       {sql_dround('zval', 6)} AS z,
+       {sql_dround(f'{_GSEQ_C} * sqrt({_GSEQ_LOOKS}.0 / k)', 6)} AS obf_boundary,
        ABS(zval) > {_GSEQ_C} * sqrt({_GSEQ_LOOKS}.0 / k) AS crossed
 FROM z
 """,
@@ -5535,8 +5416,8 @@ def group_sequential_obf_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cutoff").alias("look_date"),
             (F.col("na") + F.col("nb")).cast("bigint").alias("n_users"),
             (F.col("sa") + F.col("sb")).cast("bigint").alias("n_conversions"),
-            (F.floor(zval * 1000000 + 0.5) / 1000000.0).alias("z"),
-            (F.floor(bnd * 1000000 + 0.5) / 1000000.0).alias("obf_boundary"),
+            dround(zval, 6).alias("z"),
+            dround(bnd, 6).alias("obf_boundary"),
             (F.abs(zval) > bnd).alias("crossed"),
         )
     )
@@ -5587,7 +5468,7 @@ v_{tag} AS (
 WITH d_users AS (
     SELECT user_id,
            CASE WHEN {_sql_hb('user_id')} < 50 THEN 'A' ELSE 'B' END AS arm,
-           CAST(SUM(CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2)})
                 AS BIGINT) AS x,
            COUNT(*) AS y
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
@@ -5626,8 +5507,7 @@ def ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5)
-                .cast("bigint")
+                qround(F.coalesce(F.col("value"), F.lit(0.0)), 2)
             )
             .cast("bigint")
             .alias("x"),

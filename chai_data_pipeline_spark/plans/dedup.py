@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dround, sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..operators.dedup import (
     dedup_exact,
     hamming64,
@@ -242,16 +242,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_embedding_cosine",
-    oracle="""
+    oracle=f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       (FLOOR((
-           list_sum(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(range(1, 65),
-               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-            * sqrt(list_sum(list_transform(range(1, 65),
-               i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-       ) * 1000000 + 0.5) / 1000000.0) AS cosine
+       {sql_dround('('
+                   ' list_sum(list_transform(range(1, 65),'
+                   ' i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))'
+                   ' / (sqrt(list_sum(list_transform(range(1, 65),'
+                   ' i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))'
+                   ' * sqrt(list_sum(list_transform(range(1, 65),'
+                   ' i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))'
+                   ' )', 6)} AS cosine
 FROM embeddings a JOIN embeddings b
   ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE (list_sum(list_transform(range(1, 65),
@@ -1520,10 +1520,8 @@ SELECT source,
        COUNT(*) AS n_chunks,
        COUNT(DISTINCT chash) AS n_distinct_chunks,
        CAST(SUM(clen) AS BIGINT) AS total_chars,
-       (FLOOR(CAST(SUM(clen) AS BIGINT) * 1.0 / COUNT(*) * 10000 + 0.5)
-        / 10000.0) AS avg_chunk_len,
-       (FLOOR((1.0 - COUNT(DISTINCT chash) * 1.0 / COUNT(*)) * 1000000
-        + 0.5) / 1000000.0) AS dedup_ratio
+       {sql_dround('CAST(SUM(clen) AS BIGINT) * 1.0 / COUNT(*)', 4)} AS avg_chunk_len,
+       {sql_dround('(1.0 - COUNT(DISTINCT chash) * 1.0 / COUNT(*))', 6)} AS dedup_ratio
 FROM hashed
 GROUP BY 1
 """,
@@ -1582,23 +1580,15 @@ def content_defined_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_chunks"),
         F.count_distinct("chash").alias("n_distinct_chunks"),
         F.sum("clen").cast("bigint").alias("total_chars"),
-        (
-            F.floor(
-                F.sum("clen").cast("bigint") * 1.0 / F.count("*") * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
-        ).alias("avg_chunk_len"),
-        (
-            F.floor(
-                (
-                    1.0
-                    - F.count_distinct("chash") * 1.0 / F.count("*")
-                )
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
+        dround(
+                F.sum("clen").cast("bigint") * 1.0 / F.count("*"), 4
+            ).alias("avg_chunk_len"),
+        dround(
+            (
+                1.0
+                - F.count_distinct("chash") * 1.0 / F.count("*")
+            ),
+            6,
         ).alias("dedup_ratio"),
     )
 
@@ -1926,8 +1916,7 @@ SELECT COUNT(*) AS n_true_pairs,
        COUNT(*) FILTER (WHERE same_block) AS n_blocked_pairs,
        COUNT(*) FILTER (WHERE NOT same_block) AS n_missed_pairs,
        CASE WHEN COUNT(*) > 0 THEN
-           (FLOOR(COUNT(*) FILTER (WHERE same_block) * 1.0 / COUNT(*)
-            * 1000000 + 0.5) / 1000000.0)
+           {sql_dround('COUNT(*) FILTER (WHERE same_block) * 1.0 / COUNT(*)', 6)}
        END AS blocking_recall
 FROM truth
 """,
@@ -1969,7 +1958,7 @@ def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_blk.alias("n_blocked_pairs"),
         F.count_if(~F.col("same_block")).alias("n_missed_pairs"),
         F.when(
-            n > 0, F.floor(n_blk * 1.0 / n * 1000000 + 0.5) / 1000000.0
+            n > 0, dround(n_blk * 1.0 / n, 6)
         ).alias("blocking_recall"),
     )
 
@@ -2102,7 +2091,7 @@ delta AS (SELECT * FROM flagged WHERE new_a OR new_b)
 SELECT CASE WHEN new_a AND new_b THEN 'new_new' ELSE 'new_old' END
            AS pair_class,
        COUNT(*) AS n_pairs,
-       CAST(SUM(CAST(FLOOR(jaccard * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_qround('jaccard', 6)}) AS BIGINT)
            AS jaccard_micro_sum
 FROM delta
 GROUP BY 1
@@ -2184,7 +2173,7 @@ def incremental_lsh_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("pair_class")
     ).agg(
         F.count("*").alias("n_pairs"),
-        F.sum(F.floor(F.col("jaccard") * 1000000 + 0.5).cast("bigint"))
+        F.sum(qround(F.col("jaccard"), 6))
         .cast("bigint")
         .alias("jaccard_micro_sum"),
     )
@@ -2943,7 +2932,7 @@ WITH c AS (
            LENGTH(c_name) // 4 AS lb,
            c_mktsegment AS seg,
            CASE WHEN c_acctbal IS NOT NULL THEN
-               CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) END AS bal
+               {sql_qround('c_acctbal', 2)} END AS bal
     FROM customer
 ),
 pairs AS (
@@ -2958,18 +2947,16 @@ pairs AS (
 ),
 pat AS MATERIALIZED (
     SELECT g_name, g_seg, g_bal, CAST(COUNT(*) AS BIGINT) AS cnt,
-           CAST(FLOOR(
-               ({_fs_d(_FS_P0)} * (CASE WHEN g_name THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)
-                          * (CASE WHEN g_seg  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)
-                          * (CASE WHEN g_bal  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END))
-               / ({_fs_d(_FS_P0)} * (CASE WHEN g_name THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)
-                           * (CASE WHEN g_seg  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)
-                           * (CASE WHEN g_bal  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)
-                  + {_fs_d(1 - _FS_P0)}
-                           * (CASE WHEN g_name THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END)
-                           * (CASE WHEN g_seg  THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END)
-                           * (CASE WHEN g_bal  THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END))
-               * 1000000 + 0.5) AS BIGINT) AS wq
+           {sql_qround(f'({_fs_d(_FS_P0)} * (CASE WHEN g_name THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)'
+                       f' * (CASE WHEN g_seg  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)'
+                       f' * (CASE WHEN g_bal  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END))'
+                       f' / ({_fs_d(_FS_P0)} * (CASE WHEN g_name THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)'
+                       f' * (CASE WHEN g_seg  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)'
+                       f' * (CASE WHEN g_bal  THEN {_fs_d(_FS_M0)} ELSE {_fs_d(1 - _FS_M0)} END)'
+                       f' + {_fs_d(1 - _FS_P0)}'
+                       f' * (CASE WHEN g_name THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END)'
+                       f' * (CASE WHEN g_seg  THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END)'
+                       f' * (CASE WHEN g_bal  THEN {_fs_d(_FS_U0)} ELSE {_fs_d(1 - _FS_U0)} END))', 6)} AS wq
     FROM pairs GROUP BY 1, 2, 3
 ),
 fields AS (
@@ -3007,7 +2994,7 @@ def fellegi_sunter_em_weights(
         F.col("c_mktsegment").alias("seg"),
         F.when(
             F.col("c_acctbal").isNotNull(),
-            F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint"),
+            qround(F.col("c_acctbal"), 2),
         ).alias("bal"),
     )
     a, b = c.alias("a"), c.alias("b")
@@ -3048,7 +3035,7 @@ def fellegi_sunter_em_weights(
         .agg(F.count("*").cast("bigint").alias("cnt"))
         .withColumn(
             "wq",
-            F.floor(num / den * 1000000 + 0.5).cast("bigint"),
+            qround(num / den, 6),
         )
     )
     parts = []
@@ -3225,11 +3212,9 @@ def _bbit_leg_sql(name: str, bits: int, mcol: str, r: float) -> str:
     return f"""
 SELECT '{name}' AS estimator, {bits} AS bits_per_perm,
        COUNT(*) AS n_pairs,
-       CAST(FLOOR(SUM(CAST(FLOOR(ABS({est} - jx) * 1000000 + 0.5)
-                           AS BIGINT)) * 1.0 / COUNT(*) + 0.5) AS BIGINT)
+       CAST(FLOOR(SUM({sql_qround(f'ABS({est} - jx)', 6)}) * 1.0 / COUNT(*) + 0.5) AS BIGINT)
            AS mae_ppm,
-       CAST(FLOOR(SUM(CAST(FLOOR(({est} - jx) * 1000000 + 0.5)
-                           AS BIGINT)) * 1.0 / COUNT(*) + 0.5) AS BIGINT)
+       CAST(FLOOR(SUM({sql_qround(f'({est} - jx)', 6)}) * 1.0 / COUNT(*) + 0.5) AS BIGINT)
            AS bias_ppm
 FROM bb_perpair"""
 
@@ -3356,10 +3341,8 @@ def bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             est = F.col(mcol) / float(_MINHASH_PERMS)
-        errq = F.floor(F.abs(est - F.col("jx")) * 1000000 + 0.5).cast(
-            "bigint"
-        )
-        biasq = F.floor((est - F.col("jx")) * 1000000 + 0.5).cast("bigint")
+        errq = qround(F.abs(est - F.col("jx")), 6)
+        biasq = qround(est - F.col("jx"), 6)
         return perpair.agg(
             F.count("*").alias("n_pairs"),
             F.floor(F.sum(errq) * 1.0 / F.count("*") + 0.5)

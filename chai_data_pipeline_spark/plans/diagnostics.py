@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..session import load_tables
 from .registry import query
 
@@ -579,7 +579,7 @@ def watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "benford_digit_audit",
     oracle=f"""
 WITH d AS (
-    SELECT CAST(substring(CAST(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
+    SELECT CAST(substring(CAST({sql_qround('o_totalprice', 2)}
                 AS VARCHAR), 1, 1) AS BIGINT) AS digit
     FROM orders
     WHERE o_totalprice > 0
@@ -609,7 +609,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     digit = F.substring(
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").cast("string"),
+        qround(F.col("o_totalprice"), 2).cast("string"),
         1,
         1,
     ).cast("bigint")
@@ -642,7 +642,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "self_join_blowup_forecast",
-    oracle="""
+    oracle=f"""
 WITH per_key AS (
     SELECT event_type, user_id, COUNT(*) AS c
     FROM events GROUP BY 1, 2
@@ -652,8 +652,7 @@ SELECT event_type,
        COUNT(*) AS n_keys,
        CAST(SUM(c * c) AS BIGINT) AS forecast_pairs,
        CAST(MAX(c) * MAX(c) AS BIGINT) AS worst_key_pairs,
-       (FLOOR(CAST(SUM(c * c) AS BIGINT) * 1.0 / CAST(SUM(c) AS BIGINT)
-        * 10000 + 0.5) / 10000.0) AS amplification
+       {sql_dround('CAST(SUM(c * c) AS BIGINT) * 1.0 / CAST(SUM(c) AS BIGINT)', 4)} AS amplification
 FROM per_key
 GROUP BY 1
 """,
@@ -675,15 +674,11 @@ def self_join_blowup_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_keys"),
         F.sum(F.col("c") * F.col("c")).cast("bigint").alias("forecast_pairs"),
         (F.max("c") * F.max("c")).cast("bigint").alias("worst_key_pairs"),
-        (
-            F.floor(
-                F.sum(F.col("c") * F.col("c")).cast("bigint")
-                * 1.0
-                / F.sum("c").cast("bigint")
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
+        dround(
+            F.sum(F.col("c") * F.col("c")).cast("bigint")
+            * 1.0
+            / F.sum("c").cast("bigint"),
+            4,
         ).alias("amplification"),
     )
 
@@ -797,9 +792,9 @@ avg_daily AS (
 SELECT c.n_users,
        (SELECT CAST(MAX(m) AS BIGINT) FROM per_user) AS max_contribution,
        c.p99 AS recommended_clip,
-       (FLOOR(c.p99 * {_DP_GAUSS_C} * 10000 + 0.5) / 10000.0)
+       {sql_dround(f'c.p99 * {_DP_GAUSS_C}', 4)}
            AS gaussian_sigma_eps1,
-       (FLOOR(c.p99 * {_DP_GAUSS_C} / a.avg_n * 1000000 + 0.5) / 1000000.0)
+       {sql_dround(f'c.p99 * {_DP_GAUSS_C} / a.avg_n', 6)}
            AS relative_noise
 FROM clip c CROSS JOIN avg_daily a
 """,
@@ -850,17 +845,10 @@ def dp_sensitivity_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             "max_contribution",
             F.col("p99").alias("recommended_clip"),
-            (
-                F.floor(F.col("p99") * _DP_GAUSS_C * 10000 + 0.5)
-                / F.lit(10000.0)
-            ).alias("gaussian_sigma_eps1"),
-            (
-                F.floor(
-                    F.col("p99") * _DP_GAUSS_C / F.col("avg_n") * 1000000
-                    + 0.5
-                )
-                / F.lit(1000000.0)
-            ).alias("relative_noise"),
+            dround(F.col("p99") * _DP_GAUSS_C, 4).alias("gaussian_sigma_eps1"),
+            dround(
+                    F.col("p99") * _DP_GAUSS_C / F.col("avg_n"), 6
+                ).alias("relative_noise"),
         )
     )
 
@@ -931,12 +919,11 @@ c AS (
 SELECT n AS n_days, both_f AS both_flag, only_z, only_e,
        CASE WHEN n * n - ((both_f + only_z) * (both_f + only_e)
                  + (only_e + neither) * (only_z + neither)) <> 0 THEN
-       (FLOOR(CAST(n * (both_f + neither)
-               - ((both_f + only_z) * (both_f + only_e)
-                  + (only_e + neither) * (only_z + neither)) AS DOUBLE)
-        / CAST(n * n - ((both_f + only_z) * (both_f + only_e)
-               + (only_e + neither) * (only_z + neither)) AS DOUBLE)
-        * 1000000 + 0.5) / 1000000.0) END AS cohens_kappa
+       {sql_dround('CAST(n * (both_f + neither)'
+                   ' - ((both_f + only_z) * (both_f + only_e)'
+                   ' + (only_e + neither) * (only_z + neither)) AS DOUBLE)'
+                   ' / CAST(n * n - ((both_f + only_z) * (both_f + only_e)'
+                   ' + (only_e + neither) * (only_z + neither)) AS DOUBLE)', 6)} END AS cohens_kappa
 FROM c
 """,
 )
@@ -1019,14 +1006,12 @@ def detector_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "only_e",
         F.when(
             kden != 0,
-            F.floor(
+            dround(
                 (F.col("n") * (F.col("both_f") + F.col("neither")) - chance)
                 .cast("double")
-                / kden.cast("double")
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0),
+                / kden.cast("double"),
+                6,
+            ),
         ).alias("cohens_kappa"),
     )
 
@@ -1155,7 +1140,7 @@ def jensen_shannon_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wasserstein_value_drift",
     oracle=f"""
 WITH src AS (
-    SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
+    SELECT {sql_qround('value', 2)} AS v,
            CASE WHEN ts < TIMESTAMP '{_PSI_CUTOFF}' THEN 1 ELSE 0 END
                AS is_a
     FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
@@ -1202,7 +1187,7 @@ def wasserstein_value_drift(
     src = events.filter(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("v"),
+        qround(F.col("value"), 2).alias("v"),
         F.when(
             F.col("ts") < F.lit(_PSI_CUTOFF).cast("timestamp_ntz"), 1
         )

@@ -330,8 +330,8 @@ deg AS (
 SELECT na.n_name AS nation, d.degree,
        COALESCE(t.n_triangles, 0) AS n_triangles,
        CASE WHEN d.degree >= 2 THEN
-           (FLOOR(2.0 * COALESCE(t.n_triangles, 0)
-            / (d.degree * (d.degree - 1)) * 1000000 + 0.5) / 1000000.0)
+           {sql_dround('2.0 * COALESCE(t.n_triangles, 0)'
+                       ' / (d.degree * (d.degree - 1))', 6)}
        END AS clustering_coeff
 FROM deg d
 LEFT JOIN node_tri t USING (node)
@@ -395,14 +395,12 @@ def triangle_count_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cc = F.when(
         F.col("degree") >= 2,
-        F.floor(
+        dround(
             2.0
             * F.coalesce(F.col("n_triangles"), F.lit(0))
-            / (F.col("degree") * (F.col("degree") - 1))
-            * 1000000
-            + 0.5
-        )
-        / F.lit(1000000.0),
+            / (F.col("degree") * (F.col("degree") - 1)),
+            6,
+        ),
     )
     return (
         deg.join(node_tri, "node", "left")
@@ -1543,8 +1541,7 @@ SELECT na.n_name AS nation,
        CAST(COUNT(*) - 1 AS BIGINT) AS n_reachable,
        CAST(SUM(dist) AS BIGINT) AS sum_dist,
        CASE WHEN SUM(dist) = 0 THEN 0.0
-            ELSE (FLOOR((COUNT(*) - 1) * 1.0 / SUM(dist) * 1000000 + 0.5)
-                  / 1000000.0) END AS closeness,
+            ELSE {sql_dround('(COUNT(*) - 1) * 1.0 / SUM(dist)', 6)} END AS closeness,
        CAST(SUM(CASE WHEN dist > 0
                      THEN CAST(FLOOR(1000000.0 / dist) AS BIGINT)
                      ELSE 0 END) AS DOUBLE) / 1000000.0 AS harmonic
@@ -1637,10 +1634,9 @@ def closeness_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_dist",
         F.when(F.col("sum_dist") == 0, F.lit(0.0))
         .otherwise(
-            F.floor(
-                F.col("n_reachable") * 1.0 / F.col("sum_dist") * 1000000 + 0.5
+            dround(
+                F.col("n_reachable") * 1.0 / F.col("sum_dist"), 6
             )
-            / 1000000.0
         )
         .alias("closeness"),
         (F.col("harm_i").cast("double") / 1000000.0).alias("harmonic"),

@@ -339,10 +339,9 @@ def _enc_leg_sql(table: str, col: str) -> str:
 SELECT '{table}.{col}' AS column_name,
        COUNT(*) AS n_rows,
        COUNT(DISTINCT {col}) AS n_distinct,
-       (FLOOR(COUNT(DISTINCT {col}) * 1.0 / COUNT(*) * 1000000 + 0.5)
-        / 1000000.0) AS distinct_ratio,
-       (FLOOR(CAST(SUM(octet_length(encode({col}))) AS BIGINT) * 1.0
-            / COUNT(*) * 100 + 0.5) / 100.0) AS avg_bytes,
+       {sql_dround(f'COUNT(DISTINCT {col}) * 1.0 / COUNT(*)', 6)} AS distinct_ratio,
+       {sql_dround(f'CAST(SUM(octet_length(encode({col}))) AS BIGINT) * 1.0'
+                   ' / COUNT(*)', 2)} AS avg_bytes,
        (COUNT(DISTINCT {col}) * 1.0 / COUNT(*) < 0.1) AS recommend_dict
 FROM {table}"""
 
@@ -368,19 +367,12 @@ def encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(f"{t}.{c}").alias("column_name"),
                 F.count("*").alias("n_rows"),
                 nd.alias("n_distinct"),
-                (
-                    F.floor(nd * 1.0 / F.count("*") * 1000000 + 0.5)
-                    / F.lit(1000000.0)
-                ).alias("distinct_ratio"),
-                (
-                    F.floor(
-                        F.sum(F.octet_length(F.col(c))).cast("bigint")
-                        * 1.0
-                        / F.count("*")
-                        * 100
-                        + 0.5
-                    )
-                    / F.lit(100.0)
+                dround(nd * 1.0 / F.count("*"), 6).alias("distinct_ratio"),
+                dround(
+                    F.sum(F.octet_length(F.col(c))).cast("bigint")
+                    * 1.0
+                    / F.count("*"),
+                    2,
                 ).alias("avg_bytes"),
                 (nd * 1.0 / F.count("*") < 0.1).alias("recommend_dict"),
             )

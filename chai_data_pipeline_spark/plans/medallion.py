@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import AS_OF, query
+from ..functions import sql_dround, sql_qround
 
 _FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -211,26 +212,20 @@ global_latest AS (
 -- derives them (dround 2 on the double quotient, 0 when confirmed<=0)
 rates_latest AS (
     SELECT CASE WHEN confirmed > 0 THEN
-               FLOOR((CAST(deaths AS DOUBLE) * 100 / confirmed)
-                     * 100 + 0.5) / 100.0
+               {sql_dround('(CAST(deaths AS DOUBLE) * 100 / confirmed)', 2)}
            ELSE 0.0 END AS mr,
            CASE WHEN confirmed > 0 THEN
-               FLOOR((CAST(recovered AS DOUBLE) * 100 / confirmed)
-                     * 100 + 0.5) / 100.0
+               {sql_dround('(CAST(recovered AS DOUBLE) * 100 / confirmed)', 2)}
            ELSE 0.0 END AS rr
     FROM covid
     WHERE record_date = (SELECT MAX(record_date) FROM covid)
 ),
 -- integer-cents sum (exact, order-independent), one division, dround 6
 glob_rates AS (
-    SELECT FLOOR((CAST(SUM(CAST(FLOOR(mr * 100 + 0.5) AS BIGINT))
-                       AS DOUBLE)
-                  / CAST(100 * COUNT(*) AS DOUBLE))
-                 * 1000000 + 0.5) / 1000000.0 AS gmr,
-           FLOOR((CAST(SUM(CAST(FLOOR(rr * 100 + 0.5) AS BIGINT))
-                       AS DOUBLE)
-                  / CAST(100 * COUNT(*) AS DOUBLE))
-                 * 1000000 + 0.5) / 1000000.0 AS grr
+    SELECT {sql_dround(f"CAST(SUM({sql_qround('mr', 2)}) AS DOUBLE)"
+                       " / CAST(100 * COUNT(*) AS DOUBLE)", 6)} AS gmr,
+           {sql_dround(f"CAST(SUM({sql_qround('rr', 2)}) AS DOUBLE)"
+                       " / CAST(100 * COUNT(*) AS DOUBLE)", 6)} AS grr
     FROM rates_latest
 ),
 top1 AS (
@@ -295,15 +290,13 @@ SELECT 'gold_quality_score', CAST(90 AS DOUBLE), NULL
 UNION ALL
 SELECT 'completeness_survival_rate',
        CASE WHEN confirmed > 0 THEN
-           FLOOR((CAST(confirmed - deaths AS DOUBLE) / confirmed * 100)
-                 * 100 + 0.5) / 100.0
+           {sql_dround('(CAST(confirmed - deaths AS DOUBLE) / confirmed * 100)', 2)}
        ELSE 0.0 END, NULL
 FROM global_latest
 UNION ALL
 SELECT 'completeness_recovery_pct',
        CASE WHEN confirmed > 0 THEN
-           FLOOR((CAST(recovered AS DOUBLE) / confirmed * 100)
-                 * 100 + 0.5) / 100.0
+           {sql_dround('(CAST(recovered AS DOUBLE) / confirmed * 100)', 2)}
        ELSE 0.0 END, NULL
 FROM global_latest
 UNION ALL

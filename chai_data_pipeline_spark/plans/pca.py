@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..session import load_tables
 from .registry import query
+from ..functions import qround, sql_qround
 
 _PCA_DIM = 64
 _PCA_ITERS = 3
@@ -52,12 +53,12 @@ w{t} AS (
 ),
 s{t} AS (SELECT MAX(ABS(m)) AS mmax FROM w{t}),
 q{t} AS (
-    SELECT w.dim, CAST(FLOOR(w.m / s.mmax * 1000000 + 0.5) AS BIGINT) AS mq
+    SELECT w.dim, {sql_qround('w.m / s.mmax', 6)} AS mq
     FROM w{t} w CROSS JOIN s{t} s
 ),
 n{t} AS (SELECT sqrt(CAST(SUM(mq * mq) AS DOUBLE)) AS nrm FROM q{t}),
 v{t} AS (
-    SELECT q.dim, CAST(FLOOR(q.mq / n.nrm * 1000000 + 0.5) AS BIGINT) AS v
+    SELECT q.dim, {sql_qround('q.mq / n.nrm', 6)} AS v
     FROM q{t} q CROSS JOIN n{t} n
 )"""
 
@@ -133,8 +134,7 @@ def pca_power_iteration_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = w.agg(F.max(F.abs(F.col("m"))).alias("mmax"))
         q = w.crossJoin(F.broadcast(s)).select(
             "dim",
-            F.floor(F.col("m") / F.col("mmax") * 1000000 + 0.5)
-            .cast("bigint")
+            qround(F.col("m") / F.col("mmax"), 6)
             .alias("mq"),
         )
         n = q.agg(
@@ -142,8 +142,7 @@ def pca_power_iteration_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v = q.crossJoin(F.broadcast(n)).select(
             "dim",
-            F.floor(F.col("mq") / F.col("nrm") * 1000000 + 0.5)
-            .cast("bigint")
+            qround(F.col("mq") / F.col("nrm"), 6)
             .alias("v"),
         )
     return v.select(

@@ -12,7 +12,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dround, dsum, epoch_seconds, sql_dround, sql_dsum
+from ..functions import (
+    dround,
+    dsum,
+    epoch_seconds,
+    qround,
+    sql_dround,
+    sql_dsum,
+    sql_qround,
+)
 from ..session import load_tables
 from .registry import query
 
@@ -418,9 +426,9 @@ SELECT CAST({_KANON_K} AS BIGINT) AS k,
        CAST(SUM(class_size) AS BIGINT) AS n_rows,
        CAST(COALESCE(SUM(class_size) FILTER (
            WHERE class_size < {_KANON_K}), 0) AS BIGINT) AS n_rows_at_risk,
-       (FLOOR(CAST(COALESCE(SUM(class_size) FILTER (
-            WHERE class_size < {_KANON_K}), 0) AS BIGINT) * 1.0
-        / CAST(SUM(class_size) AS BIGINT) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('CAST(COALESCE(SUM(class_size) FILTER ('
+                   f' WHERE class_size < {_KANON_K}), 0) AS BIGINT) * 1.0'
+                   ' / CAST(SUM(class_size) AS BIGINT)', 6)}
            AS suppression_cost,
        CAST(MIN(class_size) AS BIGINT) AS min_class_size
 FROM classes
@@ -450,13 +458,9 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(small).alias("n_small_classes"),
         F.sum("class_size").cast("bigint").alias("n_rows"),
         risk.alias("n_rows_at_risk"),
-        (
-            F.floor(
-                risk * 1.0 / F.sum("class_size").cast("bigint") * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
-        ).alias("suppression_cost"),
+        dround(
+                risk * 1.0 / F.sum("class_size").cast("bigint"), 6
+            ).alias("suppression_cost"),
         F.min("class_size").cast("bigint").alias("min_class_size"),
     )
 
@@ -496,8 +500,7 @@ SELECT CAST({_LDIV_L} AS BIGINT) AS l,
        CAST(COALESCE(SUM(class_size) FILTER (
            WHERE l_distinct < {_LDIV_L}), 0) AS BIGINT) AS n_rows_at_risk,
        CAST(MIN(l_distinct) AS BIGINT) AS min_l,
-       (FLOOR(CAST(SUM(l_distinct) AS BIGINT) * 1.0 / COUNT(*)
-        * 1000000 + 0.5) / 1000000.0) AS avg_l
+       {sql_dround('CAST(SUM(l_distinct) AS BIGINT) * 1.0 / COUNT(*)', 6)} AS avg_l
 FROM classes
 """,
 )
@@ -523,14 +526,9 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_rows_at_risk"),
         F.min("l_distinct").cast("bigint").alias("min_l"),
-        (
-            F.floor(
-                F.sum("l_distinct").cast("bigint") * 1.0 / F.count("*")
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
-        ).alias("avg_l"),
+        dround(
+                F.sum("l_distinct").cast("bigint") * 1.0 / F.count("*"), 6
+            ).alias("avg_l"),
     )
 
 
@@ -588,9 +586,8 @@ scored AS (
     SELECT n_c,
            s1 + CAST(n_c AS HUGEINT) * (n - sb) AS num,
            CAST(2 AS HUGEINT) * n_c * n AS den,
-           CAST(FLOOR(CAST(s1 + CAST(n_c AS HUGEINT) * (n - sb) AS DOUBLE)
-                      / CAST(CAST(2 AS HUGEINT) * n_c * n AS DOUBLE)
-                      * 1000000 + 0.5) AS BIGINT) AS tvd_q
+           {sql_qround('CAST(s1 + CAST(n_c AS HUGEINT) * (n - sb) AS DOUBLE)'
+                       ' / CAST(CAST(2 AS HUGEINT) * n_c * n AS DOUBLE)', 6)} AS tvd_q
     FROM cls CROSS JOIN tot
 )
 SELECT (CAST({_TCLOSE_NUM} AS DOUBLE) / {_TCLOSE_DEN}) AS t,
@@ -646,10 +643,9 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_c",
         num.alias("num"),
         den.alias("den"),
-        F.floor(
-            num.cast("double") / den.cast("double") * 1000000 + 0.5
+        qround(
+            num.cast("double") / den.cast("double"), 6
         )
-        .cast("bigint")
         .alias("tvd_q"),
     )
     viol = F.col("num") * _TCLOSE_DEN > F.col("den") * _TCLOSE_NUM

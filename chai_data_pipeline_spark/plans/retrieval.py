@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..operators import text as T
 from ..operators.similarity import dot_sql_duckdb
 from ..operators.text import word_ngrams, word_ngrams_sql_duckdb
@@ -63,11 +63,9 @@ tf AS (
 dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
 scored AS (
     SELECT t.doc_id,
-           CAST(FLOOR(
-               ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)
-               * (t.tf * {_BM25_K1 + 1.0})
-               / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * l.dl / s.avgdl))
-               * 1000000 + 0.5) AS BIGINT) AS sc
+           {sql_qround('ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)'
+                       f' * (t.tf * {_BM25_K1 + 1.0})'
+                       f' / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * l.dl / s.avgdl))', 6)} AS sc
     FROM tf t
     JOIN dfreq f USING (word)
     JOIN dl l USING (doc_id)
@@ -115,17 +113,16 @@ def bm25_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
-    sc = F.floor(
+    sc = qround(
         idf
         * (F.col("tf") * F.lit(_BM25_K1 + 1.0))
         / (
             F.col("tf")
             + F.lit(_BM25_K1)
             * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl"))
-        )
-        * 1000000
-        + 0.5
-    ).cast("bigint")
+        ),
+        6,
+    )
     return (
         scored.select("doc_id", sc.alias("sc"))
         .groupBy("doc_id")
@@ -265,12 +262,10 @@ tf AS (
 dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
 lex_scored AS (
     SELECT t.doc_id,
-           CAST(SUM(CAST(FLOOR(
-               ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)
-               * (t.tf * {_BM25_K1 + 1.0})
-               / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * l.dl / s.avgdl))
-               * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sc
+           CAST(SUM({sql_qround('ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)'
+                                f' * (t.tf * {_BM25_K1 + 1.0})'
+                                f' / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B}'
+                                f' + {_BM25_B} * l.dl / s.avgdl))', 6)}) AS BIGINT) AS sc
     FROM tf t
     JOIN dfreq f USING (word)
     JOIN dl l USING (doc_id)
@@ -284,13 +279,15 @@ lex AS (
     QUALIFY lex_rank <= {_RRF_LEG_R}
 ),
 q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-den_scored AS (
+den_raw AS (
     SELECT vec_id,
-           (FLOOR(({dot_sql_duckdb('embedding', 'qv', 64)}) /
-            (sqrt({dot_sql_duckdb('embedding', 'embedding', 64)})
-             * sqrt({dot_sql_duckdb('qv', 'qv', 64)}))
-            * 1000000 + 0.5) / 1000000.0) AS cos6
+           ({dot_sql_duckdb('embedding', 'qv', 64)}) /
+           (sqrt({dot_sql_duckdb('embedding', 'embedding', 64)})
+            * sqrt({dot_sql_duckdb('qv', 'qv', 64)})) AS cos
     FROM embeddings CROSS JOIN q
+),
+den_scored AS (
+    SELECT vec_id, {sql_dround('cos', 6)} AS cos6 FROM den_raw
 ),
 den AS (
     SELECT vec_id AS doc_id,
@@ -347,7 +344,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
-    term_sc = F.floor(
+    term_sc = qround(
         idf
         * (F.col("tf") * F.lit(_BM25_K1 + 1.0))
         / (
@@ -357,10 +354,9 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1.0 - _BM25_B)
                 + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl")
             )
-        )
-        * 1000000
-        + 0.5
-    ).cast("bigint")
+        ),
+        6,
+    )
     lex_scored = (
         tf.join(F.broadcast(dfreq), "word")
         .join(dl, "doc_id")
@@ -384,15 +380,14 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv")
     )
-    cos6 = F.floor(
+    cos6 = dround(
         F.expr(
             f"({dot_sql_spark('embedding', 'qv')}) / "
             f"(sqrt({dot_sql_spark('embedding', 'embedding')})"
             f" * sqrt({dot_sql_spark('qv', 'qv')}))"
-        )
-        * 1000000
-        + 0.5
-    ) / F.lit(1000000.0)
+        ),
+        6,
+    )
     den_scored = emb.crossJoin(F.broadcast(qv)).select(
         "vec_id", cos6.alias("cos6")
     )
@@ -563,8 +558,7 @@ cf0 AS (
 -- QL treatment) so cf=0 can never reach ln()/division on either engine
 cf AS (SELECT * FROM cf0 WHERE cf > 0),
 bconst AS (
-    SELECT CAST(SUM(CAST(FLOOR(ln({_QL_MU} * c.cf / o.t) * 1000000 + 0.5)
-                    AS BIGINT)) AS BIGINT) AS b6,
+    SELECT CAST(SUM({sql_qround(f'ln({_QL_MU} * c.cf / o.t)', 6)}) AS BIGINT) AS b6,
            CAST(COUNT(*) AS BIGINT) AS nq
     FROM cf c CROSS JOIN tot o
 ),
@@ -578,8 +572,7 @@ tf AS (
 a6 AS (
     SELECT l.doc_id,
            CAST(SUM(CASE WHEN f.tf IS NOT NULL THEN
-               CAST(FLOOR(ln(1.0 + (f.tf * o.t) * 1.0 / ({_QL_MU} * c.cf))
-                    * 1000000 + 0.5) AS BIGINT)
+               {sql_qround(f'ln(1.0 + (f.tf * o.t) * 1.0 / ({_QL_MU} * c.cf))', 6)}
                ELSE 0 END) AS BIGINT) AS a6,
            CAST(COUNT(*) FILTER (WHERE f.tf IS NOT NULL) AS BIGINT)
                AS matched_terms
@@ -591,10 +584,10 @@ a6 AS (
 )
 SELECT a.doc_id, a.matched_terms,
        CAST(a.a6 + b.b6 - b.nq *
-            CAST(FLOOR(ln(l.dl + {_QL_MU}) * 1000000 + 0.5) AS BIGINT)
+            {sql_qround(f'ln(l.dl + {_QL_MU})', 6)}
             AS BIGINT) AS score6,
        CAST(CAST(a.a6 + b.b6 - b.nq *
-            CAST(FLOOR(ln(l.dl + {_QL_MU}) * 1000000 + 0.5) AS BIGINT)
+            {sql_qround(f'ln(l.dl + {_QL_MU})', 6)}
             AS BIGINT) AS DOUBLE) / 1000000.0 AS ql_score
 FROM a6 a JOIN dl l USING (doc_id) CROSS JOIN bconst b
 ORDER BY score6 DESC, a.doc_id
@@ -644,11 +637,9 @@ def ql_dirichlet_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         cf.crossJoin(F.broadcast(tot))
         .agg(
             F.sum(
-                F.floor(
-                    F.log(F.lit(_QL_MU) * F.col("cf") / F.col("t"))
-                    * 1000000
-                    + 0.5
-                ).cast("bigint")
+                qround(
+                    F.log(F.lit(_QL_MU) * F.col("cf") / F.col("t")), 6
+                )
             )
             .cast("bigint")
             .alias("b6"),
@@ -667,25 +658,24 @@ def ql_dirichlet_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.sum(
-                F.floor(
+                qround(
                     F.log(
                         1.0
                         + (F.col("tf") * F.col("t"))
                         * 1.0
                         / (F.lit(_QL_MU) * F.col("cf"))
-                    )
-                    * 1000000
-                    + 0.5
-                ).cast("bigint")
+                    ),
+                    6,
+                )
             )
             .cast("bigint")
             .alias("a6"),
             F.count("*").cast("bigint").alias("matched_terms"),
         )
     )
-    len6 = F.floor(
-        F.log(F.col("dl") + F.lit(_QL_MU)) * 1000000 + 0.5
-    ).cast("bigint")
+    len6 = qround(
+        F.log(F.col("dl") + F.lit(_QL_MU)), 6
+    )
     scored = (
         dl.join(a6, "doc_id", "left")
         .crossJoin(F.broadcast(bconst))
@@ -892,11 +882,9 @@ tf AS (
 dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
 scored AS (
     SELECT t.word AS term, t.doc_id,
-           CAST(FLOOR(
-               ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)
-               * (t.tf * {_BM25_K1 + 1.0})
-               / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * l.dl / s.avgdl))
-               * 1000000 + 0.5) AS BIGINT) AS bm25_fp,
+           {sql_qround('ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)'
+                       f' * (t.tf * {_BM25_K1 + 1.0})'
+                       f' / (t.tf + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * l.dl / s.avgdl))', 6)} AS bm25_fp,
            CAST(FLOOR(t.tf * 1000000000.0 / l.dl) AS BIGINT) AS dens_fp
     FROM tf t
     JOIN dfreq f USING (word)
@@ -971,17 +959,16 @@ def ranking_rbo_bm25_vs_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
-    bm25_fp = F.floor(
+    bm25_fp = qround(
         idf
         * (F.col("tf") * F.lit(_BM25_K1 + 1.0))
         / (
             F.col("tf")
             + F.lit(_BM25_K1)
             * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl"))
-        )
-        * 1000000
-        + 0.5
-    ).cast("bigint")
+        ),
+        6,
+    )
     dens_fp = F.floor(F.col("tf") * 1000000000.0 / F.col("dl")).cast("bigint")
     scored = joined.select(
         F.col("word").alias("term"),

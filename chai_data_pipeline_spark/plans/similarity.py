@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..operators.similarity import (
     ann_topk_lsh,
     brute_force_topk,
@@ -549,7 +549,7 @@ def similarity_ann_pq_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_centroid_drift",
-    oracle="""
+    oracle=f"""
 WITH flat AS (
     SELECT label, UNNEST(embedding) AS val,
            generate_subscripts(embedding, 1) - 1 AS dim
@@ -563,14 +563,12 @@ cent AS (
 ),
 terms AS (
     SELECT a.label AS label_a, b.label AS label_b,
-           (FLOOR((a.c - b.c) * (a.c - b.c) * 1000000000000 + 0.5)
-            / 1000000000000.0) AS t
+           {sql_dround('(a.c - b.c) * (a.c - b.c)', 12)} AS t
     FROM cent a JOIN cent b ON a.dim = b.dim AND a.label < b.label
 )
 SELECT label_a, label_b,
        COUNT(*) AS n_dims,
-       (FLOOR(CAST(CAST(SUM(CAST(t AS DECIMAL(27,12))) AS VARCHAR) AS DOUBLE) * 100000000
-              + 0.5) / 100000000.0) AS dist_sq
+       {sql_dround('CAST(CAST(SUM(CAST(t AS DECIMAL(27,12))) AS VARCHAR) AS DOUBLE)', 8)} AS dist_sq
 FROM terms
 GROUP BY 1, 2
 """,
@@ -591,9 +589,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = cent.alias("a")
     b = cent.alias("b")
     diff = F.col("a.c") - F.col("b.c")
-    term = F.floor(diff * diff * F.lit(1000000000000.0) + 0.5) / F.lit(
-        1000000000000.0
-    )
+    term = dround(diff * diff, 12)
     pairs = a.join(
         b,
         (F.col("a.dim") == F.col("b.dim"))
@@ -605,14 +601,9 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.groupBy("label_a", "label_b").agg(
         F.count("*").alias("n_dims"),
-        (
-            F.floor(
-                F.sum(F.col("t").cast("decimal(27,12)")).cast("double")
-                * 100000000
-                + 0.5
-            )
-            / 100000000.0
-        ).alias("dist_sq"),
+        dround(
+                F.sum(F.col("t").cast("decimal(27,12)")).cast("double"), 8
+            ).alias("dist_sq"),
     )
 
 
@@ -1012,16 +1003,14 @@ best AS (
 ),
 per_vec AS (
     SELECT vec_id,
-           CAST(FLOOR(list_sum(list(dmin ORDER BY m)) * 1000000 + 0.5)
-               AS BIGINT) AS rq
+           {sql_qround('list_sum(list(dmin ORDER BY m))', 6)} AS rq
     FROM best GROUP BY 1
 ),
 norms AS (
     SELECT vec_id, label,
-           CAST(FLOOR(list_sum(list_transform(range(1, {DIM} + 1),
-                i -> CAST(embedding[i] AS DOUBLE)
-                     * CAST(embedding[i] AS DOUBLE))) * 1000000 + 0.5)
-               AS BIGINT) AS nq
+           {sql_qround(f'list_sum(list_transform(range(1, {DIM} + 1),'
+                       ' i -> CAST(embedding[i] AS DOUBLE)'
+                       ' * CAST(embedding[i] AS DOUBLE)))', 6)} AS nq
     FROM embeddings
 )
 SELECT n.label,
@@ -1065,8 +1054,8 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = emb.select(
         "label",
-        F.floor(F.expr(total) * 1000000 + 0.5).cast("bigint").alias("rq"),
-        F.floor(F.expr(norm_sq) * 1000000 + 0.5).cast("bigint").alias("nq"),
+        qround(F.expr(total), 6).alias("rq"),
+        qround(F.expr(norm_sq), 6).alias("nq"),
     )
     return q.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
@@ -1104,14 +1093,14 @@ def _mmr_sql() -> str:
     pcos = sql_dround(cosine_sql_duckdb("a.embedding", "b.embedding", DIM), 6)
     parts = [f"""q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
 cand0 AS (
-    SELECT e.vec_id, CAST(FLOOR({cos} * 1000000 + 0.5) AS BIGINT) AS rel
+    SELECT e.vec_id, {sql_qround(cos, 6)} AS rel
     FROM embeddings e CROSS JOIN q
     WHERE e.embedding IS NOT NULL
     ORDER BY rel DESC, e.vec_id LIMIT {_MMR_R}
 ),
 sims AS (
     SELECT a.vec_id AS ia, b.vec_id AS ib,
-           CAST(FLOOR({pcos} * 1000000 + 0.5) AS BIGINT) AS sim
+           {sql_qround(pcos, 6)} AS sim
     FROM embeddings a
     JOIN cand0 ca ON ca.vec_id = a.vec_id
     JOIN embeddings b ON TRUE
@@ -1169,7 +1158,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(sqrt({dot_sql_spark('embedding', 'embedding')})"
         f" * sqrt({dot_sql_spark('qv', 'qv')}))"
     )
-    rel6 = F.floor(cos_q * 1000000 + 0.5) / F.lit(1000000.0)
+    rel6 = dround(cos_q, 6)
     # NULL embeddings have no cosine and can't be candidates (a NULL
     # rel would also crash the integer greedy loop)
     cand = (
@@ -1178,7 +1167,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            F.floor(rel6 * 1000000 + 0.5).cast("bigint").alias("rel"),
+            qround(rel6, 6).alias("rel"),
         )
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(_MMR_R)
@@ -1194,14 +1183,14 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(sqrt({dot_sql_spark('ea', 'ea')})"
         f" * sqrt({dot_sql_spark('eb', 'eb')}))"
     )
-    p6 = F.floor(cos_p * 1000000 + 0.5) / F.lit(1000000.0)
+    p6 = dround(cos_p, 6)
     sims_df = (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("ia") != F.col("ib"))
         .select(
             "ia",
             "ib",
-            F.floor(p6 * 1000000 + 0.5).cast("bigint").alias("sim"),
+            qround(p6, 6).alias("sim"),
         )
     )
     # model-sized collects: ≤ R rows + R(R−1) sims
@@ -1284,10 +1273,8 @@ j AS (
 SELECT CAST({_MRL_K} AS INTEGER) AS k,
        CAST(COUNT(*) FILTER (WHERE r_trunc <= {_MRL_K}) AS BIGINT)
            AS overlap_at_k,
-       (FLOOR(COUNT(*) FILTER (WHERE r_trunc <= {_MRL_K}) * 1.0
-              / {_MRL_K} * 10000 + 0.5) / 10000.0) AS recall_at_k,
-       (FLOOR(CAST(SUM(ABS(r_trunc - r_full)) AS BIGINT) * 1.0
-              / {_MRL_K} * 100 + 0.5) / 100.0) AS mean_rank_shift
+       {sql_dround(f'COUNT(*) FILTER (WHERE r_trunc <= {_MRL_K}) * 1.0 / {_MRL_K}', 4)} AS recall_at_k,
+       {sql_dround(f'CAST(SUM(ABS(r_trunc - r_full)) AS BIGINT) * 1.0 / {_MRL_K}', 2)} AS mean_rank_shift
 FROM j
 """,
 )
@@ -1308,7 +1295,7 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"({dot_sql_spark(a, b)}) / "
             f"(sqrt({dot_sql_spark(a, a)}) * sqrt({dot_sql_spark(b, b)}))"
         )
-        return F.floor(c * 1000000 + 0.5) / F.lit(1000000.0)
+        return dround(c, 6)
 
     scored = base.select(
         "vec_id",
@@ -1356,25 +1343,17 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(F.col("r_trunc") <= _MRL_K)
         .cast("bigint")
         .alias("overlap_at_k"),
-        (
-            F.floor(
-                F.count_if(F.col("r_trunc") <= _MRL_K) * 1.0
-                / _MRL_K
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
+        dround(
+            F.count_if(F.col("r_trunc") <= _MRL_K) * 1.0
+            / _MRL_K,
+            4,
         ).alias("recall_at_k"),
-        (
-            F.floor(
-                F.sum(F.abs(F.col("r_trunc") - F.col("r_full")))
-                .cast("bigint")
-                * 1.0
-                / _MRL_K
-                * 100
-                + 0.5
-            )
-            / F.lit(100.0)
+        dround(
+            F.sum(F.abs(F.col("r_trunc") - F.col("r_full")))
+            .cast("bigint")
+            * 1.0
+            / _MRL_K,
+            2,
         ).alias("mean_rank_shift"),
     )
 
@@ -1984,7 +1963,7 @@ pairs AS (
     FROM sample_v a JOIN sample_v b ON a.vec_id < b.vec_id
 ),
 q AS (
-    SELECT CAST(FLOOR(d2p / d2o * 1000000 + 0.5) AS BIGINT) AS rm
+    SELECT {sql_qround('d2p / d2o', 6)} AS rm
     FROM pairs WHERE d2o > 0
 )
 SELECT CAST(FLOOR(rm / 100000.0) AS BIGINT) AS ratio_bin,
@@ -2022,8 +2001,7 @@ def random_projection_jl_audit(
         F.expr(_d2_spark("pa", "pb")).alias("d2p"),
     )
     q = pairs.filter(F.col("d2o") > 0).select(
-        F.floor(F.col("d2p") / F.col("d2o") * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.col("d2p") / F.col("d2o"), 6)
         .alias("rm")
     )
     return q.groupBy(
@@ -2074,11 +2052,9 @@ st AS (
 ),
 terms AS (
     SELECT v.vec_id, v.label,
-           CAST(FLOOR(
-               CAST(v.q * nn.n - st.s AS DOUBLE)
-               * CAST(v.q * nn.n - st.s AS DOUBLE)
-               / CAST(st.qq * nn.n - st.s * st.s AS DOUBLE)
-               * 1000000000 + 0.5) AS BIGINT) AS t
+           {sql_qround('CAST(v.q * nn.n - st.s AS DOUBLE)'
+                       ' * CAST(v.q * nn.n - st.s AS DOUBLE)'
+                       ' / CAST(st.qq * nn.n - st.s * st.s AS DOUBLE)', 9)} AS t
     FROM v JOIN st USING (d) CROSS JOIN nn
     WHERE st.qq * nn.n - st.s * st.s > 0
 ),
@@ -2134,14 +2110,12 @@ def embedding_mahalanobis_outliers(
         .select(
             "vec_id",
             "label",
-            F.floor(
+            qround(
                 num.cast("double")
                 * num.cast("double")
-                / den.cast("double")
-                * 1000000000
-                + 0.5
+                / den.cast("double"),
+                9,
             )
-            .cast("bigint")
             .alias("t"),
         )
     )
@@ -2358,23 +2332,23 @@ nn AS (SELECT CAST(SUM(n) AS BIGINT) AS nv FROM cells),
 cs AS (SELECT cluster_id, CAST(SUM(n) AS BIGINT) AS nc FROM cells GROUP BY 1),
 ls AS (SELECT label, CAST(SUM(n) AS BIGINT) AS nl FROM cells GROUP BY 1),
 mi AS (
-    SELECT CAST(SUM(CAST(FLOOR(
-        (CAST(c.n AS DOUBLE) / o.nv)
-        * ln((CAST(o.nv AS DOUBLE) * c.n) / (CAST(s.nc AS DOUBLE) * l.nl))
-        * {t12} + 0.5) AS BIGINT)) AS BIGINT) AS mi12
+    SELECT CAST(SUM({sql_qround(
+        "(CAST(c.n AS DOUBLE) / o.nv)"
+        " * ln((CAST(o.nv AS DOUBLE) * c.n) / (CAST(s.nc AS DOUBLE) * l.nl))",
+        12)}) AS BIGINT) AS mi12
     FROM cells c
     JOIN cs s USING (cluster_id) JOIN ls l USING (label) CROSS JOIN nn o
 ),
 hc AS (
-    SELECT CAST(SUM(CAST(FLOOR(
-        -(CAST(nc AS DOUBLE) / o.nv) * ln(CAST(nc AS DOUBLE) / o.nv)
-        * {t12} + 0.5) AS BIGINT)) AS BIGINT) AS hc12
+    SELECT CAST(SUM({sql_qround(
+        "-(CAST(nc AS DOUBLE) / o.nv) * ln(CAST(nc AS DOUBLE) / o.nv)", 12)})
+        AS BIGINT) AS hc12
     FROM cs CROSS JOIN nn o
 ),
 hl AS (
-    SELECT CAST(SUM(CAST(FLOOR(
-        -(CAST(nl AS DOUBLE) / o.nv) * ln(CAST(nl AS DOUBLE) / o.nv)
-        * {t12} + 0.5) AS BIGINT)) AS BIGINT) AS hl12
+    SELECT CAST(SUM({sql_qround(
+        "-(CAST(nl AS DOUBLE) / o.nv) * ln(CAST(nl AS DOUBLE) / o.nv)", 12)})
+        AS BIGINT) AS hl12
     FROM ls CROSS JOIN nn o
 ),
 pur AS (
@@ -2435,15 +2409,14 @@ def embedding_cluster_purity_nmi(
     )
     ls = cells.groupBy("label").agg(F.sum("n").cast("bigint").alias("nl"))
     t12 = 1000000000000
-    mi_term = F.floor(
+    mi_term = qround(
         (F.col("n").cast("double") / F.col("nv"))
         * F.log(
             (F.col("nv").cast("double") * F.col("n"))
             / (F.col("nc").cast("double") * F.col("nl"))
-        )
-        * t12
-        + 0.5
-    ).cast("bigint")
+        ),
+        12,
+    )
     mi = (
         cells.join(F.broadcast(cs), "cluster_id")
         .join(F.broadcast(ls), "label")
@@ -2452,12 +2425,11 @@ def embedding_cluster_purity_nmi(
     )
 
     def _h12(sizes: DataFrame, col: str, out: str) -> DataFrame:
-        term = F.floor(
+        term = qround(
             -(F.col(col).cast("double") / F.col("nv"))
-            * F.log(F.col(col).cast("double") / F.col("nv"))
-            * t12
-            + 0.5
-        ).cast("bigint")
+            * F.log(F.col(col).cast("double") / F.col("nv")),
+            12,
+        )
         return sizes.crossJoin(F.broadcast(nn)).agg(
             F.sum(term).cast("bigint").alias(out)
         )
@@ -2695,14 +2667,13 @@ WITH sflat AS (
 ),
 cent AS (
     SELECT label, dim,
-           CAST(SUM(CAST(FLOOR(x * 1000000000 + 0.5) AS BIGINT)) AS DOUBLE)
+           CAST(SUM({sql_qround('x', 9)}) AS DOUBLE)
                / (1000000000.0 * COUNT(*)) AS c
     FROM sflat GROUP BY 1, 2
 ),
 d2 AS (
     SELECT f.vec_id, f.label AS own, c.label AS other,
-           CAST(SUM(CAST(FLOOR((f.x - c.c) * (f.x - c.c) * 1000000000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS dq
+           CAST(SUM({sql_qround('(f.x - c.c) * (f.x - c.c)', 9)}) AS BIGINT) AS dq
     FROM sflat f JOIN cent c USING (dim)
     GROUP BY 1, 2, 3
 ),
@@ -2715,11 +2686,10 @@ ab AS (
 sil AS (
     SELECT vec_id, own,
            CASE WHEN GREATEST(a, b) > 0
-                THEN CAST(FLOOR((b - a) / GREATEST(a, b) * 1000000000 + 0.5)
-                          AS BIGINT)
+                THEN {sql_qround('(b - a) / GREATEST(a, b)', 9)}
                 ELSE 0 END AS sq,
-           CAST(FLOOR(a * 1000000 + 0.5) AS BIGINT) AS aq,
-           CAST(FLOOR(b * 1000000 + 0.5) AS BIGINT) AS bq
+           {sql_qround('a', 6)} AS aq,
+           {sql_qround('b', 6)} AS bq
     FROM ab
 )
 SELECT own AS label,
@@ -2751,7 +2721,7 @@ def embedding_silhouette_by_label(
     )
     cent = sflat.groupBy(F.col("label").alias("clabel"), "dim").agg(
         (
-            F.sum(F.floor(F.col("x") * 1000000000 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("x"), 9))
             .cast("double")
             / (F.lit(1000000000.0) * F.count("*"))
         ).alias("c")
@@ -2763,12 +2733,11 @@ def embedding_silhouette_by_label(
         )
         .agg(
             F.sum(
-                F.floor(
+                qround(
                     (F.col("x") - F.col("c"))
-                    * (F.col("x") - F.col("c"))
-                    * 1000000000
-                    + 0.5
-                ).cast("bigint")
+                    * (F.col("x") - F.col("c")),
+                    9,
+                )
             )
             .cast("bigint")
             .alias("dq")
@@ -2788,17 +2757,16 @@ def embedding_silhouette_by_label(
         "own",
         F.when(
             F.greatest("a", "b") > 0,
-            F.floor(
+            qround(
                 (F.col("b") - F.col("a"))
-                / F.greatest("a", "b")
-                * 1000000000
-                + 0.5
-            ).cast("bigint"),
+                / F.greatest("a", "b"),
+                9,
+            ),
         )
         .otherwise(F.lit(0))
         .alias("sq"),
-        F.floor(F.col("a") * 1000000 + 0.5).cast("bigint").alias("aq"),
-        F.floor(F.col("b") * 1000000 + 0.5).cast("bigint").alias("bq"),
+        qround(F.col("a"), 6).alias("aq"),
+        qround(F.col("b"), 6).alias("bq"),
     )
     return sil.groupBy(F.col("own").alias("label")).agg(
         F.count("*").alias("n_vectors"),

@@ -244,14 +244,14 @@ wide AS (
     SELECT ea.e AS ea, eb.e AS eb, eu.e AS eu, x.xa, x.xb, x.xu
     FROM e_a ea CROSS JOIN e_b eb CROSS JOIN e_u eu CROSS JOIN x
 )
-SELECT '{_SEG_A}' AS set_name, (FLOOR(ea * 10000 + 0.5) / 10000.0)
+SELECT '{_SEG_A}' AS set_name, {sql_dround('ea', 4)}
            AS hll_estimate, xa AS n_exact FROM wide
 UNION ALL
-SELECT '{_SEG_B}', (FLOOR(eb * 10000 + 0.5) / 10000.0), xb FROM wide
+SELECT '{_SEG_B}', {sql_dround('eb', 4)}, xb FROM wide
 UNION ALL
-SELECT 'union', (FLOOR(eu * 10000 + 0.5) / 10000.0), xu FROM wide
+SELECT 'union', {sql_dround('eu', 4)}, xu FROM wide
 UNION ALL
-SELECT 'intersection', (FLOOR((ea + eb - eu) * 10000 + 0.5) / 10000.0),
+SELECT 'intersection', {sql_dround('(ea + eb - eu)', 4)},
        xa + xb - xu FROM wide
 """,
 )
@@ -348,12 +348,10 @@ def hll_set_algebra_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         F.expr(
             f"""stack(4,
-            '{_SEG_A}', FLOOR(ea * 10000 + 0.5) / CAST(10000 AS DOUBLE), xa,
-            '{_SEG_B}', FLOOR(eb * 10000 + 0.5) / CAST(10000 AS DOUBLE), xb,
-            'union', FLOOR(eu * 10000 + 0.5) / CAST(10000 AS DOUBLE), xu,
-            'intersection',
-                FLOOR((ea + eb - eu) * 10000 + 0.5) / CAST(10000 AS DOUBLE),
-                xa + xb - xu
+            '{_SEG_A}', {sql_dround('ea', 4)}, xa,
+            '{_SEG_B}', {sql_dround('eb', 4)}, xb,
+            'union', {sql_dround('eu', 4)}, xu,
+            'intersection', {sql_dround('ea + eb - eu', 4)}, xa + xb - xu
             ) AS (set_name, hll_estimate, n_exact)"""
         )
     )
@@ -504,17 +502,17 @@ def histogram_quantiles_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("et") == F.col("event_type")) & (F.col("rn") == F.col("trn")),
     ).select("event_type", "q", F.col("value").alias("exact_q"))
     # dround, not a bare floor: 2^63 saturation guard (r12 2e17 probe)
-    fp = lambda c: dround(c, 6)  # noqa: E731
     return est.join(F.broadcast(exact), ["event_type", "q"]).select(
         "event_type",
         "q",
         "n",
-        fp(
+        dround(
             F.col("mn")
-            + (F.col("qbin") + 1) * ((F.col("mx") - F.col("mn")) / _HQ_B)
+            + (F.col("qbin") + 1) * ((F.col("mx") - F.col("mn")) / _HQ_B),
+            6,
         ).alias("est_quantile"),
-        fp(F.col("exact_q")).alias("exact_quantile"),
-        fp((F.col("mx") - F.col("mn")) / _HQ_B).alias("bin_width"),
+        dround(F.col("exact_q"), 6).alias("exact_quantile"),
+        dround((F.col("mx") - F.col("mn")) / _HQ_B, 6).alias("bin_width"),
     )
 
 

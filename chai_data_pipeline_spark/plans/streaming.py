@@ -283,9 +283,9 @@ def streaming_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_upsert_latest",
-    oracle="""
+    oracle=f"""
 SELECT user_id, event_id, event_type,
-       (FLOOR(value * 10000 + 0.5) / 10000.0) AS value
+       {sql_dround('value', 4)} AS value
 FROM (
     SELECT *, ROW_NUMBER() OVER (
         PARTITION BY user_id ORDER BY ts DESC, event_id DESC
@@ -320,7 +320,7 @@ WITH {_sql_regs(
     "ts IS NOT NULL AND ts >= TIMESTAMP '1970-01-01 00:00:00'",
 ).lstrip()},
 {_sql_est('x', 'regs_x').lstrip()}
-SELECT (FLOOR(e * 10000 + 0.5) / 10000.0) AS hll_estimate,
+SELECT {sql_dround('e', 4)} AS hll_estimate,
        d.reg_sum, d.nonzero_regs
 FROM e_x CROSS JOIN (
     SELECT CAST(SUM(reg) AS BIGINT) AS reg_sum,
@@ -426,6 +426,7 @@ def streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .dedup import _SIMHASH_CHK_CHUNKS as _ND_CHUNKS  # noqa: E402
 from .dedup import _SIMHASH_CHK_HAM as _ND_HAM  # noqa: E402
 from .dedup import _SIMHASH_SIG_SQL_DUCKDB as _ND_SIG  # noqa: E402
+from ..functions import sql_dround
 
 
 @query(

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dround, sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..operators import text as T
 from ..session import load_tables
 from .registry import query
@@ -665,8 +665,8 @@ ranked AS (
 ),
 fixed AS (
     SELECT lang,
-           CAST(FLOOR(ln(rnk) * 1000000 + 0.5) AS BIGINT) AS xi,
-           CAST(FLOOR(ln(freq) * 1000000 + 0.5) AS BIGINT) AS yi
+           {sql_qround('ln(rnk)', 6)} AS xi,
+           {sql_qround('ln(freq)', 6)} AS yi
     FROM ranked WHERE rnk <= {_ZIPF_TOP}
 )
 SELECT lang,
@@ -701,11 +701,9 @@ def zipf_slope_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rnk") <= _ZIPF_TOP)
     fixed = ranked.select(
         "lang",
-        F.floor(F.log(F.col("rnk")) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.log(F.col("rnk")), 6)
         .alias("xi"),
-        F.floor(F.log(F.col("freq")) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.log(F.col("freq")), 6)
         .alias("yi"),
     )
     n = F.count("*")
@@ -1034,7 +1032,7 @@ def token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_lm_perplexity",
-    oracle="""
+    oracle=f"""
 WITH w AS (
     SELECT doc_id, lang, unnest(string_split_regex(TRIM(text), '\\s+')) AS word
     FROM documents
@@ -1045,7 +1043,7 @@ vocab AS (
 ),
 lq AS (
     SELECT word,
-           CAST(FLOOR(ln(cnt * 1.0 / total) * 1000000 + 0.5) AS BIGINT) AS lq
+           {sql_qround('ln(cnt * 1.0 / total)', 6)} AS lq
     FROM vocab
 ),
 dw AS (SELECT doc_id, lang, word, COUNT(*) AS c FROM w GROUP BY 1, 2, 3),
@@ -1058,8 +1056,7 @@ surprisal AS (
 ),
 ppl AS (
     SELECT doc_id, lang,
-           CAST(FLOOR(exp(-(CAST(s_micro AS DOUBLE) / 1000000.0) / n_words)
-                * 10000 + 0.5) AS BIGINT) AS pq
+           {sql_qround('exp(-(CAST(s_micro AS DOUBLE) / 1000000.0) / n_words)', 4)} AS pq
     FROM surprisal
 )
 SELECT lang, COUNT(*) AS n_docs,
@@ -1087,10 +1084,9 @@ def unigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = vocab.agg(F.sum("cnt").alias("total"))
     lq = vocab.crossJoin(F.broadcast(total)).select(
         "word",
-        F.floor(
-            F.log(F.col("cnt") * 1.0 / F.col("total")) * 1000000 + 0.5
+        qround(
+            F.log(F.col("cnt") * 1.0 / F.col("total")), 6
         )
-        .cast("bigint")
         .alias("lq"),
     )
     dw = w.groupBy("doc_id", "lang", "word").agg(F.count("*").alias("c"))
@@ -1102,13 +1098,12 @@ def unigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("lq")).alias("s_micro"),
         )
     )
-    pq = F.floor(
+    pq = qround(
         F.exp(
             -(F.col("s_micro").cast("double") / 1000000.0) / F.col("n_words")
-        )
-        * 10000
-        + 0.5
-    ).cast("bigint")
+        ),
+        4,
+    )
     return (
         surprisal.select("lang", pq.alias("pq"))
         .groupBy("lang")
@@ -1151,9 +1146,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT source,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 )
 SELECT source,
@@ -1187,7 +1181,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(_QC_W_AWL) * awl
         + F.lit(_QC_W_DWR) * dwr
     )
-    sq = F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5).cast("bigint")
+    sq = qround(1.0 / (1.0 + F.exp(-z)), 6)
     scored = docs.select("source", sq.alias("sq"))
     return scored.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1315,9 +1309,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT doc_id, content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 dupflag AS (
@@ -1360,8 +1353,7 @@ def classifier_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -1519,9 +1511,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -1580,8 +1571,7 @@ def classifier_auc_dup_separation(spark: SparkSession, sf_dir: str) -> DataFrame
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -1654,9 +1644,9 @@ tot AS (SELECT CAST(SUM(freq) AS BIGINT) AS total_tokens,
         FROM vocab)
 SELECT t.vocab_size, t.total_tokens,
 {', '.join(
-    '''       (FLOOR(CAST(SUM(CASE WHEN rk <= %d THEN freq ELSE 0 END)
-            AS BIGINT) * 1.0 / t.total_tokens * 1000000 + 0.5)
-        / 1000000.0) AS coverage_top_%d''' % (k, k)
+    '       ' + sql_dround(f'CAST(SUM(CASE WHEN rk <= {k} THEN freq ELSE 0 END)'
+                           ' AS BIGINT) * 1.0 / t.total_tokens', 6)
+    + f' AS coverage_top_{k}'
     for k in _VOCAB_KS)}
 FROM ranked CROSS JOIN tot t
 GROUP BY t.vocab_size, t.total_tokens
@@ -1683,19 +1673,15 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs = []
     for k in _VOCAB_KS:
         aggs.append(
-            (
-                F.floor(
-                    F.sum(
-                        F.when(F.col("rk") <= k, F.col("freq")).otherwise(
-                            0
-                        )
-                    ).cast("bigint")
-                    * 1.0
-                    / F.max("total_tokens")
-                    * 1000000
-                    + 0.5
-                )
-                / F.lit(1000000.0)
+            dround(
+                F.sum(
+                    F.when(F.col("rk") <= k, F.col("freq")).otherwise(
+                        0
+                    )
+                ).cast("bigint")
+                * 1.0
+                / F.max("total_tokens"),
+                6,
             ).alias(f"coverage_top_{k}")
         )
     return (
@@ -1763,12 +1749,11 @@ test_types AS (
 scored AS (
     SELECT tt.lang, tt.n,
            COALESCE(tb.c2, 0) AS c2,
-           CAST(FLOOR(ln((CAST(COALESCE(tb.c2, 0) AS DOUBLE)
-                          + CAST(0.5 AS DOUBLE))
-                         / (CASE WHEN v > 0 THEN
-                                CAST(COALESCE(cx.c1, 0) AS DOUBLE)
-                                + CAST(0.5 AS DOUBLE) * v END))
-                      * 1000000 + 0.5) AS BIGINT) AS lq
+           {sql_qround('ln((CAST(COALESCE(tb.c2, 0) AS DOUBLE)'
+                       ' + CAST(0.5 AS DOUBLE))'
+                       ' / (CASE WHEN v > 0 THEN'
+                       ' CAST(COALESCE(cx.c1, 0) AS DOUBLE)'
+                       ' + CAST(0.5 AS DOUBLE) * v END))', 6)} AS lq
     FROM test_types tt
     LEFT JOIN train_bg tb ON tt.bg = tb.bg
     LEFT JOIN ctx cx ON tt.w1 = cx.w1
@@ -1776,12 +1761,12 @@ scored AS (
 )
 SELECT lang,
        CAST(SUM(n) AS BIGINT) AS n_test_bigrams,
-       (FLOOR(CAST(COALESCE(SUM(n) FILTER (WHERE c2 = 0), 0) AS BIGINT)
-              * 1.0 / SUM(n) * 1000000 + 0.5) / 1000000.0) AS unseen_rate,
-       (FLOOR(-(CAST(SUM(CAST(n AS HUGEINT) * lq) AS DOUBLE) / 1000000.0)
-              / SUM(n) * 1000000 + 0.5) / 1000000.0) AS avg_nll,
-       (FLOOR(exp(-(CAST(SUM(CAST(n AS HUGEINT) * lq) AS DOUBLE)
-                    / 1000000.0) / SUM(n)) * 10000 + 0.5) / 10000.0)
+       {sql_dround('CAST(COALESCE(SUM(n) FILTER (WHERE c2 = 0), 0) AS BIGINT)'
+                   ' * 1.0 / SUM(n)', 6)} AS unseen_rate,
+       {sql_dround('-(CAST(SUM(CAST(n AS HUGEINT) * lq) AS DOUBLE) / 1000000.0)'
+                   ' / SUM(n)', 6)} AS avg_nll,
+       {sql_dround('exp(-(CAST(SUM(CAST(n AS HUGEINT) * lq) AS DOUBLE)'
+                   ' / 1000000.0) / SUM(n))', 4)}
            AS perplexity
 FROM scored
 GROUP BY 1
@@ -1826,7 +1811,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # protect a division inside its own condition) — NULL propagates to
     # lq, and both engines' SUM-over-all-NULL then yields NULL metrics.
     lq = (
-        F.floor(
+        qround(
             F.log(
                 (F.coalesce(F.col("c2"), F.lit(0)).cast("double") + 0.5)
                 / F.when(
@@ -1834,11 +1819,9 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce(F.col("c1"), F.lit(0)).cast("double")
                     + 0.5 * F.col("v"),
                 )
-            )
-            * 1000000
-            + 0.5
+            ),
+            6,
         )
-        .cast("bigint")
         .alias("lq")
     )
     scored = (
@@ -1858,22 +1841,16 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nll = -(s_micro / 1000000.0) / F.sum("n")
     return scored.groupBy("lang").agg(
         F.sum("n").cast("bigint").alias("n_test_bigrams"),
-        (
-            F.floor(
-                F.coalesce(
-                    F.sum(F.when(F.col("c2") == 0, F.col("n"))), F.lit(0)
-                ).cast("bigint")
-                * 1.0
-                / F.sum("n")
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
+        dround(
+            F.coalesce(
+                F.sum(F.when(F.col("c2") == 0, F.col("n"))), F.lit(0)
+            ).cast("bigint")
+            * 1.0
+            / F.sum("n"),
+            6,
         ).alias("unseen_rate"),
-        (F.floor(nll * 1000000 + 0.5) / F.lit(1000000.0)).alias("avg_nll"),
-        (F.floor(F.exp(nll) * 10000 + 0.5) / F.lit(10000.0)).alias(
-            "perplexity"
-        ),
+        dround(nll, 6).alias("avg_nll"),
+        dround(F.exp(nll), 4).alias("perplexity"),
     )
 
 
@@ -2242,8 +2219,8 @@ pts AS (
     GROUP BY 1
 ),
 fixed AS (
-    SELECT CAST(FLOOR(ln(n_tokens) * 1000000 + 0.5) AS BIGINT) AS xi,
-           CAST(FLOOR(ln(v_types) * 1000000 + 0.5) AS BIGINT) AS yi
+    SELECT {sql_qround('ln(n_tokens)', 6)} AS xi,
+           {sql_qround('ln(v_types)', 6)} AS yi
     FROM pts WHERE n_tokens > 0 AND v_types > 0
 ),
 mom AS (
@@ -2284,11 +2261,9 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed = pts.filter(
         (F.col("n_tokens") > 0) & (F.col("v_types") > 0)
     ).select(
-        F.floor(F.log("n_tokens") * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.log("n_tokens"), 6)
         .alias("xi"),
-        F.floor(F.log("v_types") * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.log("v_types"), 6)
         .alias("yi"),
     )
     d38 = "decimal(38,0)"
@@ -2404,7 +2379,7 @@ vocab AS (
 ),
 lq AS (
     SELECT word,
-           CAST(FLOOR(ln(cnt * 1.0 / total) * 1000000 + 0.5) AS BIGINT) AS lq
+           {sql_qround('ln(cnt * 1.0 / total)', 6)} AS lq
     FROM vocab
 ),
 dw AS (SELECT doc_id, source, word, COUNT(*) AS c FROM w GROUP BY 1, 2, 3),
@@ -2417,8 +2392,7 @@ surprisal AS (
 ),
 ppl AS (
     SELECT doc_id, source, n_words,
-           CAST(FLOOR(exp(-(CAST(s_micro AS DOUBLE) / 1000000.0) / n_words)
-                * 10000 + 0.5) AS BIGINT) AS pq
+           {sql_qround('exp(-(CAST(s_micro AS DOUBLE) / 1000000.0) / n_words)', 4)} AS pq
     FROM surprisal
 ),
 ranked AS (
@@ -2458,10 +2432,9 @@ def perplexity_band_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = vocab.agg(F.sum("cnt").alias("total"))
     lq = vocab.crossJoin(F.broadcast(total)).select(
         "word",
-        F.floor(
-            F.log(F.col("cnt") * 1.0 / F.col("total")) * 1000000 + 0.5
+        qround(
+            F.log(F.col("cnt") * 1.0 / F.col("total")), 6
         )
-        .cast("bigint")
         .alias("lq"),
     )
     dw = w.groupBy("doc_id", "source", "word").agg(F.count("*").alias("c"))
@@ -2473,13 +2446,12 @@ def perplexity_band_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("lq")).alias("s_micro"),
         )
     )
-    pq = F.floor(
+    pq = qround(
         F.exp(
             -(F.col("s_micro").cast("double") / 1000000.0) / F.col("n_words")
-        )
-        * 10000
-        + 0.5
-    ).cast("bigint")
+        ),
+        4,
+    )
     ppl = surprisal.select(
         "doc_id", "source", "n_words", pq.alias("pq")
     )
@@ -2637,9 +2609,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -2713,8 +2684,7 @@ def classifier_gains_lift_table(
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -2818,9 +2788,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -2886,8 +2855,7 @@ def classifier_average_precision(
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -2978,9 +2946,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -3043,8 +3010,7 @@ def classifier_threshold_sweep(
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -3286,9 +3252,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -3314,14 +3279,12 @@ tot AS (
 ),
 terms AS (
     SELECT b.nk, b.pk,
-           CAST(FLOOR(b.nk * (b.sk * 1.0 / b.nk / 1000000.0
-                              - b.pk * 1.0 / b.nk)
-                           * (b.sk * 1.0 / b.nk / 1000000.0
-                              - b.pk * 1.0 / b.nk)
-                * 1000000000 + 0.5) AS BIGINT) AS rel9,
-           CAST(FLOOR(b.nk * (b.pk * 1.0 / b.nk - t.p * 1.0 / t.n)
-                           * (b.pk * 1.0 / b.nk - t.p * 1.0 / t.n)
-                * 1000000000 + 0.5) AS BIGINT) AS res9,
+           {sql_qround('b.nk * (b.sk * 1.0 / b.nk / 1000000.0'
+                       ' - b.pk * 1.0 / b.nk)'
+                       ' * (b.sk * 1.0 / b.nk / 1000000.0'
+                       ' - b.pk * 1.0 / b.nk)', 9)} AS rel9,
+           {sql_qround('b.nk * (b.pk * 1.0 / b.nk - t.p * 1.0 / t.n)'
+                       ' * (b.pk * 1.0 / b.nk - t.p * 1.0 / t.n)', 9)} AS res9,
            t.n, t.p, t.sqq, t.sqp
     FROM bins b CROSS JOIN tot t
 ),
@@ -3373,8 +3336,7 @@ def brier_score_decomposition(
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -3405,17 +3367,13 @@ def brier_score_decomposition(
     obar_k = F.col("pk") * 1.0 / F.col("nk")
     obar = F.col("p") * 1.0 / F.col("n")
     terms = bins.join(F.broadcast(tot)).select(
-        F.floor(
-            F.col("nk") * (fbar - obar_k) * (fbar - obar_k) * 1000000000
-            + 0.5
+        qround(
+            F.col("nk") * (fbar - obar_k) * (fbar - obar_k), 9
         )
-        .cast("bigint")
         .alias("rel9"),
-        F.floor(
-            F.col("nk") * (obar_k - obar) * (obar_k - obar) * 1000000000
-            + 0.5
+        qround(
+            F.col("nk") * (obar_k - obar) * (obar_k - obar), 9
         )
-        .cast("bigint")
         .alias("res9"),
         "n",
         "p",
@@ -3478,9 +3436,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -3526,11 +3483,9 @@ fit AS (
 ),
 terms AS (
     SELECT b, nk, pk, sk, f,
-           CAST(FLOOR(ABS(sk * 1.0 / nk / 1000000.0 - pk * 1.0 / nk)
-                * nk * 1000000000 + 0.5) AS BIGINT) AS raw9,
-           CAST(FLOOR(ABS(f - pk * 1.0 / nk)
-                * nk * 1000000000 + 0.5) AS BIGINT) AS iso9,
-           CAST(FLOOR(f * nk * 1000000000 + 0.5) AS BIGINT) AS fm9
+           {sql_qround('ABS(sk * 1.0 / nk / 1000000.0 - pk * 1.0 / nk) * nk', 9)} AS raw9,
+           {sql_qround('ABS(f - pk * 1.0 / nk) * nk', 9)} AS iso9,
+           {sql_qround('f * nk', 9)} AS fm9
     FROM fit
 )
 SELECT b, nk, pk,
@@ -3588,8 +3543,7 @@ def isotonic_calibration_pav(
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -3667,27 +3621,22 @@ def isotonic_calibration_pav(
         "pk",
         "sk",
         "f",
-        F.floor(
+        qround(
             F.abs(
                 F.col("sk") * 1.0 / F.col("nk") / 1000000.0
                 - F.col("pk") * 1.0 / F.col("nk")
             )
-            * F.col("nk")
-            * 1000000000
-            + 0.5
+            * F.col("nk"),
+            9,
         )
-        .cast("bigint")
         .alias("raw9"),
-        F.floor(
+        qround(
             F.abs(F.col("f") - F.col("pk") * 1.0 / F.col("nk"))
-            * F.col("nk")
-            * 1000000000
-            + 0.5
+            * F.col("nk"),
+            9,
         )
-        .cast("bigint")
         .alias("iso9"),
-        F.floor(F.col("f") * F.col("nk") * 1000000000 + 0.5)
-        .cast("bigint")
+        qround(F.col("f") * F.col("nk"), 9)
         .alias("fm9"),
     )
     wall = Window.partitionBy()
@@ -3748,9 +3697,8 @@ WITH feats AS (
 ),
 scored AS (
     SELECT content_hash,
-           CAST(FLOOR(1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc
-                + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))
-                * 1000000 + 0.5) AS BIGINT) AS sq
+           {sql_qround(f'1.0 / (1.0 + exp(-({_QC_W0} + {_QC_W_WC} * wc'
+                       f' + {_QC_W_AWL} * awl + {_QC_W_DWR} * dwr)))', 6)} AS sq
     FROM feats
 ),
 labeled AS (
@@ -3844,8 +3792,7 @@ def confident_learning_noise(
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     scored = docs.filter(F.col("text").isNotNull()).select(
         F.sha2(F.substring(norm, 1, 80), 256).alias("content_hash"),
-        F.floor(1.0 / (1.0 + F.exp(-z)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(1.0 / (1.0 + F.exp(-z)), 6)
         .alias("sq"),
     )
     wdup = Window.partitionBy("content_hash")
@@ -4009,7 +3956,7 @@ scored AS (
 ),
 lqd AS (
     SELECT lang, n, c2,
-           CAST(FLOOR(ln(p) * 1000000 + 0.5) AS BIGINT) AS lq
+           {sql_qround('ln(p)', 6)} AS lq
     FROM scored
 )
 SELECT lang,
@@ -4090,7 +4037,7 @@ def kn_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n",
             c2.alias("c2k"),
-            F.floor(F.log(p) * 1000000 + 0.5).cast("bigint").alias("lq"),
+            qround(F.log(p), 6).alias("lq"),
         )
     )
     s_micro = F.sum(F.col("n").cast("decimal(38,0)") * F.col("lq")).cast(
@@ -4139,19 +4086,16 @@ grid AS (
 ),
 terms AS (
     SELECT source, ns, c,
-           CAST(FLOOR(
-               (0.5 * (CASE WHEN c > 0
-                       THEN (c * 1.0 / ns)
-                            * ln((c * 1.0 / ns)
-                                 / ((c * 1.0 / ns + cw * 1.0 / nt) / 2))
-                       ELSE 0.0 END)
-                + 0.5 * ((cw * 1.0 / nt)
-                         * ln((cw * 1.0 / nt)
-                              / ((c * 1.0 / ns + cw * 1.0 / nt) / 2))))
-               * 1000000000000 + 0.5) AS BIGINT) AS jq,
+           {sql_qround('(0.5 * (CASE WHEN c > 0'
+                       ' THEN (c * 1.0 / ns)'
+                       ' * ln((c * 1.0 / ns)'
+                       ' / ((c * 1.0 / ns + cw * 1.0 / nt) / 2))'
+                       ' ELSE 0.0 END)'
+                       ' + 0.5 * ((cw * 1.0 / nt)'
+                       ' * ln((cw * 1.0 / nt)'
+                       ' / ((c * 1.0 / ns + cw * 1.0 / nt) / 2))))', 12)} AS jq,
            CASE WHEN c > 0
-                THEN CAST(FLOOR((c * 1.0 / ns) / (cw * 1.0 / nt) * 1000000
-                                + 0.5) AS BIGINT)
+                THEN {sql_qround('(c * 1.0 / ns) / (cw * 1.0 / nt)', 6)}
                 ELSE 0 END AS ratio_fp,
            w
     FROM grid
@@ -4211,19 +4155,18 @@ def unigram_js_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("c") * 1.0 / F.col("ns")
     q = F.col("cw") * 1.0 / F.col("nt")
     m = (p + q) / 2
-    jq = F.floor(
+    jq = qround(
         (
             F.lit(0.5)
             * F.when(F.col("c") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
             + F.lit(0.5) * (q * F.log(q / m))
-        )
-        * 1000000000000
-        + 0.5
-    ).cast("bigint")
+        ),
+        12,
+    )
     ratio_fp = (
         F.when(
             F.col("c") > 0,
-            F.floor(p / q * 1000000 + 0.5).cast("bigint"),
+            qround(p / q, 6),
         ).otherwise(F.lit(0))
     )
     terms = grid.select(
@@ -4301,16 +4244,13 @@ grid AS (
 ),
 scoredg AS (
     SELECT doc_id, actual, lang,
-           CAST(SUM(cnt * CAST(FLOOR(ln((c + 1.0) / (nl + v))
-                                     * 1000000000 + 0.5) AS BIGINT))
+           CAST(SUM(cnt * {sql_qround('ln((c + 1.0) / (nl + v))', 9)})
                 AS BIGINT) AS like_q
     FROM grid GROUP BY 1, 2, 3
 ),
 withprior AS (
     SELECT s.doc_id, s.actual, s.lang,
-           s.like_q + CAST(FLOOR(ln(p.docs * 1.0 /
-                                    (SELECT SUM(docs) FROM tr_prior))
-                                 * 1000000000 + 0.5) AS BIGINT) AS score_q
+           s.like_q + {sql_qround('ln(p.docs * 1.0 / (SELECT SUM(docs) FROM tr_prior))', 9)} AS score_q
     FROM scoredg s JOIN tr_prior p ON p.lang = s.lang
 ),
 pred AS (
@@ -4400,16 +4340,15 @@ def naive_bayes_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("c"), F.lit(0)).alias("c"),
         )
     )
-    lq = F.floor(
-        F.log((F.col("c") + 1.0) / (F.col("nl") + F.col("v"))) * 1000000000
-        + 0.5
-    ).cast("bigint")
+    lq = qround(
+        F.log((F.col("c") + 1.0) / (F.col("nl") + F.col("v"))), 9
+    )
     scoredg = grid.groupBy("doc_id", "actual", "lang").agg(
         F.sum(F.col("cnt") * lq).cast("bigint").alias("like_q")
     )
-    prior_q = F.floor(
-        F.log(F.col("docs") * 1.0 / F.col("tot")) * 1000000000 + 0.5
-    ).cast("bigint")
+    prior_q = qround(
+        F.log(F.col("docs") * 1.0 / F.col("tot")), 9
+    )
     withprior = (
         scoredg.join(F.broadcast(tr_prior), "lang")
         .crossJoin(F.broadcast(prior_tot))
@@ -4513,12 +4452,12 @@ cells AS (
 ),
 g AS (
     SELECT bgr, k11, r1, c1, n,
-           CAST(FLOOR(2.0 * ({_sql_xlogx('k11')} + {_sql_xlogx('k12')}
-                             + {_sql_xlogx('k21')} + {_sql_xlogx('k22')}
-                             + {_sql_xlogx('n')}
-                             - {_sql_xlogx('r1')} - {_sql_xlogx('n - r1')}
-                             - {_sql_xlogx('c1')} - {_sql_xlogx('n - c1')})
-                      * 1000000 + 0.5) AS BIGINT) AS g2q
+           {sql_qround(f"2.0 * ({_sql_xlogx('k11')} + {_sql_xlogx('k12')}"
+                       f" + {_sql_xlogx('k21')} + {_sql_xlogx('k22')}"
+                       f" + {_sql_xlogx('n')}"
+                       f" - {_sql_xlogx('r1')} - {_sql_xlogx('n - r1')}"
+                       f" - {_sql_xlogx('c1')} - {_sql_xlogx('n - c1')})", 6)}
+               AS g2q
     FROM cells
 )
 SELECT bgr AS bigram,
@@ -4581,7 +4520,7 @@ def bigram_llr_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    g2q = F.floor(
+    g2q = qround(
         2.0
         * (
             xlogx(F.col("k11"))
@@ -4593,10 +4532,9 @@ def bigram_llr_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             - xlogx(F.col("n") - F.col("r1"))
             - xlogx(F.col("c1"))
             - xlogx(F.col("n") - F.col("c1"))
-        )
-        * 1000000
-        + 0.5
-    ).cast("bigint")
+        ),
+        6,
+    )
     return (
         cells.select("bgr", "k11", "r1", "c1", "n", g2q.alias("g2q"))
         .orderBy(F.desc("g2q"), "bgr")
@@ -4648,10 +4586,9 @@ bm AS (
 SELECT w AS word,
        s AS total_count,
        CAST(df AS BIGINT) AS doc_freq,
-       (FLOOR(s * 1.0 / bn.n * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('s * 1.0 / bn.n', 6)}
            AS mean_per_doc,
-       (FLOOR((q - CAST(s AS DOUBLE) * s / bn.n) / s * 10000 + 0.5)
-        / 10000.0) AS burstiness_vmr
+       {sql_dround('(q - CAST(s AS DOUBLE) * s / bn.n) / s', 4)} AS burstiness_vmr
 FROM bm CROSS JOIN bn
 WHERE s >= {_BURST_MIN_COUNT}
 ORDER BY (q - CAST(s AS DOUBLE) * s / bn.n) / s DESC, w
@@ -4693,12 +4630,7 @@ def word_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").alias("word"),
             F.col("s").alias("total_count"),
             F.col("df").cast("bigint").alias("doc_freq"),
-            (
-                F.floor(F.col("s") * 1.0 / F.col("n") * 1000000 + 0.5)
-                / 1000000.0
-            ).alias("mean_per_doc"),
-            (F.floor(vmr_raw * 10000 + 0.5) / 10000.0).alias(
-                "burstiness_vmr"
-            ),
+            dround(F.col("s") * 1.0 / F.col("n"), 6).alias("mean_per_doc"),
+            dround(vmr_raw, 4).alias("burstiness_vmr"),
         )
     )

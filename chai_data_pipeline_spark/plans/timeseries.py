@@ -9,14 +9,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import (
-    cents,
-    clamp,
+    CENTS_CAP,
     dround,
     dsum,
-    sql_cents,
-    sql_clamp,
+    qround,
     sql_dround,
     sql_dsum,
+    sql_qround,
 )
 from ..functions.numeric import _DR_MAX
 from ..session import load_tables
@@ -1504,10 +1503,10 @@ def asof_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skyline_cheapest_latest_per_nation",
-    oracle="""
+    oracle=f"""
 WITH o AS (
     SELECT n.n_name AS nation,
-           CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents,
+           {sql_qround('o.o_totalprice', 2)} AS price_cents,
            CAST(o.o_orderdate AS DATE) AS d
     FROM orders o
     JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1712,8 +1711,7 @@ weighted AS (
     -- int64 for large values over long gaps. Cents clamped at ±2^53:
     -- past that the double has no fractional resolution anyway.
     SELECT user_id,
-           CAST(FLOOR({sql_clamp('value * 100 + 0.5', -_DR_MAX, _DR_MAX)})
-                AS HUGEINT)
+           CAST({sql_qround('value', 2, _DR_MAX)} AS HUGEINT)
                * date_diff('microsecond', ts, next_ts) AS num,
            date_diff('microsecond', ts, next_ts) AS dt_us
     FROM seq WHERE next_ts IS NOT NULL
@@ -1751,9 +1749,7 @@ def time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = seq.select(
         "user_id",
         (
-            F.floor(
-                clamp(F.col("value") * 100 + 0.5, -_DR_MAX, _DR_MAX)
-            ).cast("decimal(38,0)")
+            qround("value", 2, _DR_MAX).cast("decimal(38,0)")
             * dt_us
         ).alias("num"),
         dt_us.alias("dt_us"),
@@ -2413,7 +2409,7 @@ trended AS (
 detrended AS (
     SELECT event_type, d, n, trend,
            CAST((d - DATE '1970-01-01') AS BIGINT) % 7 AS dow,
-           CAST(FLOOR((n - trend) * 1000000 + 0.5) AS BIGINT) AS dq
+           {sql_qround('(n - trend)', 6)} AS dq
     FROM trended
 ),
 seasonal AS (
@@ -2467,8 +2463,7 @@ def seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "trend",
         (F.datediff("d", F.lit("1970-01-01")).cast("bigint") % 7).alias("dow"),
-        F.floor((F.col("n") - F.col("trend")) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.col("n") - F.col("trend"), 6)
         .alias("dq"),
     )
     seasonal = detrended.groupBy("event_type", "dow").agg(
@@ -2756,8 +2751,7 @@ r AS (
 f AS (
     SELECT dur, deaths, at_risk,
            CASE WHEN deaths = at_risk THEN CAST(0 AS BIGINT)
-                ELSE CAST(FLOOR(ln(1.0 - deaths * 1.0 / at_risk)
-                     * 1000000000 + 0.5) AS BIGINT) END AS lq,
+                ELSE {sql_qround('ln(1.0 - deaths * 1.0 / at_risk)', 9)} END AS lq,
            CASE WHEN deaths = at_risk THEN 1 ELSE 0 END AS wipeout
     FROM r
 ),
@@ -2771,8 +2765,7 @@ s AS (
 )
 SELECT dur AS day, deaths, at_risk,
        CASE WHEN cum_wipe > 0 THEN 0.0
-            ELSE (FLOOR(exp(CAST(cum_lq AS DOUBLE) / 1000000000.0)
-                  * 1000000 + 0.5) / 1000000.0) END AS survival
+            ELSE {sql_dround('exp(CAST(cum_lq AS DOUBLE) / 1000000000.0)', 6)} END AS survival
 FROM s
 WHERE deaths > 0
 """,
@@ -2828,11 +2821,9 @@ def survival_curve_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     lq = F.when(
         F.col("deaths") == F.col("at_risk"), F.lit(0).cast("bigint")
     ).otherwise(
-        F.floor(
-            F.log(1.0 - F.col("deaths") * 1.0 / F.col("at_risk"))
-            * 1000000000
-            + 0.5
-        ).cast("bigint")
+        qround(
+            F.log(1.0 - F.col("deaths") * 1.0 / F.col("at_risk")), 9
+        )
     )
     wipe = F.when(F.col("deaths") == F.col("at_risk"), 1).otherwise(0)
     f = r.select("dur", "deaths", "at_risk", lq.alias("lq"), wipe.alias("wipeout"))
@@ -2845,11 +2836,9 @@ def survival_curve_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("wipeout").over(w_run).cast("bigint").alias("cum_wipe"),
     )
     survival = F.when(F.col("cum_wipe") > 0, F.lit(0.0)).otherwise(
-        F.floor(
-            F.exp(F.col("cum_lq").cast("double") / 1000000000.0) * 1000000
-            + 0.5
+        dround(
+            F.exp(F.col("cum_lq").cast("double") / 1000000000.0), 6
         )
-        / 1000000.0
     )
     return s.filter(F.col("deaths") > 0).select(
         F.col("dur").alias("day"),
@@ -2867,25 +2856,21 @@ def survival_curve_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _DECAY_TAU_DAYS = 30.0
+# +-1e6 value units on the x1e6 grid, ~1800x the corpus ceiling
+_DECAY_CAP = 10**12
 
 
 @query(
     "time_decayed_user_value",
     oracle=f"""
 WITH q AS (
-    -- value winsorized at +-1e6 (r14; moments precedent, ~1800x the
-    -- corpus ceiling): the planted 4e15 value made the x1e6 decay
-    -- grid overflow DuckDB's BIGINT cast (loud) and saturate Spark's
-    -- FLOOR->LONG (silent). Clamp the DOUBLE before the floor
-    -- (hilbert precedent); CASE-shaped so NULL stays NULL on both
-    -- engines.
+    -- decayed contribution winsorized at +-1e6 (_DECAY_CAP): the
+    -- planted 4e15 value made the x1e6 decay grid overflow DuckDB's
+    -- BIGINT cast (loud) and saturate Spark's FLOOR->LONG (silent)
     SELECT user_id,
-           CAST(FLOOR((CASE WHEN value > 1000000.0 THEN 1000000.0
-                            WHEN value < -1000000.0 THEN -1000000.0
-                            ELSE value END)
-                * exp(-(CAST(date_diff('microsecond', ts,
-                    TIMESTAMP '{AS_OF}') AS BIGINT) / 86400000000.0)
-                    / {_DECAY_TAU_DAYS}) * 1000000 + 0.5) AS BIGINT) AS dq
+           {sql_qround(f"value * exp(-(CAST(date_diff('microsecond', ts,"
+                       f" TIMESTAMP '{AS_OF}') AS BIGINT) / 86400000000.0)"
+                       f" / {_DECAY_TAU_DAYS})", 6, _DECAY_CAP)} AS dq
     FROM events
 )
 SELECT user_id,
@@ -2909,16 +2894,9 @@ def time_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / 86400000000.0
     )
-    # value winsorized at +-1e6, CASE-shaped (NULL stays NULL) — see
-    # the oracle comment
-    v = (
-        F.when(F.col("value") > 1000000.0, 1000000.0)
-        .when(F.col("value") < -1000000.0, -1000000.0)
-        .otherwise(F.col("value"))
+    dq = qround(
+        F.col("value") * F.exp(-age_days / _DECAY_TAU_DAYS), 6, _DECAY_CAP
     )
-    dq = F.floor(
-        v * F.exp(-age_days / _DECAY_TAU_DAYS) * 1000000 + 0.5
-    ).cast("bigint")
     return (
         events.select("user_id", dq.alias("dq"))
         .groupBy("user_id")
@@ -3053,8 +3031,9 @@ _ATTR_ORACLE = (
     + "\nSELECT t.removed_channel,\n"
     + "       b.conv_micro / 1000000000.0 AS base_conv_prob,\n"
     + "       t.conv_micro / 1000000000.0 AS removed_conv_prob,\n"
-    + "       (FLOOR((b.conv_micro - t.conv_micro) * 1.0 / b.conv_micro\n"
-    + "        * 1000000 + 0.5) / 1000000.0) AS removal_effect\n"
+    + "       "
+    + sql_dround("(b.conv_micro - t.conv_micro) * 1.0 / b.conv_micro", 6)
+    + " AS removal_effect\n"
     + "FROM (\n"
     + "\nUNION ALL\n".join(
         f"SELECT '{ch}' AS removed_channel, conv_micro FROM res_r{i}"
@@ -3318,7 +3297,7 @@ def cep_rise_fall_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cusum_change_detection",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
     FROM events GROUP BY 1, 2
@@ -3344,8 +3323,8 @@ base AS (
 ),
 q AS (
     SELECT f.event_type, f.d, f.n,
-           CAST(FLOOR((f.n - 1.25 * b.mu) * 1000000 + 0.5) AS BIGINT) AS xq,
-           CAST(FLOOR(2.0 * b.mu * 1000000 + 0.5) AS BIGINT) AS hq
+           {sql_qround('(f.n - 1.25 * b.mu)', 6)} AS xq,
+           {sql_qround('2.0 * b.mu', 6)} AS hq
     FROM filled f JOIN base b USING (event_type)
 ),
 pfx0 AS (
@@ -3361,8 +3340,7 @@ pfx AS (
     FROM pfx0
 )
 SELECT event_type, d, n,
-       (FLOOR((p - LEAST(CAST(0 AS BIGINT), minp)) / 1000000.0
-        * 10000 + 0.5) / 10000.0) AS cusum,
+       {sql_dround('(p - LEAST(CAST(0 AS BIGINT), minp)) / 1000000.0', 4)} AS cusum,
        (p - LEAST(CAST(0 AS BIGINT), minp)) > hq AS is_alarm
 FROM pfx
 """,
@@ -3399,10 +3377,9 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "d",
         "n",
-        F.floor((F.col("n") - 1.25 * F.col("mu")) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.col("n") - 1.25 * F.col("mu"), 6)
         .alias("xq"),
-        F.floor(2.0 * F.col("mu") * 1000000 + 0.5).cast("bigint").alias("hq"),
+        qround(2.0 * F.col("mu"), 6).alias("hq"),
     )
     w = (
         Window.partitionBy("event_type")
@@ -3416,7 +3393,7 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "d",
         "n",
-        (F.floor(s / 1000000.0 * 10000 + 0.5) / F.lit(10000.0)).alias("cusum"),
+        dround(s / 1000000.0, 4).alias("cusum"),
         (s > F.col("hq")).alias("is_alarm"),
     )
 
@@ -3431,7 +3408,7 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "naive_forecast_backtest",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
     FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
@@ -3471,8 +3448,7 @@ SELECT event_type,
        CAST(SUM(e1) AS BIGINT) * 1.0 / COUNT(*) AS mae_naive,
        CAST(SUM(e7) AS BIGINT) * 1.0 / COUNT(*) AS mae_seasonal_naive,
        CASE WHEN CAST(SUM(e1) AS BIGINT) > 0 THEN
-       (FLOOR(CAST(SUM(e7) AS BIGINT) * 1.0 / CAST(SUM(e1) AS BIGINT)
-        * 10000 + 0.5) / 10000.0) END AS seasonal_skill_ratio
+       {sql_dround('CAST(SUM(e7) AS BIGINT) * 1.0 / CAST(SUM(e1) AS BIGINT)', 4)} END AS seasonal_skill_ratio
 FROM scored
 GROUP BY 1
 """,
@@ -3531,14 +3507,12 @@ def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # constant series has SUM(e1)=0 and ANSI x/0 throws
             F.when(
                 F.sum("e1").cast("bigint") > 0,
-                F.floor(
+                dround(
                     F.sum("e7").cast("bigint")
                     * 1.0
-                    / F.sum("e1").cast("bigint")
-                    * 10000
-                    + 0.5
-                )
-                / F.lit(10000.0),
+                    / F.sum("e1").cast("bigint"),
+                    4,
+                ),
             )
         ).alias("seasonal_skill_ratio"),
     )
@@ -3572,9 +3546,8 @@ SELECT g.gap_s,
        COUNT(*) FILTER (WHERE gaps.gap_us IS NULL
            OR gaps.gap_us > CAST(g.gap_s AS BIGINT) * 1000000)
            AS n_sessions,
-       (FLOOR(COUNT(*) * 1.0 / COUNT(*) FILTER (WHERE gaps.gap_us IS NULL
-            OR gaps.gap_us > CAST(g.gap_s AS BIGINT) * 1000000)
-        * 10000 + 0.5) / 10000.0) AS avg_events_per_session
+       {sql_dround('COUNT(*) * 1.0 / COUNT(*) FILTER (WHERE gaps.gap_us IS NULL'
+                   ' OR gaps.gap_us > CAST(g.gap_s AS BIGINT) * 1000000)', 4)} AS avg_events_per_session
 FROM gaps CROSS JOIN g
 GROUP BY 1
 """,
@@ -3609,7 +3582,7 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gaps.crossJoin(g).groupBy("gap_s").agg(
         F.count("*").alias("n_events"),
         new_sess.alias("n_sessions"),
-        (F.floor(F.count("*") * 1.0 / new_sess * 10000 + 0.5) / F.lit(10000.0)).alias(
+        dround(F.count("*") * 1.0 / new_sess, 4).alias(
             "avg_events_per_session"
         ),
     )
@@ -3625,7 +3598,7 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dispersion_index_daily",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
     FROM events GROUP BY 1, 2
@@ -3639,10 +3612,10 @@ m AS (
 )
 SELECT event_type, k AS n_days,
        s1 * 1.0 / k AS mean_daily,
-       (FLOOR(CAST(k * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-            / k / (k - 1.0) * 10000 + 0.5) / 10000.0) AS variance_daily,
-       (FLOOR((CAST(k * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-            / k / (k - 1.0)) / (s1 * 1.0 / k) * 10000 + 0.5) / 10000.0)
+       {sql_dround('CAST(k * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)'
+                   ' / k / (k - 1.0)', 4)} AS variance_daily,
+       {sql_dround('(CAST(k * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)'
+                   ' / k / (k - 1.0)) / (s1 * 1.0 / k)', 4)}
            AS dispersion_index
 FROM m
 """,
@@ -3670,13 +3643,12 @@ def dispersion_index_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("k") - 1.0)
     )
     mean = F.col("s1") * 1.0 / F.col("k")
-    fp = lambda c: F.floor(c * 10000 + 0.5) / F.lit(10000.0)  # noqa: E731
     return m.select(
         "event_type",
         F.col("k").alias("n_days"),
         mean.alias("mean_daily"),
-        fp(var).alias("variance_daily"),
-        fp(var / mean).alias("dispersion_index"),
+        dround(var, 4).alias("variance_daily"),
+        dround(var / mean, 4).alias("dispersion_index"),
     )
 
 
@@ -3733,12 +3705,10 @@ d AS (
 {_its_moments_sql('p', 'x < 0').lstrip()},
 {_its_moments_sql('q', 'x >= 0').lstrip()}
 SELECT mp.event_type,
-       (FLOOR({_ITS_SLOPE.format(m='mp')} * 1000000 + 0.5) / 1000000.0)
-           AS slope_pre,
-       (FLOOR({_ITS_SLOPE.format(m='mq')} * 1000000 + 0.5) / 1000000.0)
-           AS slope_post,
-       (FLOOR(({_ITS_INTERCEPT.format(m='mq')}
-            - {_ITS_INTERCEPT.format(m='mp')}) * 10000 + 0.5) / 10000.0)
+       {sql_dround(_ITS_SLOPE.format(m='mp'), 6)} AS slope_pre,
+       {sql_dround(_ITS_SLOPE.format(m='mq'), 6)} AS slope_post,
+       {sql_dround(_ITS_INTERCEPT.format(m='mq')
+                   + ' - ' + _ITS_INTERCEPT.format(m='mp'), 4)}
            AS level_shift_at_break
 FROM mp JOIN mq ON mq.event_type = mp.event_type
 WHERE mp.n >= 2 AND mq.n >= 2
@@ -3808,15 +3778,14 @@ def interrupted_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     slp, icp = seg("p")
     slq, icq = seg("q")
-    fp = lambda c, k: F.floor(c * k + 0.5) / F.lit(float(k))  # noqa: E731
     return (
         mp.join(mq, "event_type")
         .filter((F.col("n_p") >= 2) & (F.col("n_q") >= 2))
         .select(
             "event_type",
-            fp(slp, 1000000).alias("slope_pre"),
-            fp(slq, 1000000).alias("slope_post"),
-            fp(icq - icp, 10000).alias("level_shift_at_break"),
+            dround(slp, 6).alias("slope_pre"),
+            dround(slq, 6).alias("slope_post"),
+            dround(icq - icp, 4).alias("level_shift_at_break"),
         )
     )
 
@@ -3859,10 +3828,9 @@ m AS (
     FROM aligned GROUP BY 1
 )
 SELECT lag AS lag_days, n AS n_days,
-       (FLOOR(CAST(n * sxy - sx * sy AS DOUBLE)
-        / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-        / sqrt(CAST(n * syy - sy * sy AS DOUBLE)) * 1000000 + 0.5)
-        / 1000000.0) AS pearson_r
+       {sql_dround('CAST(n * sxy - sx * sy AS DOUBLE)'
+                   ' / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))'
+                   ' / sqrt(CAST(n * syy - sy * sy AS DOUBLE))', 6)} AS pearson_r
 FROM m
 WHERE n >= 3
 """,
@@ -3917,7 +3885,7 @@ def lead_lag_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.filter(F.col("n") >= 3).select(
         F.col("lag").alias("lag_days"),
         F.col("n").alias("n_days"),
-        (F.floor(r * 1000000 + 0.5) / F.lit(1000000.0)).alias("pearson_r"),
+        dround(r, 6).alias("pearson_r"),
     )
 
 
@@ -3931,7 +3899,7 @@ def lead_lag_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "intraday_seasonality_strength",
-    oracle="""
+    oracle=f"""
 WITH cell AS (
     SELECT event_type, CAST(ts AS DATE) AS d,
            CAST(EXTRACT(hour FROM ts) AS BIGINT) AS h,
@@ -3950,15 +3918,13 @@ tot AS (
            CAST(SUM(k) AS BIGINT) AS kt,
            CAST(SUM(s) AS BIGINT) AS st,
            CAST(SUM(ss) AS HUGEINT) AS sst,
-           CAST(SUM(CAST(FLOOR(CAST(CAST(s AS HUGEINT) * s AS DOUBLE) / k
-                * 1000 + 0.5) AS BIGINT)) AS BIGINT) AS between_milli
+           CAST(SUM({sql_qround('CAST(CAST(s AS HUGEINT) * s AS DOUBLE) / k', 3)}) AS BIGINT) AS between_milli
     FROM hourly GROUP BY 1
 )
 SELECT event_type,
        kt AS n_cells,
-       (FLOOR((between_milli / 1000.0 - CAST(st AS DOUBLE) * st / kt)
-        / (CAST(sst AS DOUBLE) - CAST(st AS DOUBLE) * st / kt)
-        * 1000000 + 0.5) / 1000000.0) AS eta_squared
+       {sql_dround('(between_milli / 1000.0 - CAST(st AS DOUBLE) * st / kt)'
+                   ' / (CAST(sst AS DOUBLE) - CAST(st AS DOUBLE) * st / kt)', 6)} AS eta_squared
 FROM tot
 WHERE CAST(sst AS DOUBLE) - CAST(st AS DOUBLE) * st / kt > 0
 """,
@@ -3992,10 +3958,9 @@ def intraday_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum("s").cast("bigint").alias("st"),
         F.sum("ss").alias("sst"),
         F.sum(
-            F.floor(
-                (dec("s") * F.col("s")).cast("double") / F.col("k") * 1000
-                + 0.5
-            ).cast("bigint")
+            qround(
+                (dec("s") * F.col("s")).cast("double") / F.col("k"), 3
+            )
         )
         .cast("bigint")
         .alias("between_milli"),
@@ -4009,9 +3974,7 @@ def intraday_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame
     return tot.filter(total_ss > 0).select(
         "event_type",
         F.col("kt").alias("n_cells"),
-        (F.floor(between / total_ss * 1000000 + 0.5) / F.lit(1000000.0)).alias(
-            "eta_squared"
-        ),
+        dround(between / total_ss, 6).alias("eta_squared"),
     )
 
 
@@ -4026,7 +3989,7 @@ def intraday_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "mutual_information_type_dow",
-    oracle="""
+    oracle=f"""
 WITH cell AS (
     SELECT event_type,
            CAST((CAST(ts AS DATE) - DATE '1970-01-01') AS BIGINT) % 7 AS dow,
@@ -4042,17 +4005,13 @@ marg AS (
 ),
 terms AS (
     SELECT n,
-           CAST(FLOOR(c * ln(c * 1.0 * n / ra / cb) * 1000000000 + 0.5)
-               AS BIGINT) AS miq,
-           CAST(FLOOR(c * ln(n * 1.0 / ra) * 1000000000 + 0.5)
-               AS BIGINT) AS haq
+           {sql_qround('c * ln(c * 1.0 * n / ra / cb)', 9)} AS miq,
+           {sql_qround('c * ln(n * 1.0 / ra)', 9)} AS haq
     FROM marg
 )
 SELECT MAX(n) AS n_events,
-       (FLOOR(CAST(SUM(miq) AS BIGINT) * 1.0 / MAX(n) / 1000000000.0
-        * 1000000 + 0.5) / 1000000.0) AS mutual_information_nats,
-       (FLOOR(CAST(SUM(miq) AS BIGINT) * 1.0 / CAST(SUM(haq) AS BIGINT)
-        * 1000000 + 0.5) / 1000000.0) AS uncertainty_coefficient
+       {sql_dround('CAST(SUM(miq) AS BIGINT) * 1.0 / MAX(n) / 1000000000.0', 6)} AS mutual_information_nats,
+       {sql_dround('CAST(SUM(miq) AS BIGINT) * 1.0 / CAST(SUM(haq) AS BIGINT)', 6)} AS uncertainty_coefficient
 FROM terms
 """,
 )
@@ -4078,24 +4037,24 @@ def mutual_information_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(Window.partitionBy("dow")).cast("bigint").alias("cb"),
         F.sum("c").over(Window.partitionBy()).cast("bigint").alias("n"),
     )
-    miq = F.floor(
+    miq = qround(
         F.col("c")
-        * F.log(F.col("c") * 1.0 * F.col("n") / F.col("ra") / F.col("cb"))
-        * 1000000000
-        + 0.5
-    ).cast("bigint")
-    haq = F.floor(
-        F.col("c") * F.log(F.col("n") * 1.0 / F.col("ra")) * 1000000000 + 0.5
-    ).cast("bigint")
+        * F.log(F.col("c") * 1.0 * F.col("n") / F.col("ra") / F.col("cb")),
+        9,
+    )
+    haq = qround(
+        F.col("c") * F.log(F.col("n") * 1.0 / F.col("ra")), 9
+    )
     terms = marg.select("n", miq.alias("miq"), haq.alias("haq"))
-    fp = lambda c: F.floor(c * 1000000 + 0.5) / F.lit(1000000.0)  # noqa: E731
     return terms.agg(
         F.max("n").alias("n_events"),
-        fp(
-            F.sum("miq").cast("bigint") * 1.0 / F.max("n") / 1000000000.0
+        dround(
+            F.sum("miq").cast("bigint") * 1.0 / F.max("n") / 1000000000.0,
+            6,
         ).alias("mutual_information_nats"),
-        fp(
-            F.sum("miq").cast("bigint") * 1.0 / F.sum("haq").cast("bigint")
+        dround(
+            F.sum("miq").cast("bigint") * 1.0 / F.sum("haq").cast("bigint"),
+            6,
         ).alias("uncertainty_coefficient"),
     )
 
@@ -4111,7 +4070,7 @@ def mutual_information_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sequence_conditional_entropy",
-    oracle="""
+    oracle=f"""
 WITH ordered AS (
     SELECT user_id, event_type, ts, event_id,
            LEAD(event_type) OVER w AS nxt,
@@ -4134,13 +4093,13 @@ marg AS (
 ),
 terms AS (
     SELECT n,
-           CAST(FLOOR(c * ln(rp * 1.0 / c) * 1000000000 + 0.5) AS BIGINT)
+           {sql_qround('c * ln(rp * 1.0 / c)', 9)}
                AS hq
     FROM marg
 )
 SELECT MAX(n) AS n_transitions,
-       (FLOOR(CAST(SUM(hq) AS BIGINT) * 1.0 / MAX(n) / 1000000000.0
-        / ln(2.0) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('CAST(SUM(hq) AS BIGINT) * 1.0 / MAX(n) / 1000000000.0'
+                   ' / ln(2.0)', 6)}
            AS conditional_entropy_bits
 FROM terms
 """,
@@ -4176,23 +4135,19 @@ def sequence_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(Window.partitionBy("prev")).cast("bigint").alias("rp"),
         F.sum("c").over(Window.partitionBy()).cast("bigint").alias("n"),
     )
-    hq = F.floor(
-        F.col("c") * F.log(F.col("rp") * 1.0 / F.col("c")) * 1000000000 + 0.5
-    ).cast("bigint")
+    hq = qround(
+        F.col("c") * F.log(F.col("rp") * 1.0 / F.col("c")), 9
+    )
     terms = marg.select("n", hq.alias("hq"))
     return terms.agg(
         F.max("n").alias("n_transitions"),
-        (
-            F.floor(
-                F.sum("hq").cast("bigint")
-                * 1.0
-                / F.max("n")
-                / 1000000000.0
-                / F.log(F.lit(2.0))
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
+        dround(
+            F.sum("hq").cast("bigint")
+            * 1.0
+            / F.max("n")
+            / 1000000000.0
+            / F.log(F.lit(2.0)),
+            6,
         ).alias("conditional_entropy_bits"),
     )
 
@@ -4208,7 +4163,7 @@ def sequence_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cross_session_transition",
-    oracle="""
+    oracle=f"""
 WITH ordered AS (
     SELECT user_id, ts, event_id, event_type,
            CASE WHEN LAG(ts) OVER w IS NULL
@@ -4247,8 +4202,8 @@ handoff AS (
 )
 SELECT prev_session_end, next_session_start,
        COUNT(*) AS n_handoffs,
-       (FLOOR(COUNT(*) * 1.0 / SUM(COUNT(*)) OVER (
-            PARTITION BY prev_session_end) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('COUNT(*) * 1.0 / SUM(COUNT(*)) OVER ('
+                   ' PARTITION BY prev_session_end)', 6)}
            AS row_share
 FROM handoff
 WHERE next_session_start IS NOT NULL
@@ -4324,15 +4279,11 @@ def cross_session_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_session_end",
         "next_session_start",
         "n_handoffs",
-        (
-            F.floor(
-                F.col("n_handoffs")
-                * 1.0
-                / F.sum("n_handoffs").over(wr)
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
+        dround(
+            F.col("n_handoffs")
+            * 1.0
+            / F.sum("n_handoffs").over(wr),
+            6,
         ).alias("row_share"),
     )
 
@@ -4421,7 +4372,7 @@ def funnel_time_horizons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pinball_loss_backtest",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
     FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
@@ -4441,17 +4392,16 @@ scored AS (
 )
 SELECT event_type,
        COUNT(*) AS n_days,
-       (FLOOR(CAST(SUM(5 * GREATEST(err, 0)
-                       + 5 * GREATEST(-err, 0)) AS BIGINT)
-        * 1.0 / COUNT(*) / 10.0 * 10000 + 0.5) / 10000.0)
+       {sql_dround('CAST(SUM(5 * GREATEST(err, 0)'
+                   ' + 5 * GREATEST(-err, 0)) AS BIGINT)'
+                   ' * 1.0 / COUNT(*) / 10.0', 4)}
            AS pinball_p50,
-       (FLOOR(CAST(SUM(9 * GREATEST(err, 0)
-                       + 1 * GREATEST(-err, 0)) AS BIGINT)
-        * 1.0 / COUNT(*) / 10.0 * 10000 + 0.5) / 10000.0)
+       {sql_dround('CAST(SUM(9 * GREATEST(err, 0)'
+                   ' + 1 * GREATEST(-err, 0)) AS BIGINT)'
+                   ' * 1.0 / COUNT(*) / 10.0', 4)}
            AS pinball_p90,
        COUNT(*) FILTER (WHERE err <= 0) AS n_covered,
-       (FLOOR(COUNT(*) FILTER (WHERE err <= 0) * 1.0 / COUNT(*)
-        * 10000 + 0.5) / 10000.0) AS empirical_coverage
+       {sql_dround('COUNT(*) FILTER (WHERE err <= 0) * 1.0 / COUNT(*)', 4)} AS empirical_coverage
 FROM scored
 GROUP BY 1
 """,
@@ -4479,29 +4429,22 @@ def pinball_loss_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     over = F.greatest(F.col("err"), F.lit(0))
     under = F.greatest(-F.col("err"), F.lit(0))
     pin = lambda qo, qu: (  # noqa: E731
-        F.floor(
+        dround(
             F.sum(qo * over + qu * under).cast("bigint")
             * 1.0
             / F.count("*")
-            / 10.0
-            * 10000
-            + 0.5
+            / 10.0,
+            4,
         )
-        / F.lit(10000.0)
     )
     return scored.groupBy("event_type").agg(
         F.count("*").alias("n_days"),
         pin(F.lit(5), F.lit(5)).alias("pinball_p50"),
         pin(F.lit(9), F.lit(1)).alias("pinball_p90"),
         F.count_if(F.col("err") <= 0).alias("n_covered"),
-        (
-            F.floor(
-                F.count_if(F.col("err") <= 0) * 1.0 / F.count("*")
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
-        ).alias("empirical_coverage"),
+        dround(
+                F.count_if(F.col("err") <= 0) * 1.0 / F.count("*"), 4
+            ).alias("empirical_coverage"),
     )
 
 
@@ -4523,12 +4466,12 @@ def pinball_loss_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kendall_tau_monthly_demand",
-    oracle="""
+    oracle=f"""
 WITH series AS (
     SELECT n_name AS nation,
            CAST(YEAR(o_orderdate) * 12 + MONTH(o_orderdate) AS BIGINT) AS m,
            COUNT(*) AS x,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('o_totalprice', 2)})
                 AS BIGINT) AS y
     FROM orders
     JOIN customer ON o_custkey = c_custkey
@@ -4559,10 +4502,9 @@ agg AS (
 SELECT a.nation,
        CAST(s.n_months AS BIGINT) AS n_months,
        nc AS concordant, nd AS discordant,
-       (FLOOR((CAST(nc AS DOUBLE) - nd)
-              / sqrt(CASE WHEN (n0 - tx) * (n0 - ty) > 0
-                     THEN CAST(n0 - tx AS DOUBLE) * (n0 - ty) END)
-              * 1000000 + 0.5) / 1000000.0) AS tau_b
+       {sql_dround('(CAST(nc AS DOUBLE) - nd)'
+                   ' / sqrt(CASE WHEN (n0 - tx) * (n0 - ty) > 0'
+                   ' THEN CAST(n0 - tx AS DOUBLE) * (n0 - ty) END)', 6)} AS tau_b
 FROM agg a
 JOIN (SELECT nation, COUNT(*) AS n_months FROM series GROUP BY 1) s
   ON a.nation = s.nation
@@ -4596,7 +4538,7 @@ def kendall_tau_monthly_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("x"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+                qround(F.col("o_totalprice"), 2)
             )
             .cast("bigint")
             .alias("y"),
@@ -4666,12 +4608,12 @@ def kendall_tau_monthly_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spearman_rho_monthly_demand",
-    oracle="""
+    oracle=f"""
 WITH series AS (
     SELECT n_name AS nation,
            CAST(YEAR(o_orderdate) * 12 + MONTH(o_orderdate) AS BIGINT) AS m,
            COUNT(*) AS x,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('o_totalprice', 2)})
                 AS BIGINT) AS y
     FROM orders
     JOIN customer ON o_custkey = c_custkey
@@ -4699,13 +4641,12 @@ mom AS (
 )
 SELECT nation,
        CAST(n AS BIGINT) AS n_months,
-       (FLOOR((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-              / sqrt(CASE WHEN (n * sxx - sx * sx) > 0
-                           AND (n * syy - sy * sy) > 0
-                     THEN (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                        * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)
-                     END)
-              * 1000000 + 0.5) / 1000000.0) AS rho_spearman
+       {sql_dround('(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)'
+                   ' / sqrt(CASE WHEN (n * sxx - sx * sx) > 0'
+                   ' AND (n * syy - sy * sy) > 0'
+                   ' THEN (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)'
+                   ' * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)'
+                   ' END)', 6)} AS rho_spearman
 FROM mom
 """,
 )
@@ -4737,7 +4678,7 @@ def spearman_rho_monthly_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("x"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+                qround(F.col("o_totalprice"), 2)
             )
             .cast("bigint")
             .alias("y"),
@@ -5148,7 +5089,7 @@ def shapley_channel_attribution(
 
 @query(
     "attribution_model_comparison",
-    oracle="""
+    oracle=f"""
 WITH conv AS (
     SELECT user_id, MIN(ts) AS first_purchase
     FROM events
@@ -5180,10 +5121,8 @@ credited AS (
 SELECT event_type AS channel,
        CAST(SUM(is_first) AS BIGINT) AS first_touch_conversions,
        CAST(SUM(is_last) AS BIGINT) AS last_touch_conversions,
-       (FLOOR(CAST(SUM(lin_q) AS BIGINT) / 1000000.0 * 10000 + 0.5)
-           / 10000.0) AS linear_credit,
-       (FLOOR(CAST(SUM(pos_q) AS BIGINT) / 1000000.0 * 10000 + 0.5)
-           / 10000.0) AS position_credit
+       {sql_dround('CAST(SUM(lin_q) AS BIGINT) / 1000000.0', 4)} AS linear_credit,
+       {sql_dround('CAST(SUM(pos_q) AS BIGINT) / 1000000.0', 4)} AS position_credit
 FROM credited
 GROUP BY 1
 """,
@@ -5300,15 +5239,11 @@ ewma AS (
 ),
 scored AS (
     SELECT pk, size, gap,
-           CAST(FLOOR(
-               CAST(FLOOR(numz * 1000000.0 / denz + 0.5) AS BIGINT)
-               * 1000000.0
-               / CAST(FLOOR(nump * 1000000.0 / denp + 0.5) AS BIGINT)
-               + 0.5) AS BIGINT) AS fq,
-           CAST(FLOOR(size * 1000000.0 / gap + 0.5) AS BIGINT)
-               AS actual_q,
-           CAST(FLOOR(prev_size * 1000000.0 / prev_gap + 0.5) AS BIGINT)
-               AS naive_q
+           {sql_qround(sql_qround('numz * 1000000.0 / denz')
+                       + ' * 1000000.0 / '
+                       + sql_qround('nump * 1000000.0 / denp'))} AS fq,
+           {sql_qround('size * 1000000.0 / gap')} AS actual_q,
+           {sql_qround('prev_size * 1000000.0 / prev_gap')} AS naive_q
     FROM ewma
     WHERE denz = {_H_FULL} AND denp = {_H_FULL}
       AND gap > 0 AND prev_gap > 0 AND prev_size IS NOT NULL
@@ -5388,9 +5323,6 @@ def croston_intermittent_backtest(
         F.lag("size", 1).over(w).alias("prev_size"),
         F.lag("gap", 1).over(w).alias("prev_gap"),
     )
-    q = lambda num, den: F.floor(  # noqa: E731
-        num * 1000000.0 / den + 0.5
-    ).cast("bigint")
     scored = ewma.filter(
         (F.col("denz") == _H_FULL)
         & (F.col("denp") == _H_FULL)
@@ -5401,16 +5333,15 @@ def croston_intermittent_backtest(
         "pk",
         "size",
         "gap",
-        F.floor(
-            q(F.col("numz"), F.col("denz"))
+        qround(
+            qround(F.col("numz") * 1000000.0 / F.col("denz"))
             * 1000000.0
-            / q(F.col("nump"), F.col("denp"))
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("fq"),
-        q(F.col("size"), F.col("gap")).alias("actual_q"),
-        q(F.col("prev_size"), F.col("prev_gap")).alias("naive_q"),
+            / qround(F.col("nump") * 1000000.0 / F.col("denp"))
+        ).alias("fq"),
+        qround(F.col("size") * 1000000.0 / F.col("gap")).alias("actual_q"),
+        qround(F.col("prev_size") * 1000000.0 / F.col("prev_gap")).alias(
+            "naive_q"
+        ),
     )
     j = scored.join(
         F.broadcast(
@@ -5775,7 +5706,7 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
-           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS BIGINT) AS y
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2, CENTS_CAP)}) AS BIGINT) AS y
     FROM events WHERE ts IS NOT NULL GROUP BY 1
 ),
 lagged AS (
@@ -5838,16 +5769,15 @@ rows_ AS (
 )
 SELECT model, n AS n_scored,
        CASE WHEN n > 0 THEN
-           CAST(FLOOR(sae * 1.0 / n / 100.0 * 10000 + 0.5) AS BIGINT)
+           {sql_qround('sae * 1.0 / n / 100.0', 4)}
                / 10000.0 END AS mae,
        CASE WHEN n > 0 THEN
-           CAST(FLOOR(sqrt(sse / n) / 100.0 * 10000 + 0.5) AS BIGINT)
+           {sql_qround('sqrt(sse / n) / 100.0', 4)}
                / 10000.0 END AS rmse,
        CASE WHEN n > 0 THEN
-           CAST(FLOOR(ssm * 1.0 / n / 1000000.0 * 1000000 + 0.5)
-               AS BIGINT) / 1000000.0 END AS smape,
+           {sql_qround('ssm * 1.0 / n / 1000000.0', 6)} / 1000000.0 END AS smape,
        CASE WHEN sae_naive > 0 THEN
-           CAST(FLOOR(sae * 1.0 / sae_naive * 1000000 + 0.5) AS BIGINT)
+           {sql_qround('sae * 1.0 / sae_naive', 6)}
                / 1000000.0 END AS mase
 FROM rows_
 """,
@@ -5859,7 +5789,7 @@ def forecast_metrics_comparison(
     from pyspark.sql.window import Window
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    cents_w = cents(F.coalesce(F.col("value"), F.lit(0.0)))
+    cents_w = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2, CENTS_CAP)
     daily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.to_date("ts").alias("d"))
@@ -5961,7 +5891,7 @@ def forecast_metrics_comparison(
 
 @query(
     "interval_overlap_peak_hours",
-    oracle="""
+    oracle=f"""
 WITH e AS (
     SELECT user_id, ts, event_id,
            CASE WHEN LAG(ts) OVER w IS NULL
@@ -6003,7 +5933,7 @@ ov AS (
 SELECT hb * 3600 AS peak_hour_epoch, n_events AS peak_events,
        CAST(COUNT(*) AS BIGINT) AS n_sessions,
        CAST(SUM(ov_s) AS BIGINT) AS total_overlap_seconds,
-       CAST(FLOOR(SUM(ov_s) * 1.0 / COUNT(*) * 10000 + 0.5) AS BIGINT)
+       {sql_qround('SUM(ov_s) * 1.0 / COUNT(*)', 4)}
            / 10000.0 AS avg_overlap_seconds
 FROM ov WHERE ov_s > 0
 GROUP BY 1, 2
@@ -6089,7 +6019,7 @@ def interval_overlap_peak_hours(
     oracle=f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
-           CAST(SUM(CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2)})
                 AS BIGINT) AS x
     FROM events WHERE ts IS NOT NULL GROUP BY 1
 ),
@@ -6156,9 +6086,7 @@ def changepoint_binary_segmentation(
     from ..functions import dround
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    v_fp = F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5).cast(
-        "bigint"
-    )
+    v_fp = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2)
     daily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.col("ts").cast("date").alias("d"))
@@ -6475,7 +6403,7 @@ _SAX_BP = 0.6745  # N(0,1) quartile breakpoint
     oracle=f"""
 WITH xdaily AS (
     SELECT event_type, CAST(ts AS DATE) AS d,
-           CAST(SUM(CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2)})
                 AS BIGINT) AS x
     FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 ),
@@ -6563,9 +6491,7 @@ def sax_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    v_fp = F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5).cast(
-        "bigint"
-    )
+    v_fp = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2)
     xdaily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy("event_type", F.col("ts").cast("date").alias("d"))
@@ -6704,8 +6630,7 @@ marg AS (
 ),
 scoredq AS (
     SELECT t.user_id,
-           CAST(FLOOR(-ln(m.n * 1.0 / g.row_total) * 1000000000 + 0.5)
-                AS BIGINT) AS nllq,
+           {sql_qround('-ln(m.n * 1.0 / g.row_total)', 9)} AS nllq,
            m.from_type || '>' || m.to_type AS edge
     FROM tr t
     JOIN model m ON m.from_type = t.from_type AND m.to_type = t.to_type
@@ -6771,11 +6696,9 @@ def user_sequence_anomaly_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(marg), "from_type")
         .select(
             "user_id",
-            F.floor(
-                -F.log(F.col("n") * 1.0 / F.col("row_total")) * 1000000000
-                + 0.5
+            qround(
+                -F.log(F.col("n") * 1.0 / F.col("row_total")), 9
             )
-            .cast("bigint")
             .alias("nllq"),
             F.concat(
                 F.col("from_type"), F.lit(">"), F.col("to_type")
@@ -6847,7 +6770,7 @@ _PGRAM_TRIG_SQL = ", ".join(
     oracle=f"""
 WITH pdaily AS (
     SELECT CAST(ts AS DATE) AS d,
-           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS BIGINT) AS x
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2, CENTS_CAP)}) AS BIGINT) AS x
     FROM events WHERE ts IS NOT NULL GROUP BY 1
 ),
 pidx AS (
@@ -6859,10 +6782,8 @@ pstat AS (
 trig AS (SELECT * FROM (VALUES {_PGRAM_TRIG_SQL}) t(p, k, c, s)),
 proj AS (
     SELECT t.p,
-           CAST(SUM(CAST(FLOOR((i.x - st.mu) * t.c * 1000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS aq,
-           CAST(SUM(CAST(FLOOR((i.x - st.mu) * t.s * 1000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS bq
+           CAST(SUM({sql_qround('(i.x - st.mu) * t.c', 3)}) AS BIGINT) AS aq,
+           CAST(SUM({sql_qround('(i.x - st.mu) * t.s', 3)}) AS BIGINT) AS bq
     FROM pidx i
     CROSS JOIN pstat st
     JOIN trig t ON t.k = i.j % t.p
@@ -6895,7 +6816,7 @@ def periodogram_daily_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     events = load_tables(spark, sf_dir, "events")["events"]
-    v_fp = cents(F.coalesce(F.col("value"), F.lit(0.0)))
+    v_fp = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2, CENTS_CAP)
     pdaily = (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.col("ts").cast("date").alias("d"))
@@ -6915,14 +6836,12 @@ def periodogram_daily_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p")
         .agg(
             F.sum(
-                F.floor((F.col("x") - F.col("mu")) * F.col("c") * 1000 + 0.5)
-                .cast("bigint")
+                qround((F.col("x") - F.col("mu")) * F.col("c"), 3)
             )
             .cast("bigint")
             .alias("aq"),
             F.sum(
-                F.floor((F.col("x") - F.col("mu")) * F.col("s") * 1000 + 0.5)
-                .cast("bigint")
+                qround((F.col("x") - F.col("mu")) * F.col("s"), 3)
             )
             .cast("bigint")
             .alias("bq"),
@@ -6980,20 +6899,18 @@ def _als_sql_round(i: int) -> str:
     return f"""
 u{i} AS MATERIALIZED (
     SELECT r.user_id,
-           CAST(SUM(CAST(FLOOR(r.r * v.v * 1000000 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('r.r * v.v', 6)})
                 AS DOUBLE) / 1000000.0
-           / ((SELECT SUM(CAST(FLOOR(v2.v * v2.v * 1000000 + 0.5)
-                               AS BIGINT)) FROM v{p} v2)
+           / ((SELECT SUM({sql_qround('v2.v * v2.v', 6)}) FROM v{p} v2)
               / 1000000.0) AS u
     FROM als_r r JOIN v{p} v ON v.event_type = r.event_type
     GROUP BY 1
 ),
 v{i} AS MATERIALIZED (
     SELECT r.event_type,
-           CAST(SUM(CAST(FLOOR(r.r * u.u * 1000000 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('r.r * u.u', 6)})
                 AS DOUBLE) / 1000000.0
-           / ((SELECT SUM(CAST(FLOOR(u2.u * u2.u * 1000000 + 0.5)
-                               AS BIGINT)) FROM u{i} u2)
+           / ((SELECT SUM({sql_qround('u2.u * u2.u', 6)}) FROM u{i} u2)
               / 1000000.0) AS v
     FROM als_r r JOIN u{i} u ON u.user_id = r.user_id
     GROUP BY 1
@@ -7005,7 +6922,7 @@ v{i} AS MATERIALIZED (
     oracle=f"""
 WITH als_r AS MATERIALIZED (
     SELECT user_id, event_type,
-           CAST(SUM({sql_cents('COALESCE(value, 0)')}) AS DOUBLE) / 100.0
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2, CENTS_CAP)}) AS DOUBLE) / 100.0
                AS r
     FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2
 ),
@@ -7018,22 +6935,20 @@ recon AS (
     JOIN v{_ALS_ROUNDS} v ON v.event_type = r.event_type
 ),
 fit AS (
-    SELECT CAST(SUM(CAST(FLOOR((r - rhat) * (r - rhat) * 1000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS sse_q,
-           CAST(SUM(CAST(FLOOR(r * 1000 + 0.5) AS BIGINT)) AS BIGINT) AS s_q,
-           CAST(SUM(CAST(FLOOR(r * r * 1000 + 0.5) AS BIGINT)) AS BIGINT)
+    SELECT CAST(SUM({sql_qround('(r - rhat) * (r - rhat)', 3)}) AS BIGINT) AS sse_q,
+           CAST(SUM({sql_qround('r', 3)}) AS BIGINT) AS s_q,
+           CAST(SUM({sql_qround('r * r', 3)}) AS BIGINT)
                AS ss_q,
            COUNT(*) AS n
     FROM recon
 )
 SELECT v.event_type,
-       (FLOOR(v.v * 1000000 + 0.5) / 1000000.0) AS item_factor,
-       (FLOOR((1.0 - (f.sse_q * 1.0
-                      / (CASE WHEN (f.ss_q - CAST(f.s_q AS DOUBLE) * f.s_q
-                                    / (f.n * 1000.0)) > 0
-                              THEN f.ss_q - CAST(f.s_q AS DOUBLE) * f.s_q
-                                   / (f.n * 1000.0) END)))
-              * 1000000 + 0.5) / 1000000.0) AS r2_rank1
+       {sql_dround('v.v', 6)} AS item_factor,
+       {sql_dround('(1.0 - (f.sse_q * 1.0'
+                   ' / (CASE WHEN (f.ss_q - CAST(f.s_q AS DOUBLE) * f.s_q'
+                   ' / (f.n * 1000.0)) > 0'
+                   ' THEN f.ss_q - CAST(f.s_q AS DOUBLE) * f.s_q'
+                   ' / (f.n * 1000.0) END)))', 6)} AS r2_rank1
 FROM v{_ALS_ROUNDS} v CROSS JOIN fit f
 """,
 )
@@ -7049,7 +6964,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor vectors. Reference analog: none (ML-primitive extension).
     """
     events = load_tables(spark, sf_dir, "events")["events"]
-    v_fp = cents(F.coalesce(F.col("value"), F.lit(0.0)))
+    v_fp = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2, CENTS_CAP)
     r = (
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id", "event_type")
@@ -7064,8 +6979,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         vss = v.agg(
             (
                 F.sum(
-                    F.floor(F.col("v") * F.col("v") * 1000000 + 0.5)
-                    .cast("bigint")
+                    qround(F.col("v") * F.col("v"), 6)
                 )
                 / 1000000.0
             ).alias("vss")
@@ -7076,8 +6990,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 (
                     F.sum(
-                        F.floor(F.col("r") * F.col("v") * 1000000 + 0.5)
-                        .cast("bigint")
+                        qround(F.col("r") * F.col("v"), 6)
                     ).cast("double")
                     / 1000000.0
                 ).alias("num")
@@ -7088,8 +7001,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         uss = u.agg(
             (
                 F.sum(
-                    F.floor(F.col("u") * F.col("u") * 1000000 + 0.5)
-                    .cast("bigint")
+                    qround(F.col("u") * F.col("u"), 6)
                 )
                 / 1000000.0
             ).alias("uss")
@@ -7100,8 +7012,7 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 (
                     F.sum(
-                        F.floor(F.col("r") * F.col("u") * 1000000 + 0.5)
-                        .cast("bigint")
+                        qround(F.col("r") * F.col("u"), 6)
                     ).cast("double")
                     / 1000000.0
                 ).alias("num")
@@ -7116,19 +7027,18 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = recon.agg(
         F.sum(
-            F.floor(
+            qround(
                 (F.col("r") - F.col("rhat"))
-                * (F.col("r") - F.col("rhat"))
-                * 1000
-                + 0.5
-            ).cast("bigint")
+                * (F.col("r") - F.col("rhat")),
+                3,
+            )
         )
         .cast("bigint")
         .alias("sse_q"),
-        F.sum(F.floor(F.col("r") * 1000 + 0.5).cast("bigint"))
+        F.sum(qround(F.col("r"), 3))
         .cast("bigint")
         .alias("s_q"),
-        F.sum(F.floor(F.col("r") * F.col("r") * 1000 + 0.5).cast("bigint"))
+        F.sum(qround(F.col("r") * F.col("r"), 3))
         .cast("bigint")
         .alias("ss_q"),
         F.count("*").alias("n"),
@@ -7138,19 +7048,13 @@ def als_rank1_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return v.crossJoin(F.broadcast(fit)).select(
         "event_type",
-        (F.floor(F.col("v") * 1000000 + 0.5) / 1000000.0).alias(
-            "item_factor"
-        ),
-        (
-            F.floor(
-                (
-                    1.0
-                    - F.col("sse_q") * 1.0 / F.when(var_q > 0, var_q)
-                )
-                * 1000000
-                + 0.5
-            )
-            / 1000000.0
+        dround(F.col("v"), 6).alias("item_factor"),
+        dround(
+            (
+                1.0
+                - F.col("sse_q") * 1.0 / F.when(var_q > 0, var_q)
+            ),
+            6,
         ).alias("r2_rank1"),
     )
 
@@ -7203,7 +7107,7 @@ st{m} AS (
                AS srq
     FROM (
         SELECT c.*, {_GBM_SIDE_SQL} AS side,
-               CAST(FLOOR(e.r * 1000 + 0.5) AS BIGINT) AS rq
+               {sql_qround('e.r', 3)} AS rq
         FROM rs{p} e CROSS JOIN gbm_cands c
     ) GROUP BY 1, 2, 3, 4
 ),
@@ -7229,7 +7133,7 @@ rs{m} AS MATERIALIZED (
     FROM rs{p} e CROSS JOIN w{m} w
 ),
 ss{m} AS (
-    SELECT CAST(SUM(CAST(FLOOR(r * r * 1000 + 0.5) AS BIGINT)) AS BIGINT)
+    SELECT CAST(SUM({sql_qround('r * r', 3)}) AS BIGINT)
                AS ssq
     FROM rs{m}
 )"""
@@ -7243,7 +7147,7 @@ WITH gbm_cands AS (
 ),
 base AS MATERIALIZED (
     SELECT event_type, EXTRACT(hour FROM ts) AS hr,
-           {sql_cents('COALESCE(value, 0)')} AS y
+           {sql_qround('COALESCE(value, 0)', 2, CENTS_CAP)} AS y
     FROM events
 ),
 f0 AS (SELECT CAST(SUM(y) AS DOUBLE) / COUNT(*) AS mu FROM base),
@@ -7251,7 +7155,7 @@ rs0 AS MATERIALIZED (
     SELECT event_type, hr, b.y - f.mu AS r FROM base b CROSS JOIN f0 f
 ),
 ss0 AS (
-    SELECT CAST(SUM(CAST(FLOOR(r * r * 1000 + 0.5) AS BIGINT)) AS BIGINT)
+    SELECT CAST(SUM({sql_qround('r * r', 3)}) AS BIGINT)
                AS ssq
     FROM rs0
 ),
@@ -7261,10 +7165,9 @@ SELECT r.round,
        COALESCE(w.param_s, CAST(w.param_h AS VARCHAR)) AS split_param,
        CAST(w.nl AS BIGINT) AS n_left,
        CAST(w.nr AS BIGINT) AS n_right,
-       (FLOOR(w.leaf_l / 100.0 * 10000 + 0.5) / 10000.0) AS leaf_left,
-       (FLOOR(w.leaf_r / 100.0 * 10000 + 0.5) / 10000.0) AS leaf_right,
-       (FLOOR((1.0 - s.ssq * 1.0 / (CASE WHEN z.ssq > 0 THEN z.ssq END))
-              * 1000000 + 0.5) / 1000000.0) AS r2_cumulative
+       {sql_dround('w.leaf_l / 100.0', 4)} AS leaf_left,
+       {sql_dround('w.leaf_r / 100.0', 4)} AS leaf_right,
+       {sql_dround('(1.0 - s.ssq * 1.0 / (CASE WHEN z.ssq > 0 THEN z.ssq END))', 6)} AS r2_cumulative
 FROM (VALUES (1), (2), (3)) r(round)
 JOIN (SELECT 1 AS round, * FROM w1 UNION ALL
       SELECT 2, * FROM w2 UNION ALL
@@ -7290,7 +7193,9 @@ def gradient_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = events.select(
         "event_type",
         F.hour("ts").alias("hr"),
-        cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("y"),
+        qround(F.coalesce(F.col("value"), F.lit(0.0)), 2, CENTS_CAP).alias(
+            "y"
+        ),
     )
     f0 = base.agg((F.sum("y").cast("double") / F.count("*")).alias("mu"))
     rs = (
@@ -7311,7 +7216,7 @@ def gradient_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ssq(rdf) -> DataFrame:
         return rdf.agg(
             F.sum(
-                F.floor(F.col("r") * F.col("r") * 1000 + 0.5).cast("bigint")
+                qround(F.col("r") * F.col("r"), 3)
             )
             .cast("bigint")
             .alias("ssq")
@@ -7320,7 +7225,7 @@ def gradient_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ss0 = ssq(rs)
     reports = []
     for m in range(1, _GBM_ROUNDS + 1):
-        rq = F.floor(F.col("r") * 1000 + 0.5).cast("bigint")
+        rq = qround(F.col("r"), 3)
         st = (
             rs.crossJoin(F.broadcast(cands))
             .select("cid", "kind", "param_s", "param_h", side.alias("side"),
@@ -7390,24 +7295,16 @@ def gradient_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("split_param"),
                 F.col("nl").cast("bigint").alias("n_left"),
                 F.col("nr").cast("bigint").alias("n_right"),
-                (
-                    F.floor(F.col("leaf_l") / 100.0 * 10000 + 0.5) / 10000.0
-                ).alias("leaf_left"),
-                (
-                    F.floor(F.col("leaf_r") / 100.0 * 10000 + 0.5) / 10000.0
-                ).alias("leaf_right"),
-                (
-                    F.floor(
-                        (
-                            1.0
-                            - F.col("ssm")
-                            * 1.0
-                            / F.when(F.col("ssq") > 0, F.col("ssq"))
-                        )
-                        * 1000000
-                        + 0.5
-                    )
-                    / 1000000.0
+                dround(F.col("leaf_l") / 100.0, 4).alias("leaf_left"),
+                dround(F.col("leaf_r") / 100.0, 4).alias("leaf_right"),
+                dround(
+                    (
+                        1.0
+                        - F.col("ssm")
+                        * 1.0
+                        / F.when(F.col("ssq") > 0, F.col("ssq"))
+                    ),
+                    6,
                 ).alias("r2_cumulative"),
             )
         )
@@ -7467,11 +7364,11 @@ h AS (
     FROM r
 )
 SELECT dur AS day, deaths, at_risk,
-       (FLOOR(hq / 1000000000.0 * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('hq / 1000000000.0', 6)}
            AS cum_hazard,
-       (FLOOR(exp(-hq / 1000000000.0) * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('exp(-hq / 1000000000.0)', 6)}
            AS survival_na,
-       (FLOOR(vq / 1000000000.0 * 1000000 + 0.5) / 1000000.0)
+       {sql_dround('vq / 1000000000.0', 6)}
            AS hazard_var
 FROM h
 WHERE deaths > 0
@@ -7539,13 +7436,10 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dur").alias("day"),
         "deaths",
         "at_risk",
-        (F.floor(F.col("hq") / 1000000000.0 * 1000000 + 0.5) / 1000000.0)
+        dround(F.col("hq") / 1000000000.0, 6)
         .alias("cum_hazard"),
-        (
-            F.floor(F.exp(-F.col("hq") / 1000000000.0) * 1000000 + 0.5)
-            / 1000000.0
-        ).alias("survival_na"),
-        (F.floor(F.col("vq") / 1000000000.0 * 1000000 + 0.5) / 1000000.0)
+        dround(F.exp(-F.col("hq") / 1000000000.0), 6).alias("survival_na"),
+        dround(F.col("vq") / 1000000000.0, 6)
         .alias("hazard_var"),
     )
 
@@ -7566,7 +7460,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH mkd AS (
     SELECT event_type, CAST(ts AS DATE) AS d,
-           CAST(SUM(CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('COALESCE(value, 0)', 2)})
                 AS BIGINT) AS x
     FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 ),
@@ -7602,10 +7496,10 @@ v AS (
 SELECT event_type,
        CAST(n AS BIGINT) AS n_days,
        s AS s_stat,
-       (FLOOR(var_s * 10000 + 0.5) / 10000.0) AS var_s,
-       (FLOOR((CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)
-                    WHEN s < 0 THEN (s + 1) / sqrt(var_s)
-                    ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0) AS z,
+       {sql_dround('var_s', 4)} AS var_s,
+       {sql_dround('(CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)'
+                   ' WHEN s < 0 THEN (s + 1) / sqrt(var_s)'
+                   ' ELSE 0.0 END)', 6)} AS z,
        CASE WHEN (CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)
                        WHEN s < 0 THEN (s + 1) / sqrt(var_s)
                        ELSE 0.0 END) > 1.959963984540054 THEN 'increasing'
@@ -7627,9 +7521,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the hashed z values prove the test actually ran.
     """
     events = load_tables(spark, sf_dir, "events")["events"]
-    v_fp = F.floor(F.coalesce(F.col("value"), F.lit(0.0)) * 100 + 0.5).cast(
-        "bigint"
-    )
+    v_fp = qround(F.coalesce(F.col("value"), F.lit(0.0)), 2)
     mkd = (
         events.filter(F.col("ts").isNotNull())
         .groupBy("event_type", F.col("ts").cast("date").alias("d"))
@@ -7700,8 +7592,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("n").cast("bigint").alias("n_days"),
         F.col("s").alias("s_stat"),
-        (F.floor(F.col("var_s") * 10000 + 0.5) / 10000.0).alias("var_s"),
-        (F.floor(zval * 1000000 + 0.5) / 1000000.0).alias("z"),
+        dround(F.col("var_s"), 4).alias("var_s"),
+        dround(zval, 6).alias("z"),
         F.when(zval > zc, "increasing")
         .when(zval < -zc, "decreasing")
         .otherwise("no_trend")

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, dsum, sql_dround, sql_dsum
+from ..functions import dround, dsum, qround, sql_dround, sql_dsum, sql_qround
 from ..session import load_tables
 from .registry import query
 
@@ -135,7 +135,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_fill_sla",
-    oracle="""
+    oracle=f"""
 WITH lag AS (
     SELECT l.l_orderkey, l.l_linenumber,
            CAST(l.l_shipdate AS DATE) - CAST(o.o_orderdate AS DATE)
@@ -155,8 +155,7 @@ SELECT COUNT(*) AS n_lines,
        COUNT(*) FILTER (WHERE lag_days <= 7) AS shipped_7d,
        COUNT(*) FILTER (WHERE lag_days <= 30) AS shipped_30d,
        COUNT(*) FILTER (WHERE lag_days <= 60) AS shipped_60d,
-       (FLOOR(COUNT(*) FILTER (WHERE lag_days <= 30) * 1.0 / COUNT(*)
-        * 10000 + 0.5) / 10000.0) AS sla_30d_rate,
+       {sql_dround('COUNT(*) FILTER (WHERE lag_days <= 30) * 1.0 / COUNT(*)', 4)} AS sla_30d_rate,
        CAST(MAX(CASE WHEN rn = (n + 1) // 2 THEN lag_days END)
            AS BIGINT) AS median_lag_days
 FROM ranked
@@ -207,14 +206,9 @@ def order_fill_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(F.col("lag_days") <= 7).alias("shipped_7d"),
         F.count_if(F.col("lag_days") <= 30).alias("shipped_30d"),
         F.count_if(F.col("lag_days") <= 60).alias("shipped_60d"),
-        (
-            F.floor(
-                F.count_if(F.col("lag_days") <= 30) * 1.0 / F.count("*")
-                * 10000
-                + 0.5
-            )
-            / F.lit(10000.0)
-        ).alias("sla_30d_rate"),
+        dround(
+                F.count_if(F.col("lag_days") <= 30) * 1.0 / F.count("*"), 4
+            ).alias("sla_30d_rate"),
     )
     return stats.crossJoin(F.broadcast(med))
 
@@ -231,10 +225,10 @@ def order_fill_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "supplier_concentration_hhi",
-    oracle="""
+    oracle=f"""
 WITH q AS (
     SELECT n.n_name AS nation,
-           CAST(SUM(CAST(FLOOR(l.l_quantity * 100 + 0.5) AS BIGINT))
+           CAST(SUM({sql_qround('l.l_quantity', 2)})
                AS BIGINT) AS qty_c
     FROM lineitem l
     JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -247,11 +241,9 @@ t AS (SELECT CAST(SUM(qty_c) AS HUGEINT) AS tot,
       FROM q)
 SELECT COUNT(*) AS n_nations,
        CAST(MAX(t.tot) AS DOUBLE) / 100.0 AS total_quantity,
-       (FLOOR(CAST(MAX(t.ss) AS DOUBLE)
-              / (CAST(MAX(t.tot) AS DOUBLE) * CAST(MAX(t.tot) AS DOUBLE))
-              * 1000000 + 0.5) / 1000000.0) AS hhi,
-       (FLOOR(CAST(MAX(q2.mx) AS DOUBLE) / CAST(MAX(t.tot) AS DOUBLE)
-              * 1000000 + 0.5) / 1000000.0) AS top_share
+       {sql_dround('CAST(MAX(t.ss) AS DOUBLE)'
+                   ' / (CAST(MAX(t.tot) AS DOUBLE) * CAST(MAX(t.tot) AS DOUBLE))', 6)} AS hhi,
+       {sql_dround('CAST(MAX(q2.mx) AS DOUBLE) / CAST(MAX(t.tot) AS DOUBLE)', 6)} AS top_share
 FROM q CROSS JOIN t
 CROSS JOIN (SELECT MAX(qty_c) AS mx FROM q) q2
 """,
@@ -272,7 +264,7 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum(F.floor(F.col("l_quantity") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("l_quantity"), 2))
             .cast("bigint")
             .alias("qty_c")
         )
@@ -288,23 +280,14 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_nations",
         (F.col("tot").cast("double") / 100.0).alias("total_quantity"),
-        (
-            F.floor(
-                F.col("ss").cast("double")
-                / (F.col("tot").cast("double") * F.col("tot").cast("double"))
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
+        dround(
+            F.col("ss").cast("double")
+            / (F.col("tot").cast("double") * F.col("tot").cast("double")),
+            6,
         ).alias("hhi"),
-        (
-            F.floor(
-                F.col("mx").cast("double") / F.col("tot").cast("double")
-                * 1000000
-                + 0.5
-            )
-            / F.lit(1000000.0)
-        ).alias("top_share"),
+        dround(
+                F.col("mx").cast("double") / F.col("tot").cast("double"), 6
+            ).alias("top_share"),
     )
 
 
@@ -322,7 +305,7 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "discount_band_effectiveness",
     oracle=f"""
 WITH b AS (
-    SELECT CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) AS disc_pct,
+    SELECT {sql_qround('l_discount', 2)} AS disc_pct,
            l_quantity, l_extendedprice, l_discount
     FROM lineitem WHERE l_discount IS NOT NULL
 ),
@@ -339,8 +322,8 @@ SELECT band,
        {sql_dround(sql_dsum('l_quantity', 2), 2)} AS total_qty,
        {sql_dround(sql_dsum('l_extendedprice * (1 - l_discount)', 4), 2)}
            AS net_revenue,
-       {sql_dround('''CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5)
-            AS BIGINT)) AS BIGINT) * 1.0 / COUNT(*) / 100.0''', 4)}
+       {sql_dround(f"CAST(SUM({sql_qround('l_quantity', 2)}) AS BIGINT)"
+                   " * 1.0 / COUNT(*) / 100.0", 4)}
            AS avg_qty_per_line
 FROM banded
 GROUP BY 1
@@ -351,7 +334,7 @@ def discount_band_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"].filter(
         F.col("l_discount").isNotNull()
     )
-    disc_pct = F.floor(F.col("l_discount") * 100 + 0.5).cast("bigint")
+    disc_pct = qround(F.col("l_discount"), 2)
     band = (
         F.when(disc_pct == 0, "0_none")
         .when(disc_pct <= 3, "1_low")
@@ -365,7 +348,7 @@ def discount_band_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4), 2
         ).alias("net_revenue"),
         dround(
-            F.sum(F.floor(F.col("l_quantity") * 100 + 0.5).cast("bigint"))
+            F.sum(qround(F.col("l_quantity"), 2))
             .cast("bigint")
             * 1.0
             / F.count("*")

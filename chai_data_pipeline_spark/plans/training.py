@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import dround, sql_dround
+from ..functions import dround, qround, sql_dround, sql_qround
 from ..session import load_tables
 from .registry import query
 
@@ -1406,7 +1406,7 @@ _MIX_TAU = 0.7
     oracle=f"""
 WITH s AS (
     SELECT source, COUNT(*) AS n_docs,
-           CAST(FLOOR(pow(COUNT(*), {_MIX_TAU}) * 1000000 + 0.5) AS BIGINT)
+           {sql_qround(f'pow(COUNT(*), {_MIX_TAU})', 6)}
                AS pq
     FROM documents GROUP BY 1
 ),
@@ -1437,8 +1437,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = docs.groupBy("source").agg(F.count("*").alias("n_docs")).select(
         "source",
         "n_docs",
-        F.floor(F.pow(F.col("n_docs"), F.lit(_MIX_TAU)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.pow(F.col("n_docs"), F.lit(_MIX_TAU)), 6)
         .alias("pq"),
     )
     w = Window.partitionBy()
@@ -1515,8 +1514,7 @@ ranked AS (
 ),
 mapped AS (
     SELECT rk.source, rk.n_chars,
-           CAST(FLOOR((s.mn + (c.bin + 1) * ((s.mx - s.mn) * 1.0 / {_QN_B}))
-                * 1000000 + 0.5) AS BIGINT) AS norm_micro
+           {sql_qround(f'(s.mn + (c.bin + 1) * ((s.mx - s.mn) * 1.0 / {_QN_B}))', 6)} AS norm_micro
     FROM ranked rk
     CROSS JOIN st s
     JOIN cum c
@@ -1627,16 +1625,14 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             "n_chars",
-            F.floor(
+            qround(
                 (
                     F.col("mn")
                     + (F.col("bin") + 1)
                     * ((F.col("mx") - F.col("mn")) * 1.0 / _QN_B)
-                )
-                * 1000000
-                + 0.5
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("norm_micro"),
         )
     )
@@ -1674,10 +1670,10 @@ _NEYMAN_BUDGET = 10000
 WITH m AS (
     SELECT event_type,
            COUNT(value) AS n,
-           SUM(CAST(CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS HUGEINT))
+           SUM(CAST({sql_qround('value', 2)} AS HUGEINT))
                AS sx,
-           SUM(CAST(CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS HUGEINT)
-               * CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS sxx
+           SUM(CAST({sql_qround('value', 2)} AS HUGEINT)
+               * {sql_qround('value', 2)}) AS sxx
     FROM events WHERE value IS NOT NULL
     GROUP BY 1
 ),
@@ -1690,7 +1686,7 @@ s AS (
 ),
 w AS (
     SELECT event_type, n, sd,
-           CAST(FLOOR(n * sd * 100 + 0.5) AS BIGINT) AS w_scaled
+           {sql_qround('n * sd', 2)} AS w_scaled
     FROM s
 ),
 tot AS (SELECT CAST(SUM(w_scaled) AS BIGINT) AS t FROM w)
@@ -1709,7 +1705,7 @@ FROM w CROSS JOIN tot
 def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Optimal per-stratum label budget from exact per-type variance."""
     events = load_tables(spark, sf_dir, "events")["events"]
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+    cents = qround(F.col("value"), 2)
     m = (
         events.filter(F.col("value").isNotNull())
         .groupBy("event_type")
@@ -1737,7 +1733,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         sd.alias("sd"),
     ).withColumn(
         "w_scaled",
-        F.floor(F.col("n") * F.col("sd") * 100 + 0.5).cast("bigint"),
+        qround(F.col("n") * F.col("sd"), 2),
     )
     tot = w.agg(F.sum("w_scaled").cast("bigint").alias("t"))
     return w.crossJoin(F.broadcast(tot)).select(
@@ -1800,11 +1796,10 @@ tots AS (
 ),
 lr AS (
     SELECT p.b,
-           CAST(FLOOR(ln((CAST(COALESCE(t.ct, 0) + 1 AS DOUBLE)
-                          * (p_total + {_DSIR_B}))
-                         / (CAST(p.cp + 1 AS DOUBLE)
-                            * (t_total + {_DSIR_B})))
-                      * 1000000 + 0.5) AS BIGINT) AS lr_q
+           {sql_qround('ln((CAST(COALESCE(t.ct, 0) + 1 AS DOUBLE)'
+                       f' * (p_total + {_DSIR_B}))'
+                       ' / (CAST(p.cp + 1 AS DOUBLE)'
+                       f' * (t_total + {_DSIR_B})))', 6)} AS lr_q
     FROM prop p LEFT JOIN targ t ON p.b = t.b
     CROSS JOIN tots
 ),
@@ -1853,7 +1848,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tots))
         .select(
             "b",
-            F.floor(
+            qround(
                 F.log(
                     (
                         (F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double")
@@ -1863,11 +1858,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (F.col("cp") + 1).cast("double")
                         * (F.col("t_total") + _DSIR_B)
                     )
-                )
-                * 1000000
-                + 0.5
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("lr_q"),
         )
     )
@@ -1923,12 +1916,10 @@ lm AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS n_l FROM cells GROUP BY 1),
 fm AS (SELECT fold, CAST(SUM(o) AS BIGINT) AS n_f FROM cells GROUP BY 1),
 tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
 terms AS (
-    SELECT CAST(FLOOR(
-               CAST((CAST(o AS HUGEINT) * n - CAST(n_l AS HUGEINT) * n_f)
-                    * (CAST(o AS HUGEINT) * n - CAST(n_l AS HUGEINT) * n_f)
-                    AS DOUBLE)
-               / CAST(CAST(n_l AS HUGEINT) * n_f * n AS DOUBLE)
-               * 1000000 + 0.5) AS BIGINT) AS q,
+    SELECT {sql_qround('CAST((CAST(o AS HUGEINT) * n - CAST(n_l AS HUGEINT) * n_f)'
+                       ' * (CAST(o AS HUGEINT) * n - CAST(n_l AS HUGEINT) * n_f)'
+                       ' AS DOUBLE)'
+                       ' / CAST(CAST(n_l AS HUGEINT) * n_f * n AS DOUBLE)', 6)} AS q,
            CAST(CAST(n_l AS HUGEINT) * n_f AS HUGEINT) AS e_scaled
     FROM cells
     JOIN lm ON cells.lang IS NOT DISTINCT FROM lm.lang
@@ -1942,8 +1933,7 @@ SELECT CAST({_KFOLD_K} AS BIGINT) AS k,
        CAST((SELECT MIN(n_f) FROM fm) AS BIGINT) AS min_fold_n,
        CAST((SELECT MAX(n_f) FROM fm) AS BIGINT) AS max_fold_n,
        ((CAST(SUM(q) AS BIGINT)
-         + CAST(FLOOR((t.n - CAST(SUM(e_scaled) AS DOUBLE) / t.n)
-                      * 1000000 + 0.5) AS BIGINT)) / 1000000.0) AS chi2,
+         + {sql_qround('(t.n - CAST(SUM(e_scaled) AS DOUBLE) / t.n)', 6)}) / 1000000.0) AS chi2,
        CAST(((SELECT COUNT(*) FROM lm) - 1)
             * ((SELECT COUNT(*) FROM fm) - 1) AS BIGINT) AS dof
 FROM terms CROSS JOIN tot t
@@ -1968,15 +1958,13 @@ def stratified_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(fm), "fold")
         .crossJoin(F.broadcast(tot))
         .select(
-            F.floor(
+            qround(
                 (dev * dev).cast("double")
                 / (F.col("n_l").cast(d38) * F.col("n_f") * F.col("n")).cast(
                     "double"
-                )
-                * 1000000
-                + 0.5
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("q"),
             (F.col("n_l").cast(d38) * F.col("n_f")).alias("e_scaled"),
             F.col("n"),
@@ -2003,14 +1991,13 @@ def stratified_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (
                 F.col("sq")
-                + F.floor(
+                + qround(
                     (
                         F.col("n")
                         - F.col("se").cast("double") / F.col("n")
-                    )
-                    * 1000000
-                    + 0.5
-                ).cast("bigint")
+                    ),
+                    6,
+                )
             )
             / 1000000.0
         ).alias("chi2"),
@@ -2128,6 +2115,7 @@ def padding_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EP_TAU = 0.5
 _EP_BUDGET_X = 2.0
 _EP_CAP = 4
+_EP_TOKENS = r"len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))"
 
 
 @query(
@@ -2135,16 +2123,12 @@ _EP_CAP = 4
     oracle=f"""
 WITH s AS (
     SELECT source,
-           CAST(SUM(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) AS tokens,
-           CAST(FLOOR(pow(SUM(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))), {_EP_TAU})
-               * 1000000 + 0.5) AS BIGINT) AS pq
+           CAST(SUM({_EP_TOKENS}) AS BIGINT) AS tokens,
+           {sql_qround(f"pow(SUM({_EP_TOKENS}), {_EP_TAU})", 6)} AS pq
     FROM documents GROUP BY 1
     -- a zero-token source cannot be allocated epochs (and would
     -- divide by zero under Spark ANSI); shared filter, both engines
-    HAVING SUM(len(regexp_extract_all(text,
-        '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) > 0
+    HAVING SUM({_EP_TOKENS}) > 0
 ),
 t AS (
     SELECT source, tokens, pq,
@@ -2188,8 +2172,7 @@ def epoch_repetition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("tokens") > 0).select(
         "source",
         "tokens",
-        F.floor(F.pow(F.col("tokens"), F.lit(_EP_TAU)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.pow(F.col("tokens"), F.lit(_EP_TAU)), 6)
         .alias("pq"),
     )
     w = Window.partitionBy()
@@ -2772,9 +2755,9 @@ docs_per AS (
 ),
 lq AS (
     SELECT s.source, s.word, s.c,
-           CAST(FLOOR(ln(g.gc * 1.0 / g.gt) * 1000000 + 0.5) AS BIGINT)
+           {sql_qround('ln(g.gc * 1.0 / g.gt)', 6)}
                AS lq_g,
-           CAST(FLOOR(ln(s.c * 1.0 / t.st) * 1000000 + 0.5) AS BIGINT)
+           {sql_qround('ln(s.c * 1.0 / t.st)', 6)}
                AS lq_o
     FROM sw s JOIN g USING (word) JOIN stot t USING (source)
 ),
@@ -2794,8 +2777,7 @@ ex AS (
 ),
 eq AS (
     SELECT source, st, excess_micro, sg, so,
-           CAST(FLOOR(exp(excess_micro / 1000000.0) * 1000000000 + 0.5)
-               AS BIGINT) AS e9
+           {sql_qround('exp(excess_micro / 1000000.0)', 9)} AS e9
     FROM ex
 ),
 norm AS (
@@ -2842,15 +2824,13 @@ def doremi_excess_loss_weights(
         .select(
             "source",
             "c",
-            F.floor(
-                F.log(F.col("gc") * 1.0 / F.col("gt")) * 1000000 + 0.5
+            qround(
+                F.log(F.col("gc") * 1.0 / F.col("gt")), 6
             )
-            .cast("bigint")
             .alias("lq_g"),
-            F.floor(
-                F.log(F.col("c") * 1.0 / F.col("st")) * 1000000 + 0.5
+            qround(
+                F.log(F.col("c") * 1.0 / F.col("st")), 6
             )
-            .cast("bigint")
             .alias("lq_o"),
         )
     )
@@ -2870,9 +2850,9 @@ def doremi_excess_loss_weights(
     )
     eq = ex.withColumn(
         "e9",
-        F.floor(
-            F.exp(F.col("excess_micro") / 1000000.0) * 1000000000 + 0.5
-        ).cast("bigint"),
+        qround(
+            F.exp(F.col("excess_micro") / 1000000.0), 9
+        ),
     )
     norm = eq.withColumn(
         "esum", F.sum("e9").over(wall).cast("bigint")
@@ -2940,7 +2920,7 @@ s AS (
 ),
 t AS (
     SELECT source, n_docs_kept, tok,
-           CAST(FLOOR(pow(tok, 0.7) * 1000000 + 0.5) AS BIGINT) AS pq,
+           {sql_qround('pow(tok, 0.7)', 6)} AS pq,
            CAST(SUM(tok) OVER () AS BIGINT) AS total_tok
     FROM s
 ),
@@ -3007,8 +2987,7 @@ def curation_mixture_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs_kept",
         "tok",
-        F.floor(F.pow(F.col("tok"), F.lit(0.7)) * 1000000 + 0.5)
-        .cast("bigint")
+        qround(F.pow(F.col("tok"), F.lit(0.7)), 6)
         .alias("pq"),
         F.sum("tok").over(w).cast("bigint").alias("total_tok"),
     )
@@ -3421,10 +3400,8 @@ SELECT layout,
        CAST(COUNT(same_src) AS BIGINT) AS n_pairs,
        CAST(COALESCE(SUM(same_src), 0) AS BIGINT) AS same_source_pairs,
        CASE WHEN COUNT(same_src) = 0 THEN 0.0
-            ELSE (FLOOR(SUM(same_src) * 1.0 / COUNT(same_src)
-                        * 1000000 + 0.5) / 1000000.0) END AS same_rate,
-       (FLOOR((SELECT expected FROM exp_rate) * 1000000 + 0.5)
-        / 1000000.0) AS expected_rate
+            ELSE {sql_dround('SUM(same_src) * 1.0 / COUNT(same_src)', 6)} END AS same_rate,
+       {sql_dround('(SELECT expected FROM exp_rate)', 6)} AS expected_rate
 FROM flags
 GROUP BY 1
 """,
@@ -3508,11 +3485,9 @@ def shuffle_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("same_source_pairs"),
             F.when(F.count("same_src") == 0, F.lit(0.0))
             .otherwise(
-                F.floor(
-                    F.sum("same_src") * 1.0 / F.count("same_src") * 1000000
-                    + 0.5
+                dround(
+                    F.sum("same_src") * 1.0 / F.count("same_src"), 6
                 )
-                / 1000000.0
             )
             .alias("same_rate"),
         )
@@ -3522,9 +3497,7 @@ def shuffle_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
             "same_source_pairs",
             "same_rate",
-            (F.floor(F.col("expected") * 1000000 + 0.5) / 1000000.0).alias(
-                "expected_rate"
-            ),
+            dround(F.col("expected"), 6).alias("expected_rate"),
         )
     )
 
@@ -3573,8 +3546,7 @@ js_m AS (
     FROM js_src r CROSS JOIN js_tot t
 ),
 js_d AS (
-    SELECT CAST(SUM(CAST(FLOOR((m - gm) * (m - gm) * 1000000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS d2q
+    SELECT CAST(SUM({sql_qround('(m - gm) * (m - gm)', 6)}) AS BIGINT) AS d2q
     FROM js_m
 ),
 js_b AS (
@@ -3587,10 +3559,10 @@ js_b AS (
 )
 SELECT s.source,
        CAST(s.nd AS BIGINT) AS n_docs,
-       (FLOOR(s.m * 10000 + 0.5) / 10000.0) AS raw_mean,
-       (FLOOR((s.gm + b.b * (s.m - s.gm)) * 10000 + 0.5) / 10000.0)
+       {sql_dround('s.m', 4)} AS raw_mean,
+       {sql_dround('(s.gm + b.b * (s.m - s.gm))', 4)}
            AS shrunk_mean,
-       (FLOOR(b.b * 1000000 + 0.5) / 1000000.0) AS shrink_weight
+       {sql_dround('b.b', 6)} AS shrink_weight
 FROM js_m s CROSS JOIN js_b b
 """,
 )
@@ -3641,12 +3613,11 @@ def james_stein_source_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     js_d = js_m.agg(
         F.sum(
-            F.floor(
+            qround(
                 (F.col("m") - F.col("gm"))
-                * (F.col("m") - F.col("gm"))
-                * 1000000
-                + 0.5
-            ).cast("bigint")
+                * (F.col("m") - F.col("gm")),
+                6,
+            )
         )
         .cast("bigint")
         .alias("d2q")
@@ -3667,16 +3638,9 @@ def james_stein_source_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     return js_m.crossJoin(F.broadcast(js_b)).select(
         "source",
         F.col("nd").cast("bigint").alias("n_docs"),
-        (F.floor(F.col("m") * 10000 + 0.5) / 10000.0).alias("raw_mean"),
-        (
-            F.floor(
-                (F.col("gm") + F.col("b") * (F.col("m") - F.col("gm")))
-                * 10000
-                + 0.5
-            )
-            / 10000.0
-        ).alias("shrunk_mean"),
-        (F.floor(F.col("b") * 1000000 + 0.5) / 1000000.0).alias(
-            "shrink_weight"
-        ),
+        dround(F.col("m"), 4).alias("raw_mean"),
+        dround(
+                (F.col("gm") + F.col("b") * (F.col("m") - F.col("gm"))), 4
+            ).alias("shrunk_mean"),
+        dround(F.col("b"), 6).alias("shrink_weight"),
     )

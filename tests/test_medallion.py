@@ -108,6 +108,39 @@ def test_quality_engine_catches_planted_violations(journal_and_lake):
     assert 0 < score < 100
 
 
+def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
+    """One pipeline run executes the DQ plan once: the journal's score
+    and checks and the _dq_logs table all come from one collect, not
+    three separate runs of the whole suite."""
+    from chai_data_pipeline_spark.medallion import pipeline, quality
+
+    evaluated = spark.sparkContext.accumulator(0)
+    run_checks = quality.run_checks
+
+    def counted_checks(*args, **kwargs):
+        # a pass-through predicate counting every result row evaluated
+        def seen(_):
+            evaluated.add(1)
+            return True
+
+        out = run_checks(*args, **kwargs)
+        return out.filter(F.udf(seen, "boolean")(F.col("check_name")))
+
+    monkeypatch.setattr(quality, "run_checks", counted_checks)
+    lake = str(tmp_path)
+    journal = pipeline.run_pipeline(spark, FIXTURES, lake, asof=ASOF)
+    assert journal["status"] == "SUCCESS"
+    checks = journal["layers"]["quality"]["checks"]
+    assert evaluated.value == len(checks) > 0
+    assert journal["layers"]["quality"]["quality_score"] == round(
+        100.0 * sum(c["passed"] for c in checks) / len(checks), 2
+    )
+    logged = spark.read.parquet(os.path.join(lake, "silver", "_dq_logs"))
+    assert sorted(repr(sorted(r.asDict().items())) for r in logged.collect()) == sorted(
+        repr(sorted(c.items())) for c in checks
+    )
+
+
 def test_gold_models(spark, journal_and_lake):
     _, lake = journal_and_lake
     trends = {
@@ -198,7 +231,7 @@ def test_rules_from_reference_config_shape(spark):
     rows = {r.check_name: r for r in res.collect()}
     assert rows["users_not_null_user_id"].failed_count == 1
     assert rows["users_not_null_email"].failed_count == 0
-    assert quality_score(res) == 50.0
+    assert quality_score(res.collect()) == 50.0
 
 
 def test_partition_pruning_on_covid_lake(spark, journal_and_lake):

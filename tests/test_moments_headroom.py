@@ -16,7 +16,7 @@ import os
 
 import duckdb
 
-from chai_data_pipeline_spark.functions import CENTS_CAP as CAP, sql_cents
+from chai_data_pipeline_spark.functions import CENTS_CAP as CAP, sql_qround
 
 SAFE_N = int((10**38 / 6) ** 0.25 / CAP)  # ~33.9k at cap=6e4
 
@@ -70,7 +70,7 @@ def test_cap_above_corpus_max_and_n_within_safe_bound():
     max_term, = con.execute(
         f"""
         WITH x AS (
-            SELECT event_type, CAST({sql_cents('value')} AS DOUBLE) AS c
+            SELECT event_type, CAST({sql_qround('value', 2, CAP)} AS DOUBLE) AS c
             FROM '{path}'
             WHERE event_type IS NOT NULL AND value IS NOT NULL
         ), m AS (

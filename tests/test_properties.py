@@ -702,8 +702,14 @@ _EDGE = st.sampled_from(
         None, float("inf"), float("-inf"), float("nan"), 2e17, -2e17,
         0.0, -0.0, 10.0, -10.0, 600.0, -600.0, 600.005, -600.005,
         599.995, -599.995,
+        # x.xxxx5 half-way points of the 10^k grids, and the 2^53 /
+        # 2^62 magnitudes around the floor's exact and saturating range
+        0.5, -0.5, 2.5, -2.5, 0.125, 2.675, -2.675, 1.00005, -1.00005,
+        1234.56785, -1234.56785, 0.0000005, 1.0000000005,
+        2.0**53, -(2.0**53), 2.0**62, -(2.0**62),
     ]
 )
+_GRID_KS = (0, 2, 4, 6, 9, 12)
 CLAMP_ROWS = st.lists(
     st.tuples(
         st.one_of(_EDGE, st.floats(min_value=-1e20, max_value=1e20)),
@@ -718,32 +724,45 @@ CLAMP_ROWS = st.lists(
 @given(rows=CLAMP_ROWS)
 @_SETTINGS
 def test_clamp_and_cents_bit_identical_cross_engine(spark, rows):
-    """clamp/sql_clamp and cents/sql_cents give the same bits on both
-    engines for any double — NULL, NaN, ±inf, the bounds themselves,
-    2e17 (past the FLOOR->LONG saturation point) — and for NULL
-    bounds. NULL in is NULL out; a NULL bound leaves that side open;
-    NaN (greatest on both engines) lands on the upper bound."""
+    """clamp/sql_clamp, the capped qround/sql_qround grids (cents =
+    ``qround(x, 2, CENTS_CAP)``) and dround/sql_dround give the same
+    bits on both engines for any double — NULL, NaN, ±inf, ±0, the
+    bounds themselves, x.xxxx5 half-way points, 2e17 and ±2^62 (past
+    the FLOOR->LONG saturation point) — and for NULL bounds. NULL in
+    is NULL out; a NULL bound leaves that side open; NaN (greatest on
+    both engines) lands on the upper bound. Wherever |x*10^k| < 2^63
+    the uncapped qround and dround equal the hand-written
+    ``FLOOR(x*10^k + 0.5)`` forms they replace, on both engines."""
     import math
 
     import duckdb
 
     from chai_data_pipeline_spark.functions import (
         CENTS_CAP,
-        cents,
         clamp,
-        sql_cents,
+        dround,
+        qround,
         sql_clamp,
+        sql_dround,
+        sql_qround,
     )
+    from chai_data_pipeline_spark.functions.numeric import _DR_MAX
 
     data = [(i, v, lo, hi) for i, (v, lo, hi) in enumerate(rows)]
     df = spark.createDataFrame(data, "i int, v double, lo double, hi double")
+    v = F.col("v")
     got = [
         tuple(r)
         for r in df.select(
             "i",
             clamp("v", F.col("lo"), F.col("hi")),
             clamp("v", -10.0, 10.0),
-            cents("v"),
+            qround("v", 2, CENTS_CAP),
+            *[qround("v", k, _DR_MAX) for k in _GRID_KS],
+            *[dround("v", k) for k in _GRID_KS],
+            *[qround("v", k) for k in _GRID_KS],
+            *[F.floor(v * 10**k + 0.5).cast("bigint") for k in _GRID_KS],
+            *[F.floor(v * 10**k + 0.5) / F.lit(10.0**k) for k in _GRID_KS],
         )
         .orderBy("i")
         .collect()
@@ -752,12 +771,18 @@ def test_clamp_and_cents_bit_identical_cross_engine(spark, rows):
     con = duckdb.connect()
     con.execute("CREATE TABLE t(i INT, v DOUBLE, lo DOUBLE, hi DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", data)
-    want = con.execute(
-        f"SELECT i, {sql_clamp('v', 'lo', 'hi')},"
-        f" {sql_clamp('v', -10.0, 10.0)}, {sql_cents('v')}"
-        " FROM t ORDER BY i"
-    ).fetchall()
-    assert [tuple(map(repr, r)) for r in got] == [
+    total = ", ".join(
+        [
+            sql_clamp("v", "lo", "hi"),
+            sql_clamp("v", -10.0, 10.0),
+            sql_qround("v", 2, CENTS_CAP),
+            *[sql_qround("v", k, _DR_MAX) for k in _GRID_KS],
+            *[sql_dround("v", k) for k in _GRID_KS],
+        ]
+    )
+    want = con.execute(f"SELECT i, {total} FROM t ORDER BY i").fetchall()
+    n_total = len(want[0])
+    assert [tuple(map(repr, r[:n_total])) for r in got] == [
         tuple(map(repr, r)) for r in want
     ], (rows, got, want)
 
@@ -770,11 +795,46 @@ def test_clamp_and_cents_bit_identical_cross_engine(spark, rows):
             return hi
         return v
 
-    for (i, v, lo, hi), (_, c_col, c_lit, c_cents) in zip(data, got):
+    def qmodel(v, k, cap):
+        if v is None:
+            return None
+        return math.floor(model(v * 10**k + 0.5, -cap, cap))
+
+    nk = len(_GRID_KS)
+    for (i, v, lo, hi), r in zip(data, got):
+        c_col, c_lit, c_cents = r[1:4]
+        capped = r[4 : 4 + nk]
+        unguarded = r[4 + 3 * nk : 4 + 4 * nk]
         assert repr(c_col) == repr(model(v, lo, hi)), (v, lo, hi, c_col)
         assert repr(c_lit) == repr(model(v, -10.0, 10.0)), (v, c_lit)
-        if v is None:
-            assert c_cents is None
-        else:
-            assert isinstance(c_cents, int)
-            assert -CENTS_CAP <= c_cents <= CENTS_CAP, (v, c_cents)
+        assert c_cents == qmodel(v, 2, CENTS_CAP), (v, c_cents)
+        for k, q in zip(_GRID_KS, capped):
+            assert q == qmodel(v, k, _DR_MAX), (v, k, q)
+        # the hand-written forms are the helpers' exact expression on
+        # Spark, whatever the input
+        assert r[4 + 2 * nk : 4 + 3 * nk] == unguarded, (v, r)
+
+    # Below |x*10^k| = 2^63 (where DuckDB's BIGINT cast is defined and
+    # Spark's floor does not saturate), the uncapped grid and dround
+    # equal the hand-written unguarded forms on both engines.
+    for j, k in enumerate(_GRID_KS):
+        ok = [
+            i for i, v, _, _ in data
+            if v is None or (math.isfinite(v) and abs(v * 10**k) < 2.0**63)
+        ]
+        if not ok:
+            continue
+        duck = con.execute(
+            f"SELECT i, {sql_qround('v', k)}, CAST(FLOOR(v * {10**k} + 0.5)"
+            f" AS BIGINT), {sql_dround('v', k)}, FLOOR(v * {10**k} + 0.5)"
+            f" / {float(10**k)} FROM t"
+            f" WHERE i IN ({', '.join(map(str, ok))}) ORDER BY i"
+        ).fetchall()
+        for (i, d_q, d_hand, d_dr, d_bare) in duck:
+            r = got[i]
+            s_q, s_hand = r[4 + 2 * nk + j], r[4 + 3 * nk + j]
+            s_dr, s_bare = r[4 + nk + j], r[4 + 4 * nk + j]
+            assert s_q == s_hand == d_q == d_hand, (data[i], k, r, d_q)
+            assert repr(s_dr) == repr(s_bare) == repr(d_dr) == repr(d_bare), (
+                data[i], k, s_dr, s_bare, d_dr, d_bare
+            )
