@@ -2,8 +2,8 @@
 
 Replaces reference scripts/bronze/load_bronze.py (pandas parse + COPY
 into Postgres). Each dataset is one explicit-schema Spark scan with
-audit columns; lineage is a small records DataFrame, not a side table
-in a warehouse.
+audit columns; the pipeline builds lineage from metrics observed on the
+bronze writes, not from a side table in a warehouse.
 
 The REST/CSV *fetch* step (reference: scripts/bronze/ingest_bronze.py)
 is inherently driver-side I/O; :func:`land_url` isolates it so
@@ -37,7 +37,6 @@ from ..sources.readers import (
 @dataclass
 class BronzeResult:
     tables: dict[str, DataFrame]
-    lineage: DataFrame | None = None
     unknown_files: list[str] = field(default_factory=list)
 
 
@@ -126,15 +125,13 @@ def load_bronze(
     spark: SparkSession,
     landing_dir: str,
     datasets: set[str] | None = None,
-    lineage: bool = True,
 ) -> BronzeResult:
     """Route every landed file and load each dataset (reference:
     load_bronze.py:381-423 run()).
 
     ``datasets`` restricts loading to the named subset (plan
     construction for unused datasets is pure overhead — a consumer
-    that only needs covid+telco skips the users/posts JSON relations);
-    ``lineage=False`` skips the lineage aggregate for the same reason.
+    that only needs covid+telco skips the users/posts JSON relations).
     """
     import glob
 
@@ -158,26 +155,4 @@ def load_bronze(
         tables["covid"] = _load_covid(spark, by_ds["covid"])
     if "telco" in by_ds:
         tables["telco"] = _load_telco(spark, [r.path for r in by_ds["telco"]])
-
-    # lineage records (reference: ingest_bronze.py:151-162 metadata JSON):
-    # one small aggregate per dataset — rows/dataset counts, not per-file
-    # driver loops
-    if not lineage:
-        return BronzeResult(tables=tables, lineage=None, unknown_files=unknown)
-    lineage_df = None
-    if tables:
-        parts = [
-            df.agg(
-                F.lit(name).alias("dataset"),
-                F.count("*").alias("record_count"),
-                F.countDistinct("source_filename").alias("file_count"),
-                F.max("ingestion_timestamp").alias("ingested_at"),
-            )
-            for name, df in tables.items()
-        ]
-        lineage_df = parts[0]
-        for p in parts[1:]:
-            lineage_df = lineage_df.unionByName(p)
-    return BronzeResult(
-        tables=tables, lineage=lineage_df, unknown_files=unknown
-    )
+    return BronzeResult(tables=tables, unknown_files=unknown)

@@ -296,32 +296,6 @@ def user_engagement_metrics(
     )
 
 
-def pipeline_performance_view(lineage: DataFrame, durations: dict[str, float]) -> DataFrame:
-    """v_pipeline_performance (reference: aggregate_gold.py:183-196):
-    records/sec with NULLIF-style guard, from the lineage counts and the
-    measured layer durations."""
-    spark = lineage.sparkSession
-    dur = spark.createDataFrame(
-        [(k, float(v)) for k, v in durations.items()],
-        ["dataset", "duration_seconds"],
-    )
-    return (
-        lineage.join(F.broadcast(dur), "dataset", "left")
-        .select(
-            "dataset",
-            "record_count",
-            "duration_seconds",
-            F.round(
-                F.when(
-                    F.col("duration_seconds") > 0,
-                    F.col("record_count") / F.col("duration_seconds"),
-                ),
-                2,
-            ).alias("records_per_second"),
-        )
-    )
-
-
 def daily_aggregates(spark, journal: dict, asof: str) -> DataFrame:
     """gold.daily_aggregates (reference: aggregate_gold.py:31-41 schema,
     83-176 population): one row per pipeline run day with per-layer

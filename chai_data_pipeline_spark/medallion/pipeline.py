@@ -19,15 +19,67 @@ import argparse
 import json
 import os
 import time
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from datetime import datetime, timezone
+from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.writers import overwrite_table
 from . import bronze as bronze_mod
 from . import gold as gold_mod
 from . import quality as quality_mod
 from . import silver as silver_mod
+
+
+def write_observed(
+    df: DataFrame,
+    path: str | None,
+    partition_by: list[str] | None = None,
+    *metrics: Column,
+) -> dict:
+    """Write ``df`` through ``overwrite_table`` and return the aggregate
+    ``metrics`` observed on that one execution, plus ``count``, its row
+    count. With ``path`` None the frame runs to the ``noop`` sink
+    instead, so a dry run executes the same plan once."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("count"), *metrics)
+    if path is None:
+        observed.write.format("noop").mode("overwrite").save()
+    else:
+        overwrite_table(observed, path, partition_by)
+    return obs.get
+
+
+def _read_back(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Scan the table ``df`` was written to at ``path``. The frame's
+    schema is given, which spares the footer-reading job of schema
+    inference."""
+    return spark.read.schema(df.schema).parquet(path)
+
+
+def _run_all(spark: SparkSession, tasks: dict[str, Callable]) -> dict:
+    """Run independent ``tasks`` from a driver thread pool of
+    ``defaultParallelism`` threads; results come back in ``tasks`` order.
+
+    The pool drains before this returns. On a failure the tasks not yet
+    started are cancelled, the running ones finish, and the failure is
+    raised (the first one in ``tasks`` order)."""
+    if not tasks:
+        return {}
+    workers = min(len(tasks), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(workers, thread_name_prefix="medallion-write")
+    try:
+        futures = {name: pool.submit(fn) for name, fn in tasks.items()}
+        wait(futures.values(), return_when=FIRST_EXCEPTION)
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    for fut in futures.values():
+        if not fut.cancelled() and fut.exception() is not None:
+            raise fut.exception()
+    return {name: fut.result() for name, fut in futures.items()}
 
 
 def run_pipeline(
@@ -37,7 +89,12 @@ def run_pipeline(
     asof: str | None = None,
     write: bool = True,
 ) -> dict:
-    """Run the full pipeline; returns the journal dict."""
+    """Run the full pipeline; returns the journal dict.
+
+    Each table costs one Spark execution: its write, or a run to the
+    ``noop`` sink when ``write`` is False. Record counts, lineage and
+    the aggregate DQ rules are metrics observed on those executions,
+    and each layer submits its independent tables concurrently."""
     asof = asof or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     journal: dict = {
         "pipeline": "chai_data_pipeline_spark",
@@ -53,62 +110,86 @@ def run_pipeline(
         _write_journal(journal, lake_dir)
         return journal
 
+    def table_path(layer: str, name: str) -> str | None:
+        return os.path.join(lake_dir, layer, name) if write else None
+
     # ---- bronze ----------------------------------------------------------
     t0 = time.perf_counter()
     try:
         br = bronze_mod.load_bronze(spark, landing_dir)
-        counts = {name: df.count() for name, df in br.tables.items()}
-        if write:
-            for name, df in br.tables.items():
-                part = ["date"] if name == "covid" else None
-                overwrite_table(df, os.path.join(lake_dir, "bronze", name), part)
-            if br.lineage is not None:
-                overwrite_table(
-                    br.lineage, os.path.join(lake_dir, "bronze", "_lineage")
-                )
+        # lineage rides the writes; collect_set stands in for the
+        # distinct count, which an observation cannot hold
+        bronze_metrics = _run_all(spark, {
+            name: partial(
+                write_observed,
+                df,
+                table_path("bronze", name),
+                ["date"] if name == "covid" else None,
+                F.size(F.collect_set("source_filename")).alias("file_count"),
+                F.max("ingestion_timestamp").alias("ingested_at"),
+            )
+            for name, df in br.tables.items()
+        })
+        if write and bronze_metrics:
+            lineage = spark.createDataFrame(
+                [
+                    (name, m["count"], m["file_count"], m["ingested_at"])
+                    for name, m in bronze_metrics.items()
+                ],
+                "dataset string, record_count bigint, file_count bigint,"
+                " ingested_at timestamp",
+            )
+            # a driver-built table is one file, not one per local slice
+            overwrite_table(
+                lineage.coalesce(1), table_path("bronze", "_lineage")
+            )
         journal["layers"]["bronze"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": counts,
+            "records": {name: m["count"] for name, m in bronze_metrics.items()},
             "unknown_files": br.unknown_files,
         }
     except Exception as exc:  # noqa: BLE001 — fail-fast journal contract
         return fail("bronze", exc)
 
-    # ---- silver ----------------------------------------------------------
+    # ---- silver (+ the aggregate DQ rules, observed on the writes) --------
     t0 = time.perf_counter()
     try:
-        silver_tables = {}
-        if "users" in br.tables:
-            silver_tables["clean_users"] = silver_mod.transform_users(
-                br.tables["users"], asof
+        silver_tables = {
+            name: transform(br.tables[source], asof)
+            for name, source, transform in (
+                ("clean_users", "users", silver_mod.transform_users),
+                ("clean_posts", "posts", silver_mod.transform_posts),
+                ("clean_covid", "covid", silver_mod.transform_covid),
+                ("clean_telco", "telco", silver_mod.transform_telco),
             )
-        if "posts" in br.tables:
-            silver_tables["clean_posts"] = silver_mod.transform_posts(
-                br.tables["posts"], asof
-            )
-        if "covid" in br.tables:
-            silver_tables["clean_covid"] = silver_mod.transform_covid(
-                br.tables["covid"], asof
-            )
-        if "telco" in br.tables:
-            silver_tables["clean_telco"] = silver_mod.transform_telco(
-                br.tables["telco"], asof
-            )
-        if write:
-            for name, df in silver_tables.items():
-                part = ["record_date"] if name == "clean_covid" else None
-                overwrite_table(df, os.path.join(lake_dir, "silver", name), part)
-                # re-read so downstream plans scan the lake (pruned),
-                # not the full bronze lineage again
-                silver_tables[name] = spark.read.parquet(
-                    os.path.join(lake_dir, "silver", name)
-                )
-        s_counts = {k: v.count() for k, v in silver_tables.items()}
+            if source in br.tables
+        }
+        rules = quality_mod.rules_from_config(quality_mod.REFERENCE_RULES)
+        rules = [r for r in rules if r.table in silver_tables]
+        dq = {
+            name: quality_mod.observed_checks(name, rules, asof)
+            for name in silver_tables
+        }
+
+        def write_silver(name: str, df: DataFrame) -> tuple[dict, DataFrame]:
+            path = table_path("silver", name)
+            part = ["record_date"] if name == "clean_covid" else None
+            metrics = write_observed(df, path, part, *dq[name].metrics)
+            # downstream plans scan the lake (pruned), not the full
+            # bronze lineage again
+            return metrics, _read_back(spark, df, path) if write else df
+
+        written = _run_all(spark, {
+            name: partial(write_silver, name, df)
+            for name, df in silver_tables.items()
+        })
+        silver_tables = {name: df for name, (_, df) in written.items()}
+        silver_metrics = {name: m for name, (m, _) in written.items()}
         journal["layers"]["silver"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
-            "records": s_counts,
+            "records": {name: m["count"] for name, m in silver_metrics.items()},
         }
     except Exception as exc:  # noqa: BLE001
         return fail("silver", exc)
@@ -116,18 +197,25 @@ def run_pipeline(
     # ---- data quality ----------------------------------------------------
     t0 = time.perf_counter()
     try:
-        rules = quality_mod.rules_from_config(quality_mod.REFERENCE_RULES)
-        rules = [r for r in rules if r.table in silver_tables]
-        results = quality_mod.run_checks(spark, silver_tables, rules, asof)
-        # one execution of the DQ plan: score, journal and _dq_logs all
-        # come from the collected rows
-        rows = results.collect()
-        checks = [row.asDict() for row in rows]
+        # only the rules that join or group run here; per table, their
+        # rows follow the observed ones, as in run_checks
+        keyed = quality_mod.run_checks(
+            spark,
+            silver_tables,
+            [r for r in rules if r.rule_type not in quality_mod.AGGREGATE_RULES],
+            asof,
+        ).collect()
+        checks = [
+            check
+            for table in dict.fromkeys(r.table for r in rules)
+            for check in dq[table].results(silver_metrics[table])
+            + [row.asDict() for row in keyed if row.table_name == table]
+        ]
         score = quality_mod.quality_score(checks)
         if write:
+            dq_logs = spark.createDataFrame(checks, quality_mod.DQ_SCHEMA)
             overwrite_table(
-                spark.createDataFrame(rows, results.schema),
-                os.path.join(lake_dir, "silver", "_dq_logs"),
+                dq_logs.coalesce(1), table_path("silver", "_dq_logs")
             )
         journal["layers"]["quality"] = {
             "status": "SUCCESS",
@@ -141,35 +229,50 @@ def run_pipeline(
     # ---- gold ------------------------------------------------------------
     t0 = time.perf_counter()
     try:
-        gold_tables = {}
+
+        def write_gold(name: str, df: DataFrame) -> dict:
+            return {name: write_observed(df, table_path("gold", name))["count"]}
+
+        def write_global_summary(df: DataFrame) -> dict:
+            # v_data_completeness reads the written one-row summary
+            # rather than running the summary's plan a second time
+            counts = write_gold("covid_global_summary", df)
+            if write:
+                df = _read_back(spark, df, table_path("gold", "covid_global_summary"))
+            counts.update(
+                write_gold("v_data_completeness", gold_mod.v_data_completeness(df))
+            )
+            return counts
+
+        frames = {}
         if "clean_covid" in silver_tables:
             cc = silver_tables["clean_covid"]
-            gold_tables["daily_covid_summary"] = gold_mod.daily_covid_summary(cc)
-            gold_tables["covid_country_trends"] = gold_mod.covid_country_trends(cc)
-            gold_tables["covid_global_summary"] = gold_mod.covid_global_summary(
+            frames["daily_covid_summary"] = gold_mod.daily_covid_summary(cc)
+            frames["covid_country_trends"] = gold_mod.covid_country_trends(cc)
+            frames["covid_global_summary"] = gold_mod.covid_global_summary(
                 cc, data_quality_score=int(round(score))
             )
-            gold_tables["v_data_completeness"] = gold_mod.v_data_completeness(
-                gold_tables["covid_global_summary"]
-            )
-            gold_tables["v_trend_analysis"] = gold_mod.v_trend_analysis(cc)
+            frames["v_trend_analysis"] = gold_mod.v_trend_analysis(cc)
         if "clean_users" in silver_tables:
             cu = silver_tables["clean_users"]
-            gold_tables["user_company_analysis"] = gold_mod.user_company_analysis(cu)
-            gold_tables["user_analytics_summary"] = gold_mod.user_analytics_summary(
+            frames["user_company_analysis"] = gold_mod.user_company_analysis(cu)
+            frames["user_analytics_summary"] = gold_mod.user_analytics_summary(
                 cu, asof.split(" ")[0]
             )
             if "clean_posts" in silver_tables:
-                gold_tables["user_engagement_metrics"] = (
+                frames["user_engagement_metrics"] = (
                     gold_mod.user_engagement_metrics(
                         cu, silver_tables["clean_posts"]
                     )
                 )
-        g_counts = {}
-        for name, df in gold_tables.items():
-            if write:
-                overwrite_table(df, os.path.join(lake_dir, "gold", name))
-            g_counts[name] = df.count()
+        tasks = {name: partial(write_gold, name, df) for name, df in frames.items()}
+        if "covid_global_summary" in frames:
+            tasks["covid_global_summary"] = partial(
+                write_global_summary, frames["covid_global_summary"]
+            )
+        g_counts: dict = {}
+        for counts in _run_all(spark, tasks).values():
+            g_counts.update(counts)
         journal["layers"]["gold"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
@@ -181,7 +284,7 @@ def run_pipeline(
         da = gold_mod.daily_aggregates(spark, journal, asof)
         if write:
             overwrite_table(
-                da, os.path.join(lake_dir, "gold", "daily_aggregates")
+                da.coalesce(1), table_path("gold", "daily_aggregates")
             )
     except Exception as exc:  # noqa: BLE001
         return fail("gold", exc)

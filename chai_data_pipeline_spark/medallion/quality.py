@@ -12,7 +12,10 @@ config-driven design real AND batches execution:
   become 1-2 jobs, which at 100 TB is the difference between one pass
   and twelve;
 - referential rules compile to left-anti joins (one small job each);
-- freshness rules fold into the same single-pass aggregate via max(ts).
+- freshness rules fold into the same single-pass aggregate via max(ts);
+- the same aggregates run as observed metrics on a table's write
+  (``observed_checks``), so a pipeline that writes the table evaluates
+  them with no scan of their own.
 
 Outputs a results DataFrame (check_name, check_type, table_name,
 failed_count, total_count, passed) + an aggregate quality score —
@@ -91,6 +94,72 @@ def _violation_predicate(rule: Rule) -> Column:
     raise ValueError(f"not a predicate rule: {rule.rule_type}")
 
 
+# The results schema of every check row (the ``_dq_logs`` table).
+DQ_SCHEMA = (
+    "check_name string, check_type string, table_name string,"
+    " failed_count bigint, total_count bigint, passed boolean"
+)
+
+# Rules that compile to one aggregate over their own table's rows.
+AGGREGATE_RULES = ("not_null", "format", "range", "business", "freshness")
+
+
+def _failed_metric(rule: Rule, asof: str) -> Column:
+    """One rule's failed count as an aggregate expression: violating
+    rows for a predicate rule, 0/1 for freshness (the newest
+    ``ts_column`` is missing or older than ``max_age_hours`` at
+    ``asof``)."""
+    if rule.rule_type != "freshness":
+        return F.count_if(_violation_predicate(rule))
+    latest = F.max(F.col(rule.ts_column))
+    age_h = (
+        F.lit(asof).cast("timestamp").cast("double")
+        - latest.cast("timestamp").cast("double")
+    ) / 3600.0
+    return F.when(latest.isNull() | (age_h > rule.max_age_hours), 1).otherwise(0)
+
+
+@dataclass
+class ObservedChecks:
+    """The aggregate rules of one table as named metrics, which any
+    aggregation over the table's rows can evaluate: ``df.agg`` or an
+    observation on the table's write."""
+
+    table: str
+    rules: list[Rule]
+    metrics: list[Column]
+
+    def results(self, observed: dict) -> list[dict]:
+        """Check rows, in rule order, from the evaluated ``metrics``."""
+        return [
+            {
+                "check_name": r.name,
+                "check_type": r.rule_type,
+                "table_name": self.table,
+                "failed_count": observed[f"__dq_{i}"],
+                "total_count": observed["__dq_total"],
+                "passed": observed[f"__dq_{i}"] == 0,
+            }
+            for i, r in enumerate(self.rules)
+        ]
+
+
+def observed_checks(table: str, rules: list[Rule], asof: str) -> ObservedChecks:
+    """Compile ``table``'s aggregate rules (not_null, format, range,
+    business, freshness) into one set of metrics: a row count and one
+    failed count per rule. Every rule is evaluated in the same single
+    pass over the table; distinct aggregates are avoided so the metrics
+    also run as ``DataFrame.observe`` expressions."""
+    own = [r for r in rules if r.table == table and r.rule_type in AGGREGATE_RULES]
+    metrics = [
+        _failed_metric(r, asof).cast("long").alias(f"__dq_{i}")
+        for i, r in enumerate(own)
+    ]
+    if own:
+        metrics.insert(0, F.count(F.lit(1)).alias("__dq_total"))
+    return ObservedChecks(table, own, metrics)
+
+
 def run_checks(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -106,52 +175,23 @@ def run_checks(
 
     for table, t_rules in by_table.items():
         df = tables[table]
-        agg_exprs: list[Column] = [F.count("*").alias("__total")]
-        agg_rules: list[Rule] = []
-        for r in t_rules:
-            if r.rule_type in ("not_null", "format", "range", "business"):
-                agg_exprs.append(
-                    F.count_if(_violation_predicate(r)).alias(f"__v_{len(agg_rules)}")
-                )
-                agg_rules.append(r)
-            elif r.rule_type == "freshness":
-                agg_exprs.append(
-                    F.max(F.col(r.ts_column)).alias(f"__f_{len(agg_rules)}")
-                )
-                agg_rules.append(r)
-
-        if agg_rules:
-            # the single fused pass: every predicate + freshness rule for
-            # this table in one aggregation over one scan
-            row_df = df.agg(*agg_exprs)
-            parts = []
-            for i, r in enumerate(agg_rules):
-                if r.rule_type == "freshness":
-                    age_h = (
-                        F.lit(asof).cast("timestamp").cast("double")
-                        - F.col(f"__f_{i}").cast("timestamp").cast("double")
-                    ) / 3600.0
-                    failed = F.when(
-                        F.col(f"__f_{i}").isNull()
-                        | (age_h > r.max_age_hours),
-                        F.lit(1),
-                    ).otherwise(0)
-                else:
-                    failed = F.col(f"__v_{i}")
-                parts.append(
+        oc = observed_checks(table, t_rules, asof)
+        if oc.rules:
+            # the single fused pass: every aggregate rule for this table
+            # in one aggregation over one scan
+            row_df = df.agg(*oc.metrics)
+            for i, r in enumerate(oc.rules):
+                failed = F.col(f"__dq_{i}")
+                results.append(
                     row_df.select(
                         F.lit(r.name).alias("check_name"),
                         F.lit(r.rule_type).alias("check_type"),
                         F.lit(table).alias("table_name"),
-                        failed.cast("long").alias("failed_count"),
-                        F.col("__total").cast("long").alias("total_count"),
+                        failed.alias("failed_count"),
+                        F.col("__dq_total").alias("total_count"),
                         (failed == 0).alias("passed"),
                     )
                 )
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
-            results.append(merged)
 
         for r in t_rules:
             if r.rule_type == "referential":
@@ -186,6 +226,8 @@ def run_checks(
                     )
                 )
 
+    if not results:
+        return spark.createDataFrame([], DQ_SCHEMA)
     out = results[0]
     for r_df in results[1:]:
         out = out.unionByName(r_df)

@@ -346,9 +346,7 @@ def medallion_gold_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and without the cache every branch re-runs the bronze CSV scans +
     # silver transforms; memory cost is a few hundred fixture rows).
     def _build():
-        br = load_bronze(
-            spark, _FIXTURES, datasets={"telco", "covid"}, lineage=False
-        )
+        br = load_bronze(spark, _FIXTURES, datasets={"telco", "covid"})
         covid = transform_covid(br.tables["covid"], AS_OF).cache()
         return {
             "telco": transform_telco(br.tables["telco"], AS_OF).cache(),

@@ -109,9 +109,10 @@ def test_quality_engine_catches_planted_violations(journal_and_lake):
 
 
 def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
-    """One pipeline run executes the DQ plan once: the journal's score
-    and checks and the _dq_logs table all come from one collect, not
-    three separate runs of the whole suite."""
+    """One pipeline run evaluates every DQ check once: the aggregate
+    rules as metrics observed on the silver writes, the join and group
+    rules in one run_checks collect. The journal's score and checks and
+    the _dq_logs table all come from those rows."""
     from chai_data_pipeline_spark.medallion import pipeline, quality
 
     evaluated = spark.sparkContext.accumulator(0)
@@ -119,19 +120,39 @@ def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
 
     def counted_checks(*args, **kwargs):
         # a pass-through predicate counting every result row evaluated
-        def seen(_):
+        def seen():
             evaluated.add(1)
             return True
 
         out = run_checks(*args, **kwargs)
-        return out.filter(F.udf(seen, "boolean")(F.col("check_name")))
+        return out.filter(F.udf(seen, "boolean").asNondeterministic()())
+
+    observed_rows = []
+    observed_checks = quality.observed_checks
+
+    def counted_observed(*args, **kwargs):
+        oc = observed_checks(*args, **kwargs)
+        results = oc.results
+
+        def counted_results(observed):
+            rows = results(observed)
+            observed_rows.extend(rows)
+            return rows
+
+        oc.results = counted_results
+        return oc
 
     monkeypatch.setattr(quality, "run_checks", counted_checks)
+    monkeypatch.setattr(quality, "observed_checks", counted_observed)
     lake = str(tmp_path)
     journal = pipeline.run_pipeline(spark, FIXTURES, lake, asof=ASOF)
     assert journal["status"] == "SUCCESS"
     checks = journal["layers"]["quality"]["checks"]
-    assert evaluated.value == len(checks) > 0
+    names = [c["check_name"] for c in checks]
+    assert len(set(names)) == len(names) > 0
+    assert observed_rows and evaluated.value > 0
+    assert len(observed_rows) + evaluated.value == len(checks)
+    assert all(row in checks for row in observed_rows)
     assert journal["layers"]["quality"]["quality_score"] == round(
         100.0 * sum(c["passed"] for c in checks) / len(checks), 2
     )
@@ -139,6 +160,174 @@ def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
     assert sorted(repr(sorted(r.asDict().items())) for r in logged.collect()) == sorted(
         repr(sorted(c.items())) for c in checks
     )
+
+
+def test_pipeline_executes_each_table_once(spark, tmp_path, monkeypatch):
+    """Each medallion table's plan runs once per pipeline run: its own
+    write. Record counts, lineage and the aggregate DQ rules are metrics
+    observed on the writes, and v_data_completeness reads the written
+    global summary, so no table's plan is run again. Every table's
+    frame is wrapped in a pass-through filter that counts the rows it
+    emits; the count must equal the table's journal records."""
+    from chai_data_pipeline_spark.medallion import bronze, gold, pipeline, silver
+
+    emitted = {}  # "layer/table" -> accumulator of rows the plan emitted
+    plain = {}  # id(counted frame) -> (counted frame, the frame it wraps)
+
+    def counted(table, df):
+        acc = emitted[table] = spark.sparkContext.accumulator(0)
+
+        def tick():
+            acc.add(1)
+            return True
+
+        out = df.filter(F.udf(tick, "boolean").asNondeterministic()())
+        plain[id(out)] = (out, df)
+        return out
+
+    load_bronze = bronze.load_bronze
+
+    def counted_bronze(*args, **kwargs):
+        br = load_bronze(*args, **kwargs)
+        br.tables = {n: counted(f"bronze/{n}", df) for n, df in br.tables.items()}
+        return br
+
+    def counted_silver(name, fn):
+        # a silver plan derives from the bronze plan; it is given the
+        # uncounted bronze frame so only the bronze write counts there
+        return lambda df, *a: counted(f"silver/{name}", fn(plain[id(df)][1], *a))
+
+    def counted_gold(name, fn):
+        return lambda *a, **k: counted(f"gold/{name}", fn(*a, **k))
+
+    monkeypatch.setattr(bronze, "load_bronze", counted_bronze)
+    for name, fn in (
+        ("clean_users", "transform_users"),
+        ("clean_posts", "transform_posts"),
+        ("clean_covid", "transform_covid"),
+        ("clean_telco", "transform_telco"),
+    ):
+        monkeypatch.setattr(silver, fn, counted_silver(name, getattr(silver, fn)))
+    gold_models = (
+        "daily_covid_summary", "covid_country_trends", "covid_global_summary",
+        "v_data_completeness", "v_trend_analysis", "user_company_analysis",
+        "user_analytics_summary", "user_engagement_metrics",
+    )
+    for name in gold_models:
+        monkeypatch.setattr(gold, name, counted_gold(name, getattr(gold, name)))
+
+    journal = pipeline.run_pipeline(spark, FIXTURES, str(tmp_path), asof=ASOF)
+    assert journal["status"] == "SUCCESS"
+    records = {
+        f"{layer}/{table}": n
+        for layer in ("bronze", "silver", "gold")
+        for table, n in journal["layers"][layer]["records"].items()
+    }
+    assert len(records) == 4 + 4 + len(gold_models)
+    assert {t: acc.value for t, acc in emitted.items()} == records
+
+
+def test_pipeline_runs_no_count_actions():
+    """Source lint: ``df.count()`` in the orchestrator would run a
+    table's plan a second time; counts come from observed write metrics."""
+    import re
+
+    from chai_data_pipeline_spark.medallion import pipeline
+
+    with open(pipeline.__file__) as fh:
+        src = fh.read()
+    assert not re.findall(r"\.count\(\s*\)", src)
+
+
+def test_lineage_matches_written_bronze_tables(spark, journal_and_lake):
+    """_lineage describes the bronze rows as written: its ingested_at is
+    the newest ingestion_timestamp of the same execution, not a later
+    timestamp from a separate run of the plan."""
+    journal, lake = journal_and_lake
+    lineage = {
+        r.dataset: r
+        for r in spark.read.parquet(
+            os.path.join(lake, "bronze", "_lineage")
+        ).collect()
+    }
+    assert set(lineage) == set(journal["layers"]["bronze"]["records"])
+    for name, row in lineage.items():
+        written = (
+            spark.read.parquet(os.path.join(lake, "bronze", name))
+            .agg(
+                F.count("*").alias("n"),
+                F.countDistinct("source_filename").alias("files"),
+                F.max("ingestion_timestamp").alias("newest"),
+            )
+            .first()
+        )
+        assert row.record_count == written.n
+        assert row.file_count == written.files
+        assert row.ingested_at == written.newest
+
+
+def test_driver_built_tables_are_one_file(journal_and_lake):
+    _, lake = journal_and_lake
+    for table in ("bronze/_lineage", "silver/_dq_logs", "gold/daily_aggregates"):
+        files = os.listdir(os.path.join(lake, table))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, table
+
+
+def test_gold_write_failure_fails_fast(spark, tmp_path, monkeypatch):
+    """A failing gold write among the concurrent ones fails the gold
+    layer and the run; the journal is persisted, and no write is still
+    running when run_pipeline returns."""
+    import json
+    import threading
+
+    from chai_data_pipeline_spark.medallion import gold, pipeline
+
+    monkeypatch.setattr(
+        gold,
+        "v_trend_analysis",
+        lambda cc: cc.select(F.raise_error(F.lit("planted gold failure")).alias("x")),
+    )
+    running = []
+    finished = []
+    overwrite_table = pipeline.overwrite_table
+
+    def tracked(df, path, *args, **kwargs):
+        running.append(path)
+        try:
+            return overwrite_table(df, path, *args, **kwargs)
+        finally:
+            finished.append(path)
+
+    monkeypatch.setattr(pipeline, "overwrite_table", tracked)
+    lake = str(tmp_path)
+    journal = pipeline.run_pipeline(spark, FIXTURES, lake, asof=ASOF)
+    assert sorted(running) == sorted(finished)
+    assert not [t for t in threading.enumerate() if t.name.startswith("medallion-write")]
+    assert journal["status"] == "FAILED"
+    assert journal["layers"]["gold"]["status"] == "FAILED"
+    assert "planted gold failure" in journal["layers"]["gold"]["error"]
+    for layer in ("bronze", "silver", "quality"):
+        assert journal["layers"][layer]["status"] == "SUCCESS"
+    with open(os.path.join(lake, "pipeline_metadata.json")) as fh:
+        persisted = json.load(fh)
+    assert persisted["status"] == "FAILED"
+    assert persisted["layers"]["gold"]["status"] == "FAILED"
+
+
+def test_dry_run_reports_the_written_records(spark, tmp_path, journal_and_lake):
+    """write=False runs every table to the noop sink and reports the same
+    records, checks and score as a written run, writing only the
+    journal."""
+    from chai_data_pipeline_spark.medallion.pipeline import run_pipeline
+
+    written, _ = journal_and_lake
+    dry = run_pipeline(spark, FIXTURES, str(tmp_path), asof=ASOF, write=False)
+    assert dry["status"] == "SUCCESS"
+    for layer in ("bronze", "silver", "gold"):
+        assert dry["layers"][layer]["records"] == written["layers"][layer]["records"]
+    for key in ("checks", "quality_score"):
+        assert dry["layers"]["quality"][key] == written["layers"]["quality"][key]
+    assert os.listdir(tmp_path) == ["pipeline_metadata.json"]
 
 
 def test_gold_models(spark, journal_and_lake):
