@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,8 +29,8 @@ from ..sources.readers import (
     blanks_to_null,
     read_csv,
     read_json,
-    read_parquet,
     route_bronze_files,
+    sanitize_identifier,
     with_audit_columns,
 )
 
@@ -73,37 +74,29 @@ def _load_posts(spark: SparkSession, paths: list[str]) -> DataFrame:
 def _normalize_covid(df: DataFrame) -> DataFrame:
     """Rename raw headers, blanks→NULL, numeric coercion with 0 default,
     date parse (reference: load_bronze.py:338-362)."""
-    from ..sources.readers import sanitize_identifier
-
     df = df.withColumnsRenamed({c: sanitize_identifier(c) for c in df.columns})
     df = df.withColumnsRenamed(
         {k: v for k, v in schemas.COVID_RENAME.items() if k in df.columns}
     )
     df = blanks_to_null(df, ["province", "country"])
-    for c in ["confirmed", "recovered", "deaths"]:
-        df = df.withColumn(
-            c, F.coalesce(F.try_cast(F.col(c), "long") if hasattr(F, "try_cast")
-                          else F.expr(f"try_cast({c} AS LONG)"), F.lit(0))
-        )
-    return df.withColumn("date", F.to_date("date"))
+    counts = {
+        c: F.coalesce(F.col(c).try_cast("long"), F.lit(0))
+        for c in ("confirmed", "recovered", "deaths")
+    }
+    return df.withColumns({**counts, "date": F.to_date("date")})
 
 
 def _load_covid(spark: SparkSession, routed: list[RoutedFile]) -> DataFrame:
-    frames = []
+    """The CSV files through the encoding-probing CSV reader, the
+    columnar (parquet, ORC) ones through one scan per format; every
+    frame is normalized to the same columns before the union."""
     csvs = [r.path for r in routed if r.fmt == "csv"]
-    parquets = [r.path for r in routed if r.fmt == "parquet"]
-    orcs = [r.path for r in routed if r.fmt == "orc"]
-    if csvs:
-        frames.append(_normalize_covid(read_csv(spark, csvs, schemas.COVID_RAW)))
-    if parquets:
-        frames.append(_normalize_covid(read_parquet(spark, parquets)))
-    if orcs:
-        from ..sources.readers import read_orc
-
-        frames.append(_normalize_covid(read_orc(spark, orcs)))
-    df = frames[0]
-    for f2 in frames[1:]:
-        df = df.unionByName(f2)
+    frames = [read_csv(spark, csvs, schemas.COVID_RAW)] if csvs else []
+    for fmt in ("parquet", "orc"):
+        paths = [r.path for r in routed if r.fmt == fmt]
+        if paths:
+            frames.append(spark.read.format(fmt).load(paths))
+    df = reduce(DataFrame.unionByName, map(_normalize_covid, frames))
     return with_audit_columns(df, "covid")
 
 
@@ -112,11 +105,16 @@ def _load_telco(spark: SparkSession, paths: list[str]) -> DataFrame:
     sanitized identifiers, typed coercion where declared."""
     df = read_csv(spark, paths, schemas.TELCO_RAW)
     df = blanks_to_null(df)
-    df = (
-        df.withColumn("seniorcitizen", F.expr("try_cast(seniorcitizen AS INT)"))
-        .withColumn("tenure", F.expr("try_cast(tenure AS INT)"))
-        .withColumn("monthlycharges", F.expr("try_cast(monthlycharges AS DOUBLE)"))
-        .withColumn("totalcharges", F.expr("try_cast(totalcharges AS DOUBLE)"))
+    df = df.withColumns(
+        {
+            c: F.col(c).try_cast(t)
+            for c, t in (
+                ("seniorcitizen", "int"),
+                ("tenure", "int"),
+                ("monthlycharges", "double"),
+                ("totalcharges", "double"),
+            )
+        }
     )
     return with_audit_columns(df, "telco")
 
@@ -137,8 +135,8 @@ def load_bronze(
 
     paths = sorted(
         p
-        for pat in ("*.json", "*.csv", "*.parquet")
-        for p in glob.glob(os.path.join(landing_dir, "**", pat), recursive=True)
+        for p in glob.glob(os.path.join(landing_dir, "**", "*"), recursive=True)
+        if os.path.isfile(p)
     )
     routed, unknown = route_bronze_files(paths)
     by_ds: dict[str, list[RoutedFile]] = {}

@@ -14,6 +14,8 @@ replacements for the reference's nondeterminism (SURVEY §7.4.1/3):
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -296,10 +298,19 @@ def user_engagement_metrics(
     )
 
 
-def daily_aggregates(spark, journal: dict, asof: str) -> DataFrame:
-    """gold.daily_aggregates (reference: aggregate_gold.py:31-41 schema,
-    83-176 population): one row per pipeline run day with per-layer
-    record counts, total, quality score, and duration.
+DAILY_AGGREGATES_SCHEMA = (
+    "aggregate_date date, data_sources_processed int,"
+    " total_records_processed bigint, bronze_records int,"
+    " silver_records int, gold_records int, data_quality_score int,"
+    " processing_duration_seconds int"
+)
+
+
+def daily_aggregates(journal: dict, asof: str) -> tuple:
+    """The gold.daily_aggregates row of ``DAILY_AGGREGATES_SCHEMA``
+    (reference: aggregate_gold.py:31-41 schema, 83-176 population): one
+    row per pipeline run day with per-layer record counts, total,
+    quality score, and duration.
 
     The reference re-reads its own Postgres layers with CURRENT_DATE
     filters to count records; here the run JOURNAL is the metadata
@@ -322,25 +333,16 @@ def daily_aggregates(spark, journal: dict, asof: str) -> DataFrame:
     )
     q = layers.get("quality", {}).get("quality_score")
     score = 85 if q is None else int(round(float(q)))
-    row = [
-        (
-            asof.split(" ")[0],
-            len(layers.get("bronze", {}).get("records", {})),
-            b + s + g,
-            b,
-            s,
-            g,
-            score,
-            int(round(dur)),
-        )
-    ]
-    return spark.createDataFrame(
-        row,
-        "aggregate_date string, data_sources_processed int,"
-        " total_records_processed bigint, bronze_records int,"
-        " silver_records int, gold_records int, data_quality_score int,"
-        " processing_duration_seconds int",
-    ).withColumn("aggregate_date", F.col("aggregate_date").cast("date"))
+    return (
+        datetime.fromisoformat(asof).date(),
+        len(layers.get("bronze", {}).get("records", {})),
+        b + s + g,
+        b,
+        s,
+        g,
+        score,
+        int(round(dur)),
+    )
 
 
 def v_trend_analysis(clean_covid: DataFrame) -> DataFrame:

@@ -34,6 +34,13 @@ from . import quality as quality_mod
 from . import silver as silver_mod
 
 
+# The bronze ``_lineage`` table: one row per dataset.
+LINEAGE_SCHEMA = (
+    "dataset string, record_count bigint, file_count bigint,"
+    " ingested_at timestamp"
+)
+
+
 def write_observed(
     df: DataFrame,
     path: str | None,
@@ -51,6 +58,16 @@ def write_observed(
     else:
         overwrite_table(observed, path, partition_by)
     return obs.get
+
+
+def write_rows(
+    spark: SparkSession, rows: list, schema: str, path: str | None
+) -> None:
+    """Write the driver-built ``rows`` through ``overwrite_table`` as a
+    one-file table; with ``path`` None nothing is written."""
+    if path is not None:
+        # one file, not one per local slice
+        overwrite_table(spark.createDataFrame(rows, schema).coalesce(1), path)
 
 
 def _read_back(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -130,19 +147,15 @@ def run_pipeline(
             )
             for name, df in br.tables.items()
         })
-        if write and bronze_metrics:
-            lineage = spark.createDataFrame(
-                [
-                    (name, m["count"], m["file_count"], m["ingested_at"])
-                    for name, m in bronze_metrics.items()
-                ],
-                "dataset string, record_count bigint, file_count bigint,"
-                " ingested_at timestamp",
-            )
-            # a driver-built table is one file, not one per local slice
-            overwrite_table(
-                lineage.coalesce(1), table_path("bronze", "_lineage")
-            )
+        write_rows(
+            spark,
+            [
+                (name, m["count"], m["file_count"], m["ingested_at"])
+                for name, m in bronze_metrics.items()
+            ],
+            LINEAGE_SCHEMA,
+            table_path("bronze", "_lineage"),
+        )
         journal["layers"]["bronze"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
@@ -167,15 +180,12 @@ def run_pipeline(
         }
         rules = quality_mod.rules_from_config(quality_mod.REFERENCE_RULES)
         rules = [r for r in rules if r.table in silver_tables]
-        dq = {
-            name: quality_mod.observed_checks(name, rules, asof)
-            for name in silver_tables
-        }
 
         def write_silver(name: str, df: DataFrame) -> tuple[dict, DataFrame]:
             path = table_path("silver", name)
             part = ["record_date"] if name == "clean_covid" else None
-            metrics = write_observed(df, path, part, *dq[name].metrics)
+            dq = quality_mod.observed_checks(name, rules, asof)
+            metrics = write_observed(df, path, part, *dq)
             # downstream plans scan the lake (pruned), not the full
             # bronze lineage again
             return metrics, _read_back(spark, df, path) if write else df
@@ -197,26 +207,13 @@ def run_pipeline(
     # ---- data quality ----------------------------------------------------
     t0 = time.perf_counter()
     try:
-        # only the rules that join or group run here; per table, their
-        # rows follow the observed ones, as in run_checks
-        keyed = quality_mod.run_checks(
-            spark,
-            silver_tables,
-            [r for r in rules if r.rule_type not in quality_mod.AGGREGATE_RULES],
-            asof,
-        ).collect()
-        checks = [
-            check
-            for table in dict.fromkeys(r.table for r in rules)
-            for check in dq[table].results(silver_metrics[table])
-            + [row.asDict() for row in keyed if row.table_name == table]
-        ]
+        # the aggregate rules were observed on the silver writes; only
+        # the rules that join or group run here
+        checks = quality_mod.run_checks(silver_tables, rules, asof, silver_metrics)
         score = quality_mod.quality_score(checks)
-        if write:
-            dq_logs = spark.createDataFrame(checks, quality_mod.DQ_SCHEMA)
-            overwrite_table(
-                dq_logs.coalesce(1), table_path("silver", "_dq_logs")
-            )
+        write_rows(
+            spark, checks, quality_mod.DQ_SCHEMA, table_path("silver", "_dq_logs")
+        )
         journal["layers"]["quality"] = {
             "status": "SUCCESS",
             "duration_seconds": round(time.perf_counter() - t0, 2),
@@ -281,11 +278,12 @@ def run_pipeline(
         # daily_aggregates derives FROM the journal (per-layer counts,
         # quality score, durations) — built after the gold journal
         # entry so its own row is not self-counted.
-        da = gold_mod.daily_aggregates(spark, journal, asof)
-        if write:
-            overwrite_table(
-                da.coalesce(1), table_path("gold", "daily_aggregates")
-            )
+        write_rows(
+            spark,
+            [gold_mod.daily_aggregates(journal, asof)],
+            gold_mod.DAILY_AGGREGATES_SCHEMA,
+            table_path("gold", "daily_aggregates"),
+        )
     except Exception as exc:  # noqa: BLE001
         return fail("gold", exc)
 

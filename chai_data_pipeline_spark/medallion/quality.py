@@ -7,28 +7,32 @@ actual 12 checks are hard-coded one-SQL-query-each
 config-driven design real AND batches execution:
 
 - a rule spec (dataclass / plain dict) compiles to a Column predicate;
-- ALL predicate rules for a table run in ONE aggregation over ONE scan
-  (``sum(when(pred,1))`` per rule) — the reference's 12 separate scans
-  become 1-2 jobs, which at 100 TB is the difference between one pass
-  and twelve;
-- referential rules compile to left-anti joins (one small job each);
-- freshness rules fold into the same single-pass aggregate via max(ts);
+- ALL aggregate rules for a table (not_null, format, range, business,
+  freshness via max(ts)) run in ONE aggregation over ONE scan
+  (``count_if(pred)`` per rule) — the reference's 12 separate scans
+  become one pass per table, which at 100 TB is the difference between
+  one pass and twelve;
 - the same aggregates run as observed metrics on a table's write
   (``observed_checks``), so a pipeline that writes the table evaluates
-  them with no scan of their own.
+  them with no scan of their own;
+- referential rules compile to left-anti joins and unique rules to a
+  grouped count; all of them, across tables, run in one collect.
 
-Outputs a results DataFrame (check_name, check_type, table_name,
-failed_count, total_count, passed) + an aggregate quality score —
-the same PASS/FAIL + percentage contract as the reference
-(validate_silver.py:25-60), reproducible via the injected ``asof``.
+``run_checks`` is the one producer of check rows: dicts of
+(check_name, check_type, table_name, failed_count, total_count,
+passed), the ``DQ_SCHEMA`` of ``_dq_logs``, in per-table rule order.
+``quality_score`` turns them into the same PASS/FAIL + percentage
+contract as the reference (validate_silver.py:25-60), reproducible via
+the injected ``asof``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -119,119 +123,85 @@ def _failed_metric(rule: Rule, asof: str) -> Column:
     return F.when(latest.isNull() | (age_h > rule.max_age_hours), 1).otherwise(0)
 
 
-@dataclass
-class ObservedChecks:
-    """The aggregate rules of one table as named metrics, which any
-    aggregation over the table's rows can evaluate: ``df.agg`` or an
-    observation on the table's write."""
-
-    table: str
-    rules: list[Rule]
-    metrics: list[Column]
-
-    def results(self, observed: dict) -> list[dict]:
-        """Check rows, in rule order, from the evaluated ``metrics``."""
-        return [
-            {
-                "check_name": r.name,
-                "check_type": r.rule_type,
-                "table_name": self.table,
-                "failed_count": observed[f"__dq_{i}"],
-                "total_count": observed["__dq_total"],
-                "passed": observed[f"__dq_{i}"] == 0,
-            }
-            for i, r in enumerate(self.rules)
-        ]
-
-
-def observed_checks(table: str, rules: list[Rule], asof: str) -> ObservedChecks:
+def observed_checks(table: str, rules: list[Rule], asof: str) -> list[Column]:
     """Compile ``table``'s aggregate rules (not_null, format, range,
     business, freshness) into one set of metrics: a row count and one
     failed count per rule. Every rule is evaluated in the same single
     pass over the table; distinct aggregates are avoided so the metrics
     also run as ``DataFrame.observe`` expressions."""
     own = [r for r in rules if r.table == table and r.rule_type in AGGREGATE_RULES]
-    metrics = [
+    if not own:
+        return []
+    return [F.count(F.lit(1)).alias("__dq_total")] + [
         _failed_metric(r, asof).cast("long").alias(f"__dq_{i}")
         for i, r in enumerate(own)
     ]
-    if own:
-        metrics.insert(0, F.count(F.lit(1)).alias("__dq_total"))
-    return ObservedChecks(table, own, metrics)
+
+
+def _check_row(rule: Rule, failed: int, total: int | None) -> dict:
+    """One ``DQ_SCHEMA`` row."""
+    return {
+        "check_name": rule.name,
+        "check_type": rule.rule_type,
+        "table_name": rule.table,
+        "failed_count": failed,
+        "total_count": total,
+        "passed": failed == 0,
+    }
+
+
+def _keyed_failures(tables: dict[str, DataFrame], rules: list[Rule]) -> list[int]:
+    """Failed counts of the referential and unique ``rules``, in rule
+    order, from one collect: the orphans of a left-anti join, or the
+    number of duplicated keys."""
+    frames = []
+    for i, r in enumerate(rules):
+        df = tables[r.table]
+        if r.rule_type == "referential":
+            bad = df.join(tables[r.ref_table], on=r.keys, how="left_anti")
+        elif r.rule_type == "unique":
+            bad = df.groupBy(*r.keys).agg(F.count("*").alias("__n")).filter("__n > 1")
+        else:
+            raise ValueError(f"unknown rule type: {r.rule_type}")
+        frames.append(bad.agg(F.lit(i).alias("i"), F.count("*").alias("failed")))
+    if not frames:
+        return []
+    rows = reduce(DataFrame.unionByName, frames).collect()
+    return [row.failed for row in sorted(rows, key=lambda row: row.i)]
 
 
 def run_checks(
-    spark: SparkSession,
     tables: dict[str, DataFrame],
     rules: list[Rule],
     asof: str,
-) -> DataFrame:
-    """Execute all rules; returns the results DataFrame."""
-    results: list[DataFrame] = []
+    observed: dict[str, dict] | None = None,
+) -> list[dict]:
+    """Evaluate ``rules``; return one ``DQ_SCHEMA`` row per rule, grouped
+    by table in order of first appearance, in rule order within a table.
 
-    by_table: dict[str, list[Rule]] = {}
+    ``observed`` maps a table to its ``observed_checks`` metrics as
+    already evaluated, say on the table's write; a table with aggregate
+    rules and no entry there evaluates them in one ``agg``. The
+    referential and unique rules of all tables run in one collect."""
+    order = {t: i for i, t in enumerate(dict.fromkeys(r.table for r in rules))}
+    rules = sorted(rules, key=lambda r: order[r.table])
+    keyed_failed = iter(
+        _keyed_failures(tables, [r for r in rules if r.rule_type not in AGGREGATE_RULES])
+    )
+    observed = dict(observed or {})
+    rows: list[dict] = []
+    seen: dict[str, int] = {}
     for r in rules:
-        by_table.setdefault(r.table, []).append(r)
-
-    for table, t_rules in by_table.items():
-        df = tables[table]
-        oc = observed_checks(table, t_rules, asof)
-        if oc.rules:
-            # the single fused pass: every aggregate rule for this table
-            # in one aggregation over one scan
-            row_df = df.agg(*oc.metrics)
-            for i, r in enumerate(oc.rules):
-                failed = F.col(f"__dq_{i}")
-                results.append(
-                    row_df.select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit(r.rule_type).alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        failed.alias("failed_count"),
-                        F.col("__dq_total").alias("total_count"),
-                        (failed == 0).alias("passed"),
-                    )
-                )
-
-        for r in t_rules:
-            if r.rule_type == "referential":
-                ref = tables[r.ref_table]
-                orphans = df.join(ref, on=r.keys, how="left_anti")
-                results.append(
-                    orphans.agg(
-                        F.count("*").alias("failed_count")
-                    ).select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit("referential").alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        F.col("failed_count").cast("long"),
-                        F.lit(None).cast("long").alias("total_count"),
-                        (F.col("failed_count") == 0).alias("passed"),
-                    )
-                )
-            elif r.rule_type == "unique":
-                dups = (
-                    df.groupBy(*r.keys)
-                    .agg(F.count("*").alias("__n"))
-                    .filter(F.col("__n") > 1)
-                )
-                results.append(
-                    dups.agg(F.count("*").alias("failed_count")).select(
-                        F.lit(r.name).alias("check_name"),
-                        F.lit("unique").alias("check_type"),
-                        F.lit(table).alias("table_name"),
-                        F.col("failed_count").cast("long"),
-                        F.lit(None).cast("long").alias("total_count"),
-                        (F.col("failed_count") == 0).alias("passed"),
-                    )
-                )
-
-    if not results:
-        return spark.createDataFrame([], DQ_SCHEMA)
-    out = results[0]
-    for r_df in results[1:]:
-        out = out.unionByName(r_df)
-    return out
+        if r.rule_type not in AGGREGATE_RULES:
+            rows.append(_check_row(r, next(keyed_failed), None))
+            continue
+        if r.table not in observed:
+            metrics = observed_checks(r.table, rules, asof)
+            observed[r.table] = tables[r.table].agg(*metrics).first().asDict()
+        i = seen[r.table] = seen.get(r.table, -1) + 1
+        m = observed[r.table]
+        rows.append(_check_row(r, m[f"__dq_{i}"], m["__dq_total"]))
+    return rows
 
 
 def quality_score(checks: list) -> float:

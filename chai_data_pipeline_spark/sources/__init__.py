@@ -1,7 +1,6 @@
 from .readers import (  # noqa: F401
     read_csv,
     read_json,
-    read_parquet,
     route_bronze_files,
     sanitize_identifier,
     with_audit_columns,

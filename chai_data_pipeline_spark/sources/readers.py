@@ -1,5 +1,7 @@
-"""Bronze-layer readers: explicit-schema JSON/CSV/Parquet scans with
-encoding fallback, audit columns, and filename routing.
+"""Bronze-layer readers: explicit-schema JSON/CSV scans with encoding
+fallback, audit columns, and filename routing. Columnar landing files
+(parquet, ORC) need none of that: bronze reads them with
+``spark.read.format(fmt)``.
 
 Replaces the reference's pandas-based loaders
 (reference: scripts/bronze/load_bronze.py:223-293 JSON/Parquet,
@@ -36,26 +38,25 @@ def with_audit_columns(df: DataFrame, source_name: str) -> DataFrame:
     for idempotency checks and exact-dup detection downstream.
     """
     cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
-    return (
-        df.withColumn("source_filename", F.input_file_name())
-        .withColumn("source_name", F.lit(source_name))
-        .withColumn("ingestion_timestamp", F.current_timestamp())
-        .withColumn(
-            "data_hash", F.substring(F.sha2(F.concat_ws("\x1f", *cols), 256), 1, 16)
-        )
-        .withColumn("validation_status", F.lit("pending"))
+    return df.withColumns(
+        {
+            "source_filename": F.input_file_name(),
+            "source_name": F.lit(source_name),
+            "ingestion_timestamp": F.current_timestamp(),
+            "data_hash": F.substring(
+                F.sha2(F.concat_ws("\x1f", *cols), 256), 1, 16
+            ),
+            "validation_status": F.lit("pending"),
+        }
     )
 
 
 def blanks_to_null(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Whitespace-only strings → NULL (reference: load_bronze.py:348)."""
     targets = columns or [c for c, t in df.dtypes if t == "string"]
-    out = df
-    for c in targets:
-        out = out.withColumn(
-            c, F.when(F.trim(F.col(c)) == "", None).otherwise(F.col(c))
-        )
-    return out
+    return df.withColumns(
+        {c: F.when(F.trim(F.col(c)) == "", None).otherwise(F.col(c)) for c in targets}
+    )
 
 
 def read_json(
@@ -118,30 +119,6 @@ def read_csv(
     if any(k != v for k, v in renames.items()):
         df = df.withColumnsRenamed(renames)
     return df
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning surface as parquet (ORC is a
-    Spark-native columnar source with predicate pushdown and column
-    projection; footer stats prune like parquet row groups)."""
-    return spark.read.orc(path)
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro scan, gated: the spark-avro module is an external jar not
-    present in offline deployments — raise a clear error instead of
-    Spark's generic ClassNotFound."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as exc:  # pragma: no cover - depends on deploy
-        raise RuntimeError(
-            "Avro support requires the spark-avro package "
-            "(org.apache.spark:spark-avro_2.13) on the classpath"
-        ) from exc
 
 
 @dataclass

@@ -39,6 +39,45 @@ def test_bronze_routing_and_counts(journal_and_lake):
     assert journal["layers"]["bronze"]["unknown_files"] == []
 
 
+def test_bronze_routes_every_landed_file(spark, tmp_path):
+    """Every landed file is routed, whatever its extension: covid
+    parquet and ORC files load next to the covid CSV, and a file no
+    route takes is reported in unknown_files."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.orc
+    import pyarrow.parquet
+
+    from chai_data_pipeline_spark.medallion.bronze import load_bronze
+
+    shutil.copy(os.path.join(FIXTURES, "covid_20240301120000.csv"), tmp_path)
+    row = pa.table(
+        {
+            "Date": ["2020-03-20"],
+            "Country/Region": ["CountryC"],
+            "Province/State": pa.array([None], pa.string()),
+            "Confirmed": [7],
+            "Recovered": [1],
+            "Deaths": [0],
+        }
+    )
+    pyarrow.parquet.write_table(row, str(tmp_path / "covid_extra.parquet"))
+    pyarrow.orc.write_table(row, str(tmp_path / "covid_extra.orc"))
+    notes = tmp_path / "notes.txt"
+    notes.write_text("not a dataset")
+
+    br = load_bronze(spark, str(tmp_path))
+    covid = br.tables["covid"]
+    assert covid.count() == 42  # 40 CSV rows + one parquet + one ORC
+    extra = covid.filter(F.col("country") == "CountryC").collect()
+    assert sorted(os.path.basename(r.source_filename) for r in extra) == [
+        "covid_extra.orc", "covid_extra.parquet",
+    ]
+    assert [(r.confirmed, str(r.date)) for r in extra] == [(7, "2020-03-20")] * 2
+    assert br.unknown_files == [str(notes)]
+
+
 def test_silver_users_cleaning(spark, journal_and_lake):
     _, lake = journal_and_lake
     users = spark.read.parquet(os.path.join(lake, "silver", "clean_users"))
@@ -111,48 +150,55 @@ def test_quality_engine_catches_planted_violations(journal_and_lake):
 def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
     """One pipeline run evaluates every DQ check once: the aggregate
     rules as metrics observed on the silver writes, the join and group
-    rules in one run_checks collect. The journal's score and checks and
+    rules in the one run_checks collect, which reads each table they
+    name once and no other table. The journal's score and checks and
     the _dq_logs table all come from those rows."""
     from chai_data_pipeline_spark.medallion import pipeline, quality
 
-    evaluated = spark.sparkContext.accumulator(0)
+    scanned = {}  # silver table -> accumulator of rows run_checks read
+    built = []
     run_checks = quality.run_checks
+    check_row = quality._check_row
 
-    def counted_checks(*args, **kwargs):
-        # a pass-through predicate counting every result row evaluated
-        def seen():
-            evaluated.add(1)
+    def counted(table, df):
+        acc = scanned[table] = spark.sparkContext.accumulator(0)
+
+        def tick():
+            acc.add(1)
             return True
 
-        out = run_checks(*args, **kwargs)
-        return out.filter(F.udf(seen, "boolean").asNondeterministic()())
+        return df.filter(F.udf(tick, "boolean").asNondeterministic()())
 
-    observed_rows = []
-    observed_checks = quality.observed_checks
+    def counted_checks(tables, rules, asof, observed=None):
+        tables = {name: counted(name, df) for name, df in tables.items()}
+        return run_checks(tables, rules, asof, observed)
 
-    def counted_observed(*args, **kwargs):
-        oc = observed_checks(*args, **kwargs)
-        results = oc.results
-
-        def counted_results(observed):
-            rows = results(observed)
-            observed_rows.extend(rows)
-            return rows
-
-        oc.results = counted_results
-        return oc
+    def counted_row(*args):
+        row = check_row(*args)
+        built.append(row)
+        return row
 
     monkeypatch.setattr(quality, "run_checks", counted_checks)
-    monkeypatch.setattr(quality, "observed_checks", counted_observed)
+    monkeypatch.setattr(quality, "_check_row", counted_row)
     lake = str(tmp_path)
     journal = pipeline.run_pipeline(spark, FIXTURES, lake, asof=ASOF)
     assert journal["status"] == "SUCCESS"
     checks = journal["layers"]["quality"]["checks"]
     names = [c["check_name"] for c in checks]
     assert len(set(names)) == len(names) > 0
-    assert observed_rows and evaluated.value > 0
-    assert len(observed_rows) + evaluated.value == len(checks)
-    assert all(row in checks for row in observed_rows)
+    assert built == checks
+    # posts_user_fk is the one keyed rule: it reads clean_posts and its
+    # clean_users reference once; the aggregate rules read nothing here
+    silver = journal["layers"]["silver"]["records"]
+    assert {t: acc.value for t, acc in scanned.items()} == {
+        "clean_users": silver["clean_users"],
+        "clean_posts": silver["clean_posts"],
+        "clean_covid": 0,
+        "clean_telco": 0,
+    }
+    for c in checks:
+        if c["check_type"] != "referential":
+            assert c["total_count"] == silver[c["table_name"]]
     assert journal["layers"]["quality"]["quality_score"] == round(
         100.0 * sum(c["passed"] for c in checks) / len(checks), 2
     )
@@ -160,6 +206,22 @@ def test_quality_suite_executes_once(spark, tmp_path, monkeypatch):
     assert sorted(repr(sorted(r.asDict().items())) for r in logged.collect()) == sorted(
         repr(sorted(c.items())) for c in checks
     )
+
+
+def test_standalone_run_checks_matches_the_journal(spark, journal_and_lake):
+    """run_checks over the written silver tables, with no observed
+    metrics, evaluates the aggregate rules itself and gives the
+    journal's check rows in the same order."""
+    from chai_data_pipeline_spark.medallion import quality
+
+    journal, lake = journal_and_lake
+    tables = {
+        name: spark.read.parquet(os.path.join(lake, "silver", name))
+        for name in journal["layers"]["silver"]["records"]
+    }
+    rules = quality.rules_from_config(quality.REFERENCE_RULES)
+    checks = quality.run_checks(tables, rules, ASOF)
+    assert checks == journal["layers"]["quality"]["checks"]
 
 
 def test_pipeline_executes_each_table_once(spark, tmp_path, monkeypatch):
@@ -237,6 +299,33 @@ def test_pipeline_runs_no_count_actions():
     with open(pipeline.__file__) as fh:
         src = fh.read()
     assert not re.findall(r"\.count\(\s*\)", src)
+
+
+def test_driver_built_tables_have_one_writer():
+    """Source lint: ``pipeline.write_rows`` is the one writer of a
+    driver-built table (``_lineage``, ``_dq_logs``, ``daily_aggregates``);
+    a ``createDataFrame(`` or ``.coalesce(1)`` anywhere else under
+    medallion/ would be another copy of it."""
+    import ast
+    import glob
+
+    from chai_data_pipeline_spark import medallion
+
+    found = []
+    for path in glob.glob(os.path.join(os.path.dirname(medallion.__file__), "*.py")):
+        with open(path) as fh:
+            src = fh.read()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "write_rows":
+                body = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+                assert "createDataFrame(" in body and ".coalesce(1)" in body
+                found.append(path)
+                lines[node.lineno - 1 : node.end_lineno] = []
+        rest = "\n".join(lines)
+        assert "createDataFrame(" not in rest, path
+        assert ".coalesce(1)" not in rest, path
+    assert [os.path.basename(p) for p in found] == ["pipeline.py"]
 
 
 def test_lineage_matches_written_bronze_tables(spark, journal_and_lake):
@@ -416,11 +505,11 @@ def test_rules_from_reference_config_shape(spark):
              "columns": ["user_id", "email"]},
         ]
     )
-    res = run_checks(spark, {"users": df}, rules, ASOF)
-    rows = {r.check_name: r for r in res.collect()}
-    assert rows["users_not_null_user_id"].failed_count == 1
-    assert rows["users_not_null_email"].failed_count == 0
-    assert quality_score(res.collect()) == 50.0
+    res = run_checks({"users": df}, rules, ASOF)
+    rows = {r["check_name"]: r for r in res}
+    assert rows["users_not_null_user_id"]["failed_count"] == 1
+    assert rows["users_not_null_email"]["failed_count"] == 0
+    assert quality_score(res) == 50.0
 
 
 def test_partition_pruning_on_covid_lake(spark, journal_and_lake):
@@ -465,10 +554,10 @@ def test_quality_rule_types_unique_range_format(spark):
              "pattern": r"^[^@]+@[^@]+\.[a-z]+$"},
         ]
     )
-    res = {r.check_name: r for r in run_checks(spark, {"t": df}, rules, ASOF).collect()}
-    assert res["t_unique"].failed_count == 1      # id=1 duplicated
-    assert res["t_amount_range"].failed_count == 2  # 500 and -3
-    assert res["t_email_format"].failed_count == 1  # "x"
+    res = {r["check_name"]: r for r in run_checks({"t": df}, rules, ASOF)}
+    assert res["t_unique"]["failed_count"] == 1      # id=1 duplicated
+    assert res["t_amount_range"]["failed_count"] == 2  # 500 and -3
+    assert res["t_email_format"]["failed_count"] == 1  # "x"
 
 
 def test_land_url_file_scheme(tmp_path):

@@ -566,3 +566,60 @@ def test_multimodal_dedup_never_shuffles_payload_bytes(spark, sf_dir):
     # the digest groupBy must partial-aggregate map-side
     assert "partial_" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_load_tables_memo_reuses_plan_objects(spark, sf_dir):
+    """The per-session table memo returns the SAME DataFrame (a plan
+    object, never a result) for repeat loads, keeps sf_dirs and split
+    variants distinct, and repoints the temp view when the key
+    changes."""
+    import chai_data_pipeline_spark.session as S
+
+    a = S.load_tables(spark, sf_dir, "events")["events"]
+    b = S.load_tables(spark, sf_dir, "events")["events"]
+    assert a is b  # memo hit: no second read.parquet plan build
+    # the registered view resolves to the same relation
+    assert spark.table("events").count() == a.count()
+
+    # split variant is a distinct memo entry (different physical plan)
+    c = S.load_tables(spark, sf_dir, "events", split=("events",))["events"]
+    assert c is not a
+    c2 = S.load_tables(spark, sf_dir, "events", split=("events",))["events"]
+    assert c2 is c
+    # ...and the view now points at the split variant, then back
+    S.load_tables(spark, sf_dir, "events")
+    assert spark.table("events").count() == a.count()
+
+
+def test_split_key_override(spark, sf_dir, monkeypatch):
+    """A "table:key" split entry hash-partitions on the override key,
+    gets its own memo entry, and an unknown override column is a
+    no-op (the guard that keeps the mechanism schema-safe)."""
+    import chai_data_pipeline_spark.session as S
+
+    # floor of 1 row so the split fires at sf0.001; fresh memos so no
+    # plan built under the real floors is served (and none built here
+    # outlives the test: the session's lineitem view re-registers)
+    monkeypatch.setattr(
+        S, "_SPLIT_KEYS", {t: (k, 1) for t, (k, _) in S._SPLIT_KEYS.items()}
+    )
+    monkeypatch.setattr(S, "_TABLE_MEMO", {})
+    S._VIEW_STATE.pop((spark.sparkContext.applicationId, "lineitem"), None)
+    monkeypatch.setattr(S, "_VIEW_STATE", {})
+    over = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem:l_suppkey",)
+    )["lineitem"]
+    plan = over._jdf.queryExecution().analyzed().toString()
+    assert "l_suppkey" in plan and "RepartitionByExpression" in plan
+    default = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem",)
+    )["lineitem"]
+    assert default is not over  # distinct memo entries per key
+    dplan = default._jdf.queryExecution().analyzed().toString()
+    assert "l_orderkey" in dplan.split("RepartitionByExpression")[1]
+    # unknown column -> untouched plan, not an error
+    noop = S.load_tables(
+        spark, sf_dir, "lineitem", split=("lineitem:no_such_col",)
+    )["lineitem"]
+    nplan = noop._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression" not in nplan

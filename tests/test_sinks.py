@@ -3,6 +3,7 @@ conf application, and URI-scheme (non-bare-path) parquet writes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -240,16 +241,13 @@ def test_orc_round_trip_and_bronze_routing(spark, sf_dir, tmp_path):
     """ORC is a first-class source/sink: write_table(fmt='orc') round
     trips, and a covid*.orc landing file routes through bronze next to
     its CSV siblings."""
-    from chai_data_pipeline_spark.sources.readers import (
-        read_orc,
-        route_bronze_files,
-    )
+    from chai_data_pipeline_spark.sources.readers import route_bronze_files
     from chai_data_pipeline_spark.sources.writers import write_table
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     p = str(tmp_path / "orders_orc")
     write_table(orders, p, fmt="orc")
-    back = read_orc(spark, p)
+    back = spark.read.orc(p)
     assert back.count() == orders.count()
     assert set(back.columns) == set(orders.columns)
 
@@ -261,3 +259,85 @@ def test_orc_round_trip_and_bronze_routing(spark, sf_dir, tmp_path):
         ("covid", "csv"),
     ]
     assert unknown == ["/x/weird.bin"]
+
+
+def test_interleaved_merges_fail_loudly(spark, tmp_path):
+    """Two merges computed from the same snapshot: the second commit
+    must raise ConcurrentWriteError (lost update prevented), and the
+    first writer's rows must survive (r12 verdict item: the reference's
+    Postgres ON CONFLICT is atomic under concurrent writers; the
+    write-then-swap must fail loudly, not silently win-last)."""
+    from chai_data_pipeline_spark.operators.merge import upsert
+    from chai_data_pipeline_spark.sources.writers import (
+        ConcurrentWriteError,
+        atomic_replace,
+        merge_into,
+        read_generation,
+    )
+
+    tgt = str(tmp_path / "tgt")
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    merge_into(spark, tgt, base, ["id"])
+    assert read_generation(tgt) == 1
+
+    # Writer A samples the generation and MATERIALIZES its merge
+    # output (localCheckpoint models "computed but not yet committed";
+    # without it A's lazy plan would re-read the target during commit
+    # and die on B's deleted files — also loud, but the generation
+    # check is what guards the case where A finished reading first)
+    gen_a = read_generation(tgt)
+    merged_a = upsert(
+        spark.read.parquet(tgt),
+        spark.createDataFrame([(3, "c")], "id int, v string"),
+        ["id"],
+    ).localCheckpoint()
+    # ...then writer B lands a full merge in between...
+    merge_into(
+        spark, tgt,
+        spark.createDataFrame([(4, "d")], "id int, v string"),
+        ["id"],
+    )
+    # ...so A's commit must refuse (its output lacks B's row 4)
+    with pytest.raises(ConcurrentWriteError, match="generation"):
+        atomic_replace(tgt, merged_a, expected_generation=gen_a)
+    got = {r.id for r in spark.read.parquet(tgt).collect()}
+    assert got == {1, 2, 4}  # B's write survived; A aborted loudly
+    # the aborted commit released its lock: a fresh merge succeeds
+    merge_into(
+        spark, tgt,
+        spark.createDataFrame([(3, "c")], "id int, v string"),
+        ["id"],
+    )
+    assert {r.id for r in spark.read.parquet(tgt).collect()} == {1, 2, 3, 4}
+
+
+def test_inflight_marker_blocks_second_writer(spark, tmp_path):
+    """A present marker (in-flight or crashed merge) makes a second
+    commit raise instead of interleaving renames; recover_merge clears
+    it and merges flow again."""
+    from chai_data_pipeline_spark.sources.writers import (
+        ConcurrentWriteError,
+        merge_into,
+        recover_merge,
+    )
+
+    tgt = str(tmp_path / "tgt")
+    df = spark.createDataFrame([(1, "a")], "id int, v string")
+    merge_into(spark, tgt, df, ["id"])
+    marker = f"{tgt}__merge_marker"
+    with open(marker, "w") as fh:
+        fh.write(f"in-flight merge_into swap\nold={tgt}__old_x\n"
+                 f"tmp={tgt}__merge_x\ntarget={tgt}\n")
+    with pytest.raises(ConcurrentWriteError, match="in-flight or crashed"):
+        merge_into(
+            spark, tgt,
+            spark.createDataFrame([(2, "b")], "id int, v string"),
+            ["id"],
+        )
+    assert recover_merge(tgt) == "kept target"
+    merge_into(
+        spark, tgt,
+        spark.createDataFrame([(2, "b")], "id int, v string"),
+        ["id"],
+    )
+    assert {r.id for r in spark.read.parquet(tgt).collect()} == {1, 2}
