@@ -26,6 +26,7 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..sources.writers import overwrite_table
 from . import bronze as bronze_mod
@@ -63,11 +64,34 @@ def write_observed(
 def write_rows(
     spark: SparkSession, rows: list, schema: str, path: str | None
 ) -> None:
-    """Write the driver-built ``rows`` through ``overwrite_table`` as a
-    one-file table; with ``path`` None nothing is written."""
-    if path is not None:
-        # one file, not one per local slice
-        overwrite_table(spark.createDataFrame(rows, schema).coalesce(1), path)
+    """Write the driver-built ``rows`` (tuples in ``schema`` order, or
+    dicts by field name) through ``overwrite_table`` as a one-file table;
+    with ``path`` None nothing is written.
+
+    The frame is built from an Arrow table, which the JVM decodes
+    itself; a list of rows would go through a Python RDD and start a
+    Python worker. Naive datetimes are local times, as ``collect`` and
+    ``Observation`` return them, so they are made zone-aware here and
+    the session time zone cannot shift them."""
+    if path is None:
+        return
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    records = [
+        {
+            name: v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+            for name, v in (
+                row.items() if isinstance(row, dict) else zip(names, row)
+            )
+        }
+        for row in rows
+    ]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
+    # one file, not one per local slice
+    overwrite_table(spark.createDataFrame(table, struct).coalesce(1), path)
 
 
 def _read_back(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:

@@ -193,12 +193,19 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_totals_stream(spark, sf_dir),
         "t_stateful",
         output_mode="update",
-        # applyInPandasWithState scales with parallel Arrow workers, so
-        # MORE state partitions win here (measured 1.97 s at 8 vs
-        # 2.36 s at 4) — the opposite of the JVM-state default, where
-        # per-partition commit files dominate; 8 is the FLOOR and the
-        # count still grows with source volume (r13 scale measurement)
-        state_partitions=adaptive_state_partitions(spark, sf_dir, floor=8),
+        # applyInPandasWithState runs one Python task per state
+        # partition, and each task in a warm worker costs ~0.29 s of
+        # fixed CPU, so the width follows the volume at a finer rate
+        # than the JVM-state default: one partition per 12,500 events
+        # (100k events -> 8 on 32 cores, the r13 choice), floor 2,
+        # capped at the core count. On 4 vCPUs that is 2 at 10k events
+        # (0.9-1.3 s wall vs 1.5-1.8 s at 8) and 4 at 100k (2.2-2.5 s
+        # vs 2.8-3.2 s at 8 and 3.3-4.0 s at 2): the fastest width at
+        # each scale (table in the adaptive_state_partitions docstring);
+        # widths above 8 (more events on more cores) are unmeasured.
+        state_partitions=adaptive_state_partitions(
+            spark, sf_dir, rows_per_partition=12_500
+        ),
     )
     # one update row per user per batch; the LAST emission (highest seq,
     # stamped by the state function) is the final total — max of the

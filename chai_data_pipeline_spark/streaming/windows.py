@@ -47,7 +47,6 @@ _EVENTS_ROWS: dict[tuple[str, int, int], int] = {}
 def adaptive_state_partitions(
     spark: SparkSession,
     sf_dir: str,
-    floor: int = 2,
     replicas: int = 1,
     rows_per_partition: int = 125_000,
 ) -> int:
@@ -62,17 +61,32 @@ def adaptive_state_partitions(
     14.2 s with 2 partitions vs 6.0 s with 8 (min-of-3 interleaved,
     plans/r13/ab_stream_parts_sf1.json) because every micro-batch
     shuffles the full batch into only 2 state tasks. Derivation: one
-    partition per ~125k source rows, floored at the local optimum (2;
-    8 for the applyInPandasWithState topology, which scales with
-    parallel Arrow workers), capped at the session's core count —
-    the floor intentionally WINS over the core cap (a tiny container
-    with fewer cores than the floor still gets the measured-minimum
-    partition count, matching the prior fixed defaults). At
-    sf0.1 this yields exactly the r12-measured optima — the local
-    bench is unchanged by construction — and on a real cluster the
-    count follows data volume and executor width, which is how
-    production sizes state stores. ``replicas`` covers staged
+    partition per ``rows_per_partition`` source rows (default ~125k),
+    at least the local optimum 2 (even on a one-core host), capped at
+    the session's core count. At sf0.1 the
+    default rate yields exactly the r12-measured optimum, and on a real
+    cluster the count follows data volume and executor width, which is
+    how production sizes state stores. ``replicas`` covers staged
     redelivery (the at-least-once dedup source stages the file twice).
+
+    The applyInPandasWithState topology passes a finer rate, 12,500
+    rows: each state partition is one Python task with ~0.29 s of fixed
+    CPU in a warm worker, but at 100k events its Arrow work still pays
+    for more parallel workers. Measured on 4 vCPUs (op alone, wall /
+    session CPU in s, identical rows at every width):
+
+    ======  =================  =================  =================
+    events  8 partitions       4 partitions       2 partitions
+    ======  =================  =================  =================
+    10k     1.5-1.8 / 4.4-5.7  1.0-1.4 / 2.7-4.3  0.9-1.3 / 2.2-3.0
+    100k    2.8-3.2 / 9.4-11.1 2.2-2.5 / 7.1-8.2  3.3-4.0 / 5.9-8.2
+    ======  =================  =================  =================
+
+    That rate gives 2 at 10k and 4 at 100k there, the fastest width at
+    each scale, and keeps 8 for 100k events on 8 or more cores (the r13
+    32-core choice). Widths above 8 (more than 100k events on more than
+    8 cores, e.g. 32 Python tasks for 1M events on 32 cores) follow
+    from the formula alone: no run has measured them.
 
     NOT for windowed/grouped AGGREGATES with bounded state: their
     stream shuffle is map-side partial-aggregated (bytes move at group
@@ -85,7 +99,7 @@ def adaptive_state_partitions(
     src = os.path.join(sf_dir, "events.parquet")
     # cache keyed on (path, mtime, size) so an in-process testdata
     # regeneration invalidates naturally; a read FAILURE is not
-    # cached (falls back to the floor for this call only), so a
+    # cached (falls back to 2 for this call only), so a
     # transient error cannot pin the count for the session (ADVICE
     # r13).
     try:
@@ -100,11 +114,11 @@ def adaptive_state_partitions(
 
             rows = pq.ParquetFile(src).metadata.num_rows
         except Exception:
-            return floor
+            return 2
         if key is not None:
             _EVENTS_ROWS[key] = rows
     cores = spark.sparkContext.defaultParallelism
-    return max(floor, min(cores, (rows * replicas) // rows_per_partition))
+    return max(2, min(cores, (rows * replicas) // rows_per_partition))
 
 
 def stream_scratch_dir() -> str:

@@ -29,6 +29,16 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def sf001_dir():
+    """The sf0.01 testdata dir next to ``SF_DIR`` (10k events), for
+    tests pinned to that scale; skips when the data root has none."""
+    d = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.exists(os.path.join(d, "events.parquet")):
+        pytest.skip(f"no sf0.01 testdata next to {SF_DIR}")
+    return d
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     from chai_data_pipeline_spark.testing import duckdb_connect
 

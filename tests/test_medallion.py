@@ -355,6 +355,48 @@ def test_lineage_matches_written_bronze_tables(spark, journal_and_lake):
         assert row.ingested_at == written.newest
 
 
+def test_driver_built_rows_do_not_shift_off_utc(spark, tmp_path, monkeypatch):
+    """With the driver in a zone other than the session's UTC, every
+    driver-built table holds exactly the rows of a frame made from the
+    row list itself (``createDataFrame`` of a list reads a naive
+    datetime as a local time): no timestamp or date shifts, and
+    ``_lineage.ingested_at`` is still the newest bronze row."""
+    import time
+    from datetime import date
+
+    from chai_data_pipeline_spark.medallion import pipeline
+
+    lake = str(tmp_path)
+    built = {}
+    write_rows = pipeline.write_rows
+
+    def spy(spark, rows, schema, path):
+        built[os.path.relpath(path, lake)] = (rows, schema)
+        write_rows(spark, rows, schema, path)
+
+    monkeypatch.setattr(pipeline, "write_rows", spy)
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        journal = pipeline.run_pipeline(spark, FIXTURES, lake, asof=ASOF)
+        assert journal["status"] == "SUCCESS"
+        assert sorted(built) == [
+            "bronze/_lineage", "gold/daily_aggregates", "silver/_dq_logs",
+        ]
+        for table, (rows, schema) in built.items():
+            got = spark.read.parquet(os.path.join(lake, table)).collect()
+            want = spark.createDataFrame(rows, schema).collect()
+            assert sorted(got, key=str) == sorted(want, key=str), table
+        for row in spark.read.parquet(os.path.join(lake, "bronze/_lineage")).collect():
+            newest = spark.read.parquet(os.path.join(lake, "bronze", row.dataset))
+            assert row.ingested_at == newest.agg(F.max("ingestion_timestamp")).first()[0]
+        (daily,) = spark.read.parquet(os.path.join(lake, "gold/daily_aggregates")).collect()
+        assert daily.aggregate_date == date(2024, 3, 1)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_driver_built_tables_are_one_file(journal_and_lake):
     _, lake = journal_and_lake
     for table in ("bronze/_lineage", "silver/_dq_logs", "gold/daily_aggregates"):

@@ -762,3 +762,127 @@ def test_poisson_bootstrap_weight_mass(spark, sf_dir):
         assert abs(r.n_eff - n_users) <= slack, (r.replica, r.n_eff)
     mean_eff = sum(r.n_eff for r in rows) / len(rows)
     assert abs(mean_eff - n_users) <= 2 * math.sqrt(n_users / 16) + 2
+
+
+# --------------------------------------------------------------------------
+# Conservation, monotonicity and live-leg invariants of the curation,
+# similarity, privacy and graph queries. Parity proves Spark == oracle;
+# these pin what a hash match cannot express: every predicate actually
+# fires on the current corpus, since a dead leg stays green while
+# proving nothing and can mask latent bugs.
+# --------------------------------------------------------------------------
+
+
+def _rows(spark, sf_dir, name):
+    from chai_data_pipeline_spark import plans
+
+    return plans.QUERIES[name](spark, sf_dir).collect()
+
+
+def test_near_dup_end_to_end_conservation_and_live(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "curation_near_dup_end_to_end")
+    assert rows
+    for r in rows:
+        # token conservation is structural — kept + dropped == total
+        assert r["tokens_kept"] + r["tokens_dropped"] == r["tokens_total"]
+        assert r["n_kept"] + r["n_dropped"] == r["n_docs"]
+        # canonical-per-cluster: a source can keep at most one doc per
+        # cluster it touches
+        assert r["n_kept"] <= r["n_clusters_touched"]
+    # live leg: the LSH dedup actually drops documents somewhere
+    assert any(r["n_dropped"] > 0 for r in rows)
+
+
+def test_memorization_risk_live_and_bounds(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "memorization_risk_ranking")
+    assert rows
+    for r in rows:
+        assert r["duplicated_risk"] <= r["total_risk"]
+        assert r["n_duplicated"] <= r["n_docs"]
+    assert any(r["n_duplicated"] > 0 for r in rows)
+
+
+def test_multimodal_dedup_live_and_conservation(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "multimodal_dedup_storage")
+    assert {r["modality"] for r in rows} == {"image", "audio", "video"}
+    for r in rows:
+        assert r["bytes_kept"] + r["bytes_dropped"] == r["bytes_total"]
+        assert r["n_keys"] <= r["n_assets"]
+    assert any(r["bytes_dropped"] > 0 for r in rows)
+
+
+def test_facility_location_submodular_gains(spark, sf_dir):
+    rows = sorted(
+        _rows(spark, sf_dir, "facility_location_prototypes"),
+        key=lambda r: r["rank"],
+    )
+    assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
+    gains = [r["marginal_gain"] for r in rows]
+    # submodularity: greedy marginal gains are non-increasing
+    assert all(a >= b for a, b in zip(gains, gains[1:]))
+    # objective telescopes exactly
+    assert rows[-1]["objective"] == sum(gains)
+    assert all(g > 0 for g in gains)
+
+
+def test_mahalanobis_outliers_positive_and_full(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "embedding_mahalanobis_outliers")
+    assert len(rows) == 20
+    scores = [r["md2_9"] for r in rows]
+    assert scores == sorted(scores, reverse=True)
+    assert all(s > 0 for s in scores)
+
+
+def test_dp_mechanisms_noise_live(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "dp_laplace_histogram")
+    assert rows
+    # hash-derived Laplace noise is never exactly zero
+    assert all(r["noise"] != 0.0 for r in rows)
+    assert all(r["released_count"] >= 0 for r in rows)
+    topk = _rows(spark, sf_dir, "dp_topk_noisy_max")
+    assert [r["noisy_rank"] for r in topk] == list(range(1, len(topk) + 1))
+
+
+def test_trade_modularity_identity(spark, sf_dir):
+    rows = _rows(spark, sf_dir, "trade_modularity_regions")
+    assert len(rows) == 5
+    q_totals = {r["q_total"] for r in rows}
+    assert len(q_totals) == 1  # the global Q is one number on every row
+    assert any(r["intra_weight"] > 0 for r in rows)
+    # strengths partition the total weight: sum of per-region q_contrib
+    # approximates q_total (quantization-rounded per row)
+    approx = sum(r["q_contrib"] for r in rows)
+    assert abs(approx - rows[0]["q_total"]) < 1e-4
+
+
+def test_cluster_nmi_bounds(spark, sf_dir):
+    (r,) = _rows(spark, sf_dir, "embedding_cluster_purity_nmi")
+    assert r["n_clusters"] >= 2 and r["n_labels"] >= 2
+    assert 0.0 < r["purity"] <= 1.0
+    assert r["nmi"] is not None and 0.0 <= r["nmi"] <= 1.0
+    assert r["mi"] >= 0.0
+
+
+def test_curation_filters_actually_fire(spark, sf_dir):
+    """The quality cutoff (90) must DROP documents on the current
+    corpus — if a regeneration shifts the score distribution so the
+    filter keeps or kills everything, this fails loudly instead of
+    riding a vacuous hash match (curation_end_to_end round-10 lesson)."""
+    from chai_data_pipeline_spark import plans
+
+    docs_total = (
+        plans.QUERIES["curation_mixture_end_to_end"](spark, sf_dir)
+        .agg(F.sum("n_docs_kept"))
+        .collect()[0][0]
+    )
+    from chai_data_pipeline_spark.session import load_tables
+
+    corpus = (
+        load_tables(spark, sf_dir, "documents")["documents"]
+        .filter(F.col("text").isNotNull())
+        .count()
+    )
+    assert 0 < docs_total < corpus
+    rows = _rows(spark, sf_dir, "curation_mixture_end_to_end")
+    assert any(r["repeated_tokens"] > 0 for r in rows)
+    assert all(r["epochs"] >= 1 for r in rows if r["epochs"] is not None)

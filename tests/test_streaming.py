@@ -366,7 +366,7 @@ def test_fence_fails_closed_on_uninspectable_plan(spark, sf_dir):
 
 # topology class -> query function names in plans/streaming.py
 ROW_KEYED = {
-    "streaming_stateful_totals",  # per-key Arrow state (floor 8)
+    "streaming_stateful_totals",  # per-key Arrow state (12.5k rows/part)
     "streaming_stream_join",  # join buffers
     "streaming_dedup_delivery",  # dropDuplicates id sets
 }
@@ -478,10 +478,10 @@ def test_adaptive_state_partitions_scales_with_volume(
     spark, sf_dir, tmp_path
 ):
     """The streaming state-partition count follows SOURCE VOLUME: at
-    the local test scales it lands exactly on the r12-measured optima
-    (2; floor 8 for the Arrow-stateful topology), and at 10x/100x
-    volumes it grows one partition per ~125k rows, capped at the
-    session's core count (floor wins over the cap on tiny hosts) —
+    the local test scales it lands exactly on the r12-measured optimum
+    (2), and at 10x/100x volumes it grows one partition per
+    ``rows_per_partition`` rows (~125k by default, 12,500 for the
+    Arrow-stateful topology), capped at the session's core count —
     the sf1 measurement showed 2 partitions is 2.4x slower than 8 at
     1M events (plans/r13/ab_stream_parts_sf1). Assertions compare
     against the derivation formula, not host-dependent constants
@@ -490,7 +490,6 @@ def test_adaptive_state_partitions_scales_with_volume(
 
     # real testdata dirs: small scales keep the local floor
     assert W.adaptive_state_partitions(spark, sf_dir) == 2
-    assert W.adaptive_state_partitions(spark, sf_dir, floor=8) == 8
     assert W.adaptive_state_partitions(spark, sf_dir, replicas=2) == 2
 
     # larger volumes via the row-count cache (no giant file needed);
@@ -512,6 +511,15 @@ def test_adaptive_state_partitions_scales_with_volume(
         assert W.adaptive_state_partitions(spark, str(tmp_path)) == max(
             2, cores
         )
+        # 100k events keep the r13 choice of 8 on hosts with 8+ cores
+        W._EVENTS_ROWS[key] = 100_000
+        assert W.adaptive_state_partitions(
+            spark, str(tmp_path), rows_per_partition=12_500
+        ) == max(2, min(cores, 8))
+        W._EVENTS_ROWS[key] = 1_000_000_000
+        assert W.adaptive_state_partitions(
+            spark, str(tmp_path), rows_per_partition=12_500
+        ) == max(2, cores)
     finally:
         W._EVENTS_ROWS.pop(key, None)
 
@@ -520,6 +528,33 @@ def test_adaptive_state_partitions_scales_with_volume(
     n0 = len(W._EVENTS_ROWS)
     assert W.adaptive_state_partitions(spark, "/nonexistent/sfX") == 2
     assert len(W._EVENTS_ROWS) == n0
+
+
+def test_arrow_stateful_rate_keeps_sf001_at_the_floor(spark, sf001_dir):
+    """At the 12,500-row Arrow-stateful rate the 10k sf0.01 events stay
+    at 2 state partitions (the real file, not the row-count cache)."""
+    from chai_data_pipeline_spark.streaming import windows as W
+
+    assert (
+        W.adaptive_state_partitions(spark, sf001_dir, rows_per_partition=12_500)
+        == 2
+    )
+
+
+def test_stateful_totals_rows_do_not_depend_on_state_width(
+    spark, sf001_dir, monkeypatch
+):
+    """The Arrow-stateful width is a pure performance choice: at sf0.01
+    the derived width and 8 forced state partitions emit the same rows
+    (the trailing max_by(_, seq) and dround fold the per-batch updates
+    into one total per user at any width)."""
+    run = plans_streaming.streaming_stateful_totals
+    derived = sorted(run(spark, sf001_dir).collect())
+    monkeypatch.setattr(
+        plans_streaming, "adaptive_state_partitions", lambda *a, **k: 8
+    )
+    forced = sorted(run(spark, sf001_dir).collect())
+    assert derived and derived == forced
 
 
 # --------------------------------------------------------------------------
