@@ -44,37 +44,28 @@ LINEAGE_SCHEMA = (
 
 def write_observed(
     df: DataFrame,
-    path: str | None,
+    path: str,
     partition_by: list[str] | None = None,
     *metrics: Column,
 ) -> dict:
     """Write ``df`` through ``overwrite_table`` and return the aggregate
     ``metrics`` observed on that one execution, plus ``count``, its row
-    count. With ``path`` None the frame runs to the ``noop`` sink
-    instead, so a dry run executes the same plan once."""
+    count."""
     obs = Observation()
     observed = df.observe(obs, F.count(F.lit(1)).alias("count"), *metrics)
-    if path is None:
-        observed.write.format("noop").mode("overwrite").save()
-    else:
-        overwrite_table(observed, path, partition_by)
+    overwrite_table(observed, path, partition_by)
     return obs.get
 
 
-def write_rows(
-    spark: SparkSession, rows: list, schema: str, path: str | None
-) -> None:
+def write_rows(spark: SparkSession, rows: list, schema: str, path: str) -> None:
     """Write the driver-built ``rows`` (tuples in ``schema`` order, or
-    dicts by field name) through ``overwrite_table`` as a one-file table;
-    with ``path`` None nothing is written.
+    dicts by field name) through ``overwrite_table`` as a one-file table.
 
     The frame is built from an Arrow table, which the JVM decodes
     itself; a list of rows would go through a Python RDD and start a
     Python worker. Naive datetimes are local times, as ``collect`` and
     ``Observation`` return them, so they are made zone-aware here and
     the session time zone cannot shift them."""
-    if path is None:
-        return
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -128,14 +119,12 @@ def run_pipeline(
     landing_dir: str,
     lake_dir: str,
     asof: str | None = None,
-    write: bool = True,
 ) -> dict:
     """Run the full pipeline; returns the journal dict.
 
-    Each table costs one Spark execution: its write, or a run to the
-    ``noop`` sink when ``write`` is False. Record counts, lineage and
-    the aggregate DQ rules are metrics observed on those executions,
-    and each layer submits its independent tables concurrently."""
+    Each table costs one Spark execution: its write. Record counts,
+    lineage and the aggregate DQ rules are metrics observed on those
+    writes, and each layer submits its independent tables concurrently."""
     asof = asof or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     journal: dict = {
         "pipeline": "chai_data_pipeline_spark",
@@ -151,8 +140,8 @@ def run_pipeline(
         _write_journal(journal, lake_dir)
         return journal
 
-    def table_path(layer: str, name: str) -> str | None:
-        return os.path.join(lake_dir, layer, name) if write else None
+    def table_path(layer: str, name: str) -> str:
+        return os.path.join(lake_dir, layer, name)
 
     # ---- bronze ----------------------------------------------------------
     t0 = time.perf_counter()
@@ -212,7 +201,7 @@ def run_pipeline(
             metrics = write_observed(df, path, part, *dq)
             # downstream plans scan the lake (pruned), not the full
             # bronze lineage again
-            return metrics, _read_back(spark, df, path) if write else df
+            return metrics, _read_back(spark, df, path)
 
         written = _run_all(spark, {
             name: partial(write_silver, name, df)
@@ -258,8 +247,7 @@ def run_pipeline(
             # v_data_completeness reads the written one-row summary
             # rather than running the summary's plan a second time
             counts = write_gold("covid_global_summary", df)
-            if write:
-                df = _read_back(spark, df, table_path("gold", "covid_global_summary"))
+            df = _read_back(spark, df, table_path("gold", "covid_global_summary"))
             counts.update(
                 write_gold("v_data_completeness", gold_mod.v_data_completeness(df))
             )

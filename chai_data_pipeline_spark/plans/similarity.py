@@ -21,7 +21,7 @@ from ..operators.similarity import (
     cosine_sql_duckdb,
     cosine_sql_spark,
 )
-from ..session import load_tables
+from ..session import load_tables, parquet_footer
 from .registry import query
 
 DIM = 64
@@ -156,18 +156,10 @@ def _ivf_arrow_auto(sf_dir: str, threshold: int = 10_000) -> bool:
     ≈7k. Below the threshold the fold form wins and the local bench is
     unchanged by construction; above it the matmul form wins and keeps
     widening (the adaptive_state_partitions posture: derive from data
-    volume, never from the local harness)."""
-    try:
-        import pyarrow.parquet as pq
-
-        return (
-            pq.read_metadata(
-                os.path.join(sf_dir, "embeddings.parquet")
-            ).num_rows
-            >= threshold
-        )
-    except Exception:
-        return False
+    volume, never from the local harness). An unreadable footer keeps
+    the fold form."""
+    meta = parquet_footer(os.path.join(sf_dir, "embeddings.parquet"))
+    return meta is not None and meta[0] >= threshold
 
 
 @query("similarity_ann_ivf")

@@ -20,6 +20,7 @@ warehouse; Spark is both the engine and the store.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
@@ -125,6 +126,69 @@ def apply_object_store_conf(spark: SparkSession, **kwargs) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
+# The session catalog: the one memo of immutable plan objects and the one
+# parquet-footer reader. A warehouse resolves a table reference once per
+# session, not per query (guide §7.3: "planning time itself can become
+# the bottleneck"); so does this engine.
+#
+# memo: each spark.read.parquet costs ~80 ms of driver time (Py4J round
+# trip + file listing + footer schema read), a streaming source plan
+# ~0.1-0.2 s, and the medallion fixture frames ~1.9 s. DataFrames are
+# immutable plan objects, so a built one is re-used for the rest of the
+# Spark application: no RESULT is cached here, every action still
+# computes from the files. Keys are (applicationId, *key), so a new
+# application never sees another's plans; each call site's keys have
+# their own length (tables 4, streams 3, medallion fixtures 1), so sites
+# never collide.
+#
+# parquet_footer: (rows, row_groups) read from a file's footer, for the
+# volume rules (the load_tables split, streaming state width, the IVF
+# Arrow switch). Cached per file version (path, mtime_ns, size), so a
+# file rewritten in place is read again; a failed read is never cached,
+# so a transient error cannot pin a decision for the session.
+_PLAN_MEMO: dict[tuple, object] = {}
+_FOOTERS: dict[tuple[str, int, int], tuple[int, int]] = {}
+# temp-view registration per (applicationId, view name) -> the memo key
+# the view last pointed at; not a cache
+_VIEW_STATE: dict[tuple, tuple] = {}
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """The plan object memoized under ``(applicationId, *key)``; on a
+    miss, ``build()`` makes it."""
+    return _memo((spark.sparkContext.applicationId, *key), build)
+
+
+def _memo(full_key: tuple, build):
+    # full_key already holds the application id: load_tables reads it
+    # once per call, not once per table
+    out = _PLAN_MEMO.get(full_key)
+    if out is None:
+        out = _PLAN_MEMO[full_key] = build()
+    return out
+
+
+def parquet_footer(path: str) -> tuple[int, int] | None:
+    """``(rows, row_groups)`` from the parquet footer of ``path``, or
+    None when the file cannot be stated or its footer read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    key = (path, st.st_mtime_ns, st.st_size)
+    meta = _FOOTERS.get(key)
+    if meta is None:
+        try:
+            import pyarrow.parquet as pq
+
+            md = pq.ParquetFile(path).metadata
+        except Exception:
+            return None
+        meta = _FOOTERS[key] = (md.num_rows, md.num_row_groups)
+    return meta
+
+
+# ---------------------------------------------------------------------------
 # Unsplittable-input splitting (optimization guide §2.5): parquet is only
 # parallelizable at ROW-GROUP granularity, and a table shipped as one file
 # with one row group runs every stage up to its first exchange as a SINGLE
@@ -138,11 +202,11 @@ def apply_object_store_conf(spark: SparkSession, **kwargs) -> dict[str, str]:
 # sort-before-repartition in the single scan task.
 #
 # Scale-adaptive by construction: fires ONLY when the file carries fewer
-# row groups than the session has cores (row-group metadata read once per
-# path, cached). Well-packed production tables (row groups >= cores) pass
-# through untouched; a pathological single-row-group 100 GB file gets the
-# same fix the guide prescribes. Keyed hash partitioning is deterministic
-# by VALUE, so retries are safe (guide §2.5 rand() caveat) and results are
+# row groups than the session has cores (parquet_footer). Well-packed
+# production tables (row groups >= cores) pass through untouched; a
+# pathological single-row-group 100 GB file gets the same fix the guide
+# prescribes. Keyed hash partitioning is deterministic by VALUE, so
+# retries are safe (guide §2.5 rand() caveat) and results are
 # partition-independent per the engine-wide dsum/dround discipline
 # (functions/numeric.py).
 #
@@ -168,22 +232,6 @@ _SPLIT_KEYS: dict[str, tuple[str, int]] = {
     "documents": ("doc_id", 400),
     "embeddings": ("vec_id", 400),
 }
-_SPLIT_META: dict[str, tuple[int, int]] = {}  # path -> (rows, row_groups)
-
-# Per-session memo of load_tables DataFrames (r13, guide §7.3: "planning
-# time itself can become the bottleneck"). Each spark.read.parquet call
-# costs ~80 ms of driver time (Py4J round trip + file listing + footer
-# schema read) — a 6-table TPC-H query pays ~0.5 s of pure plan
-# construction in load_tables alone, on every build, every bench pass.
-# DataFrames are immutable plan objects, so re-using one is the catalog
-# pattern (a warehouse resolves a table reference once per session, not
-# per query) — the same class as the medallion fixture memo (r12): no
-# RESULT is cached, every action still computes from the parquet files.
-# Keyed by applicationId + sf_dir + table + split variant so warm-up
-# (sf0.001) and timed (sf0.1) builds, and split variants, never mix.
-# Temp views re-register only when the name last pointed elsewhere.
-_TABLE_MEMO: dict[tuple, object] = {}
-_VIEW_STATE: dict[tuple, tuple] = {}
 
 
 def _split_if_unsplittable(
@@ -200,17 +248,8 @@ def _split_if_unsplittable(
         key = key_override
     if key not in df.columns:
         return df
-    meta = _SPLIT_META.get(path)
-    if meta is None:
-        try:
-            import pyarrow.parquet as pq
-
-            md = pq.ParquetFile(path).metadata
-            meta = (md.num_rows, md.num_row_groups)
-        except Exception:
-            meta = (0, 1 << 30)  # unreadable -> treat as well-packed
-        _SPLIT_META[path] = meta
-    rows, row_groups = meta
+    # unreadable footer -> treat as well-packed
+    rows, row_groups = parquet_footer(path) or (0, 1 << 30)
     cores = spark.sparkContext.defaultParallelism
     if rows < min_rows or row_groups >= cores:
         return df
@@ -252,50 +291,47 @@ def load_tables(
         for s in split
     }
     for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
+        # sf_dir and split variant are in the key, so warm-up (sf0.001)
+        # and timed (sf0.1) builds, and split variants, never mix
         key_override = split_spec.get(name)
-        split_eff = name in split_spec
-        memo_key = (app_id, sf_dir, name, split_eff, key_override)
-        cached = _TABLE_MEMO.get(memo_key)
-        if cached is not None:
-            view_key = (app_id, name)
-            if _VIEW_STATE.get(view_key) != memo_key:
-                cached.createOrReplaceTempView(name)
-                _VIEW_STATE[view_key] = memo_key
-            out[name] = cached
-            continue
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                # → NTZ wall-clock (identity under the UTC pin above):
-                # an instant-typed ts would make every downstream
-                # to_date/window bucket session-tz-dependent AND
-                # collect() converts instants via the OS zone — naive
-                # timestamps match the DuckDB oracle on both counts
-                df = df.withColumn(
-                    "ts",
-                    F.timestamp_micros(F.expr("ts div 1000")).cast(
-                        "timestamp_ntz"
-                    ),
-                )
-            elif ts_type == "timestamp":
-                # µs-instant parquet (isAdjustedToUTC=true, or NTZ
-                # inference disabled): same NTZ normalization — the
-                # UTC pin makes the cast an identity on the wall clock
-                df = df.withColumn(
-                    "ts", F.col("ts").cast("timestamp_ntz")
-                )
-            # µs-NTZ parquet already reads as timestamp_ntz: no-op
-        else:
-            df = spark.read.parquet(path)
-        if split_eff:
-            df = _split_if_unsplittable(
-                spark, name, path, df, key_override=key_override
-            )
-        df.createOrReplaceTempView(name)
-        _TABLE_MEMO[memo_key] = df
-        _VIEW_STATE[(app_id, name)] = memo_key
+        memo_key = (app_id, sf_dir, name, name in split_spec, key_override)
+        df = _memo(memo_key, partial(_read_table, spark, sf_dir, name, split_spec))
+        view_key = (app_id, name)
+        if _VIEW_STATE.get(view_key) != memo_key:
+            df.createOrReplaceTempView(name)
+            _VIEW_STATE[view_key] = memo_key
         out[name] = df
     return out
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str, split_spec: dict):
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        ts_type = dict(df.dtypes).get("ts")
+        if ts_type == "bigint":
+            # → NTZ wall-clock (identity under the UTC pin above):
+            # an instant-typed ts would make every downstream
+            # to_date/window bucket session-tz-dependent AND
+            # collect() converts instants via the OS zone — naive
+            # timestamps match the DuckDB oracle on both counts
+            df = df.withColumn(
+                "ts",
+                F.timestamp_micros(F.expr("ts div 1000")).cast(
+                    "timestamp_ntz"
+                ),
+            )
+        elif ts_type == "timestamp":
+            # µs-instant parquet (isAdjustedToUTC=true, or NTZ
+            # inference disabled): same NTZ normalization — the
+            # UTC pin makes the cast an identity on the wall clock
+            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        # µs-NTZ parquet already reads as timestamp_ntz: no-op
+    else:
+        df = spark.read.parquet(path)
+    if name in split_spec:
+        df = _split_if_unsplittable(
+            spark, name, path, df, key_override=split_spec[name]
+        )
+    return df

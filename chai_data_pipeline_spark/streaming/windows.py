@@ -24,24 +24,12 @@ Semantics:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Memo of the immutable source-stream DataFrame plan per
-# (applicationId, staged source, delivery/trigger variant) — the same
-# class as session._TABLE_MEMO (r13): a DataFrame is a logical plan,
-# not a result; every started query still reads the staged parquet
-# files. Building the stream costs a batch read (footer schema fetch)
-# plus a readStream plan construct of ~0.1-0.2 s of driver/Py4J time
-# per streaming query build — pure catalog-resolution overhead at any
-# scale.
-_STREAM_MEMO: dict[tuple, DataFrame] = {}
-
-# events.parquet row counts per (path, mtime_ns, size) (footer
-# metadata, read once per file version) for adaptive_state_partitions
-# — same cache discipline as session._SPLIT_META
-_EVENTS_ROWS: dict[tuple[str, int, int], int] = {}
+from ..session import load_tables, memo, parquet_footer
 
 
 def adaptive_state_partitions(
@@ -96,29 +84,12 @@ def adaptive_state_partitions(
     (plans/r13/perfprobe_s1_sf1_afterparts.json). Those keep the
     fixed local default.
     """
-    src = os.path.join(sf_dir, "events.parquet")
-    # cache keyed on (path, mtime, size) so an in-process testdata
-    # regeneration invalidates naturally; a read FAILURE is not
-    # cached (falls back to 2 for this call only), so a
-    # transient error cannot pin the count for the session (ADVICE
-    # r13).
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    rows = _EVENTS_ROWS.get(key) if key is not None else None
-    if rows is None:
-        try:
-            import pyarrow.parquet as pq
-
-            rows = pq.ParquetFile(src).metadata.num_rows
-        except Exception:
-            return 2
-        if key is not None:
-            _EVENTS_ROWS[key] = rows
+    # an unreadable footer falls back to 2 for this call only
+    meta = parquet_footer(os.path.join(sf_dir, "events.parquet"))
+    if meta is None:
+        return 2
     cores = spark.sparkContext.defaultParallelism
-    return max(2, min(cores, (rows * replicas) // rows_per_partition))
+    return max(2, min(cores, (meta[0] * replicas) // rows_per_partition))
 
 
 def stream_scratch_dir() -> str:
@@ -220,16 +191,21 @@ def _events_stream(
             os.remove(link)
         os.symlink(src, link)
 
-    memo_key = (
-        spark.sparkContext.applicationId,
-        src,
-        duplicate_delivery,
-        max_files_per_trigger,
+    # The source-stream plan is memoized per (application, staged
+    # source, delivery/trigger variant) in the session catalog: building
+    # it costs a batch footer-schema read plus a readStream plan of
+    # ~0.1-0.2 s of driver time. Staging above runs on every call, and
+    # every started query still reads the staged files.
+    return memo(
+        spark,
+        (src, duplicate_delivery, max_files_per_trigger),
+        partial(_build_events_stream, spark, src, stage, max_files_per_trigger),
     )
-    cached = _STREAM_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
 
+
+def _build_events_stream(
+    spark: SparkSession, src: str, stage: str, max_files_per_trigger: int | None
+) -> DataFrame:
     batch = spark.read.parquet(src)
     reader = spark.readStream.schema(batch.schema).format("parquet")
     if max_files_per_trigger is not None:
@@ -239,7 +215,7 @@ def _events_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(stage)
     # ts must be an INSTANT here (withWatermark rejects TIMESTAMP_NTZ);
-    # the UTC session pin above makes window bucketing deterministic,
+    # the UTC session pin in _events_stream makes window bucketing deterministic,
     # and aggregate outputs cast their window labels to NTZ so
     # driver-side collection is OS-tz-independent. Handle every ts
     # physical type the testdata has shipped with: ns (reads as bigint
@@ -268,7 +244,6 @@ def _events_stream(
         F.col("ts").isNotNull()
         & (F.col("ts") >= F.lit("1970-01-01 00:00:00").cast("timestamp"))
     )
-    _STREAM_MEMO[memo_key] = stream
     return stream
 
 
@@ -545,11 +520,19 @@ def drive_stream(
     and restored afterwards. Every ephemeral streaming runner goes
     through here.
 
-    Pinned: ``minBatchesToRetain`` (see _set_ephemeral_retain; set
-    first, so a bad setting raises before any conf is touched),
-    ``spark.sql.shuffle.partitions`` (the state-store partition count
-    is fixed from it at first start — see run_streaming_query) and
-    ``noDataMicroBatches.enabled``.
+    Pinned: ``minBatchesToRetain=2``, ``spark.sql.shuffle.partitions``
+    (the state-store partition count is fixed from it at first start —
+    see run_streaming_query) and ``noDataMicroBatches.enabled``. A conf
+    the session had not set is unset again afterwards.
+
+    ``minBatchesToRetain``: every run drives a query to completion
+    against a throwaway checkpoint (fresh_scratch: reaped on the next
+    run, never restarted), so Spark's default of 100 retained versions,
+    sized for production recovery windows, only adds per-batch
+    bookkeeping. r14 measured 2 as a small-but-consistent win on all
+    seven streaming headline keys (totals 7.725 -> 7.508 s focused
+    5-pass, 9.284 -> 8.865 s in the 4-arm probe). It never changes what
+    a batch computes, only how many committed versions are kept.
 
     No-data micro-batches are disabled unless ``finalize_windows`` (r11):
     they exist to FINALIZE append-mode windowed aggregates after the
@@ -561,13 +544,17 @@ def drive_stream(
     scale). With ``finalize_windows`` the run also waits for the
     zero-input finalization batch to commit (_await_finalization_batch).
     """
-    restore_retain = _set_ephemeral_retain(spark)
-    parts = "spark.sql.shuffle.partitions"
-    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = {k: spark.conf.get(k) for k in (parts, no_data)}
+    pins = {
+        "spark.sql.streaming.minBatchesToRetain": "2",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            "true" if finalize_windows else "false"
+        ),
+    }
+    prev = {k: spark.conf.get(k, None) for k in pins}
     try:
-        spark.conf.set(parts, str(shuffle_partitions))
-        spark.conf.set(no_data, "true" if finalize_windows else "false")
+        for k, v in pins.items():
+            spark.conf.set(k, v)
         q = writer.start()
         try:
             q.processAllAvailable()
@@ -577,48 +564,10 @@ def drive_stream(
             q.stop()
     finally:
         for k, v in prev.items():
-            spark.conf.set(k, v)
-        restore_retain()
-
-
-def _set_ephemeral_retain(spark) -> "callable":
-    """Bound checkpoint-version retention for an EPHEMERAL streaming run.
-
-    These runners drive a query to completion against a throwaway
-    checkpoint (deleted on the next run of the same name, never
-    restarted), so Spark's default ``minBatchesToRetain=100`` — sized
-    for production recovery windows — only adds per-batch bookkeeping:
-    every commit tracks (and, past the bound, cleans) state/WAL
-    versions that no restart will ever read. r14 measured the bound at
-    2 as a small-but-consistent win across all seven streaming headline
-    keys (totals 7.725 -> 7.508 s focused 5-pass, 9.284 -> 8.865 s in
-    the 4-arm probe; every key improved in both). It never changes what
-    a batch computes — only how many already-committed versions are
-    kept.
-
-    ``SPARK_GRAFT_STREAM_RETAIN`` overrides the bound (a long-lived
-    production job that restarts from these checkpoints should carry
-    its own recovery-window sizing; empty string = leave the session
-    default untouched). Any other value that is not a positive integer
-    raises ``ValueError`` before any conf is touched: Spark accepts 0 or
-    a negative count at ``conf.set`` and only fails at stream start.
-    Returns a restore thunk for the caller's ``finally``.
-    """
-    val = os.environ.get("SPARK_GRAFT_STREAM_RETAIN", "2")
-    if not val:
-        return lambda: None
-    retain = int(val) if val.isdecimal() else 0
-    if retain < 1:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_RETAIN must be a positive integer or "
-            f"empty, got {val!r}"
-        )
-    key = "spark.sql.streaming.minBatchesToRetain"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(retain))
-    if prev is None:
-        return lambda: spark.conf.unset(key)
-    return lambda: spark.conf.set(key, prev)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _await_finalization_batch(q, timeout_s: float = 60.0) -> None:
@@ -665,7 +614,6 @@ def static_enrich_stream(
     bit-for-bit.
     """
     from ..functions import dround
-    from ..session import load_tables
 
     ev = _events_stream(spark, sf_dir)
     t = load_tables(spark, sf_dir, "customer", "nation")

@@ -445,22 +445,6 @@ def test_gold_write_failure_fails_fast(spark, tmp_path, monkeypatch):
     assert persisted["layers"]["gold"]["status"] == "FAILED"
 
 
-def test_dry_run_reports_the_written_records(spark, tmp_path, journal_and_lake):
-    """write=False runs every table to the noop sink and reports the same
-    records, checks and score as a written run, writing only the
-    journal."""
-    from chai_data_pipeline_spark.medallion.pipeline import run_pipeline
-
-    written, _ = journal_and_lake
-    dry = run_pipeline(spark, FIXTURES, str(tmp_path), asof=ASOF, write=False)
-    assert dry["status"] == "SUCCESS"
-    for layer in ("bronze", "silver", "gold"):
-        assert dry["layers"][layer]["records"] == written["layers"][layer]["records"]
-    for key in ("checks", "quality_score"):
-        assert dry["layers"]["quality"][key] == written["layers"]["quality"][key]
-    assert os.listdir(tmp_path) == ["pipeline_metadata.json"]
-
-
 def test_gold_models(spark, journal_and_lake):
     _, lake = journal_and_lake
     trends = {

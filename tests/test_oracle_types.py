@@ -128,3 +128,33 @@ def test_plans_use_numeric_clamp_helpers():
         if path.relative_to(_PKG).as_posix() != "functions/numeric.py":
             hits += _idiom_hits(path)
     assert not hits, "\n".join(hits)
+
+
+# The session catalog (session.py) holds the one memo of plan objects
+# and the one parquet-footer reader; a second module-level cache or a
+# footer read elsewhere in the package would split the catalog again.
+# tools/nullsweep.py reads and writes whole parquet tables, not footers.
+_CATALOG_IDIOMS = {
+    "parquet footer read (use session.parquet_footer)": re.compile(
+        r"\b(?:ParquetFile|read_metadata)\("
+    ),
+    "module-level plan/footer cache (use session.memo/parquet_footer)": (
+        re.compile(r"^_\w*(?:MEMO|ROWS|META)\b[^=\n]*=\s*(?:\{|dict\()", re.M)
+    ),
+}
+
+
+def test_catalog_caches_live_in_session():
+    hits = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "session.py":
+            continue
+        src = path.read_text()
+        prose = _prose_spans(src)
+        for what, pat in _CATALOG_IDIOMS.items():
+            for m in pat.finditer(src):
+                if not any(a <= m.start() < b for a, b in prose):
+                    line = src.count("\n", 0, m.start()) + 1
+                    hits.append(f"{rel}:{line}: {what}")
+    assert not hits, "\n".join(hits)

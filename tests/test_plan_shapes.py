@@ -603,7 +603,7 @@ def test_split_key_override(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(
         S, "_SPLIT_KEYS", {t: (k, 1) for t, (k, _) in S._SPLIT_KEYS.items()}
     )
-    monkeypatch.setattr(S, "_TABLE_MEMO", {})
+    monkeypatch.setattr(S, "_PLAN_MEMO", {})
     S._VIEW_STATE.pop((spark.sparkContext.applicationId, "lineitem"), None)
     monkeypatch.setattr(S, "_VIEW_STATE", {})
     over = S.load_tables(
@@ -623,3 +623,69 @@ def test_split_key_override(spark, sf_dir, monkeypatch):
     )["lineitem"]
     nplan = noop._jdf.queryExecution().analyzed().toString()
     assert "RepartitionByExpression" not in nplan
+
+
+def _write_parquet(path, n_rows: int, row_group_size: int, key: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({key: list(range(n_rows))}), path, row_group_size=row_group_size
+    )
+
+
+def _is_split(df) -> bool:
+    return "RepartitionByExpression" in (
+        df._jdf.queryExecution().analyzed().toString()
+    )
+
+
+def test_split_rereads_a_footer_rewritten_in_place(spark, tmp_path, monkeypatch):
+    """The split rule reads row groups per file version: a table file
+    rewritten in place (new size, new row-group count) changes the
+    load_tables decision on the next plan build."""
+    import chai_data_pipeline_spark.session as S
+
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("one core: every file is well-packed")
+    # a table name no other test loads, so its temp view harms nothing
+    monkeypatch.setattr(S, "_SPLIT_KEYS", {"split_probe": ("k", 1)})
+    sf, split = str(tmp_path), ("split_probe",)
+    path = str(tmp_path / "split_probe.parquet")
+    n = 4 * cores
+
+    # one row group per row: well-packed, no split
+    _write_parquet(path, n, 1, "k")
+    monkeypatch.setattr(S, "_PLAN_MEMO", {})
+    packed = S.load_tables(spark, sf, "split_probe", split=split)
+    assert not _is_split(packed["split_probe"])
+
+    # the same path rewritten as one row group: split
+    _write_parquet(path, n, n, "k")
+    monkeypatch.setattr(S, "_PLAN_MEMO", {})
+    single = S.load_tables(spark, sf, "split_probe", split=split)
+    assert _is_split(single["split_probe"])
+
+
+def test_unreadable_footer_is_not_cached(spark, tmp_path):
+    """A footer that cannot be read leaves the split rule and the IVF
+    Arrow switch at their fail-safe answers for that call only: once
+    the file is readable, both decide from its footer."""
+    import chai_data_pipeline_spark.session as S
+    from chai_data_pipeline_spark.plans.similarity import _ivf_arrow_auto
+
+    cores = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "embeddings.parquet")
+    with open(path, "wb") as fh:
+        fh.write(b"not a parquet file")
+    df = spark.range(1).withColumnRenamed("id", "vec_id")
+
+    assert S._split_if_unsplittable(spark, "embeddings", path, df) is df
+    assert _ivf_arrow_auto(str(tmp_path), threshold=1) is False
+    assert not [k for k in S._FOOTERS if k[0] == path]
+
+    _write_parquet(path, 1000, 1000, "vec_id")  # 1000 rows, one row group
+    assert _ivf_arrow_auto(str(tmp_path), threshold=1) is True
+    split = S._split_if_unsplittable(spark, "embeddings", path, df)
+    assert _is_split(split) == (cores > 1)

@@ -66,7 +66,7 @@ def test_fresh_scratch_reaps_earlier_runs_only(tmp_path):
     assert sorted(os.listdir(tmp_path)) == sorted(kept)
 
 
-def test_upsert_run_pins_and_restores_confs(spark, sf_dir, monkeypatch):
+def test_upsert_run_pins_and_restores_confs(spark, sf_dir):
     """Inside a foreachBatch sink's batches the ephemeral retain bound
     and the runner's shuffle width are in force; after return the
     session holds its own values again."""
@@ -74,7 +74,6 @@ def test_upsert_run_pins_and_restores_confs(spark, sf_dir, monkeypatch):
         streaming_upsert_latest,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_RETAIN", raising=False)
     retain = "spark.sql.streaming.minBatchesToRetain"
     parts = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(parts)
@@ -128,45 +127,42 @@ def test_rerun_leaves_no_orphaned_generation_file(
     assert len(run_ids) == 1, run_ids
 
 
-def test_ephemeral_retain_applied_and_restored(spark, monkeypatch):
-    """run_streaming_query bounds checkpoint-version retention for its
+def test_ephemeral_retain_applied_and_restored(spark, sf_dir):
+    """drive_stream bounds checkpoint-version retention for its
     throwaway checkpoints (r14: minBatchesToRetain=2, measured win
-    across all seven streaming headline keys) and restores the session
-    conf afterwards; SPARK_GRAFT_STREAM_RETAIN='' disables the bound."""
+    across all seven streaming headline keys): 2 inside the run, the
+    session's own value after it (still unset when it was unset)."""
     from chai_data_pipeline_spark.streaming.windows import (
-        _set_ephemeral_retain,
+        _events_stream,
+        drive_stream,
+        fresh_scratch,
     )
 
     key = "spark.sql.streaming.minBatchesToRetain"
     before = spark.conf.get(key, None)
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_RETAIN", "7")
-    restore = _set_ephemeral_retain(spark)
-    assert spark.conf.get(key) == "7"
-    restore()
-    assert spark.conf.get(key, None) == before
-
-    # kill switch: empty string leaves the session default untouched
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_RETAIN", "")
-    restore = _set_ephemeral_retain(spark)
-    assert spark.conf.get(key, None) == before
-    restore()
-    assert spark.conf.get(key, None) == before
-
-    # default (env unset): the ephemeral bound of 2
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_RETAIN", raising=False)
-    restore = _set_ephemeral_retain(spark)
-    assert spark.conf.get(key) == "2"
-    restore()
-    assert spark.conf.get(key, None) == before
-
-    # a value Spark would only reject at stream start (or with an error
-    # that does not name the setting) fails here, conf untouched
-    for bad in ("abc", "0", "-3"):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_RETAIN", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_RETAIN"):
-            _set_ephemeral_retain(spark)
-        assert spark.conf.get(key, None) == before
+    try:
+        for own in (None, "7"):
+            if own is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, own)
+            seen: list = []
+            drive_stream(
+                _events_stream(spark, sf_dir)
+                .writeStream.foreachBatch(
+                    lambda _df, _id: seen.append(spark.conf.get(key, None))
+                )
+                .option("checkpointLocation", fresh_scratch("chai_stream_retain")),
+                spark,
+                2,
+            )
+            assert seen and set(seen) == {"2"}, seen
+            assert spark.conf.get(key, None) == own
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 # --------------------------------------------------------------------------
@@ -486,16 +482,17 @@ def test_adaptive_state_partitions_scales_with_volume(
     1M events (plans/r13/ab_stream_parts_sf1). Assertions compare
     against the derivation formula, not host-dependent constants
     (ADVICE r13)."""
+    import chai_data_pipeline_spark.session as S
     from chai_data_pipeline_spark.streaming import windows as W
 
     # real testdata dirs: small scales keep the local floor
     assert W.adaptive_state_partitions(spark, sf_dir) == 2
     assert W.adaptive_state_partitions(spark, sf_dir, replicas=2) == 2
 
-    # larger volumes via the row-count cache (no giant file needed);
-    # the cache is keyed on (path, mtime_ns, size) so a regenerated
-    # file invalidates naturally — use a real (empty) file for a
-    # statable key
+    # larger volumes via the session footer cache (no giant file
+    # needed); the cache is keyed on (path, mtime_ns, size) so a
+    # regenerated file invalidates naturally — use a real (empty) file
+    # for a statable key
     cores = spark.sparkContext.defaultParallelism
     src = str(tmp_path / "events.parquet")
     with open(src, "w"):
@@ -503,31 +500,32 @@ def test_adaptive_state_partitions_scales_with_volume(
     st = os.stat(src)
     key = (src, st.st_mtime_ns, st.st_size)
     try:
-        W._EVENTS_ROWS[key] = 1_000_000
+        S._FOOTERS[key] = (1_000_000, 1)
         assert W.adaptive_state_partitions(spark, str(tmp_path)) == max(
             2, min(cores, 1_000_000 // 125_000)
         )
-        W._EVENTS_ROWS[key] = 1_000_000_000
+        S._FOOTERS[key] = (1_000_000_000, 1)
         assert W.adaptive_state_partitions(spark, str(tmp_path)) == max(
             2, cores
         )
         # 100k events keep the r13 choice of 8 on hosts with 8+ cores
-        W._EVENTS_ROWS[key] = 100_000
+        S._FOOTERS[key] = (100_000, 1)
         assert W.adaptive_state_partitions(
             spark, str(tmp_path), rows_per_partition=12_500
         ) == max(2, min(cores, 8))
-        W._EVENTS_ROWS[key] = 1_000_000_000
+        S._FOOTERS[key] = (1_000_000_000, 1)
         assert W.adaptive_state_partitions(
             spark, str(tmp_path), rows_per_partition=12_500
         ) == max(2, cores)
     finally:
-        W._EVENTS_ROWS.pop(key, None)
+        S._FOOTERS.pop(key, None)
 
-    # unreadable metadata fails safe to the floor for THIS call and is
-    # NOT cached (a transient failure must not pin the count)
-    n0 = len(W._EVENTS_ROWS)
+    # an unreadable footer (the empty file) fails safe to the floor for
+    # THIS call and is NOT cached (a transient failure must not pin the
+    # count)
+    assert W.adaptive_state_partitions(spark, str(tmp_path)) == 2
+    assert key not in S._FOOTERS
     assert W.adaptive_state_partitions(spark, "/nonexistent/sfX") == 2
-    assert len(W._EVENTS_ROWS) == n0
 
 
 def test_arrow_stateful_rate_keeps_sf001_at_the_floor(spark, sf001_dir):
